@@ -52,6 +52,8 @@ object Delivery {
         files.select(col("topic"), col("outputName"), col("sourceFileName"),
           col("content"))
     selected.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+      val st = Paths.get(statusDir)
+      if (rows.hasNext) Files.createDirectories(st)
       rows.foreach { r =>
         val headers =
           if (hasHeaders) {
@@ -63,8 +65,6 @@ object Delivery {
         val fileName = r.getString(2)
         transport.send(DeliveredFile(r.getString(0), r.getString(1),
           fileName, r.getAs[Array[Byte]](3), headers))
-        val st = Paths.get(statusDir)
-        Files.createDirectories(st)
         Files.write(st.resolve(s"$fileName.finished"),
           s"Finished $fileName".getBytes(StandardCharsets.UTF_8))
       }
@@ -90,9 +90,9 @@ object Delivery {
       suffix: String, verb: String): Unit =
     files.select(col("fileName")).foreachPartition {
       rows: Iterator[org.apache.spark.sql.Row] =>
+        val st = Paths.get(statusDir)
+        if (rows.hasNext) Files.createDirectories(st)
         rows.foreach { r =>
-          val st = Paths.get(statusDir)
-          Files.createDirectories(st)
           Files.write(st.resolve(s"${r.getString(0)}.$suffix"),
             s"$verb ${r.getString(0)}".getBytes(StandardCharsets.UTF_8))
         }

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -159,21 +159,51 @@ object PipelineMetrics {
       "snapshot_sender_running_applications" -> c(_.runningApplications.get))
   }
 
-  /** Scan-side counters (files seen / valid / quarantined / blocked).
-    * files_rejected mirrors SnapshotPipeline.quarantine's rule (bad
-    * grammar OR missing encryption metadata). `suffix` distinguishes
-    * per-micro-batch observe nodes in streaming mode (`_b<batchId>`) —
-    * read those back with [[Collector.sumFamily]]. */
+  /** Scan-side counters (files seen / quarantined / blocked, plus the
+    * valid files in blocked topics that a batch run reports as
+    * `RunResult.blocked`). files_rejected counts the complement of
+    * SnapshotPipeline.isValid; files_blocked counts every row in a blocked
+    * topic, rejected or not.
+    *
+    * The counts come back on `observation` (read them with
+    * [[scanCounts]]) — exact, no pass over the files of their own. Name
+    * it `graft_scan` (batch) or `graft_scan_b<batchId>` (one per
+    * streaming micro-batch) so a [[Collector]] sees it too; read the
+    * streaming family back with [[Collector.sumFamily]]. */
   def observeScan(df: DataFrame, blocked: Seq[String],
-      suffix: String = ""): DataFrame =
-    df.observe(s"graft_scan$suffix",
+      observation: Observation): DataFrame = {
+    val counters = scanCounters(blocked)
+    df.observe(observation, counters.head, counters.tail: _*)
+  }
+
+  /** The counters [[observeScan]] put on `scanned`. They arrive with the
+    * first action over the scan — unless adaptive execution dropped the
+    * observed stage from that action's final plan because nothing
+    * downstream of it survived (empty input; every file quarantined,
+    * blocked or finished). Spark then completes the observation empty,
+    * and the counters are taken with one aggregate over `scanned`. */
+  def scanCounts(scanned: DataFrame, blocked: Seq[String],
+      observation: Observation): Map[String, Long] = {
+    val observed = observation.get
+    val values =
+      if (observed.nonEmpty) observed
+      else {
+        val counters = scanCounters(blocked)
+        val row = scanned.agg(counters.head, counters.tail: _*).first()
+        row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+      }
+    values.map { case (k, v) => k -> (if (v == null) 0L else v.asInstanceOf[Long]) }
+  }
+
+  private def scanCounters(blocked: Seq[String]): Seq[Column] = {
+    val inBlocked = col("topic").isin(blocked: _*)
+    Seq(
       count(lit(1)).as("files_scanned"),
-      sum(when(col("database") === "" || col("iv").isNull ||
-        col("dataKeyEncryptionKeyId").isNull || col("cipherTextDataKey").isNull,
-        1L).otherwise(0L)).as("files_rejected"),
-      sum(when(col("topic").isin(blocked: _*), 1L).otherwise(0L))
-        .as("files_blocked"),
+      count_if(!SnapshotPipeline.isValid).as("files_rejected"),
+      count_if(inBlocked).as("files_blocked"),
+      count_if(SnapshotPipeline.isValid && inBlocked).as("files_valid_blocked"),
       sum(col("length")).as("bytes_scanned"))
+  }
 
   /** Delivery-side counters (files posted + payload bytes — the
     * reference's filesSent / bytes counters). */

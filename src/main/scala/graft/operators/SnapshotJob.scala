@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{EncryptedSnapshotSource, KeyService}
@@ -59,9 +59,10 @@ object SnapshotJob {
       monitoring: Option[MonitoringConf],
       counters: Option[PipelineMetrics.RunCounters]): RunResult = {
 
+    val scan = Observation("graft_scan")
     val scanned = PipelineMetrics.observeScan(
       withTopic(EncryptedSnapshotSource.read(spark, inputDir)),
-      conf.blockedTopics)
+      conf.blockedTopics, scan)
     val (valid, rejected) = quarantine(scanned)
     if (conf.strict) {
       val bad = rejected.select(col("fileName")).limit(5)
@@ -69,7 +70,7 @@ object SnapshotJob {
       if (bad.nonEmpty) throw new IllegalArgumentException(
         s"strict mode: unparseable snapshot filenames: ${bad.mkString(", ")}")
     }
-    val (allowed, blockedRows) = splitBlockedTopics(valid, conf.blockedTopics)
+    val (allowed, _) = splitBlockedTopics(valid, conf.blockedTopics)
 
     val fresh = filterFinished(allowed,
       Delivery.finishedMarkers(spark, statusDir), conf.reprocessFiles)
@@ -79,6 +80,8 @@ object SnapshotJob {
 
     Delivery.deliverVia(ready, statusDir,
       transport.getOrElse(LocalFsTransport(outDir)))
+    // the scan has run by now: read its counters before monitoring does
+    val counts = PipelineMetrics.scanCounts(scanned, conf.blockedTopics, scan)
 
     // counts derived from the marker commit log, not from this run's rows:
     // re-runs and task retries stay exactly-once-observable.
@@ -96,11 +99,8 @@ object SnapshotJob {
     val completion = Delivery.runCompletion(statuses, conf.correlationId)
     monitoring.foreach(Monitoring.afterRun(_, conf, completion, Some(statuses)))
 
-    // prune content before counting: binaryFile only reads the bytes if
-    // the content column is requested, so these are listing-only jobs
     RunResult(statuses, completion,
-      rejected.select(col("fileName")).count(),
-      blockedRows.select(col("fileName")).count())
+      counts("files_rejected"), counts("files_valid_blocked"))
   }
 
   /** The analytics view over a snapshot directory: fully decrypted,

@@ -46,17 +46,20 @@ object SnapshotPipeline {
           .otherwise(lit("")), col("database"), lit("."), col("collection")))
   }
 
-  /** Splits (valid, rejected). Rejected = filename fails the grammar OR
-    * the encryption metadata is missing (orphan object without a sidecar /
-    * S3 user metadata — the reference throws DataKeyDecryptionException,
-    * S3DirectoryReader.kt:96-98; at 100 TB one orphan must quarantine, not
-    * NPE the key-resolution or silently vanish in the key join). */
-  def quarantine(df: DataFrame): (DataFrame, DataFrame) = {
-    val valid = col("database") =!= "" &&
-      col("iv").isNotNull && col("dataKeyEncryptionKeyId").isNotNull &&
-      col("cipherTextDataKey").isNotNull
-    (df.filter(valid), df.filter(!valid))
-  }
+  /** The quarantine rule, shared by [[quarantine]] and the scan
+    * observation: a file is valid iff its name parses the grammar AND
+    * its encryption metadata is present (an orphan object without a
+    * sidecar / S3 user metadata fails the second half — the reference
+    * throws DataKeyDecryptionException, S3DirectoryReader.kt:96-98; at
+    * 100 TB one orphan must quarantine, not NPE the key-resolution or
+    * silently vanish in the key join). */
+  def isValid: Column = col("database") =!= "" &&
+    col("iv").isNotNull && col("dataKeyEncryptionKeyId").isNotNull &&
+    col("cipherTextDataKey").isNotNull
+
+  /** Splits (valid, rejected) by [[isValid]]. */
+  def quarantine(df: DataFrame): (DataFrame, DataFrame) =
+    (df.filter(isValid), df.filter(!isValid))
 
   /** F1: drop files already delivered in a previous run. The reference
     * HEADs `<statusFolder>/<key>.finished` per file

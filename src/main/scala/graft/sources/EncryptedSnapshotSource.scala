@@ -8,12 +8,20 @@ import org.apache.spark.sql.types._
   * S3DirectoryReader.kt:51-98).
   *
   * The reference pages ListObjectsV2 into one big in-memory list, then
-  * HEADs each object for user metadata. Spark-first: `binaryFile` gives a
-  * distributed listing (InMemoryFileIndex) + whole-file content column —
-  * the paginated listing and the per-file fetch collapse into one scan.
-  * Encryption params ride in sidecar `.meta.json` files (the local stand-in
-  * for S3 user metadata — a DSv2 source exposing real S3 user metadata
-  * would slot in here with the same output schema).
+  * HEADs each object for user metadata. Spark-first: `binaryFile` lists
+  * the prefix once on the driver (InMemoryFileIndex) and adds a
+  * whole-file content column — the paginated listing and the per-file
+  * fetch collapse into one scan. Encryption params ride in sidecar
+  * `.meta.json` files (the local stand-in for S3 user metadata — a DSv2
+  * source exposing real S3 user metadata would slot in here with the same
+  * output schema).
+  *
+  * Both sides read the directory with a `pathGlobFilter`, never a path
+  * glob: Spark expands a glob into one explicit path per match, and above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) explicit
+  * paths it lists them with a Spark job of one task per path. A filtered
+  * directory read stays one driver-side listing per prefix, so building
+  * the scan starts no job whatever the file count.
   *
   * Output schema (FIXTURES.md §1):
   * fullPath, fileName, length, content BINARY, iv, dataKeyEncryptionKeyId,
@@ -68,17 +76,13 @@ object EncryptedSnapshotSource {
       files.join(broadcast(readMeta(spark, dir)), Seq("fileName"), "left")
     }
 
-  /** Sidecar metadata scan; a zero-match glob must mean "no metadata",
-    * not AnalysisException — a legitimately empty export (heartbeat run,
-    * zero-file collection) flows through to Received statuses. Public:
-    * the streaming ingest re-reads this per micro-batch. */
-  def readMeta(spark: SparkSession, dir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/*.meta.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Nil)
-    if (matches.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], metaSchema)
-    else spark.read.schema(metaSchema).json(s"$dir/*.meta.json")
-  }
+  /** Sidecar metadata scan. A directory with no sidecars reads as zero
+    * rows (the user schema spares schema inference), so a legitimately
+    * empty export (heartbeat run, zero-file collection) flows through to
+    * Received statuses; a missing directory fails like the `.enc` scan.
+    * Public: the streaming ingest re-reads this per micro-batch. */
+  def readMeta(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(metaSchema)
+      .option("pathGlobFilter", "*.meta.json")
+      .json(dir)
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Delivery, SnapshotPipeline}
@@ -35,7 +36,7 @@ object SnapshotStream {
     val stream = spark.readStream
       .format("binaryFile")
       .option("pathGlobFilter", "*.enc")
-      .schema(spark.read.format("binaryFile").load(inputDir).schema)
+      .schema(BinaryFileFormat.schema) // the source's fixed schema: no listing
       .load(inputDir)
 
     stream.writeStream
@@ -59,7 +60,8 @@ object SnapshotStream {
         // installed BEFORE start(): foreachBatch runs on the query's
         // cloned session, which snapshots the listener list at start.
         val scanned = graft.operators.PipelineMetrics.observeScan(
-          withTopic(files), conf.blockedTopics, suffix = s"_b$batchId")
+          withTopic(files), conf.blockedTopics,
+          Observation(s"graft_scan_b$batchId"))
         val (valid, rejected) = quarantine(scanned)
         // the file-source checkpoint consumes each object exactly once, so
         // a quarantined object (e.g. sidecar not yet uploaded) would be
