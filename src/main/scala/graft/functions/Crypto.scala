@@ -6,9 +6,6 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
-
 /** Crypto/compression kernels for the snapshot pipeline.
   *
   * Cipher parity with the reference: AES/CTR/NoPadding with base64 key+IV
@@ -16,9 +13,9 @@ import org.apache.spark.sql.functions.udf
   * resources/aws/s3_files.py:78-84). Stock JCE suffices — BouncyCastle is
   * only needed by the reference for its FIPS build.
   *
-  * Exposed as Scala UDFs over BINARY. These run once per *file* row (not
-  * per record), so UDF overhead is amortized over ~1 MB payloads; the hot
-  * per-record path (JSONL parse) stays in codegen'd built-ins.
+  * Byte-array kernels; their column form is the codegen'd expressions in
+  * `plans/CryptoExpressions`, which run once per *file* row (not per
+  * record).
   */
 object Crypto {
 
@@ -58,14 +55,4 @@ object Crypto {
   /** The 20-byte empty-gzip success payload (reference:
     * SuccessServiceImpl.kt:97-104). */
   def emptyGzip: Array[Byte] = gzip(Array.emptyByteArray)
-
-  private val aesCtrUdf = udf(aesCtr _)
-  private val gunzipUdf = udf(gunzip _)
-
-  /** Column form: decrypt(content BINARY, key STRING(b64), iv STRING(b64)). */
-  def aesCtrDecrypt(content: Column, keyB64: Column, ivB64: Column): Column =
-    aesCtrUdf(content, keyB64, ivB64)
-
-  /** Column form: gunzip(BINARY) -> BINARY. */
-  def gunzipCol(content: Column): Column = gunzipUdf(content)
 }

@@ -841,30 +841,6 @@ object Bm25 {
       idCol, textCol)
   }
 
-  /** Persist the four statistics as parquet under `dir` — the
-    * versioned-artifact shape a production maintenance cycle writes
-    * (each CDC fold reads version N, writes N+1; serving reads the
-    * latest). In production each table is bucketed per the
-    * [[IndexStats]] scaladoc; here plain parquet. */
-  def writeIndexStats(s: IndexStats, dir: String): Unit = {
-    // coalesce(2): the stats are orders of magnitude smaller than the
-    // corpus (distinct (id, term) / id / term rows) — writing them at
-    // corpus partitioning pays file-count overhead per maintenance
-    // version for nothing. Production would bucketBy instead.
-    s.tf.coalesce(2).write.mode("overwrite").parquet(s"$dir/tf")
-    s.dl.coalesce(2).write.mode("overwrite").parquet(s"$dir/dl")
-    s.df.coalesce(2).write.mode("overwrite").parquet(s"$dir/df")
-    s.totals.coalesce(1).write.mode("overwrite").parquet(s"$dir/totals")
-  }
-
-  def readIndexStats(spark: org.apache.spark.sql.SparkSession,
-      dir: String): IndexStats =
-    IndexStats(
-      tf = spark.read.parquet(s"$dir/tf"),
-      dl = spark.read.parquet(s"$dir/dl"),
-      df = spark.read.parquet(s"$dir/df"),
-      totals = spark.read.parquet(s"$dir/totals"))
-
   /** PERCOLATOR — the standing-query surface at PRODUCTION scale
     * (q310's fixed alert generalized): REGISTER thousands of boolean
     * alerts as a term-keyed QUERY INDEX, then each incoming document

@@ -26,50 +26,35 @@ import graft.functions.Crypto
   */
 object Delivery {
 
-  /** K1 + K2: write each delivered file and its `.finished` marker
-    * (marker body "Finished <name>" — S3StatusFileWriter.kt:19-52).
-    * Local-FS transport; see [[deliverVia]] for the transport seam. */
-  def deliver(files: DataFrame, outDir: String, statusDir: String): Unit =
-    deliverVia(files, statusDir, LocalFsTransport(outDir))
-
   /** K1 + K2 behind the transport seam: send each file through
     * `transport` (FS, HTTP, …) from the executors via foreachPartition,
-    * then write its `.finished` marker — marker AFTER send, so a failed
+    * then write its `.finished` marker (marker body "Finished <name>" —
+    * S3StatusFileWriter.kt:19-52) — marker AFTER send, so a failed
     * send leaves no marker and the file is retried by the next run.
     * Both actions are idempotent, so at-least-once task retries converge.
     *
-    * If the input carries a `headers` struct (nifiHeaders output), its
-    * fields travel to the transport as the header map; without one the
-    * map is empty (FS delivery ignores it). */
+    * The input carries a `headers` struct (nifiHeaders output); its
+    * non-null fields travel to the transport as the header map (FS
+    * delivery ignores it). */
   def deliverVia(files: DataFrame, statusDir: String,
-      transport: DeliveryTransport): Unit = {
-    val hasHeaders = files.columns.contains("headers")
-    val selected =
-      if (hasHeaders)
-        files.select(col("topic"), col("outputName"), col("sourceFileName"),
-          col("content"), col("headers"))
-      else
-        files.select(col("topic"), col("outputName"), col("sourceFileName"),
-          col("content"))
-    selected.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      val st = Paths.get(statusDir)
-      if (rows.hasNext) Files.createDirectories(st)
-      rows.foreach { r =>
-        val headers =
-          if (hasHeaders) {
-            val h = r.getStruct(4)
-            h.schema.fieldNames.zipWithIndex.collect {
-              case (name, i) if !h.isNullAt(i) => name -> h.get(i).toString
-            }.toMap
-          } else Map.empty[String, String]
-        val fileName = r.getString(2)
-        transport.send(DeliveredFile(r.getString(0), r.getString(1),
-          fileName, r.getAs[Array[Byte]](3), headers))
-        Files.write(st.resolve(s"$fileName.finished"),
-          s"Finished $fileName".getBytes(StandardCharsets.UTF_8))
+      transport: DeliveryTransport): Unit =
+    files.select(col("topic"), col("outputName"), col("sourceFileName"),
+        col("content"), col("headers"))
+      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+        val st = Paths.get(statusDir)
+        if (rows.hasNext) Files.createDirectories(st)
+        rows.foreach { r =>
+          val h = r.getStruct(4)
+          val headers = h.schema.fieldNames.zipWithIndex.collect {
+            case (name, i) if !h.isNullAt(i) => name -> h.get(i).toString
+          }.toMap
+          val fileName = r.getString(2)
+          transport.send(DeliveredFile(r.getString(0), r.getString(1),
+            fileName, r.getAs[Array[Byte]](3), headers))
+          Files.write(st.resolve(s"$fileName.finished"),
+            s"Finished $fileName".getBytes(StandardCharsets.UTF_8))
+        }
       }
-    }
-  }
 
   /** Quarantine side-channel: one `.quarantined` marker per rejected file
     * (streaming mode needs this — the source checkpoint consumes objects
@@ -155,15 +140,13 @@ object Delivery {
           .otherwise("NOT_COMPLETED"))
 
   /** K3 + M8: success indicator `_<db>_<collection>_successful.gz` (20-byte
-    * empty gzip) for Sent topics (when configured) and always for
-    * zero-file topics (JobCompletionNotificationListener.kt:34-40,
+    * empty gzip) for Sent and zero-file (Received) topics
+    * (JobCompletionNotificationListener.kt:34-40,
     * SuccessServiceImpl.kt:39-104). Driver-side: the status DF is tiny. */
   def writeSuccessIndicators(statuses: DataFrame, outDir: String,
-      sendForSent: Boolean,
       counters: Option[PipelineMetrics.RunCounters] = None): Seq[String] = {
     val want = statuses
-      .filter(col("CollectionStatus") === "Received" ||
-        (lit(sendForSent) && col("CollectionStatus") === "Sent"))
+      .filter(col("CollectionStatus").isin("Received", "Sent"))
       .select(col("topic")).collect().map(_.getString(0)).toSeq
     want.flatMap { topic =>
       // topic db.<database>.<collection> → _<database>_<collection>_successful.gz;

@@ -91,8 +91,7 @@ object SnapshotJob {
     val statuses = OperatorCaches.track(Delivery
       .collectionStatus(expected, sent, conf.blockedTopics).cache())
     val successFiles =
-      Delivery.writeSuccessIndicators(statuses, outDir, sendForSent = true,
-        counters)
+      Delivery.writeSuccessIndicators(statuses, outDir, counters)
     counters.foreach(_.successFilesSent.addAndGet(successFiles.size.toLong))
     conf.statusTable.foreach(dir =>
       Delivery.upsertStatuses(statuses, dir, conf.correlationId))

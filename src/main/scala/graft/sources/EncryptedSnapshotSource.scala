@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.SnapshotPipeline.fileNameFromPath
+
 /** Ingest scan for encrypted snapshot files (reference S1-S3:
   * S3DirectoryReader.kt:51-98).
   *
@@ -12,8 +14,8 @@ import org.apache.spark.sql.types._
   * the prefix once on the driver (InMemoryFileIndex) and adds a
   * whole-file content column — the paginated listing and the per-file
   * fetch collapse into one scan. Encryption params ride in sidecar
-  * `.meta.json` files (the local stand-in for S3 user metadata — a DSv2
-  * source exposing real S3 user metadata would slot in here with the same
+  * `.meta.json` files (the local stand-in for S3 user metadata — a source
+  * of real S3 user metadata would take over [[withSidecars]], keeping its
   * output schema).
   *
   * Both sides read the directory with a `pathGlobFilter`, never a path
@@ -24,7 +26,7 @@ import org.apache.spark.sql.types._
   * the scan starts no job whatever the file count.
   *
   * Output schema (FIXTURES.md §1):
-  * fullPath, fileName, length, content BINARY, iv, dataKeyEncryptionKeyId,
+  * fileName, fullPath, length, content BINARY, iv, dataKeyEncryptionKeyId,
   * cipherTextDataKey.
   *
   * Scale note: the metadata side is tiny (one short JSON per file) and is
@@ -33,54 +35,37 @@ import org.apache.spark.sql.types._
   */
 object EncryptedSnapshotSource {
 
-  val metaSchema: StructType = StructType(Seq(
+  private val metaSchema: StructType = StructType(Seq(
     StructField("fileName", StringType),
     StructField("iv", StringType),
     StructField("dataKeyEncryptionKeyId", StringType),
     StructField("cipherTextDataKey", StringType)))
 
-  /** S5: the no-op source — an empty relation with the ingest schema
-    * (reference: noOpReader profile, ContextConfiguration.kt:24-26).
-    * Zero-file collections flow through the identical plan and still
-    * produce Received status + success indicators. */
-  def empty(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("fileName", StringType), StructField("fullPath", StringType),
-        StructField("length", LongType), StructField("content", BinaryType),
-        StructField("iv", StringType),
-        StructField("dataKeyEncryptionKeyId", StringType),
-        StructField("cipherTextDataKey", StringType))))
-  }
-
-  /** Ingest read, switchable between the two equivalent implementations
-    * via session conf `spark.graft.snapshotSource`:
-    *  - "glob" (default): binaryFile scan + broadcast sidecar join;
-    *  - "dsv2": the SnapshotSourceProvider DataSource V2 table
-    *    (column-pruned per-object reads, metadata fetched beside each
-    *    object — the S3-user-metadata source shape, SURVEY §4).
-    * Identical schema and rows (SnapshotDsv2Spec). */
+  /** Ingest read: the `binaryFile` listing of `*.enc` under `dir`, joined
+    * with its sidecars. A directory with no snapshot files reads as zero
+    * rows and flows through the same plan (reference S5 no-op source). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    if (spark.conf.getOption("spark.graft.snapshotSource").contains("dsv2"))
-      spark.read.format("encrypted-snapshot").load(dir)
-    else {
-      val files = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.enc")
-        .load(dir)
-        .select(
-          col("path").as("fullPath"),
-          graft.operators.SnapshotPipeline.fileNameFromPath(col("path")).as("fileName"),
-          col("length"),
-          col("content"))
-      files.join(broadcast(readMeta(spark, dir)), Seq("fileName"), "left")
-    }
+    withSidecars(
+      spark.read.format("binaryFile").option("pathGlobFilter", "*.enc").load(dir),
+      dir)
+
+  /** `binaryFile` rows (path, length, content) → the ingest schema, each
+    * file joined with its sidecar under `dir` (no sidecar → null params,
+    * which quarantine rejects). The batch read and every streaming
+    * micro-batch go through here; the sidecars are re-read per call, so
+    * a micro-batch sees sidecars that landed after the stream started. */
+  def withSidecars(files: DataFrame, dir: String): DataFrame =
+    files.select(
+        col("path").as("fullPath"),
+        fileNameFromPath(col("path")).as("fileName"),
+        col("length"),
+        col("content"))
+      .join(broadcast(readMeta(files.sparkSession, dir)), Seq("fileName"), "left")
 
   /** Sidecar metadata scan. A directory with no sidecars reads as zero
     * rows (the user schema spares schema inference), so a legitimately
     * empty export (heartbeat run, zero-file collection) flows through to
-    * Received statuses; a missing directory fails like the `.enc` scan.
-    * Public: the streaming ingest re-reads this per micro-batch. */
+    * Received statuses; a missing directory fails like the `.enc` scan. */
   def readMeta(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(metaSchema)
       .option("pathGlobFilter", "*.meta.json")

@@ -44,6 +44,7 @@ object Retry {
         * counters — snapshot_sender_*_retries families) */
       onRetry: () => Unit = () => ())(
       f: => T): T = {
+    require(attempts >= 1, s"attempts must be at least 1, got $attempts")
     var delay = initialDelayMs
     var last: Throwable = null
     var i = 0

@@ -7,7 +7,7 @@ import java.util.Base64
 
 import graft.functions.Crypto
 
-/** Deterministic local encrypted-snapshot fixture, mirroring the
+/** Deterministic local encrypted snapshot fixture, mirroring the
   * reference's integration fixture (resources/aws/s3_files.py:21-84):
   * each file is AES-CTR(gzip(JSONL×recordsPerFile)) named
   * `db.<database>.<collection>-045-050-<n>.txt.gz.enc`, with the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{Delivery, SnapshotPipeline}
+import graft.operators.Delivery
 import graft.operators.SnapshotPipeline._
 import graft.sources.{EncryptedSnapshotSource, KeyService}
 
@@ -43,15 +43,8 @@ object SnapshotStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions._
-        // meta re-read PER BATCH (zero-match-safe): a sidecar that landed
-        // after the stream started is still picked up for later objects
-        val meta = EncryptedSnapshotSource.readMeta(spark, inputDir)
-        val files = batch.select(
-          col("path").as("fullPath"),
-          SnapshotPipeline.fileNameFromPath(col("path")).as("fileName"),
-          col("length"), col("content"))
-          .join(broadcast(meta), Seq("fileName"), "left")
+        // the batch scan's sidecar join, re-read per batch
+        val files = EncryptedSnapshotSource.withSidecars(batch, inputDir)
         // same observe nodes as the batch job (A4 parity), named PER
         // BATCH (`_b<id>`): within one batch the marker/deliver actions
         // re-report identical values (put-overwrite dedupes), across

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{DataKeyDecryptionException, HttpKeyService}
+import graft.sources.{DataKeyDecryptionException, HttpKeyService, Retry}
 
 /** Contract tests for the DKS-shaped key service — the reference's error
   * taxonomy (HttpKeyService.kt:67-85): 200 parses plaintextDataKey and
@@ -83,5 +83,17 @@ class HttpKeyServiceSpec extends AnyFunSuite {
     intercept[graft.sources.DataKeyServiceUnavailableException] {
       svc.decryptKey("kid1", "Y2lwaGVy")
     }
+  }
+
+  test("attempts below 1 are rejected up front, naming the value") {
+    var ran = false
+    val e = intercept[IllegalArgumentException] {
+      Retry.withBackoff(attempts = 0, initialDelayMs = 1) { ran = true }
+    }
+    assert(e.getMessage.contains("got 0"))
+    assert(!ran)
+    // a user setting reaches it the same way
+    val svc = new HttpKeyService("http://127.0.0.1:1", maxAttempts = 0)
+    intercept[IllegalArgumentException](svc.decryptKey("kid1", "Y2lwaGVy"))
   }
 }

@@ -286,6 +286,7 @@ class HttpTransportSpec extends SparkSuite {
       val files = Seq(("db.a.b", "f1.json.gz", "f1.txt.gz",
         "payload".getBytes("UTF-8"))).toDF(
         "topic", "outputName", "sourceFileName", "content")
+        .withColumn("headers", struct(col("outputName").as("filename")))
       intercept[Exception] {
         Delivery.deliverVia(files, status,
           HttpTransport(rx.url, maxAttempts = 2, initialDelayMs = 1,
@@ -330,6 +331,7 @@ class HttpTransportSpec extends SparkSuite {
       val files = Seq(("db.a.b", "f1.json.gz", "f1.txt.gz",
         "payload".getBytes("UTF-8"))).toDF(
         "topic", "outputName", "sourceFileName", "content")
+        .withColumn("headers", struct(col("outputName").as("filename")))
       val e = intercept[Exception] {
         Delivery.deliverVia(files, status,
           HttpTransport(rx.url, maxAttempts = 3, initialDelayMs = 1))

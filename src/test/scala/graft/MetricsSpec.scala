@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.{col, struct}
+
 import graft.operators.{LocalFsMetricsPusher, LocalFsSnsPublisher,
   MonitoringConf, PipelineMetrics, SnapshotJob}
 import graft.sources.{LocalKeyService, SnapshotFixture}
@@ -132,6 +134,7 @@ class MetricsSpec extends SparkSuite {
       val files = Seq(("db.a.b", "f1.json.gz", "f1.txt.gz",
         "payload".getBytes("UTF-8"))).toDF(
         "topic", "outputName", "sourceFileName", "content")
+        .withColumn("headers", struct(col("outputName").as("filename")))
       graft.operators.Delivery.deliverVia(files, status,
         graft.operators.HttpTransport(
           s"http://127.0.0.1:${server.getAddress.getPort}/",

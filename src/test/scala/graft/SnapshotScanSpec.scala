@@ -5,10 +5,13 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, DataFrame, Observation}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.functions.{count, count_if, lit, sum}
 
 import graft.operators.{PipelineMetrics, SnapshotJob}
-import graft.operators.SnapshotPipeline.DeliveryConf
+import graft.operators.SnapshotPipeline.{isValid, withTopic, DeliveryConf}
 import graft.sources.{EncryptedSnapshotSource, LocalKeyService, SnapshotFixture}
 import graft.sources.SnapshotFixture.Topic
 
@@ -17,7 +20,8 @@ import graft.sources.SnapshotFixture.Topic
   * .threshold` (32 paths, left at its default), where handing Spark one
   * explicit path per file would start a listing job; and the run's
   * quarantined / blocked counts come from the scan's observation, exact
-  * without a counting pass of their own. */
+  * without a counting pass of their own. A read that needs no file
+  * content does not scan it. */
 class SnapshotScanSpec extends SparkSuite {
   import spark.implicits._
 
@@ -128,6 +132,36 @@ class SnapshotScanSpec extends SparkSuite {
       LocalKeyService)
     assert(res.quarantined == 100 && res.blocked == 0)
     assert(res.statuses.filter($"FilesSent" > 0).count() == 0)
+  }
+
+  test("listing-only reads prune the file content out of the binaryFile scan") {
+    def binaryScanFields(df: DataFrame): Seq[Seq[String]] =
+      df.queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec
+            if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] =>
+          s.requiredSchema.fieldNames.toSeq
+      }
+    val dir = fixture(20)
+    val listing = EncryptedSnapshotSource.read(spark, dir)
+      .select($"fileName", $"length")
+    // the shape of PipelineMetrics.scanCounts' fallback aggregate
+    val counted = PipelineMetrics.observeScan(
+        withTopic(EncryptedSnapshotSource.read(spark, dir)), Nil,
+        Observation("graft_scan_pruning"))
+      .agg(count(lit(1)), count_if(!isValid), sum($"length"))
+    for (df <- Seq(listing, counted)) {
+      val scans = binaryScanFields(df)
+      assert(scans.nonEmpty, df.queryExecution.sparkPlan.toString)
+      scans.foreach(f => assert(!f.contains("content"), s"content read: $f"))
+    }
+    assert(listing.count() == 20)
+    assert(counted.first().getLong(0) == 20)
+  }
+
+  test("empty directory yields an empty relation, not an error") {
+    val empty = Files.createTempDirectory("graft-scan-empty").toString
+    assert(EncryptedSnapshotSource.read(spark, empty).count() == 0)
+    assert(EncryptedSnapshotSource.readMeta(spark, empty).count() == 0)
   }
 
   test("a missing input directory fails the sidecar scan as it does the .enc scan") {
