@@ -43,13 +43,18 @@ object Crypto {
     bos.toByteArray
   }
 
+  /** Inflates every gzip member in `bytes` (concatenated members decode as
+    * one stream). The stream is closed here, so its `Inflater` frees its
+    * native zlib state at once rather than when a GC cleaner runs. */
   def gunzip(bytes: Array[Byte]): Array[Byte] = {
     val in = new GZIPInputStream(new java.io.ByteArrayInputStream(bytes))
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
+    try {
+      val out = new ByteArrayOutputStream()
+      val buf = new Array[Byte](64 * 1024)
+      var n = in.read(buf)
+      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+      out.toByteArray
+    } finally in.close()
   }
 
   /** The 20-byte empty-gzip success payload (reference:

@@ -21,8 +21,9 @@ object SnapshotPipeline {
   val topicPattern = "^(?:\\w+\\.)?([\\w-]+)\\.([\\w-]+)-\\d{3}-\\d{3}-\\d+\\.\\w+\\.\\w+$"
 
   /** Shared name helpers — the scan side and the marker side MUST parse
-    * identically or the finished anti-join silently stops matching. */
-  def fileNameFromPath(path: Column): Column = element_at(split(path, "/"), -1)
+    * identically or the finished anti-join silently stops matching. The
+    * name is everything after the last `/` (the whole path if none). */
+  def fileNameFromPath(path: Column): Column = substring_index(path, "/", -1)
   def stripEnc(name: Column): Column = regexp_replace(name, "\\.enc$", "")
 
   /** M4 + F3: derive database/collection/topic from the filename; rows
@@ -99,22 +100,25 @@ object SnapshotPipeline {
     * inside the scan task. The pre-rename name is kept as sourceFileName —
     * `.finished` markers key off the ORIGINAL object key (the reference's
     * status key maps the original S3 key, S3Utils.kt:25-32, and the
-    * finished filter runs before decryption). */
+    * finished filter runs before decryption). The plaintext data key is
+    * dropped once the decrypt has used it: no row downstream — delivered,
+    * exploded into records or written out by a caller — carries it. */
   def decrypt(df: DataFrame): DataFrame = {
     CryptoExpressions.register(df.sparkSession)
     df.withColumn("content",
         CryptoExpressions.aes_ctr_decrypt(col("content"), col("plaintextDataKey"), col("iv")))
+      .drop("plaintextDataKey")
       .withColumn("sourceFileName", col("fileName"))
       .withColumn("fileName", stripEnc(col("fileName")))
   }
 
-  /** M3: gunzip → UTF-8 → one row per JSON line. The per-record path after
-    * the explode is all codegen'd built-ins. */
+  /** M3: gunzip → one row per non-empty JSON line, cut on `'\n'` bytes.
+    * Each line is a slice of the file's inflated buffer, never decoded to
+    * a Java String; a file that is not valid UTF-8 fails the task with
+    * MALFORMED_CHARACTER_CODING. */
   def explodeRecords(df: DataFrame): DataFrame = {
     CryptoExpressions.register(df.sparkSession)
-    df.withColumn("line",
-        explode(split(decode(CryptoExpressions.gunzip(col("content")), "UTF-8"), "\n")))
-      .filter(length(col("line")) > 0)
+    df.withColumn("line", explode(CryptoExpressions.gunzip_lines(col("content"))))
       .drop("content")
   }
 
@@ -143,12 +147,16 @@ object SnapshotPipeline {
   }
 
   /** Parse exploded JSONL into typed columns; Mongo `$date` becomes a real
-    * timestamp. */
-  def parseRecords(df: DataFrame): DataFrame =
-    df.withColumn("record", from_json(col("line"), recordSchema))
+    * timestamp. `record` is what `from_json(line, recordSchema)` gives
+    * (a malformed line is the all-null struct), parsed by Spark's own
+    * Jackson parser straight from the line's bytes. */
+  def parseRecords(df: DataFrame): DataFrame = {
+    CryptoExpressions.register(df.sparkSession)
+    df.withColumn("record", CryptoExpressions.parse_json_bytes(col("line"), recordSchema))
       .withColumn("createdAt",
         to_timestamp(col("record.createdDateTime.`$date`"),
           "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"))
+  }
 
   /** F2: blocked-topic filter with a side-output of the blocked rows
     * (reference raises BlockedTopicException + counter,

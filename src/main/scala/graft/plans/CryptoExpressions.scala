@@ -1,10 +1,18 @@
 package graft.plans
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExprUtils, Expression, StringDecode, TernaryExpression, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.{ArrayData, FailureSafeParser, GenericArrayData, PermissiveMode}
+import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Crypto
@@ -14,9 +22,11 @@ import graft.functions.Crypto
   * in whole-stage codegen — the generated Java invokes the static kernel
   * directly on the UnsafeRow's byte[].
   *
-  * Both kernels run once per *file* row, so this is a constant-factor
-  * win; it matters because these sit inside the same codegen stage as the
-  * JSONL explode (one fused pass per file: decrypt → gunzip → split).
+  * The crypto kernels run once per *file* row; `gunzip_lines` inflates a
+  * file and cuts its JSONL on `'\n'` bytes into zero-copy line slices,
+  * and `parse_json_bytes` hands each slice's bytes straight to Jackson.
+  * Between decrypt and the typed record, no line is decoded to a Java
+  * String or re-encoded.
   *
   * Exposed through the session FunctionRegistry ([[register]]) + public
   * `call_function` — also makes them usable from SQL text.
@@ -30,6 +40,35 @@ object CryptoExpressions {
 
   def gunzipKernel(content: Array[Byte]): Array[Byte] = Crypto.gunzip(content)
 
+  /** Inflates `content` and returns its non-empty `'\n'`-separated lines as
+    * slices of the one inflated buffer (a `'\r'` before the `'\n'` stays on
+    * the line, as `split` leaves it). The same pass ORs every byte
+    * together: only a file holding a byte ≥ 0x80 pays the full UTF-8
+    * validation, which fails as `decode(…, 'UTF-8')` does. */
+  def gunzipLinesKernel(content: Array[Byte]): ArrayData = {
+    val buf = Crypto.gunzip(content)
+    val lines = new java.util.ArrayList[UTF8String]()
+    var seen = 0
+    var start = 0
+    var i = 0
+    while (i < buf.length) {
+      val b = buf(i)
+      seen |= b
+      if (b == '\n') {
+        if (i > start) lines.add(UTF8String.fromBytes(buf, start, i - start))
+        start = i + 1
+      }
+      i += 1
+    }
+    if (i > start) lines.add(UTF8String.fromBytes(buf, start, i - start))
+    // a byte ≥ 0x80 sign-extends, so `seen` is negative iff one appeared;
+    // an invalid file goes through decode's own path, which throws
+    // MALFORMED_CHARACTER_CODING
+    if (seen < 0 && !UTF8String.fromBytes(buf).isValid)
+      StringDecode.decode(buf, UTF8String.fromString("UTF-8"), false, false)
+    new GenericArrayData(lines.toArray)
+  }
+
   /** Idempotent per-session registration (analysis-time resolution for
     * call_function / SQL). */
   def register(spark: SparkSession): Unit = {
@@ -38,12 +77,21 @@ object CryptoExpressions {
       exprs => AesCtrDecrypt(exprs(0), exprs(1), exprs(2)), "built-in")
     registry.createOrReplaceTempFunction("gunzip",
       exprs => Gunzip(exprs.head), "built-in")
+    registry.createOrReplaceTempFunction("gunzip_lines",
+      exprs => GunzipLines(exprs.head), "built-in")
+    registry.createOrReplaceTempFunction("parse_json_bytes",
+      exprs => ParseJsonBytes(ExprUtils.evalSchemaExpr(exprs(1)), exprs.head), "built-in")
   }
 
   def aes_ctr_decrypt(content: Column, keyB64: Column, ivB64: Column): Column =
     call_function("aes_ctr_decrypt", content, keyB64, ivB64)
 
   def gunzip(content: Column): Column = call_function("gunzip", content)
+
+  def gunzip_lines(content: Column): Column = call_function("gunzip_lines", content)
+
+  def parse_json_bytes(line: Column, schema: StructType): Column =
+    call_function("parse_json_bytes", line, lit(schema.json))
 }
 
 /** AES-CTR decrypt as a codegen'd ternary expression
@@ -54,12 +102,11 @@ case class AesCtrDecrypt(first: Expression, second: Expression, third: Expressio
   override def nullIntolerant: Boolean = true
   override def nullable: Boolean =
     first.nullable || second.nullable || third.nullable
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult = {
     val ok = first.dataType == BinaryType &&
       second.dataType == StringType && third.dataType == StringType
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
       s"aes_ctr_decrypt expects (BINARY, STRING, STRING), got " +
         s"(${first.dataType}, ${second.dataType}, ${third.dataType})")
   }
@@ -83,11 +130,9 @@ case class AesCtrDecrypt(first: Expression, second: Expression, third: Expressio
 case class Gunzip(child: Expression) extends UnaryExpression {
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
       s"gunzip expects BINARY, got ${child.dataType}")
 
   override protected def nullSafeEval(content: Any): Any =
@@ -100,4 +145,120 @@ case class Gunzip(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "gunzip"
+}
+
+/** gunzip_lines(BINARY) → ARRAY<STRING>: [[CryptoExpressions.gunzipLinesKernel]]
+  * as a codegen'd unary expression; `explode` it for one row per line. */
+case class GunzipLines(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"gunzip_lines expects BINARY, got ${child.dataType}")
+
+  override protected def nullSafeEval(content: Any): Any =
+    CryptoExpressions.gunzipLinesKernel(content.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.CryptoExpressions.gunzipLinesKernel($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "gunzip_lines"
+}
+
+/** `from_json(line, schema)` over the line's UTF-8 bytes. It builds the
+  * parser exactly as Spark's `JsonToStructsEvaluator` does: no options,
+  * the session time zone, `spark.sql.columnNameOfCorruptRecord`,
+  * PERMISSIVE mode, `allowArrayAsStructs = false`, null in → null out.
+  * The one difference is the source: Jackson reads the line's byte range
+  * through its byte-stream parser, not through an `InputStreamReader`
+  * (and its 8 KiB decoder) per record. */
+case class ParseJsonBytes(
+    schema: StructType,
+    child: Expression,
+    timeZoneId: Option[String] = None)
+    extends UnaryExpression with TimeZoneAwareExpression {
+  @transient private lazy val nullableSchema =
+    JsonBytesParser.asNullable(schema).asInstanceOf[StructType]
+
+  override def dataType: DataType = nullableSchema
+  override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"parse_json_bytes expects STRING, got ${child.dataType}")
+
+  override def withTimeZone(timeZoneId: String): TimeZoneAwareExpression =
+    copy(timeZoneId = Option(timeZoneId))
+
+  @transient private lazy val parser = new JsonBytesParser(
+    nullableSchema, timeZoneId.get, SQLConf.get.columnNameOfCorruptRecord)
+
+  override def eval(input: InternalRow): Any =
+    parser.parse(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val p = ctx.addReferenceObj("jsonBytesParser", parser)
+    val line = child.genCode(ctx)
+    ev.copy(code = line.code + code"""
+      InternalRow ${ev.value} = ${line.isNull} ? null : $p.parse(${line.value});
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "parse_json_bytes"
+}
+
+/** The per-task parser behind [[ParseJsonBytes]]; serialized into the
+  * generated code's references, built lazily where it runs. */
+final class JsonBytesParser(schema: StructType, timeZoneId: String, corruptColumn: String)
+    extends Serializable {
+
+  @transient private lazy val parser: FailureSafeParser[UTF8String] = {
+    val options = new JSONOptions(Map.empty[String, String], timeZoneId, corruptColumn)
+    val actual = StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord))
+    val raw = new JacksonParser(actual, options, allowArrayAsStructs = false)
+    new FailureSafeParser[UTF8String](
+      line => raw.parse(line, JsonBytesParser.open, identity[UTF8String]),
+      PermissiveMode, schema, options.columnNameOfCorruptRecord)
+  }
+
+  def parse(line: UTF8String): InternalRow =
+    if (line == null) null
+    else {
+      val rows = parser.parse(line)
+      if (rows.hasNext) rows.next() else null
+    }
+}
+
+object JsonBytesParser {
+  /** Every field, element and value nullable, as `from_json` reads. */
+  def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Jackson over the line's own bytes. Its byte bootstrapper sniffs the
+    * encoding: a NUL in the first two bytes reads as UTF-16/32, and a
+    * leading 0xEF may be a UTF-8 BOM it would skip. Such lines, and any
+    * line not backed by a byte array, keep Spark's reader-based parser,
+    * so every line parses as `from_json` parses it. */
+  def open(factory: JsonFactory, line: UTF8String): JsonParser = {
+    val n = line.numBytes
+    val off = (line.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt
+    line.getBaseObject match {
+      case b: Array[Byte] if n < 2 || (b(off) != 0 && b(off + 1) != 0 && b(off) != 0xEF.toByte) =>
+        factory.createParser(b, off, n)
+      case _ => CreateJacksonParser.utf8String(factory, line)
+    }
+  }
 }

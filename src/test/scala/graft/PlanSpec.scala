@@ -715,5 +715,10 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("aes_ctr_decrypt"), p.take(2000))
     assert(p.contains("gunzip"), p.take(2000))
     assert(!p.contains("UDF("), "crypto path must not be a ScalaUDF")
+    // records are cut and parsed on bytes: no String decode, split,
+    // length filter or Reader-fed from_json
+    Seq("decode(", "split(", "length(", "from_json(").foreach { f =>
+      assert(!p.contains(f), s"records plan must not contain $f\n" + p.take(3000))
+    }
   }
 }

@@ -87,6 +87,19 @@ class SnapshotJobSpec extends SparkSuite {
     assert(row.getTimestamp(2).toString.startsWith("2015-03-01"))
   }
 
+  test("the plaintext data key leaves neither decrypt nor the records view") {
+    val keyed = SnapshotPipeline.resolveKeys(SnapshotPipeline.quarantine(
+      SnapshotPipeline.withTopic(
+        graft.sources.EncryptedSnapshotSource.read(spark, fixtureDir)))._1,
+      LocalKeyService)
+    assert(keyed.columns.contains("plaintextDataKey"))
+    val decrypted = SnapshotPipeline.decrypt(keyed)
+    val recs = SnapshotJob.records(spark, fixtureDir, LocalKeyService)
+    Seq(decrypted, recs).foreach { df =>
+      assert(!df.columns.contains("plaintextDataKey"), df.columns.mkString(", "))
+    }
+  }
+
   test("re-run is idempotent: anti-join skips all finished files") {
     val (out, status) = freshDirs("rerun")
     SnapshotJob.run(spark, fixtureDir, out, status, expectedDf, LocalKeyService)
