@@ -21,9 +21,8 @@ object SnapshotPipeline {
   val topicPattern = "^(?:\\w+\\.)?([\\w-]+)\\.([\\w-]+)-\\d{3}-\\d{3}-\\d+\\.\\w+\\.\\w+$"
 
   /** Shared name helpers — the scan side and the marker side MUST parse
-    * identically or the finished anti-join silently stops matching. The
-    * name is everything after the last `/` (the whole path if none). */
-  def fileNameFromPath(path: Column): Column = substring_index(path, "/", -1)
+    * identically or the finished anti-join silently stops matching. */
+  def fileNameFromPath(path: Column): Column = element_at(split(path, "/"), -1)
   def stripEnc(name: Column): Column = regexp_replace(name, "\\.enc$", "")
 
   /** M4 + F3: derive database/collection/topic from the filename; rows
@@ -115,7 +114,8 @@ object SnapshotPipeline {
   /** M3: gunzip → one row per non-empty JSON line, cut on `'\n'` bytes.
     * Each line is a slice of the file's inflated buffer, never decoded to
     * a Java String; a file that is not valid UTF-8 fails the task with
-    * MALFORMED_CHARACTER_CODING. */
+    * MALFORMED_CHARACTER_CODING, as `decode` does (under
+    * `spark.sql.legacy.codingErrorAction` its bad bytes become U+FFFD). */
   def explodeRecords(df: DataFrame): DataFrame = {
     CryptoExpressions.register(df.sparkSession)
     df.withColumn("line", explode(CryptoExpressions.gunzip_lines(col("content"))))

@@ -42,32 +42,70 @@ object CryptoExpressions {
 
   /** Inflates `content` and returns its non-empty `'\n'`-separated lines as
     * slices of the one inflated buffer (a `'\r'` before the `'\n'` stays on
-    * the line, as `split` leaves it). The same pass ORs every byte
-    * together: only a file holding a byte ≥ 0x80 pays the full UTF-8
-    * validation, which fails as `decode(…, 'UTF-8')` does. */
-  def gunzipLinesKernel(content: Array[Byte]): ArrayData = {
+    * the line, as `split` leaves it). The same pass checks that the buffer
+    * is well-formed UTF-8; a file that is not goes through Spark's own
+    * `decode(…, 'UTF-8')` with the session's legacy flags, so it fails with
+    * MALFORMED_CHARACTER_CODING or, under
+    * `spark.sql.legacy.codingErrorAction`, has its bad bytes replaced. */
+  def gunzipLinesKernel(
+      content: Array[Byte], legacyCharsets: Boolean, legacyErrorAction: Boolean): ArrayData = {
     val buf = Crypto.gunzip(content)
     val lines = new java.util.ArrayList[UTF8String]()
-    var seen = 0
+    if (!cutLines(buf, lines)) {
+      val decoded = StringDecode.decode(buf, UTF8String.fromString("UTF-8"),
+        legacyCharsets, legacyErrorAction).getBytes
+      lines.clear()
+      cutLines(decoded, lines)
+    }
+    new GenericArrayData(lines.toArray)
+  }
+
+  /** Adds `buf`'s non-empty `'\n'`-separated lines to `lines` as slices of
+    * `buf`; false as soon as `buf` is not well-formed UTF-8. An ASCII byte
+    * costs one branch; only a byte ≥ 0x80 starts a multi-byte check. */
+  private def cutLines(buf: Array[Byte], lines: java.util.ArrayList[UTF8String]): Boolean = {
     var start = 0
     var i = 0
     while (i < buf.length) {
       val b = buf(i)
-      seen |= b
-      if (b == '\n') {
-        if (i > start) lines.add(UTF8String.fromBytes(buf, start, i - start))
-        start = i + 1
+      if (b >= 0) {
+        if (b == '\n') {
+          if (i > start) lines.add(UTF8String.fromBytes(buf, start, i - start))
+          start = i + 1
+        }
+        i += 1
+      } else {
+        val n = utf8SequenceLength(buf, i)
+        if (n == 0) return false
+        i += n
       }
-      i += 1
     }
     if (i > start) lines.add(UTF8String.fromBytes(buf, start, i - start))
-    // a byte ≥ 0x80 sign-extends, so `seen` is negative iff one appeared;
-    // an invalid file goes through decode's own path, which throws
-    // MALFORMED_CHARACTER_CODING
-    if (seen < 0 && !UTF8String.fromBytes(buf).isValid)
-      StringDecode.decode(buf, UTF8String.fromString("UTF-8"), false, false)
-    new GenericArrayData(lines.toArray)
+    true
   }
+
+  /** Length (2–4) of the well-formed UTF-8 sequence that starts with the
+    * byte ≥ 0x80 at `buf(i)`, or 0 if it is ill-formed: the ranges of
+    * Unicode Table 3-7, which reject overlong forms, surrogates and code
+    * points above U+10FFFF, as Java's decoder and `UTF8String.isValid` do. */
+  private def utf8SequenceLength(buf: Array[Byte], i: Int): Int = {
+    val b0 = buf(i) & 0xFF
+    if (b0 >= 0xC2 && b0 <= 0xDF) {
+      if (inRange(buf, i + 1, 0x80, 0xBF)) 2 else 0
+    } else if (b0 >= 0xE0 && b0 <= 0xEF) {
+      val lo = if (b0 == 0xE0) 0xA0 else 0x80
+      val hi = if (b0 == 0xED) 0x9F else 0xBF
+      if (inRange(buf, i + 1, lo, hi) && inRange(buf, i + 2, 0x80, 0xBF)) 3 else 0
+    } else if (b0 >= 0xF0 && b0 <= 0xF4) {
+      val lo = if (b0 == 0xF0) 0x90 else 0x80
+      val hi = if (b0 == 0xF4) 0x8F else 0xBF
+      if (inRange(buf, i + 1, lo, hi) && inRange(buf, i + 2, 0x80, 0xBF) &&
+          inRange(buf, i + 3, 0x80, 0xBF)) 4 else 0
+    } else 0
+  }
+
+  private def inRange(buf: Array[Byte], j: Int, lo: Int, hi: Int): Boolean =
+    j < buf.length && { val c = buf(j) & 0xFF; c >= lo && c <= hi }
 
   /** Idempotent per-session registration (analysis-time resolution for
     * call_function / SQL). */
@@ -148,8 +186,14 @@ case class Gunzip(child: Expression) extends UnaryExpression {
 }
 
 /** gunzip_lines(BINARY) → ARRAY<STRING>: [[CryptoExpressions.gunzipLinesKernel]]
-  * as a codegen'd unary expression; `explode` it for one row per line. */
-case class GunzipLines(child: Expression) extends UnaryExpression {
+  * as a codegen'd unary expression; `explode` it for one row per line.
+  * Like Spark's `decode`, it takes the session's legacy charset and
+  * coding-error flags when it is built. */
+case class GunzipLines(
+    child: Expression,
+    legacyCharsets: Boolean = SQLConf.get.legacyJavaCharsets,
+    legacyErrorAction: Boolean = SQLConf.get.legacyCodingErrorAction)
+    extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult =
@@ -158,10 +202,14 @@ case class GunzipLines(child: Expression) extends UnaryExpression {
       s"gunzip_lines expects BINARY, got ${child.dataType}")
 
   override protected def nullSafeEval(content: Any): Any =
-    CryptoExpressions.gunzipLinesKernel(content.asInstanceOf[Array[Byte]])
+    CryptoExpressions.gunzipLinesKernel(
+      content.asInstanceOf[Array[Byte]], legacyCharsets, legacyErrorAction)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.CryptoExpressions.gunzipLinesKernel($c)")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.plans.CryptoExpressions.gunzipLinesKernel($c, $legacyCharsets, $legacyErrorAction)")
+
+  override protected def flatArguments: Iterator[Any] = Iterator(child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -715,10 +715,16 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("aes_ctr_decrypt"), p.take(2000))
     assert(p.contains("gunzip"), p.take(2000))
     assert(!p.contains("UDF("), "crypto path must not be a ScalaUDF")
-    // records are cut and parsed on bytes: no String decode, split,
-    // length filter or Reader-fed from_json
-    Seq("decode(", "split(", "length(", "from_json(").foreach { f =>
+    // records are cut and parsed on bytes: no String decode, length
+    // filter or Reader-fed from_json, and the explode's lines do not come
+    // from split (the scan's file-name split is not on the record path)
+    Seq("decode(", "length(", "from_json(").foreach { f =>
       assert(!p.contains(f), s"records plan must not contain $f\n" + p.take(3000))
     }
+    val generators = recs.queryExecution.analyzed.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g.generator.toString
+    }
+    assert(generators.nonEmpty && generators.forall(!_.contains("split(")),
+      generators.mkString("\n"))
   }
 }

@@ -119,4 +119,38 @@ class RecordDecodeSpec extends SparkSuite {
     assert(condition(reference(files(bad)).collect()) == "MALFORMED_CHARACTER_CODING")
     assert(condition(byteLevel(files(bad)).collect()) == "MALFORMED_CHARACTER_CODING")
   }
+
+  test("under the legacy coding-error action, bad bytes are replaced as decode replaces them") {
+    val bad = Crypto.gzip((rec(1) + "\n").getBytes(UTF_8) ++ Array(0xC3, 0x28).map(_.toByte) ++
+      ("\n" + rec(2)).getBytes(UTF_8))
+    spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
+    try {
+      val rows = same(bad)
+      assert(rows.map(_.getAs[String]("line")) == Seq(rec(1), "\uFFFD(", rec(2)))
+    } finally spark.conf.unset("spark.sql.legacy.codingErrorAction")
+  }
+
+  test("the in-pass UTF-8 check accepts exactly what Java's decoder and isValid accept") {
+    // short runs of single bytes where well-formedness changes (ASCII,
+    // continuation bounds, the C0/C1, E0, ED, F0, F4 leads and F5+) mixed
+    // with whole sequences for code points at the edges of each length
+    val bytes1 = Seq(0x41, 0x0A, 0x7F, 0x80, 0x8F, 0x90, 0x9F, 0xA0, 0xBF, 0xC0, 0xC1,
+      0xC2, 0xDF, 0xE0, 0xE1, 0xEC, 0xED, 0xEE, 0xEF, 0xF0, 0xF1, 0xF3, 0xF4, 0xF5, 0xFF)
+      .map(b => Array(b.toByte))
+    val sequences = Seq(0x80, 0x7FF, 0x800, 0xD7FF, 0xE000, 0xFFFD, 0x10000, 0x10FFFF)
+      .map(cp => new String(Character.toChars(cp)).getBytes(UTF_8))
+    val pool = bytes1 ++ sequences
+    val rnd = new scala.util.Random(7)
+    var valid = 0
+    (0 until 20000).foreach { _ =>
+      val bytes = Array.fill(1 + rnd.nextInt(5))(pool(rnd.nextInt(pool.length))).flatten
+      val decoder = scala.util.Try(UTF_8.newDecoder().decode(java.nio.ByteBuffer.wrap(bytes))).isSuccess
+      assert(org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes).isValid == decoder)
+      val kernel = scala.util.Try(
+        CryptoExpressions.gunzipLinesKernel(Crypto.gzip(bytes), false, false)).isSuccess
+      assert(kernel == decoder, bytes.map(b => f"$b%02X").mkString(" "))
+      if (decoder) valid += 1
+    }
+    assert(valid > 2000 && valid < 18000, s"$valid valid inputs: the pool tests too little")
+  }
 }
