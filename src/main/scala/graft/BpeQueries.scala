@@ -281,6 +281,27 @@ object BpeQueries {
   }
 
   /** Fit replay: sample → vocab `v0` → merge steps `b1…bM`, `v1…vM`. */
+  /** The refit/drift cycle's scorecard (q322, q329, q332): fertility
+    * of the old model on both samples (`fo`, `fn`) and of the refit on
+    * the new one (`fz`), the 10% drift bar and `idchg`'s vocab-id
+    * change. */
+  private def refitScorecard: String =
+    """SELECT 'fert_v1_oldsample_micro' AS check,
+      |  CAST(wp * 1000000 // tf AS BIGINT) AS value FROM fo
+      |UNION ALL SELECT 'fert_v1_newsample_micro',
+      |  CAST(wp * 1000000 // tf AS BIGINT) FROM fn
+      |UNION ALL SELECT 'drift_exceeds_bar',
+      |  CAST(CASE WHEN 10 * fn.wp * fo.tf > 11 * fo.wp * fn.tf
+      |    THEN 1 ELSE 0 END AS BIGINT) FROM fn, fo
+      |UNION ALL SELECT 'vocab_id_changed', v FROM idchg
+      |UNION ALL SELECT 'fert_v2_newsample_micro',
+      |  CAST(wp * 1000000 // tf AS BIGINT) FROM fz
+      |UNION ALL SELECT 'refit_improves',
+      |  CAST(CASE WHEN fz.wp < fn.wp THEN 1 ELSE 0 END AS BIGINT)
+      |  FROM fz, fn
+      |UNION ALL SELECT 'artifact_reencode_mismatch', 0
+      |UNION ALL SELECT 'old_vocab_refused', 1""".stripMargin
+
   private def fitChain: String =
     fitChainOver("SELECT doc_id, text FROM documents WHERE text IS NOT NULL", "")
 
@@ -1605,21 +1626,7 @@ object BpeQueries {
            |    = (SELECT count(*) FROM omg)
            |    AND (SELECT count(*) FROM omg) = (SELECT count(*) FROM umg)
            |  THEN 0 ELSE 1 END AS BIGINT) AS v)
-           |SELECT 'fert_v1_oldsample_micro' AS check,
-           |  CAST(wp * 1000000 // tf AS BIGINT) AS value FROM fo
-           |UNION ALL SELECT 'fert_v1_newsample_micro',
-           |  CAST(wp * 1000000 // tf AS BIGINT) FROM fn
-           |UNION ALL SELECT 'drift_exceeds_bar',
-           |  CAST(CASE WHEN 10 * fn.wp * fo.tf > 11 * fo.wp * fn.tf
-           |    THEN 1 ELSE 0 END AS BIGINT) FROM fn, fo
-           |UNION ALL SELECT 'vocab_id_changed', v FROM idchg
-           |UNION ALL SELECT 'fert_v2_newsample_micro',
-           |  CAST(wp * 1000000 // tf AS BIGINT) FROM fz
-           |UNION ALL SELECT 'refit_improves',
-           |  CAST(CASE WHEN fz.wp < fn.wp THEN 1 ELSE 0 END AS BIGINT)
-           |  FROM fz, fn
-           |UNION ALL SELECT 'artifact_reencode_mismatch', 0
-           |UNION ALL SELECT 'old_vocab_refused', 1""".stripMargin
+           |$refitScorecard""".stripMargin
       }),
 
     // WORDPIECE REFIT / DRIFT CYCLE (r18 verdict missing #4 — q322's
@@ -1754,21 +1761,7 @@ object BpeQueries {
            |    = (SELECT count(*) FROM awvoc)
            |    AND (SELECT count(*) FROM awvoc) = (SELECT count(*) FROM bwvoc)
            |  THEN 0 ELSE 1 END AS BIGINT) AS v)
-           |SELECT 'fert_v1_oldsample_micro' AS check,
-           |  CAST(wp * 1000000 // tf AS BIGINT) AS value FROM fo
-           |UNION ALL SELECT 'fert_v1_newsample_micro',
-           |  CAST(wp * 1000000 // tf AS BIGINT) FROM fn
-           |UNION ALL SELECT 'drift_exceeds_bar',
-           |  CAST(CASE WHEN 10 * fn.wp * fo.tf > 11 * fo.wp * fn.tf
-           |    THEN 1 ELSE 0 END AS BIGINT) FROM fn, fo
-           |UNION ALL SELECT 'vocab_id_changed', v FROM idchg
-           |UNION ALL SELECT 'fert_v2_newsample_micro',
-           |  CAST(wp * 1000000 // tf AS BIGINT) FROM fz
-           |UNION ALL SELECT 'refit_improves',
-           |  CAST(CASE WHEN fz.wp < fn.wp THEN 1 ELSE 0 END AS BIGINT)
-           |  FROM fz, fn
-           |UNION ALL SELECT 'artifact_reencode_mismatch', 0
-           |UNION ALL SELECT 'old_vocab_refused', 1""".stripMargin
+           |$refitScorecard""".stripMargin
       }),
 
     // UNIGRAM-LM REFIT / DRIFT CYCLE — the FOURTH tokenizer family
@@ -1880,21 +1873,7 @@ object BpeQueries {
            |    = (SELECT count(*) FROM gus2)
            |    AND (SELECT count(*) FROM gus2) = (SELECT count(*) FROM hus2)
            |  THEN 0 ELSE 1 END AS BIGINT) AS v)
-           |SELECT 'fert_v1_oldsample_micro' AS check,
-           |  CAST(wp * 1000000 // tf AS BIGINT) AS value FROM fo
-           |UNION ALL SELECT 'fert_v1_newsample_micro',
-           |  CAST(wp * 1000000 // tf AS BIGINT) FROM fn
-           |UNION ALL SELECT 'drift_exceeds_bar',
-           |  CAST(CASE WHEN 10 * fn.wp * fo.tf > 11 * fo.wp * fn.tf
-           |    THEN 1 ELSE 0 END AS BIGINT) FROM fn, fo
-           |UNION ALL SELECT 'vocab_id_changed', v FROM idchg
-           |UNION ALL SELECT 'fert_v2_newsample_micro',
-           |  CAST(wp * 1000000 // tf AS BIGINT) FROM fz
-           |UNION ALL SELECT 'refit_improves',
-           |  CAST(CASE WHEN fz.wp < fn.wp THEN 1 ELSE 0 END AS BIGINT)
-           |  FROM fz, fn
-           |UNION ALL SELECT 'artifact_reencode_mismatch', 0
-           |UNION ALL SELECT 'old_vocab_refused', 1""".stripMargin
+           |$refitScorecard""".stripMargin
       }),
   )
 

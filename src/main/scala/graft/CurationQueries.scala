@@ -1404,17 +1404,8 @@ object CurationQueries {
           d.unionByName(quoters), "doc_id", "text",
           k = 25, w = 8, minShared = 2, maxDf = 20)
       },
-      Some(s"""WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 96000,
-             |    substr(text, 1, 150) || ' entirely new commentary words follow the lifted passage'
-             |  FROM documents WHERE doc_id < 8),
-             |cch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |csel AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM cgr)),
+      Some(s"""WITH $quoterCorpusCte,
+             |$winnowSelCtes,
              |rare AS (SELECT fp FROM csel GROUP BY fp HAVING count(*) <= 20),
              |capped AS (SELECT doc_id, fp FROM csel JOIN rare USING (fp))
              |SELECT a.doc_id AS idA, b.doc_id AS idB,
@@ -1461,37 +1452,15 @@ object CurationQueries {
             when(col("n_dirty_fp") > 0 && col("n13_dirty") === 0, 1L)
               .otherwise(0L).as("sub_ngram_leak"))
       },
-      Some(s"""WITH evals AS (
-             |  SELECT doc_id + 97000 AS id, substr(text, 21, 60) AS text
-             |  FROM documents WHERE doc_id < 10
-             |  UNION ALL SELECT 97100,
-             |    'the purple quantum walrus audits a crystalline ledger of unseen comets while seventeen translucent beacons hum beneath the patient glacier tonight'),
-             |ech AS (SELECT id, lower(text) AS t FROM evals),
-             |${RelationalQueries5.fnvGramCtes("egr", "id", "ech")},
-             |esel AS (SELECT DISTINCT id, fp FROM (
-             |  SELECT id, min(h) OVER (PARTITION BY id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM egr)),
-             |tch AS (SELECT doc_id, lower(text) AS t FROM documents),
-             |${RelationalQueries5.fnvGramCtes("tgr", "doc_id", "tch")},
-             |tsel AS (SELECT DISTINCT fp FROM (
-             |  SELECT min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM tgr)),
+      Some(s"""WITH $leakProbeCte,
+             |${winnowCtes("e", "id", "evals", "esel", "id, fp", "id, ")},
+             |${winnowCtes("t", "doc_id", "documents", "tsel", "fp", "")},
              |fcnt AS (SELECT id, CAST(count(*) AS BIGINT) AS n_fp
              |  FROM esel GROUP BY 1),
              |fhit AS (SELECT id, CAST(count(*) AS BIGINT) AS n_dirty_fp
              |  FROM esel JOIN tsel USING (fp) GROUP BY 1),
-             |ew AS (SELECT id, string_split_regex(
-             |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-             |  FROM evals),
-             |eg AS (SELECT DISTINCT id, array_to_string(w[i:i+12], ' ') AS g
-             |  FROM (SELECT id, w, unnest(generate_series(1, len(w) - 12)) AS i
-             |        FROM ew WHERE len(w) >= 13)),
-             |tw AS (SELECT string_split_regex(
-             |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-             |  FROM documents),
-             |tg AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
-             |  FROM (SELECT w, unnest(generate_series(1, len(w) - 12)) AS i
-             |        FROM tw WHERE len(w) >= 13)),
+             |${wordGramCtes("e", "id, ", "evals")},
+             |${wordGramCtes("t", "", "documents")},
              |ngr AS (SELECT id, CAST(count(*) AS BIGINT) AS n13_grams
              |  FROM eg GROUP BY 1),
              |hr AS (SELECT id, CAST(count(*) AS BIGINT) AS n13_dirty
@@ -1547,21 +1516,9 @@ object CurationQueries {
             when(col("span_chars") >= col("_elen"), 1L).otherwise(0L)
               .as("whole_doc_leak"))
       },
-      Some(s"""WITH evals AS (
-             |  SELECT doc_id + 97000 AS id, substr(text, 21, 60) AS text
-             |  FROM documents WHERE doc_id < 10
-             |  UNION ALL SELECT 97100,
-             |    'the purple quantum walrus audits a crystalline ledger of unseen comets while seventeen translucent beacons hum beneath the patient glacier tonight'),
-             |ech AS (SELECT id, lower(text) AS t FROM evals),
-             |${RelationalQueries5.fnvGramCtes("egr", "id", "ech")},
-             |esel AS (SELECT DISTINCT id, fp FROM (
-             |  SELECT id, min(h) OVER (PARTITION BY id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM egr)),
-             |tch AS (SELECT doc_id, lower(text) AS t FROM documents),
-             |${RelationalQueries5.fnvGramCtes("tgr", "doc_id", "tch")},
-             |tsel AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM tgr)),
+      Some(s"""WITH $leakProbeCte,
+             |${winnowCtes("e", "id", "evals", "esel", "id, fp", "id, ")},
+             |${winnowCtes("t", "doc_id", "documents", "tsel", "doc_id, fp", "doc_id, ")},
              |cpairs AS (SELECT DISTINCT ts.doc_id AS train_id, es.id AS eval_id
              |  FROM tsel ts JOIN esel es ON ts.fp = es.fp),
              |mm AS (SELECT cp.train_id, cp.eval_id,
@@ -1629,21 +1586,9 @@ object CurationQueries {
              |  WHERE doc_id % 4 <> 0 AND doc_id % 5 <> 1
              |  UNION ALL
              |  SELECT doc_id + 50000, text FROM documents WHERE doc_id % 4 = 0),
-             |evals AS (
-             |  SELECT doc_id + 97000 AS id, substr(text, 21, 60) AS text
-             |  FROM documents WHERE doc_id < 10
-             |  UNION ALL SELECT 97100,
-             |    'the purple quantum walrus audits a crystalline ledger of unseen comets while seventeen translucent beacons hum beneath the patient glacier tonight'),
-             |ech AS (SELECT id, lower(text) AS t FROM evals),
-             |${RelationalQueries5.fnvGramCtes("egr", "id", "ech")},
-             |esel AS (SELECT DISTINCT id, fp FROM (
-             |  SELECT id, min(h) OVER (PARTITION BY id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM egr)),
-             |tch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("tgr", "doc_id", "tch")},
-             |tsel AS (SELECT DISTINCT fp FROM (
-             |  SELECT min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM tgr)),
+             |$leakProbeCte,
+             |${winnowCtes("e", "id", "evals", "esel", "id, fp", "id, ")},
+             |${winnowCtes("t", "doc_id", "corpus", "tsel", "fp", "")},
              |fcnt AS (SELECT id, CAST(count(*) AS BIGINT) AS n_fp
              |  FROM esel GROUP BY 1),
              |fhit AS (SELECT id, CAST(count(*) AS BIGINT) AS n_dirty_fp
@@ -1694,21 +1639,9 @@ object CurationQueries {
           s"q270_${math.abs(dir.hashCode)}",
           shufflePartitions = Some(8))
       },
-      Some(s"""WITH evals AS (
-             |  SELECT doc_id + 97000 AS id, substr(text, 21, 60) AS text
-             |  FROM documents WHERE doc_id < 10
-             |  UNION ALL SELECT 97100,
-             |    'the purple quantum walrus audits a crystalline ledger of unseen comets while seventeen translucent beacons hum beneath the patient glacier tonight'),
-             |ech AS (SELECT id, lower(text) AS t FROM evals),
-             |${RelationalQueries5.fnvGramCtes("egr", "id", "ech")},
-             |esel AS (SELECT DISTINCT fp FROM (
-             |  SELECT id, min(h) OVER (PARTITION BY id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM egr)),
-             |tch AS (SELECT doc_id, lower(text) AS t FROM documents),
-             |${RelationalQueries5.fnvGramCtes("tgr", "doc_id", "tch")},
-             |tselD AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM tgr))
+      Some(s"""WITH $leakProbeCte,
+             |${winnowCtes("e", "id", "evals", "esel", "fp", "id, ")},
+             |${winnowCtes("t", "doc_id", "documents", "tselD", "doc_id, fp", "doc_id, ")}
              |SELECT t.doc_id AS id, CAST(count(*) AS BIGINT) AS n_fp,
              |  CAST(sum(CASE WHEN e.fp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
              |    AS n_dirty,
@@ -1769,21 +1702,9 @@ object CurationQueries {
             (col("quota_replanned") - col("quota_naive")).as("quota_shift"),
             coalesce(col("n_excised"), lit(0L)).as("n_excised"))
       },
-      Some(s"""WITH evals AS (
-             |  SELECT doc_id + 97000 AS id, substr(text, 21, 60) AS text
-             |  FROM documents WHERE doc_id < 10
-             |  UNION ALL SELECT 97100,
-             |    'the purple quantum walrus audits a crystalline ledger of unseen comets while seventeen translucent beacons hum beneath the patient glacier tonight'),
-             |ech AS (SELECT id, lower(text) AS t FROM evals),
-             |${RelationalQueries5.fnvGramCtes("egr", "id", "ech")},
-             |esel AS (SELECT DISTINCT fp FROM (
-             |  SELECT id, min(h) OVER (PARTITION BY id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM egr)),
-             |tch AS (SELECT doc_id, lower(text) AS t FROM documents),
-             |${RelationalQueries5.fnvGramCtes("tgr", "doc_id", "tch")},
-             |tselD AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM tgr)),
+      Some(s"""WITH $leakProbeCte,
+             |${winnowCtes("e", "id", "evals", "esel", "fp", "id, ")},
+             |${winnowCtes("t", "doc_id", "documents", "tselD", "doc_id, fp", "doc_id, ")},
              |dirty AS (SELECT DISTINCT t.doc_id
              |  FROM tselD t JOIN esel e ON e.fp = t.fp),
              |tkc AS (SELECT doc_id, source,
@@ -1793,45 +1714,11 @@ object CurationQueries {
              |  FROM documents),
              |ns AS (SELECT source, CAST(sum(tk) AS BIGINT) AS n_tokens
              |  FROM tkc GROUP BY source),
-             |nlw AS (SELECT source, n_tokens,
-             |    (CAST(round(ln(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) * 7)
-             |      // 10 AS lwm FROM ns),
-             |nmx AS (SELECT max(lwm) AS m FROM nlw),
-             |nwm AS (SELECT source, n_tokens,
-             |    CAST(round(exp(CAST(lwm - (SELECT m FROM nmx) AS DOUBLE) / 1000000)
-             |      * 1000000) AS BIGINT) AS weight_micro FROM nlw),
-             |ntw AS (SELECT CAST(sum(weight_micro) AS BIGINT) AS t FROM nwm),
-             |nbase AS (SELECT source, n_tokens, weight_micro,
-             |    (1000000 * weight_micro) // t AS bq,
-             |    1000000 * weight_micro - ((1000000 * weight_micro) // t) * t AS rem
-             |  FROM nwm, ntw),
-             |nlo AS (SELECT 1000000 - sum(bq) AS l FROM nbase),
-             |nrk AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS r
-             |  FROM nbase),
-             |nq AS (SELECT source, n_tokens,
-             |    CAST(bq + CASE WHEN r <= (SELECT l FROM nlo) THEN 1 ELSE 0 END
-             |      AS BIGINT) AS quota FROM nrk),
+             |${OracleFragments.temperatureQuotaCtes("n")},
              |ps AS (SELECT source, CAST(sum(tk) AS BIGINT) AS n_tokens
              |  FROM tkc WHERE doc_id NOT IN (SELECT doc_id FROM dirty)
              |  GROUP BY source),
-             |plw AS (SELECT source, n_tokens,
-             |    (CAST(round(ln(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) * 7)
-             |      // 10 AS lwm FROM ps),
-             |pmx AS (SELECT max(lwm) AS m FROM plw),
-             |pwm AS (SELECT source, n_tokens,
-             |    CAST(round(exp(CAST(lwm - (SELECT m FROM pmx) AS DOUBLE) / 1000000)
-             |      * 1000000) AS BIGINT) AS weight_micro FROM plw),
-             |ptw AS (SELECT CAST(sum(weight_micro) AS BIGINT) AS t FROM pwm),
-             |pbase AS (SELECT source, n_tokens, weight_micro,
-             |    (1000000 * weight_micro) // t AS bq,
-             |    1000000 * weight_micro - ((1000000 * weight_micro) // t) * t AS rem
-             |  FROM pwm, ptw),
-             |plo AS (SELECT 1000000 - sum(bq) AS l FROM pbase),
-             |prk AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS r
-             |  FROM pbase),
-             |pq AS (SELECT source, n_tokens,
-             |    CAST(bq + CASE WHEN r <= (SELECT l FROM plo) THEN 1 ELSE 0 END
-             |      AS BIGINT) AS quota FROM prk),
+             |${OracleFragments.temperatureQuotaCtes("p")},
              |exc AS (SELECT source, CAST(count(*) AS BIGINT) AS n_excised
              |  FROM tkc WHERE doc_id IN (SELECT doc_id FROM dirty)
              |  GROUP BY source)
@@ -1913,18 +1800,8 @@ object CurationQueries {
              |tkc AS (SELECT doc_id, CAST(len(string_split_regex(
              |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+'))
              |    AS BIGINT) AS tk FROM documents),
-             |ew AS (SELECT string_split_regex(
-             |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-             |  FROM evals),
-             |eg AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
-             |  FROM (SELECT w, unnest(generate_series(1, len(w) - 12)) AS i
-             |        FROM ew WHERE len(w) >= 13)),
-             |tw AS (SELECT doc_id, string_split_regex(
-             |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-             |  FROM documents),
-             |tg AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+12], ' ') AS g
-             |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 12)) AS i
-             |        FROM tw WHERE len(w) >= 13)),
+             |${wordGramCtes("e", "", "evals")},
+             |${wordGramCtes("t", "doc_id, ", "documents")},
              |rawids AS (SELECT DISTINCT t.doc_id FROM tg t JOIN eg e ON e.g = t.g),
              |enw AS (SELECT regexp_extract_all(lower(text), '\\w+') AS w FROM evals),
              |eng AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
@@ -1936,16 +1813,8 @@ object CurationQueries {
              |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 12)) AS i
              |        FROM tnw WHERE len(w) >= 13)),
              |normids AS (SELECT DISTINCT t.doc_id FROM tng t JOIN eng e ON e.g = t.g),
-             |ech AS (SELECT id, lower(text) AS t FROM evals),
-             |${RelationalQueries5.fnvGramCtes("egr", "id", "ech")},
-             |esel AS (SELECT DISTINCT fp FROM (
-             |  SELECT id, min(h) OVER (PARTITION BY id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM egr)),
-             |tch AS (SELECT doc_id, lower(text) AS t FROM documents),
-             |${RelationalQueries5.fnvGramCtes("tgr", "doc_id", "tch")},
-             |tselD AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM tgr)),
+             |${winnowCtes("e", "id", "evals", "esel", "fp", "id, ")},
+             |${winnowCtes("t", "doc_id", "documents", "tselD", "doc_id, fp", "doc_id, ")},
              |charids AS (SELECT DISTINCT t.doc_id
              |  FROM tselD t JOIN esel e ON e.fp = t.fp)
              |SELECT 'raw13' AS rung,
@@ -1984,17 +1853,8 @@ object CurationQueries {
           d.unionByName(quoters), "doc_id", "text",
           k = 25, w = 8, minShared = 2, maxDf = 20)
       },
-      Some(s"""WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 96000,
-             |    substr(text, 1, 150) || ' entirely new commentary words follow the lifted passage'
-             |  FROM documents WHERE doc_id < 8),
-             |cch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |csel AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM cgr)),
+      Some(s"""WITH $quoterCorpusCte,
+             |$winnowSelCtes,
              |rare AS (SELECT fp FROM csel GROUP BY fp HAVING count(*) <= 20),
              |capped AS (SELECT doc_id, fp FROM csel JOIN rare USING (fp)),
              |cand AS (SELECT a.doc_id AS idA, b.doc_id AS idB,
@@ -2036,17 +1896,8 @@ object CurationQueries {
         Curation.boilerplateFingerprints(planted, "doc_id", "text",
           "source", k = 25, w = 8, minDf = 25L)
       },
-      Some(s"""WITH corpus AS (
-             |  SELECT doc_id, source,
-             |    CASE WHEN doc_id < 40
-             |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
-             |      ELSE text END AS text
-             |  FROM documents),
-             |cch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |csel AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM cgr))
+      Some(s"""WITH ${headerCorpusCte("corpus")},
+             |$winnowSelCtes
              |SELECT CAST(CASE WHEN s.fp >= 9223372036854775808
              |    THEN s.fp - 18446744073709551616 ELSE s.fp END AS BIGINT)
              |    AS fp,
@@ -2086,17 +1937,8 @@ object CurationQueries {
           .select(col("source"), col("n_docs"), col("n_carriers"),
             expr("n_carriers * 1000000 DIV n_docs").as("burden_micro"))
       },
-      Some(s"""WITH corpus AS (
-             |  SELECT doc_id, source,
-             |    CASE WHEN doc_id < 40
-             |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
-             |      ELSE text END AS text
-             |  FROM documents),
-             |cch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |csel AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM cgr)),
+      Some(s"""WITH ${headerCorpusCte("corpus")},
+             |$winnowSelCtes,
              |mined AS (SELECT fp FROM csel GROUP BY fp HAVING count(*) >= 25),
              |carriers AS (SELECT DISTINCT doc_id
              |  FROM csel JOIN mined USING (fp))
@@ -2135,56 +1977,7 @@ object CurationQueries {
         Curation.stripBoilerplate(planted, mined, "doc_id", "text",
           k = 25, w = 8)
       },
-      Some(s"""WITH corpus AS (
-             |  SELECT doc_id, source,
-             |    CASE WHEN doc_id < 40
-             |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
-             |      ELSE text END AS text
-             |  FROM documents),
-             |cch AS (SELECT doc_id, text, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |pk AS (SELECT doc_id, min(h * 1048576 + i) OVER (
-             |    PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS key FROM cgr),
-             |psel AS (SELECT DISTINCT doc_id,
-             |    CAST(key % 1048576 AS BIGINT) AS i, key // 1048576 AS fp
-             |  FROM pk),
-             |mined AS (SELECT fp FROM (SELECT DISTINCT doc_id, fp FROM psel)
-             |  GROUP BY fp HAVING count(*) >= 25),
-             |hits AS (SELECT doc_id, i FROM psel JOIN mined USING (fp)),
-             |mk AS (SELECT doc_id, i,
-             |  CASE WHEN max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-             |    OR i > max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |    THEN 1 ELSE 0 END AS isl0 FROM hits),
-             |isl AS (SELECT doc_id, i, sum(isl0) OVER (PARTITION BY doc_id
-             |  ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-             |  FROM mk),
-             |merged AS (SELECT doc_id, g, min(i) AS s, max(i) + 25 AS e
-             |  FROM isl GROUP BY 1, 2),
-             |gaps AS (
-             |  SELECT doc_id, coalesce(lag(e) OVER (PARTITION BY doc_id
-             |      ORDER BY s), 1) AS gs, s AS ge FROM merged
-             |  UNION ALL
-             |  SELECT doc_id, max(e) AS gs, NULL AS ge FROM merged
-             |  GROUP BY doc_id),
-             |cleaned AS (
-             |  SELECT g.doc_id, string_agg(
-             |    substr(c.text, CAST(g.gs AS INT),
-             |      CAST(coalesce(g.ge, length(c.text) + 1) - g.gs AS INT)),
-             |    '' ORDER BY g.gs) AS ct
-             |  FROM gaps g JOIN corpus c ON c.doc_id = g.doc_id GROUP BY 1),
-             |stats AS (SELECT doc_id, count(*) AS n_spans,
-             |    sum(e - s) AS removed FROM merged GROUP BY 1)
-             |SELECT c.doc_id AS id,
-             |  CAST(coalesce(st.n_spans, 0) AS BIGINT) AS n_spans,
-             |  CAST(coalesce(st.removed, 0) AS BIGINT) AS removed_chars,
-             |  CAST(coalesce(length(coalesce(cl.ct, c.text)), 0) AS BIGINT)
-             |    AS clean_len,
-             |  coalesce(cl.ct, c.text) AS clean_text
-             |FROM corpus c LEFT JOIN stats st ON st.doc_id = c.doc_id
-             |  LEFT JOIN cleaned cl ON cl.doc_id = c.doc_id""".stripMargin)),
+      Some(boilerplateStripOracle)),
 
     // SEMANTIC CONTAMINATION RUNG (Curation.semanticContamination) —
     // the embedding-space member of the q285 ladder: a train vector is
@@ -2220,38 +2013,7 @@ object CurationQueries {
         Curation.semanticContamination(
           e.select(col("vec_id").as("id"), col("v")), probes, tau = 0.9)
       },
-      Some("""WITH tr AS (SELECT vec_id AS id,
-             |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             |  FROM embeddings),
-             |pe AS (
-             |  SELECT 9001 AS eid,
-             |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             |  FROM embeddings WHERE vec_id = 0
-             |  UNION ALL
-             |  SELECT 9002, list_transform(embedding, x -> CAST(x AS DOUBLE) * 2.0)
-             |  FROM embeddings WHERE vec_id = 1
-             |  UNION ALL
-             |  SELECT 9003, list_transform(generate_series(1, len(a.embedding)),
-             |    i -> CAST(a.embedding[i] AS DOUBLE)
-             |      + CAST(b.embedding[i] AS DOUBLE) * 0.2)
-             |  FROM embeddings a, embeddings b
-             |  WHERE a.vec_id = 2 AND b.vec_id = 3
-             |  UNION ALL
-             |  SELECT 9004, list_transform(generate_series(1, len(a.embedding)),
-             |    i -> (CAST(a.embedding[i] AS DOUBLE)
-             |      + CAST(b.embedding[i] AS DOUBLE)) * 0.5)
-             |  FROM embeddings a, embeddings b
-             |  WHERE a.vec_id = 4 AND b.vec_id = 5),
-             |tn AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS vn FROM tr
-             |  WHERE sqrt(list_dot_product(v, v)) > 0),
-             |en AS (SELECT eid, v, sqrt(list_dot_product(v, v)) AS en FROM pe
-             |  WHERE sqrt(list_dot_product(v, v)) > 0),
-             |sims AS (SELECT t.id, e.eid,
-             |    list_dot_product(t.v, e.v) / (t.vn * e.en) AS sim
-             |  FROM tn t, en e)
-             |SELECT id, CAST(count(*) AS BIGINT) AS n_probes_hit,
-             |  round(max(sim), 6) AS max_sim
-             |FROM sims WHERE sim >= 0.9 GROUP BY id""".stripMargin)),
+      Some(semanticContaminationOracle)),
 
     // STREAMING TEMPLATE-STRIP AT INGEST (Curation
     // .stripBoilerplateAtIngest) — the streaming member of the
@@ -2287,56 +2049,7 @@ object CurationQueries {
           s"q291_${math.abs(dir.hashCode)}",
           shufflePartitions = Some(8))
       },
-      Some(s"""WITH corpus AS (
-             |  SELECT doc_id, source,
-             |    CASE WHEN doc_id < 40
-             |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
-             |      ELSE text END AS text
-             |  FROM documents),
-             |cch AS (SELECT doc_id, text, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |pk AS (SELECT doc_id, min(h * 1048576 + i) OVER (
-             |    PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS key FROM cgr),
-             |psel AS (SELECT DISTINCT doc_id,
-             |    CAST(key % 1048576 AS BIGINT) AS i, key // 1048576 AS fp
-             |  FROM pk),
-             |mined AS (SELECT fp FROM (SELECT DISTINCT doc_id, fp FROM psel)
-             |  GROUP BY fp HAVING count(*) >= 25),
-             |hits AS (SELECT doc_id, i FROM psel JOIN mined USING (fp)),
-             |mk AS (SELECT doc_id, i,
-             |  CASE WHEN max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-             |    OR i > max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |    THEN 1 ELSE 0 END AS isl0 FROM hits),
-             |isl AS (SELECT doc_id, i, sum(isl0) OVER (PARTITION BY doc_id
-             |  ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-             |  FROM mk),
-             |merged AS (SELECT doc_id, g, min(i) AS s, max(i) + 25 AS e
-             |  FROM isl GROUP BY 1, 2),
-             |gaps AS (
-             |  SELECT doc_id, coalesce(lag(e) OVER (PARTITION BY doc_id
-             |      ORDER BY s), 1) AS gs, s AS ge FROM merged
-             |  UNION ALL
-             |  SELECT doc_id, max(e) AS gs, NULL AS ge FROM merged
-             |  GROUP BY doc_id),
-             |cleaned AS (
-             |  SELECT g.doc_id, string_agg(
-             |    substr(c.text, CAST(g.gs AS INT),
-             |      CAST(coalesce(g.ge, length(c.text) + 1) - g.gs AS INT)),
-             |    '' ORDER BY g.gs) AS ct
-             |  FROM gaps g JOIN corpus c ON c.doc_id = g.doc_id GROUP BY 1),
-             |stats AS (SELECT doc_id, count(*) AS n_spans,
-             |    sum(e - s) AS removed FROM merged GROUP BY 1)
-             |SELECT c.doc_id AS id,
-             |  CAST(coalesce(st.n_spans, 0) AS BIGINT) AS n_spans,
-             |  CAST(coalesce(st.removed, 0) AS BIGINT) AS removed_chars,
-             |  CAST(coalesce(length(coalesce(cl.ct, c.text)), 0) AS BIGINT)
-             |    AS clean_len,
-             |  coalesce(cl.ct, c.text) AS clean_text
-             |FROM corpus c LEFT JOIN stats st ON st.doc_id = c.doc_id
-             |  LEFT JOIN cleaned cl ON cl.doc_id = c.doc_id""".stripMargin)),
+      Some(boilerplateStripOracle)),
 
     // STRIP-AWARE MIXTURE RE-PLAN — the q271 discipline with
     // template-stripping as the token-mass remover: the naive
@@ -2385,48 +2098,8 @@ object CurationQueries {
             (col("quota_replanned") - col("quota_naive")).as("quota_shift"),
             col("n_stripped"), col("chars_removed"))
       },
-      Some(s"""WITH corpus AS (
-             |  SELECT doc_id, source,
-             |    CASE WHEN doc_id < 40
-             |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
-             |      ELSE text END AS text
-             |  FROM documents),
-             |cch AS (SELECT doc_id, text, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |pk AS (SELECT doc_id, min(h * 1048576 + i) OVER (
-             |    PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS key FROM cgr),
-             |psel AS (SELECT DISTINCT doc_id,
-             |    CAST(key % 1048576 AS BIGINT) AS i, key // 1048576 AS fp
-             |  FROM pk),
-             |mined AS (SELECT fp FROM (SELECT DISTINCT doc_id, fp FROM psel)
-             |  GROUP BY fp HAVING count(*) >= 25),
-             |hits AS (SELECT doc_id, i FROM psel JOIN mined USING (fp)),
-             |mk AS (SELECT doc_id, i,
-             |  CASE WHEN max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-             |    OR i > max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |    THEN 1 ELSE 0 END AS isl0 FROM hits),
-             |isl AS (SELECT doc_id, i, sum(isl0) OVER (PARTITION BY doc_id
-             |  ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-             |  FROM mk),
-             |merged AS (SELECT doc_id, g, min(i) AS s, max(i) + 25 AS e
-             |  FROM isl GROUP BY 1, 2),
-             |gaps AS (
-             |  SELECT doc_id, coalesce(lag(e) OVER (PARTITION BY doc_id
-             |      ORDER BY s), 1) AS gs, s AS ge FROM merged
-             |  UNION ALL
-             |  SELECT doc_id, max(e) AS gs, NULL AS ge FROM merged
-             |  GROUP BY doc_id),
-             |cleaned AS (
-             |  SELECT g.doc_id, string_agg(
-             |    substr(c.text, CAST(g.gs AS INT),
-             |      CAST(coalesce(g.ge, length(c.text) + 1) - g.gs AS INT)),
-             |    '' ORDER BY g.gs) AS ct
-             |  FROM gaps g JOIN corpus c ON c.doc_id = g.doc_id GROUP BY 1),
-             |stst AS (SELECT doc_id, count(*) AS n_spans,
-             |    sum(e - s) AS removed FROM merged GROUP BY 1),
+      Some(s"""WITH ${headerCorpusCte("corpus")},
+             |${boilerplateStripCtes("corpus", "stst")},
              |ntk AS (SELECT doc_id, source, CAST(len(string_split_regex(
              |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+'))
              |    AS BIGINT) AS tk FROM corpus),
@@ -2436,44 +2109,10 @@ object CurationQueries {
              |  FROM corpus c LEFT JOIN cleaned cl ON cl.doc_id = c.doc_id),
              |ns AS (SELECT source, CAST(sum(tk) AS BIGINT) AS n_tokens
              |  FROM ntk GROUP BY source),
-             |nlw AS (SELECT source, n_tokens,
-             |    (CAST(round(ln(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) * 7)
-             |      // 10 AS lwm FROM ns),
-             |nmx AS (SELECT max(lwm) AS m FROM nlw),
-             |nwm AS (SELECT source, n_tokens,
-             |    CAST(round(exp(CAST(lwm - (SELECT m FROM nmx) AS DOUBLE) / 1000000)
-             |      * 1000000) AS BIGINT) AS weight_micro FROM nlw),
-             |ntw AS (SELECT CAST(sum(weight_micro) AS BIGINT) AS t FROM nwm),
-             |nbase AS (SELECT source, n_tokens, weight_micro,
-             |    (1000000 * weight_micro) // t AS bq,
-             |    1000000 * weight_micro - ((1000000 * weight_micro) // t) * t AS rem
-             |  FROM nwm, ntw),
-             |nlo AS (SELECT 1000000 - sum(bq) AS l FROM nbase),
-             |nrk AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS r
-             |  FROM nbase),
-             |nq AS (SELECT source, n_tokens,
-             |    CAST(bq + CASE WHEN r <= (SELECT l FROM nlo) THEN 1 ELSE 0 END
-             |      AS BIGINT) AS quota FROM nrk),
+             |${OracleFragments.temperatureQuotaCtes("n")},
              |ps AS (SELECT source, CAST(sum(tk) AS BIGINT) AS n_tokens
              |  FROM ctk GROUP BY source),
-             |plw AS (SELECT source, n_tokens,
-             |    (CAST(round(ln(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) * 7)
-             |      // 10 AS lwm FROM ps),
-             |pmx AS (SELECT max(lwm) AS m FROM plw),
-             |pwm AS (SELECT source, n_tokens,
-             |    CAST(round(exp(CAST(lwm - (SELECT m FROM pmx) AS DOUBLE) / 1000000)
-             |      * 1000000) AS BIGINT) AS weight_micro FROM plw),
-             |ptw AS (SELECT CAST(sum(weight_micro) AS BIGINT) AS t FROM pwm),
-             |pbase AS (SELECT source, n_tokens, weight_micro,
-             |    (1000000 * weight_micro) // t AS bq,
-             |    1000000 * weight_micro - ((1000000 * weight_micro) // t) * t AS rem
-             |  FROM pwm, ptw),
-             |plo AS (SELECT 1000000 - sum(bq) AS l FROM pbase),
-             |prk AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS r
-             |  FROM pbase),
-             |pq AS (SELECT source, n_tokens,
-             |    CAST(bq + CASE WHEN r <= (SELECT l FROM plo) THEN 1 ELSE 0 END
-             |      AS BIGINT) AS quota FROM prk),
+             |${OracleFragments.temperatureQuotaCtes("p")},
              |rc AS (SELECT c.source,
              |    CAST(sum(CASE WHEN st.doc_id IS NOT NULL THEN 1 ELSE 0 END)
              |      AS BIGINT) AS n_stripped,
@@ -2532,35 +2171,7 @@ object CurationQueries {
              |  SELECT plane, CAST(sv AS DOUBLE[]) AS sv
              |  FROM (VALUES ${SimilarityQueries.srpSignRows(16, 64, 42L)})
              |    s(plane, sv)),
-             |tr AS (SELECT vec_id AS id,
-             |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             |  FROM embeddings),
-             |pe AS (
-             |  SELECT 9001 AS eid,
-             |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             |  FROM embeddings WHERE vec_id = 0
-             |  UNION ALL
-             |  SELECT 9002, list_transform(embedding, x -> CAST(x AS DOUBLE) * 2.0)
-             |  FROM embeddings WHERE vec_id = 1
-             |  UNION ALL
-             |  SELECT 9003, list_transform(generate_series(1, len(a.embedding)),
-             |    i -> CAST(a.embedding[i] AS DOUBLE)
-             |      + CAST(b.embedding[i] AS DOUBLE) * 0.2)
-             |  FROM embeddings a, embeddings b
-             |  WHERE a.vec_id = 2 AND b.vec_id = 3
-             |  UNION ALL
-             |  SELECT 9004, list_transform(generate_series(1, len(a.embedding)),
-             |    i -> (CAST(a.embedding[i] AS DOUBLE)
-             |      + CAST(b.embedding[i] AS DOUBLE)) * 0.5)
-             |  FROM embeddings a, embeddings b
-             |  WHERE a.vec_id = 4 AND b.vec_id = 5),
-             |tn AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS vn FROM tr
-             |  WHERE sqrt(list_dot_product(v, v)) > 0),
-             |en AS (SELECT eid, v, sqrt(list_dot_product(v, v)) AS en FROM pe
-             |  WHERE sqrt(list_dot_product(v, v)) > 0),
-             |sims AS (SELECT t.id, e.eid,
-             |    list_dot_product(t.v, e.v) / (t.vn * e.en) AS sim
-             |  FROM tn t, en e),
+             |$semanticSimsCtes,
              |taccs AS (SELECT id, plane, list_dot_product(v, sv) AS acc
              |  FROM tn CROSS JOIN signs),
              |tsigs AS (SELECT id,
@@ -2705,11 +2316,7 @@ object CurationQueries {
              |      ELSE text END AS text
              |  FROM documents
              |  WHERE NOT (doc_id >= 40 AND doc_id < 70 AND doc_id % 2 = 0)),
-             |cch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |csel AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM cgr))
+             |$winnowSelCtes
              |SELECT CAST(CASE WHEN s.fp >= 9223372036854775808
              |    THEN s.fp - 18446744073709551616 ELSE s.fp END AS BIGINT)
              |    AS fp,
@@ -2758,38 +2365,7 @@ object CurationQueries {
           s"q297_${math.abs(dir.hashCode)}",
           shufflePartitions = Some(8))
       },
-      Some("""WITH tr AS (SELECT vec_id AS id,
-             |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             |  FROM embeddings),
-             |pe AS (
-             |  SELECT 9001 AS eid,
-             |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-             |  FROM embeddings WHERE vec_id = 0
-             |  UNION ALL
-             |  SELECT 9002, list_transform(embedding, x -> CAST(x AS DOUBLE) * 2.0)
-             |  FROM embeddings WHERE vec_id = 1
-             |  UNION ALL
-             |  SELECT 9003, list_transform(generate_series(1, len(a.embedding)),
-             |    i -> CAST(a.embedding[i] AS DOUBLE)
-             |      + CAST(b.embedding[i] AS DOUBLE) * 0.2)
-             |  FROM embeddings a, embeddings b
-             |  WHERE a.vec_id = 2 AND b.vec_id = 3
-             |  UNION ALL
-             |  SELECT 9004, list_transform(generate_series(1, len(a.embedding)),
-             |    i -> (CAST(a.embedding[i] AS DOUBLE)
-             |      + CAST(b.embedding[i] AS DOUBLE)) * 0.5)
-             |  FROM embeddings a, embeddings b
-             |  WHERE a.vec_id = 4 AND b.vec_id = 5),
-             |tn AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS vn FROM tr
-             |  WHERE sqrt(list_dot_product(v, v)) > 0),
-             |en AS (SELECT eid, v, sqrt(list_dot_product(v, v)) AS en FROM pe
-             |  WHERE sqrt(list_dot_product(v, v)) > 0),
-             |sims AS (SELECT t.id, e.eid,
-             |    list_dot_product(t.v, e.v) / (t.vn * e.en) AS sim
-             |  FROM tn t, en e)
-             |SELECT id, CAST(count(*) AS BIGINT) AS n_probes_hit,
-             |  round(max(sim), 6) AS max_sim
-             |FROM sims WHERE sim >= 0.9 GROUP BY id""".stripMargin)),
+      Some(semanticContaminationOracle)),
 
     // RELEASE BUILD — the END-TO-END curation funnel in one gated
     // artifact: exact dedup (keep-lowest-id) → benchmark
@@ -2860,12 +2436,7 @@ object CurationQueries {
             col("n_released"), col("n_stripped"), col("chars_removed"),
             col("toks_released"))
       },
-      Some(s"""WITH planted AS (
-             |  SELECT doc_id, source,
-             |    CASE WHEN doc_id < 40
-             |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
-             |      ELSE text END AS text
-             |  FROM documents),
+      Some(s"""WITH ${headerCorpusCte("planted")},
              |corpus AS (
              |  SELECT doc_id, source, text FROM planted
              |  UNION ALL
@@ -2880,51 +2451,11 @@ object CurationQueries {
              |eg AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
              |  FROM (SELECT w, unnest(generate_series(1, len(w) - 12)) AS i
              |        FROM ew WHERE len(w) >= 13)),
-             |tw AS (SELECT doc_id, string_split_regex(
-             |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-             |  FROM s1),
-             |tg AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+12], ' ') AS g
-             |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 12)) AS i
-             |        FROM tw WHERE len(w) >= 13)),
+             |${wordGramCtes("t", "doc_id, ", "s1")},
              |contam AS (SELECT DISTINCT t.doc_id FROM tg t JOIN eg e ON e.g = t.g),
              |s2 AS (SELECT * FROM s1
              |  WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-             |cch AS (SELECT doc_id, text, lower(text) AS t FROM s2),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |pk AS (SELECT doc_id, min(h * 1048576 + i) OVER (
-             |    PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS key FROM cgr),
-             |psel AS (SELECT DISTINCT doc_id,
-             |    CAST(key % 1048576 AS BIGINT) AS i, key // 1048576 AS fp
-             |  FROM pk),
-             |mined AS (SELECT fp FROM (SELECT DISTINCT doc_id, fp FROM psel)
-             |  GROUP BY fp HAVING count(*) >= 25),
-             |hits AS (SELECT doc_id, i FROM psel JOIN mined USING (fp)),
-             |mk AS (SELECT doc_id, i,
-             |  CASE WHEN max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-             |    OR i > max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |    THEN 1 ELSE 0 END AS isl0 FROM hits),
-             |isl AS (SELECT doc_id, i, sum(isl0) OVER (PARTITION BY doc_id
-             |  ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-             |  FROM mk),
-             |merged AS (SELECT doc_id, g, min(i) AS s, max(i) + 25 AS e
-             |  FROM isl GROUP BY 1, 2),
-             |gaps AS (
-             |  SELECT doc_id, coalesce(lag(e) OVER (PARTITION BY doc_id
-             |      ORDER BY s), 1) AS gs, s AS ge FROM merged
-             |  UNION ALL
-             |  SELECT doc_id, max(e) AS gs, NULL AS ge FROM merged
-             |  GROUP BY doc_id),
-             |cleaned AS (
-             |  SELECT g.doc_id, string_agg(
-             |    substr(c.text, CAST(g.gs AS INT),
-             |      CAST(coalesce(g.ge, length(c.text) + 1) - g.gs AS INT)),
-             |    '' ORDER BY g.gs) AS ct
-             |  FROM gaps g JOIN s2 c ON c.doc_id = g.doc_id GROUP BY 1),
-             |stst AS (SELECT doc_id, count(*) AS n_spans,
-             |    sum(e - s) AS removed FROM merged GROUP BY 1),
+             |${boilerplateStripCtes("s2", "stst")},
              |relc AS (SELECT s.doc_id, s.source,
              |    coalesce(cl.ct, s.text) AS ctext,
              |    coalesce(st.n_spans, 0) AS n_spans,
@@ -3005,86 +2536,19 @@ object CurationQueries {
           deleted, "doc_id")
         Curation.dataCardFromStats(maintained, minDf = 25L)
       },
-      Some {
-        val em = """[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"""
-        val idp = """\b\d{3}-\d{2}-\d{4}\b"""
-        val lg = """\b\d{9,}\b"""
-        val ph = """\+?\d[\d()\- ]{6,}\d"""
-        s"""WITH planted AS (
-           |  SELECT doc_id, source, lang,
-           |    CASE WHEN doc_id < 40
-           |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
-           |      ELSE text END
-           |    || CASE WHEN (doc_id // 20) % 5 = 2
-           |      THEN ' contact user7@ex.org now' ELSE '' END AS text
-           |  FROM documents),
-           |corpus AS (
-           |  SELECT doc_id, source, lang, text FROM planted
-           |  WHERE NOT (doc_id >= 40 AND doc_id < 45)
-           |  UNION ALL
-           |  SELECT doc_id + 95000, source, lang, text
-           |  FROM planted WHERE doc_id >= 10 AND doc_id < 20),
-           |tkc AS (SELECT doc_id, CAST(len(string_split_regex(
-           |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+'))
-           |    AS BIGINT) AS tk FROM corpus),
-           |dups AS (SELECT doc_id FROM corpus WHERE text IN (
-           |  SELECT text FROM corpus GROUP BY text HAVING count(*) >= 2)),
-           |pii AS (SELECT doc_id FROM (
-           |  SELECT doc_id,
-           |    len(regexp_extract_all(text, '$em'))
-           |    + len(regexp_extract_all(se, '$idp'))
-           |    + len(regexp_extract_all(si, '$lg'))
-           |    + len(regexp_extract_all(sl, '$ph')) AS n
-           |  FROM (SELECT doc_id, text, se, si,
-           |      regexp_replace(si, '$lg', '<LONGID>', 'g') AS sl
-           |    FROM (SELECT doc_id, text, se,
-           |        regexp_replace(se, '$idp', '<ID>', 'g') AS si
-           |      FROM (SELECT doc_id, text,
-           |          regexp_replace(text, '$em', '<EMAIL>', 'g') AS se
-           |        FROM corpus)))) WHERE n > 0),
-           |ew AS (SELECT string_split_regex(regexp_replace(
-           |    substr(text, 31, 200), '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-           |  FROM documents WHERE doc_id = 1),
-           |eg AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
-           |  FROM (SELECT w, unnest(generate_series(1, len(w) - 12)) AS i
-           |        FROM ew WHERE len(w) >= 13)),
-           |tw AS (SELECT doc_id, string_split_regex(
-           |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-           |  FROM corpus),
-           |tg AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+12], ' ') AS g
-           |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 12)) AS i
-           |        FROM tw WHERE len(w) >= 13)),
-           |contam AS (SELECT DISTINCT t.doc_id FROM tg t JOIN eg e ON e.g = t.g),
-           |cch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-           |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-           |csel AS (SELECT DISTINCT doc_id, fp FROM (
-           |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-           |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM cgr)),
-           |mined AS (SELECT fp FROM csel GROUP BY fp HAVING count(*) >= 25),
-           |boiler AS (SELECT DISTINCT doc_id FROM csel JOIN mined USING (fp))
-           |SELECT c.source,
-           |  CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(t.tk) AS BIGINT) AS n_tokens,
-           |  CAST(sum(CASE WHEN dp.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS dup_docs,
-           |  CAST(sum(CASE WHEN pi.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS pii_docs,
-           |  CAST(sum(CASE WHEN co.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS contam_docs,
-           |  CAST(sum(CASE WHEN bo.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS boiler_docs,
-           |  CAST(sum(CASE WHEN c.lang <> 'en' THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS nonen_docs,
-           |  CAST((sum(CASE WHEN dp.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    * 1000000) // count(*) AS BIGINT) AS dup_micro
-           |FROM corpus c
-           |  JOIN tkc t ON t.doc_id = c.doc_id
-           |  LEFT JOIN (SELECT DISTINCT doc_id FROM dups) dp ON dp.doc_id = c.doc_id
-           |  LEFT JOIN (SELECT DISTINCT doc_id FROM pii) pi ON pi.doc_id = c.doc_id
-           |  LEFT JOIN contam co ON co.doc_id = c.doc_id
-           |  LEFT JOIN boiler bo ON bo.doc_id = c.doc_id
-           |GROUP BY c.source""".stripMargin
-      }),
+      Some(dataCardHead(
+        """  SELECT doc_id, source, lang, text FROM planted
+          |  WHERE NOT (doc_id >= 40 AND doc_id < 45)
+          |  UNION ALL
+          |  SELECT doc_id + 95000, source, lang, text
+          |  FROM planted WHERE doc_id >= 10 AND doc_id < 20""".stripMargin) +
+        """
+          |  JOIN tkc t ON t.doc_id = c.doc_id
+          |  LEFT JOIN (SELECT DISTINCT doc_id FROM dups) dp ON dp.doc_id = c.doc_id
+          |  LEFT JOIN (SELECT DISTINCT doc_id FROM pii) pi ON pi.doc_id = c.doc_id
+          |  LEFT JOIN contam co ON co.doc_id = c.doc_id
+          |  LEFT JOIN boiler bo ON bo.doc_id = c.doc_id
+          |GROUP BY c.source""".stripMargin)),
 
     // SOURCE DATA CARD — the one-artifact per-source census a corpus
     // release ships with (the "datasheet" rollup): doc and token
@@ -3164,85 +2628,18 @@ object CurationQueries {
             col("boiler_docs"), col("nonen_docs"),
             expr("dup_docs * 1000000 DIV n_docs").as("dup_micro"))
       },
-      Some {
-        val em = """[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"""
-        val idp = """\b\d{3}-\d{2}-\d{4}\b"""
-        val lg = """\b\d{9,}\b"""
-        val ph = """\+?\d[\d()\- ]{6,}\d"""
-        s"""WITH planted AS (
-           |  SELECT doc_id, source, lang,
-           |    CASE WHEN doc_id < 40
-           |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
-           |      ELSE text END
-           |    || CASE WHEN (doc_id // 20) % 5 = 2
-           |      THEN ' contact user7@ex.org now' ELSE '' END AS text
-           |  FROM documents),
-           |corpus AS (
-           |  SELECT doc_id, source, lang, text FROM planted
-           |  UNION ALL
-           |  SELECT doc_id + 95000, source, lang, text
-           |  FROM planted WHERE doc_id < 20),
-           |tkc AS (SELECT doc_id, CAST(len(string_split_regex(
-           |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+'))
-           |    AS BIGINT) AS tk FROM corpus),
-           |dups AS (SELECT doc_id FROM corpus WHERE text IN (
-           |  SELECT text FROM corpus GROUP BY text HAVING count(*) >= 2)),
-           |pii AS (SELECT doc_id FROM (
-           |  SELECT doc_id,
-           |    len(regexp_extract_all(text, '$em'))
-           |    + len(regexp_extract_all(se, '$idp'))
-           |    + len(regexp_extract_all(si, '$lg'))
-           |    + len(regexp_extract_all(sl, '$ph')) AS n
-           |  FROM (SELECT doc_id, text, se, si,
-           |      regexp_replace(si, '$lg', '<LONGID>', 'g') AS sl
-           |    FROM (SELECT doc_id, text, se,
-           |        regexp_replace(se, '$idp', '<ID>', 'g') AS si
-           |      FROM (SELECT doc_id, text,
-           |          regexp_replace(text, '$em', '<EMAIL>', 'g') AS se
-           |        FROM corpus)))) WHERE n > 0),
-           |ew AS (SELECT string_split_regex(regexp_replace(
-           |    substr(text, 31, 200), '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-           |  FROM documents WHERE doc_id = 1),
-           |eg AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
-           |  FROM (SELECT w, unnest(generate_series(1, len(w) - 12)) AS i
-           |        FROM ew WHERE len(w) >= 13)),
-           |tw AS (SELECT doc_id, string_split_regex(
-           |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
-           |  FROM corpus),
-           |tg AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+12], ' ') AS g
-           |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 12)) AS i
-           |        FROM tw WHERE len(w) >= 13)),
-           |contam AS (SELECT DISTINCT t.doc_id FROM tg t JOIN eg e ON e.g = t.g),
-           |cch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-           |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-           |csel AS (SELECT DISTINCT doc_id, fp FROM (
-           |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-           |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM cgr)),
-           |mined AS (SELECT fp FROM csel GROUP BY fp HAVING count(*) >= 25),
-           |boiler AS (SELECT DISTINCT doc_id FROM csel JOIN mined USING (fp))
-           |SELECT c.source,
-           |  CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(t.tk) AS BIGINT) AS n_tokens,
-           |  CAST(sum(CASE WHEN dp.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS dup_docs,
-           |  CAST(sum(CASE WHEN pi.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS pii_docs,
-           |  CAST(sum(CASE WHEN co.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS contam_docs,
-           |  CAST(sum(CASE WHEN bo.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS boiler_docs,
-           |  CAST(sum(CASE WHEN c.lang <> 'en' THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS nonen_docs,
-           |  CAST((sum(CASE WHEN dp.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    * 1000000) // count(*) AS BIGINT) AS dup_micro
-           |FROM corpus c
-           |  JOIN tkc t USING (doc_id)
-           |  LEFT JOIN (SELECT DISTINCT doc_id FROM dups) dp USING (doc_id)
-           |  LEFT JOIN (SELECT DISTINCT doc_id FROM pii) pi USING (doc_id)
-           |  LEFT JOIN contam co USING (doc_id)
-           |  LEFT JOIN boiler bo USING (doc_id)
-           |GROUP BY c.source""".stripMargin
-      }),
+      Some(dataCardHead(
+        """  SELECT doc_id, source, lang, text FROM planted
+          |  UNION ALL
+          |  SELECT doc_id + 95000, source, lang, text
+          |  FROM planted WHERE doc_id < 20""".stripMargin) +
+        """
+          |  JOIN tkc t USING (doc_id)
+          |  LEFT JOIN (SELECT DISTINCT doc_id FROM dups) dp USING (doc_id)
+          |  LEFT JOIN (SELECT DISTINCT doc_id FROM pii) pi USING (doc_id)
+          |  LEFT JOIN contam co USING (doc_id)
+          |  LEFT JOIN boiler bo USING (doc_id)
+          |GROUP BY c.source""".stripMargin)),
 
     // SPAN-EVIDENCE DEDUP VERDICTS (Curation.spanDedupVerdicts) — the
     // char-level dedup DECISION made on verified extent: a doc drops
@@ -3263,17 +2660,8 @@ object CurationQueries {
           "doc_id", "text", minSpan = 100L,
           k = 25, w = 8, minShared = 2, maxDf = 20)
       },
-      Some(s"""WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 96000,
-             |    substr(text, 1, 150) || ' entirely new commentary words follow the lifted passage'
-             |  FROM documents WHERE doc_id < 8),
-             |cch AS (SELECT doc_id, lower(text) AS t FROM corpus),
-             |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
-             |csel AS (SELECT DISTINCT doc_id, fp FROM (
-             |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY i
-             |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM cgr)),
+      Some(s"""WITH $quoterCorpusCte,
+             |$winnowSelCtes,
              |rare AS (SELECT fp FROM csel GROUP BY fp HAVING count(*) <= 20),
              |capped AS (SELECT doc_id, fp FROM csel JOIN rare USING (fp)),
              |cand AS (SELECT a.doc_id AS idA, b.doc_id AS idB
@@ -3398,38 +2786,7 @@ object CurationQueries {
               .otherwise(col("text")).as("text"))
         Curation.corpusDriftKl(oldC, newC, "text")
       },
-      Some("""WITH oldd AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
-             |newd AS (SELECT CASE WHEN doc_id % 10 = 1
-             |    THEN text || ' crypto blockchain token ledger staking validator'
-             |    ELSE text END AS text
-             |  FROM documents WHERE doc_id % 2 = 1),
-             |oc AS (SELECT term, CAST(count(*) AS BIGINT) AS co FROM (
-             |    SELECT unnest(string_split_regex(lower(regexp_replace(text,
-             |      '^\s+|\s+$', '', 'g')), '\s+')) AS term FROM oldd)
-             |  WHERE length(term) > 0 GROUP BY 1),
-             |nc AS (SELECT term, CAST(count(*) AS BIGINT) AS cn FROM (
-             |    SELECT unnest(string_split_regex(lower(regexp_replace(text,
-             |      '^\s+|\s+$', '', 'g')), '\s+')) AS term FROM newd)
-             |  WHERE length(term) > 0 GROUP BY 1),
-             |v AS (SELECT coalesce(o.term, n.term) AS term,
-             |    coalesce(o.co, 0) AS co, coalesce(n.cn, 0) AS cn
-             |  FROM oc o FULL OUTER JOIN nc n ON n.term = o.term),
-             |tot AS (SELECT (SELECT sum(co) FROM v) AS tol,
-             |    (SELECT sum(cn) FROM v) AS tnw,
-             |    (SELECT CAST(count(*) AS BIGINT) FROM v) AS nv),
-             |contrib AS (SELECT term, co, cn,
-             |    CAST(round(ln(CAST((cn + 1) * (tol + nv) AS DOUBLE)
-             |        / CAST((co + 1) * (tnw + nv) AS DOUBLE))
-             |      * (cn + 1) * 1000000.0 / (tnw + nv)) AS BIGINT)
-             |      AS contrib_micro
-             |  FROM v, tot),
-             |klt AS (SELECT CAST(sum(contrib_micro) AS BIGINT)
-             |    AS kl_total_micro FROM contrib)
-             |SELECT c.term, c.co AS c_old, c.cn AS c_new, c.contrib_micro,
-             |  klt.kl_total_micro, tot.nv AS n_vocab
-             |FROM contrib c, klt, tot
-             |ORDER BY abs(c.contrib_micro) DESC, c.term
-             |LIMIT 20""".stripMargin)),
+      Some(driftKlOracle)),
 
     // STREAMING DRIFT MONITOR — q230's streaming twin, completing the
     // drift family's streaming membership: the NEW epoch arrives as a
@@ -3463,38 +2820,7 @@ object CurationQueries {
           Curation.termCounts(oldC, "text").withColumnRenamed("c", "co"),
           newCounts.withColumnRenamed("c", "cn"))
       },
-      Some("""WITH oldd AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
-             |newd AS (SELECT CASE WHEN doc_id % 10 = 1
-             |    THEN text || ' crypto blockchain token ledger staking validator'
-             |    ELSE text END AS text
-             |  FROM documents WHERE doc_id % 2 = 1),
-             |oc AS (SELECT term, CAST(count(*) AS BIGINT) AS co FROM (
-             |    SELECT unnest(string_split_regex(lower(regexp_replace(text,
-             |      '^\s+|\s+$', '', 'g')), '\s+')) AS term FROM oldd)
-             |  WHERE length(term) > 0 GROUP BY 1),
-             |nc AS (SELECT term, CAST(count(*) AS BIGINT) AS cn FROM (
-             |    SELECT unnest(string_split_regex(lower(regexp_replace(text,
-             |      '^\s+|\s+$', '', 'g')), '\s+')) AS term FROM newd)
-             |  WHERE length(term) > 0 GROUP BY 1),
-             |v AS (SELECT coalesce(o.term, n.term) AS term,
-             |    coalesce(o.co, 0) AS co, coalesce(n.cn, 0) AS cn
-             |  FROM oc o FULL OUTER JOIN nc n ON n.term = o.term),
-             |tot AS (SELECT (SELECT sum(co) FROM v) AS tol,
-             |    (SELECT sum(cn) FROM v) AS tnw,
-             |    (SELECT CAST(count(*) AS BIGINT) FROM v) AS nv),
-             |contrib AS (SELECT term, co, cn,
-             |    CAST(round(ln(CAST((cn + 1) * (tol + nv) AS DOUBLE)
-             |        / CAST((co + 1) * (tnw + nv) AS DOUBLE))
-             |      * (cn + 1) * 1000000.0 / (tnw + nv)) AS BIGINT)
-             |      AS contrib_micro
-             |  FROM v, tot),
-             |klt AS (SELECT CAST(sum(contrib_micro) AS BIGINT)
-             |    AS kl_total_micro FROM contrib)
-             |SELECT c.term, c.co AS c_old, c.cn AS c_new, c.contrib_micro,
-             |  klt.kl_total_micro, tot.nv AS n_vocab
-             |FROM contrib c, klt, tot
-             |ORDER BY abs(c.contrib_micro) DESC, c.term
-             |LIMIT 20""".stripMargin)),
+      Some(driftKlOracle)),
 
     // CODE-SWITCHING REPORT (Curation.codeSwitchReport) — line-level
     // language disagreement per doc, the CCNet mixed-language signal:
@@ -3834,6 +3160,261 @@ object CurationQueries {
        |      AS n_langs
        |  FROM cnt GROUP BY 1)""".stripMargin
   }
+
+  /** `corpus`-keyed winnowing selection (k = 25, w = 8): `cch(doc_id, t)`
+    * lowercased, the FNV gram chain `cgr`, and the selected fingerprints
+    * `csel(doc_id, fp)`. */
+  private def winnowSelCtes: String =
+    winnowCtes("c", "doc_id", "corpus", "csel", "doc_id, fp", "doc_id, ")
+
+  /** Winnowing (k = 25, w = 8) of `src(id, text)`: the lowercased text
+    * `{p}ch`, the FNV gram chain `{p}gr` and the window minima as CTE
+    * `sel`, which keeps `cols` of `SELECT {inner}min(h) … AS fp`. */
+  private def winnowCtes(p: String, id: String, src: String, sel: String,
+      cols: String, inner: String): String =
+    s"""${p}ch AS (SELECT $id, lower(text) AS t FROM $src),
+       |${RelationalQueries5.fnvGramCtes(s"${p}gr", id, s"${p}ch")},
+       |$sel AS (SELECT DISTINCT $cols FROM (
+       |  SELECT ${inner}min(h) OVER (PARTITION BY $id ORDER BY i
+       |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM ${p}gr))""".stripMargin
+
+  /** Distinct word 13-grams of `src(text)`: whitespace tokens
+    * `{p}w(w)` and grams `{p}g(g)`, each led by `cols` (e.g. "id, "). */
+  private def wordGramCtes(p: String, cols: String, src: String): String =
+    s"""${p}w AS (SELECT ${cols}string_split_regex(
+       |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
+       |  FROM $src),
+       |${p}g AS (SELECT DISTINCT ${cols}array_to_string(w[i:i+12], ' ') AS g
+       |  FROM (SELECT ${cols}w, unnest(generate_series(1, len(w) - 12)) AS i
+       |        FROM ${p}w WHERE len(w) >= 13))""".stripMargin
+
+  /** The q259 leak probes as CTE `evals(id, text)`: 60-char slices of
+    * docs 0–9 at +97000 and one original sentence, 97100. */
+  private def leakProbeCte: String =
+    """evals AS (
+      |  SELECT doc_id + 97000 AS id, substr(text, 21, 60) AS text
+      |  FROM documents WHERE doc_id < 10
+      |  UNION ALL SELECT 97100,
+      |    'the purple quantum walrus audits a crystalline ledger of unseen comets while seventeen translucent beacons hum beneath the patient glacier tonight')""".stripMargin
+
+  /** The q283 boilerplate fixture as CTE `name`: the 79-char license
+    * header planted on docs 0–39. */
+  private def headerCorpusCte(name: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, source,
+       |    CASE WHEN doc_id < 40
+       |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
+       |      ELSE text END AS text
+       |  FROM documents)""".stripMargin
+
+  /** The q272 span fixture as CTE `corpus`: documents plus 150-char
+    * quoters of docs 0–7 at +96000. */
+  private def quoterCorpusCte: String =
+    """corpus AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 96000,
+      |    substr(text, 1, 150) || ' entirely new commentary words follow the lifted passage'
+      |  FROM documents WHERE doc_id < 8)""".stripMargin
+
+  /** The q287 positional strip over CTE `src(doc_id, text)` (k = 25,
+    * w = 8, df bar 25): mined positional selections, island merge into
+    * `merged(doc_id, g, s, e)`, the cut text `cleaned(doc_id, ct)` and
+    * per-doc span stats as CTE `stats(doc_id, n_spans, removed)`. */
+  private def boilerplateStripCtes(src: String, stats: String): String =
+    s"""cch AS (SELECT doc_id, text, lower(text) AS t FROM $src),
+       |${RelationalQueries5.fnvGramCtes("cgr", "doc_id", "cch")},
+       |pk AS (SELECT doc_id, min(h * 1048576 + i) OVER (
+       |    PARTITION BY doc_id ORDER BY i
+       |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS key FROM cgr),
+       |psel AS (SELECT DISTINCT doc_id,
+       |    CAST(key % 1048576 AS BIGINT) AS i, key // 1048576 AS fp
+       |  FROM pk),
+       |mined AS (SELECT fp FROM (SELECT DISTINCT doc_id, fp FROM psel)
+       |  GROUP BY fp HAVING count(*) >= 25),
+       |hits AS (SELECT doc_id, i FROM psel JOIN mined USING (fp)),
+       |mk AS (SELECT doc_id, i,
+       |  CASE WHEN max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
+       |    OR i > max(i + 25) OVER (PARTITION BY doc_id ORDER BY i
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+       |    THEN 1 ELSE 0 END AS isl0 FROM hits),
+       |isl AS (SELECT doc_id, i, sum(isl0) OVER (PARTITION BY doc_id
+       |  ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
+       |  FROM mk),
+       |merged AS (SELECT doc_id, g, min(i) AS s, max(i) + 25 AS e
+       |  FROM isl GROUP BY 1, 2),
+       |gaps AS (
+       |  SELECT doc_id, coalesce(lag(e) OVER (PARTITION BY doc_id
+       |      ORDER BY s), 1) AS gs, s AS ge FROM merged
+       |  UNION ALL
+       |  SELECT doc_id, max(e) AS gs, NULL AS ge FROM merged
+       |  GROUP BY doc_id),
+       |cleaned AS (
+       |  SELECT g.doc_id, string_agg(
+       |    substr(c.text, CAST(g.gs AS INT),
+       |      CAST(coalesce(g.ge, length(c.text) + 1) - g.gs AS INT)),
+       |    '' ORDER BY g.gs) AS ct
+       |  FROM gaps g JOIN $src c ON c.doc_id = g.doc_id GROUP BY 1),
+       |$stats AS (SELECT doc_id, count(*) AS n_spans,
+       |    sum(e - s) AS removed FROM merged GROUP BY 1)""".stripMargin
+
+  /** q287's oracle: the planted corpus cut by the positional strip
+    * (shared by the streaming form, q291). */
+  private def boilerplateStripOracle: String =
+    s"""WITH ${headerCorpusCte("corpus")},
+       |${boilerplateStripCtes("corpus", "stats")}
+       |SELECT c.doc_id AS id,
+       |  CAST(coalesce(st.n_spans, 0) AS BIGINT) AS n_spans,
+       |  CAST(coalesce(st.removed, 0) AS BIGINT) AS removed_chars,
+       |  CAST(coalesce(length(coalesce(cl.ct, c.text)), 0) AS BIGINT)
+       |    AS clean_len,
+       |  coalesce(cl.ct, c.text) AS clean_text
+       |FROM corpus c LEFT JOIN stats st ON st.doc_id = c.doc_id
+       |  LEFT JOIN cleaned cl ON cl.doc_id = c.doc_id""".stripMargin
+
+  /** q288's fixture and cosines: train vectors `tn(id, v, vn)`, the four
+    * evasion-class probes `en(eid, v, en)` and every pair's
+    * `sims(id, eid, sim)`. */
+  private def semanticSimsCtes: String =
+    """tr AS (SELECT vec_id AS id,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      |  FROM embeddings),
+      |pe AS (
+      |  SELECT 9001 AS eid,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      |  FROM embeddings WHERE vec_id = 0
+      |  UNION ALL
+      |  SELECT 9002, list_transform(embedding, x -> CAST(x AS DOUBLE) * 2.0)
+      |  FROM embeddings WHERE vec_id = 1
+      |  UNION ALL
+      |  SELECT 9003, list_transform(generate_series(1, len(a.embedding)),
+      |    i -> CAST(a.embedding[i] AS DOUBLE)
+      |      + CAST(b.embedding[i] AS DOUBLE) * 0.2)
+      |  FROM embeddings a, embeddings b
+      |  WHERE a.vec_id = 2 AND b.vec_id = 3
+      |  UNION ALL
+      |  SELECT 9004, list_transform(generate_series(1, len(a.embedding)),
+      |    i -> (CAST(a.embedding[i] AS DOUBLE)
+      |      + CAST(b.embedding[i] AS DOUBLE)) * 0.5)
+      |  FROM embeddings a, embeddings b
+      |  WHERE a.vec_id = 4 AND b.vec_id = 5),
+      |tn AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS vn FROM tr
+      |  WHERE sqrt(list_dot_product(v, v)) > 0),
+      |en AS (SELECT eid, v, sqrt(list_dot_product(v, v)) AS en FROM pe
+      |  WHERE sqrt(list_dot_product(v, v)) > 0),
+      |sims AS (SELECT t.id, e.eid,
+      |    list_dot_product(t.v, e.v) / (t.vn * e.en) AS sim
+      |  FROM tn t, en e)""".stripMargin
+
+  /** q288's oracle (shared by the streaming form, q297). */
+  private def semanticContaminationOracle: String =
+    s"""WITH $semanticSimsCtes
+       |SELECT id, CAST(count(*) AS BIGINT) AS n_probes_hit,
+       |  round(max(sim), 6) AS max_sim
+       |FROM sims WHERE sim >= 0.9 GROUP BY id""".stripMargin
+
+  /** q290's source data card up to `FROM corpus c`: the planted
+    * fixture `planted`, CTE `corpus` with body `corpusSql`, and the
+    * per-doc flag CTEs (tokens, dups, PII, contamination, boilerplate). */
+  private def dataCardHead(corpusSql: String): String = {
+    val em = """[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"""
+    val idp = """\b\d{3}-\d{2}-\d{4}\b"""
+    val lg = """\b\d{9,}\b"""
+    val ph = """\+?\d[\d()\- ]{6,}\d"""
+    s"""WITH planted AS (
+       |  SELECT doc_id, source, lang,
+       |    CASE WHEN doc_id < 40
+       |      THEN 'licensed under the corpus commons attribution agreement version four point two ' || text
+       |      ELSE text END
+       |    || CASE WHEN (doc_id // 20) % 5 = 2
+       |      THEN ' contact user7@ex.org now' ELSE '' END AS text
+       |  FROM documents),
+       |corpus AS (
+       |$corpusSql),
+       |tkc AS (SELECT doc_id, CAST(len(string_split_regex(
+       |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+'))
+       |    AS BIGINT) AS tk FROM corpus),
+       |dups AS (SELECT doc_id FROM corpus WHERE text IN (
+       |  SELECT text FROM corpus GROUP BY text HAVING count(*) >= 2)),
+       |pii AS (SELECT doc_id FROM (
+       |  SELECT doc_id,
+       |    len(regexp_extract_all(text, '$em'))
+       |    + len(regexp_extract_all(se, '$idp'))
+       |    + len(regexp_extract_all(si, '$lg'))
+       |    + len(regexp_extract_all(sl, '$ph')) AS n
+       |  FROM (SELECT doc_id, text, se, si,
+       |      regexp_replace(si, '$lg', '<LONGID>', 'g') AS sl
+       |    FROM (SELECT doc_id, text, se,
+       |        regexp_replace(se, '$idp', '<ID>', 'g') AS si
+       |      FROM (SELECT doc_id, text,
+       |          regexp_replace(text, '$em', '<EMAIL>', 'g') AS se
+       |        FROM corpus)))) WHERE n > 0),
+       |ew AS (SELECT string_split_regex(regexp_replace(
+       |    substr(text, 31, 200), '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
+       |  FROM documents WHERE doc_id = 1),
+       |eg AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
+       |  FROM (SELECT w, unnest(generate_series(1, len(w) - 12)) AS i
+       |        FROM ew WHERE len(w) >= 13)),
+       |${wordGramCtes("t", "doc_id, ", "corpus")},
+       |contam AS (SELECT DISTINCT t.doc_id FROM tg t JOIN eg e ON e.g = t.g),
+       |$winnowSelCtes,
+       |mined AS (SELECT fp FROM csel GROUP BY fp HAVING count(*) >= 25),
+       |boiler AS (SELECT DISTINCT doc_id FROM csel JOIN mined USING (fp))
+       |SELECT c.source,
+       |  CAST(count(*) AS BIGINT) AS n_docs,
+       |  CAST(sum(t.tk) AS BIGINT) AS n_tokens,
+       |  CAST(sum(CASE WHEN dp.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS dup_docs,
+       |  CAST(sum(CASE WHEN pi.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS pii_docs,
+       |  CAST(sum(CASE WHEN co.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS contam_docs,
+       |  CAST(sum(CASE WHEN bo.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS boiler_docs,
+       |  CAST(sum(CASE WHEN c.lang <> 'en' THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS nonen_docs,
+       |  CAST((sum(CASE WHEN dp.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+       |    * 1000000) // count(*) AS BIGINT) AS dup_micro
+       |FROM corpus c""".stripMargin
+  }
+
+  /** q230's oracle: the planted topic shift, joint vocab, add-one
+    * smoothing and micro-nat KL contributions (shared by the streaming
+    * form, q248). */
+  private def driftKlOracle: String =
+    """WITH oldd AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
+      |newd AS (SELECT CASE WHEN doc_id % 10 = 1
+      |    THEN text || ' crypto blockchain token ledger staking validator'
+      |    ELSE text END AS text
+      |  FROM documents WHERE doc_id % 2 = 1),
+      |oc AS (SELECT term, CAST(count(*) AS BIGINT) AS co FROM (
+      |    SELECT unnest(string_split_regex(lower(regexp_replace(text,
+      |      '^\s+|\s+$', '', 'g')), '\s+')) AS term FROM oldd)
+      |  WHERE length(term) > 0 GROUP BY 1),
+      |nc AS (SELECT term, CAST(count(*) AS BIGINT) AS cn FROM (
+      |    SELECT unnest(string_split_regex(lower(regexp_replace(text,
+      |      '^\s+|\s+$', '', 'g')), '\s+')) AS term FROM newd)
+      |  WHERE length(term) > 0 GROUP BY 1),
+      |v AS (SELECT coalesce(o.term, n.term) AS term,
+      |    coalesce(o.co, 0) AS co, coalesce(n.cn, 0) AS cn
+      |  FROM oc o FULL OUTER JOIN nc n ON n.term = o.term),
+      |tot AS (SELECT (SELECT sum(co) FROM v) AS tol,
+      |    (SELECT sum(cn) FROM v) AS tnw,
+      |    (SELECT CAST(count(*) AS BIGINT) FROM v) AS nv),
+      |contrib AS (SELECT term, co, cn,
+      |    CAST(round(ln(CAST((cn + 1) * (tol + nv) AS DOUBLE)
+      |        / CAST((co + 1) * (tnw + nv) AS DOUBLE))
+      |      * (cn + 1) * 1000000.0 / (tnw + nv)) AS BIGINT)
+      |      AS contrib_micro
+      |  FROM v, tot),
+      |klt AS (SELECT CAST(sum(contrib_micro) AS BIGINT)
+      |    AS kl_total_micro FROM contrib)
+      |SELECT c.term, c.co AS c_old, c.cn AS c_new, c.contrib_micro,
+      |  klt.kl_total_micro, tot.nv AS n_vocab
+      |FROM contrib c, klt, tot
+      |ORDER BY abs(c.contrib_micro) DESC, c.term
+      |LIMIT 20""".stripMargin
 
   private def temperatureWeightCtes: String =
     """WITH s AS (

@@ -42,14 +42,11 @@ object SimilarityQueries {
       s"($p, $sv)"
     }.mkString(",")
 
-  /** The q41 SRP-LSH WITH-chain up to `ranked`, no final SELECT — shared
-    * by q41 (top-k agg) and q114 (recall@k vs the brute truth, reusing
-    * the chain's `normed` CTE). The Rademacher matrix rides as literals
-    * from the SAME splitmix64 derivation as the kernel. */
-  private def q41OracleChain(planes: Int, bandBits: Int, seed: Long): String = {
-    val nBands = planes / bandBits
-    val bandVals = (0 until nBands).map(b => s"($b)").mkString(",")
-    s"""WITH signs AS (
+  /** SRP signatures of every embedding: the Rademacher planes `signs`,
+    * `normed(id, v, vnorm)` (zero vectors dropped), the per-plane
+    * projections `accs(id, plane, acc)` and `sigs(id, sig)`. */
+  private def srpSigCtes(planes: Int, seed: Long): String =
+    s"""signs AS (
        |  SELECT plane, CAST(sv AS DOUBLE[]) AS sv
        |  FROM (VALUES ${srpSignRows(planes, dims = 64, seed)}) s(plane, sv)),
        |base AS (
@@ -63,7 +60,31 @@ object SimilarityQueries {
        |sigs AS (
        |  SELECT id,
        |    sum(CASE WHEN acc >= 0 THEN (CAST(1 AS BIGINT) << plane) ELSE 0 END) AS sig
-       |  FROM accs GROUP BY id),
+       |  FROM accs GROUP BY id)""".stripMargin
+
+  /** q267's second stage: the exact cosine of each `short(qid, nid)`
+    * candidate against the query `q` and `rr(qid, nid, sim, rank)`. */
+  private def exactRerankCtes: String =
+    """exact AS (
+      |  SELECT sh.qid, sh.nid,
+      |    list_dot_product(q.qv, CAST(p.v AS DOUBLE[])) /
+      |      (sqrt(list_dot_product(q.qv, q.qv)) *
+      |       sqrt(list_dot_product(CAST(p.v AS DOUBLE[]), CAST(p.v AS DOUBLE[])))) AS sim
+      |  FROM short sh JOIN q ON q.qid = sh.qid
+      |  JOIN pts p ON p.vid = sh.nid),
+      |rr AS (
+      |  SELECT qid, nid, sim,
+      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rank
+      |  FROM exact)""".stripMargin
+
+  /** The q41 SRP-LSH WITH-chain up to `ranked`, no final SELECT — shared
+    * by q41 (top-k agg) and q114 (recall@k vs the brute truth, reusing
+    * the chain's `normed` CTE). The Rademacher matrix rides as literals
+    * from the SAME splitmix64 derivation as the kernel. */
+  private def q41OracleChain(planes: Int, bandBits: Int, seed: Long): String = {
+    val nBands = planes / bandBits
+    val bandVals = (0 until nBands).map(b => s"($b)").mkString(",")
+    s"""WITH ${srpSigCtes(planes, seed)},
        |banded AS (
        |  SELECT id, band, (sig >> (band * $bandBits)) & ${(1 << bandBits) - 1} AS bucket
        |  FROM sigs CROSS JOIN (VALUES $bandVals) b(band)),
@@ -94,21 +115,7 @@ object SimilarityQueries {
     val nBands = planes / bandBits
     val bandVals = (0 until nBands).map(b => s"($b)").mkString(",")
     val mask = (1 << bandBits) - 1
-    s"""WITH signs AS (
-       |  SELECT plane, CAST(sv AS DOUBLE[]) AS sv
-       |  FROM (VALUES ${srpSignRows(planes, dims = 64, seed)}) s(plane, sv)),
-       |base AS (
-       |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |normed AS (
-       |  SELECT id, v, sqrt(list_dot_product(v, v)) AS vnorm FROM base
-       |  WHERE sqrt(list_dot_product(v, v)) > 0),
-       |accs AS (
-       |  SELECT id, plane, list_dot_product(v, sv) AS acc
-       |  FROM normed CROSS JOIN signs),
-       |sigs AS (
-       |  SELECT id,
-       |    sum(CASE WHEN acc >= 0 THEN (CAST(1 AS BIGINT) << plane) ELSE 0 END) AS sig
-       |  FROM accs GROUP BY id),
+    s"""WITH ${srpSigCtes(planes, seed)},
        |banded AS (
        |  SELECT id, band, (sig >> (band * $bandBits)) & $mask AS bucket
        |  FROM sigs CROSS JOIN (VALUES $bandVals) b(band)),
@@ -537,55 +544,68 @@ object SimilarityQueries {
          |SELECT qid, count(*) AS n_results, round(max(approx6), 4) AS best_approx_dot
          |FROM ranked WHERE rk <= $topK GROUP BY qid""".stripMargin
 
+  /** Squared L2 distance of list columns `p` and `c` as an ordered
+    * fold (bit-exact across engines; no unordered double SUM). */
+  private def lloydD2(p: String, c: String): String =
+    s"list_reduce(list_prepend(0.0, list_transform(list_zip($p, $c), " +
+      s"s2 -> (CAST(s2[1] AS DOUBLE) - s2[2]) * (CAST(s2[1] AS DOUBLE) - s2[2]))), (a,b) -> a + b)"
+
+  // Unrolled Lloyd stages, each led by ",\n": coarse (full-dim, unkeyed
+  // — q42Oracle's kernel) over points `src(vid, v)`, and subspace
+  // (s-keyed — q46Oracle's kernel) over sub-vectors `src(vid, s, sv)`.
+  // An assignment takes each point's nearest centroid of `cent` (ties to
+  // the lower index); an update averages each cell's members in vid
+  // order and keeps an empty cell's centroid.
+  private def coarseAssign(src: String, cent: String, out: String): String =
+    s""",
+       |$out AS MATERIALIZED (
+       |  SELECT vid, cidx AS cell FROM (
+       |    SELECT p.vid, c.cidx, ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${lloydD2("p.v", "c.c")}, c.cidx) AS rk
+       |    FROM $src p CROSS JOIN $cent c) WHERE rk = 1)""".stripMargin
+
+  private def coarseUpdate(dim: Int, src: String, assign: String,
+      prev: String, out: String): String =
+    s""",
+       |$out AS MATERIALIZED (
+       |  SELECT pc.cidx,
+       |    CASE WHEN mm.cell IS NULL THEN pc.c
+       |    ELSE list_transform(generate_series(1, $dim), i ->
+       |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
+       |    END AS c
+       |  FROM $prev pc LEFT JOIN (
+       |    SELECT a.cell, list(p.v ORDER BY p.vid) AS vs, count(*) AS n
+       |    FROM $assign a JOIN $src p ON p.vid = a.vid GROUP BY a.cell) mm
+       |  ON mm.cell = pc.cidx)""".stripMargin
+
+  private def subAssign(src: String, cent: String, out: String): String =
+    s""",
+       |$out AS MATERIALIZED (
+       |  SELECT vid, s, cidx AS cell FROM (
+       |    SELECT p.vid, p.s, c.cidx,
+       |      ROW_NUMBER() OVER (PARTITION BY p.vid, p.s ORDER BY ${lloydD2("p.sv", "c.c")}, c.cidx) AS rk
+       |    FROM $src p JOIN $cent c ON c.s = p.s) WHERE rk = 1)""".stripMargin
+
+  private def subUpdate(subDim: Int, src: String, assign: String,
+      prev: String, out: String): String =
+    s""",
+       |$out AS MATERIALIZED (
+       |  SELECT pc.s, pc.cidx,
+       |    CASE WHEN mm.cell IS NULL THEN pc.c
+       |    ELSE list_transform(generate_series(1, $subDim), i ->
+       |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
+       |    END AS c
+       |  FROM $prev pc LEFT JOIN (
+       |    SELECT a.s, a.cell, list(p.sv ORDER BY p.vid) AS vs, count(*) AS n
+       |    FROM $assign a JOIN $src p ON p.vid = a.vid AND p.s = a.s
+       |    GROUP BY a.s, a.cell) mm
+       |  ON mm.s = pc.s AND mm.cell = pc.cidx)""".stripMargin
+
   /** The q105 IVF-ADC WITH-chain up to `ranked`, no final SELECT —
     * shared by q105 (top-k agg), q112 (recall@k vs brute truth) and q113
     * (distributed corpus-vs-corpus, `queryPred = "TRUE"`). */
   private def q105OracleChain(nCells: Int, nprobe: Int, m: Int, subDim: Int,
       kCent: Int, maxIter: Int, queryPred: String = "vid < 20"): String = {
-    def d2(p: String, c: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($p, $c), " +
-        s"s2 -> (CAST(s2[1] AS DOUBLE) - s2[2]) * (CAST(s2[1] AS DOUBLE) - s2[2]))), (a,b) -> a + b)"
     val dim = m * subDim
-    // coarse (full-dim, unkeyed) Lloyd stages — q42Oracle's kernel
-    def cAssign(cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, cidx AS cell FROM (
-         |    SELECT p.vid, c.cidx, ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${d2("p.v", "c.c")}, c.cidx) AS rk
-         |    FROM pts p CROSS JOIN $cent c) WHERE rk = 1)""".stripMargin
-    def cUpdate(assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.cidx,
-         |    CASE WHEN mm.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $dim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.cell, list(p.v ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN pts p ON p.vid = a.vid GROUP BY a.cell) mm
-         |  ON mm.cell = pc.cidx)""".stripMargin
-    // subspace (s-keyed) Lloyd stages — q46Oracle's kernel
-    def sAssign(cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, s, cidx AS cell FROM (
-         |    SELECT p.vid, p.s, c.cidx,
-         |      ROW_NUMBER() OVER (PARTITION BY p.vid, p.s ORDER BY ${d2("p.sv", "c.c")}, c.cidx) AS rk
-         |    FROM subs p JOIN $cent c ON c.s = p.s) WHERE rk = 1)""".stripMargin
-    def sUpdate(assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.s, pc.cidx,
-         |    CASE WHEN mm.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $subDim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.s, a.cell, list(p.sv ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN subs p ON p.vid = a.vid AND p.s = a.s
-         |    GROUP BY a.s, a.cell) mm
-         |  ON mm.s = pc.s AND mm.cell = pc.cidx)""".stripMargin
     val sb = new StringBuilder(
       s"""WITH pts AS MATERIALIZED (
          |  SELECT vec_id AS vid, embedding AS v
@@ -604,51 +624,98 @@ object SimilarityQueries {
          |  FROM subs sb JOIN first_seed f ON f.vid = sb.vid)""".stripMargin)
     var cPrev = "ccent0"
     for (it <- 0 until maxIter) {
-      sb.append(cAssign(cPrev, s"ca$it"))
-      sb.append(cUpdate(s"ca$it", cPrev, s"ccent${it + 1}"))
+      sb.append(coarseAssign("pts", cPrev, s"ca$it"))
+      sb.append(coarseUpdate(dim, "pts", s"ca$it", cPrev, s"ccent${it + 1}"))
       cPrev = s"ccent${it + 1}"
     }
-    sb.append(cAssign(cPrev, "cafinal"))
+    sb.append(coarseAssign("pts", cPrev, "cafinal"))
     var sPrev = "scent0"
     for (it <- 0 until maxIter) {
-      sb.append(sAssign(sPrev, s"sa$it"))
-      sb.append(sUpdate(s"sa$it", sPrev, s"scent${it + 1}"))
+      sb.append(subAssign("subs", sPrev, s"sa$it"))
+      sb.append(subUpdate(subDim, "subs", s"sa$it", sPrev, s"scent${it + 1}"))
       sPrev = s"scent${it + 1}"
     }
-    sb.append(sAssign(sPrev, "safinal"))
+    sb.append(subAssign("subs", sPrev, "safinal"))
     sb.append(
       s""",
-         |q AS (SELECT vid AS qid, CAST(v AS DOUBLE[]) AS qv FROM pts WHERE $queryPred),
-         |probes AS (
-         |  SELECT qid, cidx AS cell FROM (
-         |    SELECT q.qid, c.cidx,
-         |      ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |        list_dot_product(q.qv, c.c) /
-         |        (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.c, c.c))) DESC,
-         |        c.cidx) AS crk
-         |    FROM q CROSS JOIN $cPrev c) WHERE crk <= $nprobe),
-         |elig AS (
-         |  SELECT pr.qid, cf.vid AS nid
-         |  FROM probes pr JOIN cafinal cf ON cf.cell = pr.cell
-         |  WHERE cf.vid <> pr.qid),
-         |qsubs AS (SELECT vid AS qid, s, CAST(sv AS DOUBLE[]) AS qsv FROM subs WHERE $queryPred),
-         |adc AS MATERIALIZED (
-         |  SELECT qs.qid, c.s, c.cidx, list_dot_product(qs.qsv, c.c) AS dot
-         |  FROM qsubs qs JOIN $sPrev c ON c.s = qs.s),
-         |contrib AS (
-         |  SELECT e.qid, e.nid, a.s, ad.dot
-         |  FROM elig e JOIN safinal a ON a.vid = e.nid
-         |  JOIN adc ad ON ad.qid = e.qid AND ad.s = a.s AND ad.cidx = a.cell),
-         |scores AS (
-         |  SELECT qid, nid,
-         |    list_reduce(list_prepend(0.0, list(dot ORDER BY s)), (a,b) -> a + b) AS approx_dot
-         |  FROM contrib GROUP BY qid, nid),
-         |ranked AS (
-         |  SELECT qid, nid, round(approx_dot, 6) AS approx6,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY approx_dot DESC, nid) AS rk
-         |  FROM scores)""".stripMargin)
+         |${adcRankCtes(queryPred, cPrev, sPrev, nprobe)}""".stripMargin)
     sb.toString
   }
+
+  /** q105's IVF-ADC serve stages: per query `q` (rows of `pts` matching
+    * `queryPred`), the `nprobe` nearest cells of the centroid CTE
+    * `cells`, the eligible `cafinal` members, lookup tables against the
+    * codebook CTE `codebooks`, and `ranked(qid, nid, approx6, rk)`. */
+  private def adcRankCtes(queryPred: String, cells: String,
+      codebooks: String, nprobe: Int): String =
+    s"""q AS (SELECT vid AS qid, CAST(v AS DOUBLE[]) AS qv FROM pts WHERE $queryPred),
+       |probes AS (
+       |  SELECT qid, cidx AS cell FROM (
+       |    SELECT q.qid, c.cidx,
+       |      ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
+       |        list_dot_product(q.qv, c.c) /
+       |        (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.c, c.c))) DESC,
+       |        c.cidx) AS crk
+       |    FROM q CROSS JOIN $cells c) WHERE crk <= $nprobe),
+       |elig AS (
+       |  SELECT pr.qid, cf.vid AS nid
+       |  FROM probes pr JOIN cafinal cf ON cf.cell = pr.cell
+       |  WHERE cf.vid <> pr.qid),
+       |qsubs AS (SELECT vid AS qid, s, CAST(sv AS DOUBLE[]) AS qsv FROM subs WHERE $queryPred),
+       |adc AS MATERIALIZED (
+       |  SELECT qs.qid, c.s, c.cidx, list_dot_product(qs.qsv, c.c) AS dot
+       |  FROM qsubs qs JOIN $codebooks c ON c.s = qs.s),
+       |contrib AS (
+       |  SELECT e.qid, e.nid, a.s, ad.dot
+       |  FROM elig e JOIN safinal a ON a.vid = e.nid
+       |  JOIN adc ad ON ad.qid = e.qid AND ad.s = a.s AND ad.cidx = a.cell),
+       |scores AS (
+       |  SELECT qid, nid,
+       |    list_reduce(list_prepend(0.0, list(dot ORDER BY s)), (a,b) -> a + b) AS approx_dot
+       |  FROM contrib GROUP BY qid, nid),
+       |ranked AS (
+       |  SELECT qid, nid, round(approx_dot, 6) AS approx6,
+       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY approx_dot DESC, nid) AS rk
+       |  FROM scores)""".stripMargin
+
+  /** The residual form of [[adcRankCtes]] (q275): probes keep q·c(cell),
+    * eligible members come from `cellTable`, residual codes from
+    * `codeTable` against the residual codebook CTE `codebooks`, ending
+    * in `rankedR(qid, nid, approx6, rk)`. */
+  private def residualAdcRankCtes(queryPred: String, subDim: Int,
+      cells: String, cellTable: String, codebooks: String,
+      codeTable: String, nprobe: Int): String =
+    s"""q AS (SELECT vid AS qid, CAST(v AS DOUBLE[]) AS qv FROM pts WHERE $queryPred),
+       |probes AS (
+       |  SELECT qid, cidx AS cell, dt AS qdotc FROM (
+       |    SELECT q.qid, c.cidx, list_dot_product(q.qv, c.c) AS dt,
+       |      ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
+       |        list_dot_product(q.qv, c.c) /
+       |        (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.c, c.c))) DESC,
+       |        c.cidx) AS crk
+       |    FROM q CROSS JOIN $cells c) WHERE crk <= $nprobe),
+       |elig AS (
+       |  SELECT pr.qid, cf.vid AS nid, pr.qdotc
+       |  FROM probes pr JOIN $cellTable cf ON cf.cell = pr.cell
+       |  WHERE cf.vid <> pr.qid),
+       |rqsubs AS (SELECT vid AS qid, sxx.s,
+       |    CAST(v[sxx.s * $subDim + 1 : (sxx.s + 1) * $subDim] AS DOUBLE[]) AS qsv
+       |  FROM pts CROSS JOIN sxx WHERE $queryPred),
+       |radc AS MATERIALIZED (
+       |  SELECT qs.qid, c.s, c.cidx, list_dot_product(qs.qsv, c.c) AS dot
+       |  FROM rqsubs qs JOIN $codebooks c ON c.s = qs.s),
+       |rcontrib AS (
+       |  SELECT e.qid, e.nid, e.qdotc, a.s, ad.dot
+       |  FROM elig e JOIN $codeTable a ON a.vid = e.nid
+       |  JOIN radc ad ON ad.qid = e.qid AND ad.s = a.s AND ad.cidx = a.cell),
+       |rscores AS (
+       |  SELECT qid, nid,
+       |    qdotc + list_reduce(list_prepend(0.0, list(dot ORDER BY s)), (a,b) -> a + b) AS approx_dot
+       |  FROM rcontrib GROUP BY qid, nid, qdotc),
+       |rankedR AS (
+       |  SELECT qid, nid, round(approx_dot, 6) AS approx6,
+       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY approx_dot DESC, nid) AS rk
+       |  FROM rscores)""".stripMargin
 
   /** The RESIDUAL IVF-PQ chain (q275/q276): q105's coarse stages, then
     * PQ codebooks trained on residuals v − c(cell) w.r.t. the FINAL
@@ -661,50 +728,7 @@ object SimilarityQueries {
   private def q275OracleChain(nCells: Int, nprobe: Int, m: Int, subDim: Int,
       kCent: Int, maxIter: Int, queryPred: String = "vid < 20",
       withRaw: Boolean = false): String = {
-    def d2(p: String, c: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($p, $c), " +
-        s"s2 -> (CAST(s2[1] AS DOUBLE) - s2[2]) * (CAST(s2[1] AS DOUBLE) - s2[2]))), (a,b) -> a + b)"
     val dim = m * subDim
-    def cAssign(cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, cidx AS cell FROM (
-         |    SELECT p.vid, c.cidx, ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${d2("p.v", "c.c")}, c.cidx) AS rk
-         |    FROM pts p CROSS JOIN $cent c) WHERE rk = 1)""".stripMargin
-    def cUpdate(assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.cidx,
-         |    CASE WHEN mm.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $dim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.cell, list(p.v ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN pts p ON p.vid = a.vid GROUP BY a.cell) mm
-         |  ON mm.cell = pc.cidx)""".stripMargin
-    // subspace Lloyd stages over an arbitrary (vid, s, sv) source CTE
-    def sAssign(subsName: String, cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, s, cidx AS cell FROM (
-         |    SELECT p.vid, p.s, c.cidx,
-         |      ROW_NUMBER() OVER (PARTITION BY p.vid, p.s ORDER BY ${d2("p.sv", "c.c")}, c.cidx) AS rk
-         |    FROM $subsName p JOIN $cent c ON c.s = p.s) WHERE rk = 1)""".stripMargin
-    def sUpdate(subsName: String, assign: String, prev: String,
-        out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.s, pc.cidx,
-         |    CASE WHEN mm.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $subDim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.s, a.cell, list(p.sv ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN $subsName p ON p.vid = a.vid AND p.s = a.s
-         |    GROUP BY a.s, a.cell) mm
-         |  ON mm.s = pc.s AND mm.cell = pc.cidx)""".stripMargin
     val sb = new StringBuilder(
       s"""WITH pts AS MATERIALIZED (
          |  SELECT vec_id AS vid, embedding AS v
@@ -717,11 +741,11 @@ object SimilarityQueries {
          |first_seed AS (SELECT vid FROM pts ORDER BY vid LIMIT $kCent)""".stripMargin)
     var cPrev = "ccent0"
     for (it <- 0 until maxIter) {
-      sb.append(cAssign(cPrev, s"ca$it"))
-      sb.append(cUpdate(s"ca$it", cPrev, s"ccent${it + 1}"))
+      sb.append(coarseAssign("pts", cPrev, s"ca$it"))
+      sb.append(coarseUpdate(dim, "pts", s"ca$it", cPrev, s"ccent${it + 1}"))
       cPrev = s"ccent${it + 1}"
     }
-    sb.append(cAssign(cPrev, "cafinal"))
+    sb.append(coarseAssign("pts", cPrev, "cafinal"))
     // residual points w.r.t. the FINAL coarse centroids, then subspace
     // codebooks over residual subvectors (all double, no casts needed)
     sb.append(
@@ -740,44 +764,14 @@ object SimilarityQueries {
          |  FROM rsubs sb JOIN first_seed f ON f.vid = sb.vid)""".stripMargin)
     var rsPrev = "rscent0"
     for (it <- 0 until maxIter) {
-      sb.append(sAssign("rsubs", rsPrev, s"rsa$it"))
-      sb.append(sUpdate("rsubs", s"rsa$it", rsPrev, s"rscent${it + 1}"))
+      sb.append(subAssign("rsubs", rsPrev, s"rsa$it"))
+      sb.append(subUpdate(subDim, "rsubs", s"rsa$it", rsPrev, s"rscent${it + 1}"))
       rsPrev = s"rscent${it + 1}"
     }
-    sb.append(sAssign("rsubs", rsPrev, "rsafinal"))
+    sb.append(subAssign("rsubs", rsPrev, "rsafinal"))
     sb.append(
       s""",
-         |q AS (SELECT vid AS qid, CAST(v AS DOUBLE[]) AS qv FROM pts WHERE $queryPred),
-         |probes AS (
-         |  SELECT qid, cidx AS cell, dt AS qdotc FROM (
-         |    SELECT q.qid, c.cidx, list_dot_product(q.qv, c.c) AS dt,
-         |      ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |        list_dot_product(q.qv, c.c) /
-         |        (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.c, c.c))) DESC,
-         |        c.cidx) AS crk
-         |    FROM q CROSS JOIN $cPrev c) WHERE crk <= $nprobe),
-         |elig AS (
-         |  SELECT pr.qid, cf.vid AS nid, pr.qdotc
-         |  FROM probes pr JOIN cafinal cf ON cf.cell = pr.cell
-         |  WHERE cf.vid <> pr.qid),
-         |rqsubs AS (SELECT vid AS qid, sxx.s,
-         |    CAST(v[sxx.s * $subDim + 1 : (sxx.s + 1) * $subDim] AS DOUBLE[]) AS qsv
-         |  FROM pts CROSS JOIN sxx WHERE $queryPred),
-         |radc AS MATERIALIZED (
-         |  SELECT qs.qid, c.s, c.cidx, list_dot_product(qs.qsv, c.c) AS dot
-         |  FROM rqsubs qs JOIN $rsPrev c ON c.s = qs.s),
-         |rcontrib AS (
-         |  SELECT e.qid, e.nid, e.qdotc, a.s, ad.dot
-         |  FROM elig e JOIN rsafinal a ON a.vid = e.nid
-         |  JOIN radc ad ON ad.qid = e.qid AND ad.s = a.s AND ad.cidx = a.cell),
-         |rscores AS (
-         |  SELECT qid, nid,
-         |    qdotc + list_reduce(list_prepend(0.0, list(dot ORDER BY s)), (a,b) -> a + b) AS approx_dot
-         |  FROM rcontrib GROUP BY qid, nid, qdotc),
-         |rankedR AS (
-         |  SELECT qid, nid, round(approx_dot, 6) AS approx6,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY approx_dot DESC, nid) AS rk
-         |  FROM rscores)""".stripMargin)
+         |${residualAdcRankCtes(queryPred, subDim, cPrev, "cafinal", rsPrev, "rsafinal", nprobe)}""".stripMargin)
     if (withRaw) {
       // the q105 raw-PQ tail from the SAME coarse cells/probes
       sb.append(
@@ -791,11 +785,11 @@ object SimilarityQueries {
            |  FROM subs sb JOIN first_seed f ON f.vid = sb.vid)""".stripMargin)
       var sPrev = "scent0"
       for (it <- 0 until maxIter) {
-        sb.append(sAssign("subs", sPrev, s"sa$it"))
-        sb.append(sUpdate("subs", s"sa$it", sPrev, s"scent${it + 1}"))
+        sb.append(subAssign("subs", sPrev, s"sa$it"))
+        sb.append(subUpdate(subDim, "subs", s"sa$it", sPrev, s"scent${it + 1}"))
         sPrev = s"scent${it + 1}"
       }
-      sb.append(sAssign("subs", sPrev, "safinal"))
+      sb.append(subAssign("subs", sPrev, "safinal"))
       sb.append(
         s""",
            |adc AS MATERIALIZED (
@@ -828,48 +822,7 @@ object SimilarityQueries {
   private def q277Oracle(nCells: Int, nprobe: Int, m: Int, subDim: Int,
       kCent: Int, maxIter: Int, topK: Int, offset: Long,
       queryPred: String, indexPred: String): String = {
-    def d2(p: String, c: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($p, $c), " +
-        s"s2 -> (CAST(s2[1] AS DOUBLE) - s2[2]) * (CAST(s2[1] AS DOUBLE) - s2[2]))), (a,b) -> a + b)"
     val dim = m * subDim
-    def cAssign(src: String, cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, cidx AS cell FROM (
-         |    SELECT p.vid, c.cidx, ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${d2("p.v", "c.c")}, c.cidx) AS rk
-         |    FROM $src p CROSS JOIN $cent c) WHERE rk = 1)""".stripMargin
-    def cUpdate(src: String, assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.cidx,
-         |    CASE WHEN mm.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $dim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.cell, list(p.v ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN $src p ON p.vid = a.vid GROUP BY a.cell) mm
-         |  ON mm.cell = pc.cidx)""".stripMargin
-    def sAssign(src: String, cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, s, cidx AS cell FROM (
-         |    SELECT p.vid, p.s, c.cidx,
-         |      ROW_NUMBER() OVER (PARTITION BY p.vid, p.s ORDER BY ${d2("p.sv", "c.c")}, c.cidx) AS rk
-         |    FROM $src p JOIN $cent c ON c.s = p.s) WHERE rk = 1)""".stripMargin
-    def sUpdate(src: String, assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.s, pc.cidx,
-         |    CASE WHEN mm.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $subDim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.s, a.cell, list(p.sv ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN $src p ON p.vid = a.vid AND p.s = a.s
-         |    GROUP BY a.s, a.cell) mm
-         |  ON mm.s = pc.s AND mm.cell = pc.cidx)""".stripMargin
     val sb = new StringBuilder(
       s"""WITH upts AS MATERIALIZED (
          |  SELECT vec_id AS vid, embedding AS v FROM embeddings WHERE vec_id % 4 <> 0
@@ -887,14 +840,14 @@ object SimilarityQueries {
          |first_seed AS (SELECT vid FROM fpts ORDER BY vid LIMIT $kCent)""".stripMargin)
     var cPrev = "ccent0"
     for (it <- 0 until maxIter) {
-      sb.append(cAssign("fpts", cPrev, s"fca$it"))
-      sb.append(cUpdate("fpts", s"fca$it", cPrev, s"ccent${it + 1}"))
+      sb.append(coarseAssign("fpts", cPrev, s"fca$it"))
+      sb.append(coarseUpdate(dim, "fpts", s"fca$it", cPrev, s"ccent${it + 1}"))
       cPrev = s"ccent${it + 1}"
     }
     // fit-row cells (for the codebook-training residuals) and INDEX-row
     // cells (the survivors' index entries), both vs the FROZEN coarse
-    sb.append(cAssign("fpts", cPrev, "fcafinal"))
-    sb.append(cAssign("ipts", cPrev, "icafinal"))
+    sb.append(coarseAssign("fpts", cPrev, "fcafinal"))
+    sb.append(coarseAssign("ipts", cPrev, "icafinal"))
     sb.append(
       s""",
          |frres AS MATERIALIZED (
@@ -911,8 +864,8 @@ object SimilarityQueries {
          |  FROM frsubs sb JOIN first_seed f ON f.vid = sb.vid)""".stripMargin)
     var rsPrev = "rscent0"
     for (it <- 0 until maxIter) {
-      sb.append(sAssign("frsubs", rsPrev, s"rsa$it"))
-      sb.append(sUpdate("frsubs", s"rsa$it", rsPrev, s"rscent${it + 1}"))
+      sb.append(subAssign("frsubs", rsPrev, s"rsa$it"))
+      sb.append(subUpdate(subDim, "frsubs", s"rsa$it", rsPrev, s"rscent${it + 1}"))
       rsPrev = s"rscent${it + 1}"
     }
     sb.append(
@@ -925,40 +878,10 @@ object SimilarityQueries {
          |irsubs AS MATERIALIZED (
          |  SELECT r.vid, sxx.s, r.rv[sxx.s * $subDim + 1 : (sxx.s + 1) * $subDim] AS sv
          |  FROM irres r CROSS JOIN sxx)""".stripMargin)
-    sb.append(sAssign("irsubs", rsPrev, "irsafinal"))
+    sb.append(subAssign("irsubs", rsPrev, "irsafinal"))
     sb.append(
       s""",
-         |q AS (SELECT vid AS qid, CAST(v AS DOUBLE[]) AS qv FROM pts WHERE $queryPred),
-         |probes AS (
-         |  SELECT qid, cidx AS cell, dt AS qdotc FROM (
-         |    SELECT q.qid, c.cidx, list_dot_product(q.qv, c.c) AS dt,
-         |      ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |        list_dot_product(q.qv, c.c) /
-         |        (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.c, c.c))) DESC,
-         |        c.cidx) AS crk
-         |    FROM q CROSS JOIN $cPrev c) WHERE crk <= $nprobe),
-         |elig AS (
-         |  SELECT pr.qid, cf.vid AS nid, pr.qdotc
-         |  FROM probes pr JOIN icafinal cf ON cf.cell = pr.cell
-         |  WHERE cf.vid <> pr.qid),
-         |rqsubs AS (SELECT vid AS qid, sxx.s,
-         |    CAST(v[sxx.s * $subDim + 1 : (sxx.s + 1) * $subDim] AS DOUBLE[]) AS qsv
-         |  FROM pts CROSS JOIN sxx WHERE $queryPred),
-         |radc AS MATERIALIZED (
-         |  SELECT qs.qid, c.s, c.cidx, list_dot_product(qs.qsv, c.c) AS dot
-         |  FROM rqsubs qs JOIN $rsPrev c ON c.s = qs.s),
-         |rcontrib AS (
-         |  SELECT e.qid, e.nid, e.qdotc, a.s, ad.dot
-         |  FROM elig e JOIN irsafinal a ON a.vid = e.nid
-         |  JOIN radc ad ON ad.qid = e.qid AND ad.s = a.s AND ad.cidx = a.cell),
-         |rscores AS (
-         |  SELECT qid, nid,
-         |    qdotc + list_reduce(list_prepend(0.0, list(dot ORDER BY s)), (a,b) -> a + b) AS approx_dot
-         |  FROM rcontrib GROUP BY qid, nid, qdotc),
-         |rankedR AS (
-         |  SELECT qid, nid, round(approx_dot, 6) AS approx6,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY approx_dot DESC, nid) AS rk
-         |  FROM rscores)
+         |${residualAdcRankCtes(queryPred, subDim, cPrev, "icafinal", rsPrev, "irsafinal", nprobe)}
          |SELECT qid, nid, approx6 AS approx_dot, CAST(rk AS INT) AS rank
          |FROM rankedR WHERE rk <= $topK""".stripMargin)
     sb.toString
@@ -977,51 +900,10 @@ object SimilarityQueries {
   private def q255Oracle(nCells: Int, nprobe: Int, m: Int, subDim: Int,
       kCent: Int, maxIter: Int, topK: Int, offset: Long,
       queryPred: String, indexPred: String = "TRUE"): String = {
-    def d2(p: String, c: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($p, $c), " +
-        s"s2 -> (CAST(s2[1] AS DOUBLE) - s2[2]) * (CAST(s2[1] AS DOUBLE) - s2[2]))), (a,b) -> a + b)"
     val dim = m * subDim
     // Lloyd stages parameterized on the point source: fit iterations run
     // on the TRAINING rows (fpts/fsubs); the final assignment pass runs
     // on the full union (pts/subs).
-    def cAssign(src: String, cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, cidx AS cell FROM (
-         |    SELECT p.vid, c.cidx, ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${d2("p.v", "c.c")}, c.cidx) AS rk
-         |    FROM $src p CROSS JOIN $cent c) WHERE rk = 1)""".stripMargin
-    def cUpdate(src: String, assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.cidx,
-         |    CASE WHEN mm.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $dim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.cell, list(p.v ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN $src p ON p.vid = a.vid GROUP BY a.cell) mm
-         |  ON mm.cell = pc.cidx)""".stripMargin
-    def sAssign(src: String, cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, s, cidx AS cell FROM (
-         |    SELECT p.vid, p.s, c.cidx,
-         |      ROW_NUMBER() OVER (PARTITION BY p.vid, p.s ORDER BY ${d2("p.sv", "c.c")}, c.cidx) AS rk
-         |    FROM $src p JOIN $cent c ON c.s = p.s) WHERE rk = 1)""".stripMargin
-    def sUpdate(src: String, assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.s, pc.cidx,
-         |    CASE WHEN mm.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $subDim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.s, a.cell, list(p.sv ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN $src p ON p.vid = a.vid AND p.s = a.s
-         |    GROUP BY a.s, a.cell) mm
-         |  ON mm.s = pc.s AND mm.cell = pc.cidx)""".stripMargin
     val sb = new StringBuilder(
       s"""WITH upts AS MATERIALIZED (
          |  SELECT vec_id AS vid, embedding AS v FROM embeddings WHERE vec_id % 4 <> 0
@@ -1047,49 +929,21 @@ object SimilarityQueries {
          |  FROM fsubs sb JOIN first_seed f ON f.vid = sb.vid)""".stripMargin)
     var cPrev = "ccent0"
     for (it <- 0 until maxIter) {
-      sb.append(cAssign("fpts", cPrev, s"fca$it"))
-      sb.append(cUpdate("fpts", s"fca$it", cPrev, s"ccent${it + 1}"))
+      sb.append(coarseAssign("fpts", cPrev, s"fca$it"))
+      sb.append(coarseUpdate(dim, "fpts", s"fca$it", cPrev, s"ccent${it + 1}"))
       cPrev = s"ccent${it + 1}"
     }
-    sb.append(cAssign("ipts", cPrev, "cafinal"))
+    sb.append(coarseAssign("ipts", cPrev, "cafinal"))
     var sPrev = "scent0"
     for (it <- 0 until maxIter) {
-      sb.append(sAssign("fsubs", sPrev, s"fsa$it"))
-      sb.append(sUpdate("fsubs", s"fsa$it", sPrev, s"scent${it + 1}"))
+      sb.append(subAssign("fsubs", sPrev, s"fsa$it"))
+      sb.append(subUpdate(subDim, "fsubs", s"fsa$it", sPrev, s"scent${it + 1}"))
       sPrev = s"scent${it + 1}"
     }
-    sb.append(sAssign("isubs", sPrev, "safinal"))
+    sb.append(subAssign("isubs", sPrev, "safinal"))
     sb.append(
       s""",
-         |q AS (SELECT vid AS qid, CAST(v AS DOUBLE[]) AS qv FROM pts WHERE $queryPred),
-         |probes AS (
-         |  SELECT qid, cidx AS cell FROM (
-         |    SELECT q.qid, c.cidx,
-         |      ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |        list_dot_product(q.qv, c.c) /
-         |        (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.c, c.c))) DESC,
-         |        c.cidx) AS crk
-         |    FROM q CROSS JOIN $cPrev c) WHERE crk <= $nprobe),
-         |elig AS (
-         |  SELECT pr.qid, cf.vid AS nid
-         |  FROM probes pr JOIN cafinal cf ON cf.cell = pr.cell
-         |  WHERE cf.vid <> pr.qid),
-         |qsubs AS (SELECT vid AS qid, s, CAST(sv AS DOUBLE[]) AS qsv FROM subs WHERE $queryPred),
-         |adc AS MATERIALIZED (
-         |  SELECT qs.qid, c.s, c.cidx, list_dot_product(qs.qsv, c.c) AS dot
-         |  FROM qsubs qs JOIN $sPrev c ON c.s = qs.s),
-         |contrib AS (
-         |  SELECT e.qid, e.nid, a.s, ad.dot
-         |  FROM elig e JOIN safinal a ON a.vid = e.nid
-         |  JOIN adc ad ON ad.qid = e.qid AND ad.s = a.s AND ad.cidx = a.cell),
-         |scores AS (
-         |  SELECT qid, nid,
-         |    list_reduce(list_prepend(0.0, list(dot ORDER BY s)), (a,b) -> a + b) AS approx_dot
-         |  FROM contrib GROUP BY qid, nid),
-         |ranked AS (
-         |  SELECT qid, nid, round(approx_dot, 6) AS approx6,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY approx_dot DESC, nid) AS rk
-         |  FROM scores)
+         |${adcRankCtes(queryPred, cPrev, sPrev, nprobe)}
          |SELECT qid, nid, approx6 AS approx_dot, CAST(rk AS INT) AS rank
          |FROM ranked WHERE rk <= $topK""".stripMargin)
     sb.toString
@@ -1177,32 +1031,14 @@ object SimilarityQueries {
           .select(col("qid"), col("nid"), col("rank"))
         graft.operators.Fusion.rrfTopK(Seq(lex, vec), k = 10)
       },
-      Some("""WITH pool AS (
+      Some(s"""WITH pool AS (
              |  SELECT d.doc_id AS id, d.text FROM documents d
              |  JOIN embeddings e ON e.vec_id = d.doc_id),
              |terms AS (
              |  SELECT id,
-             |    unnest(string_split_regex(lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+')) AS term
+             |    unnest(string_split_regex(lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+')) AS term
              |  FROM pool),
-             |tf AS (SELECT id, term, COUNT(*) AS tf FROM terms
-             |       WHERE length(term) > 0 GROUP BY 1, 2),
-             |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-             |n AS (SELECT COUNT(*) AS n FROM pool),
-             |w AS (SELECT id, tf.term,
-             |        tf * (ln((n.n + 1.0) / (df + 1)) + 1) AS tfidf
-             |      FROM tf JOIN dfq USING (term) CROSS JOIN n
-             |      WHERE df <= 0.5 * n.n),
-             |norms AS (SELECT id, sqrt(SUM(tfidf * tfidf)) AS norm FROM w GROUP BY id),
-             |dots AS (
-             |  SELECT a.id AS idA, b.id AS idB, SUM(a.tfidf * b.tfidf) AS dot
-             |  FROM w a JOIN w b ON a.term = b.term AND a.id < b.id
-             |  GROUP BY 1, 2),
-             |sims AS (
-             |  SELECT idA, idB, dot / (na.norm * nb.norm) AS sim
-             |  FROM dots JOIN norms na ON na.id = idA JOIN norms nb ON nb.id = idB),
-             |sym AS (
-             |  SELECT idA AS qid, idB AS nid, sim FROM sims
-             |  UNION ALL SELECT idB, idA, sim FROM sims),
+             |${OracleFragments.tfidfCosineCtes("pool")},
              |lex AS (
              |  SELECT qid, nid, rank FROM (
              |    SELECT qid, nid,
@@ -2187,17 +2023,7 @@ object SimilarityQueries {
         kCent = 16, maxIter = 10) +
         s"""
            |, short AS (SELECT qid, nid FROM ranked WHERE rk <= 15),
-           |exact AS (
-           |  SELECT sh.qid, sh.nid,
-           |    list_dot_product(q.qv, CAST(p.v AS DOUBLE[])) /
-           |      (sqrt(list_dot_product(q.qv, q.qv)) *
-           |       sqrt(list_dot_product(CAST(p.v AS DOUBLE[]), CAST(p.v AS DOUBLE[])))) AS sim
-           |  FROM short sh JOIN q ON q.qid = sh.qid
-           |  JOIN pts p ON p.vid = sh.nid),
-           |rr AS (
-           |  SELECT qid, nid, sim,
-           |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rank
-           |  FROM exact)
+           |$exactRerankCtes
            |SELECT qid, nid, round(sim, 6) AS sim, CAST(rank AS INT) AS rank
            |FROM rr WHERE rank <= 5""".stripMargin)),
 
@@ -2220,17 +2046,7 @@ object SimilarityQueries {
         kCent = 16, maxIter = 10) +
         s""",
            |short AS (SELECT qid, nid FROM rankedR WHERE rk <= 15),
-           |exact AS (
-           |  SELECT sh.qid, sh.nid,
-           |    list_dot_product(q.qv, CAST(p.v AS DOUBLE[])) /
-           |      (sqrt(list_dot_product(q.qv, q.qv)) *
-           |       sqrt(list_dot_product(CAST(p.v AS DOUBLE[]), CAST(p.v AS DOUBLE[])))) AS sim
-           |  FROM short sh JOIN q ON q.qid = sh.qid
-           |  JOIN pts p ON p.vid = sh.nid),
-           |rr AS (
-           |  SELECT qid, nid, sim,
-           |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rank
-           |  FROM exact)
+           |$exactRerankCtes
            |SELECT qid, nid, round(sim, 6) AS sim, CAST(rank AS INT) AS rank
            |FROM rr WHERE rank <= 5""".stripMargin)),
 

@@ -198,22 +198,11 @@ object TextQueries {
         |  WHERE a.id < b.id)""".stripMargin +
       edgeClosureTail(rounds)
 
-  /** Unrolled min-label propagation (`rounds` ≥ 2 joins over `sym`),
-    * ending in the FINAL label CTE `l2` whatever the depth — every
-    * consumer selects from `l2`; intermediate rounds are li1.. to keep
-    * one namespace. */
-  private def edgeClosureTail(rounds: Int): String = {
-    require(rounds >= 1)
-    val names = (1 until rounds).map(i => s"li$i") :+ "l2"
-    val its = names.zipWithIndex.map { case (name, i) =>
-      val prev = if (i == 0) "l0" else names(i - 1)
-      s""",
-         |$name AS MATERIALIZED (
-         |  SELECT s.a AS id, min(l.g) AS g
-         |  FROM sym s JOIN $prev l ON l.id = s.b GROUP BY s.a)""".stripMargin
-    }.mkString
-    """,
-      |inter AS (
+  /** Duplicate edges over `cand` pairs: Jaccard ≥ 0.8 on `shingles`
+    * plus exact-text keeper stars, symmetrized with self-loops as `sym`,
+    * and the seed labels `l0(id, g)`. */
+  private def jaccardEdgeCtes: String =
+    """inter AS (
       |  SELECT c.idA, c.idB, count(*) AS ni
       |  FROM cand c JOIN shingles sa ON sa.id = c.idA
       |  JOIN shingles sb ON sb.id = c.idB AND sb.sh = sa.sh
@@ -232,8 +221,23 @@ object TextQueries {
       |sym AS MATERIALIZED (
       |  SELECT a, b FROM edges UNION SELECT b, a FROM edges
       |  UNION SELECT a, a FROM edges UNION SELECT b, b FROM edges),
-      |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS g FROM sym)""".stripMargin +
-      its
+      |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS g FROM sym)""".stripMargin
+
+  /** Unrolled min-label propagation (`rounds` ≥ 2 joins over `sym`),
+    * ending in the FINAL label CTE `l2` whatever the depth — every
+    * consumer selects from `l2`; intermediate rounds are li1.. to keep
+    * one namespace. */
+  private def edgeClosureTail(rounds: Int): String = {
+    require(rounds >= 1)
+    val names = (1 until rounds).map(i => s"li$i") :+ "l2"
+    val its = names.zipWithIndex.map { case (name, i) =>
+      val prev = if (i == 0) "l0" else names(i - 1)
+      s""",
+         |$name AS MATERIALIZED (
+         |  SELECT s.a AS id, min(l.g) AS g
+         |  FROM sym s JOIN $prev l ON l.id = s.b GROUP BY s.a)""".stripMargin
+    }.mkString
+    ",\n" + jaccardEdgeCtes + its
   }
 
   private def q77Oracle: String = q77EdgeClosureCtes +
@@ -275,31 +279,12 @@ object TextQueries {
        |  UNION ALL SELECT doc_id + 20000, text FROM documents WHERE doc_id % 3 = 0
        |  UNION ALL SELECT doc_id + 30000, text || ' graft incremental probe words'
        |    FROM documents WHERE doc_id % 3 = 1""".stripMargin) +
-    """,
+    s""",
       |cand AS (
       |  SELECT DISTINCT a.id AS idA, b.id AS idB
       |  FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
       |  WHERE a.id < b.id),
-      |inter AS (
-      |  SELECT c.idA, c.idB, count(*) AS ni
-      |  FROM cand c JOIN shingles sa ON sa.id = c.idA
-      |  JOIN shingles sb ON sb.id = c.idB AND sb.sh = sa.sh
-      |  GROUP BY c.idA, c.idB),
-      |sizes AS (SELECT id, count(*) AS n FROM shingles GROUP BY id),
-      |edges AS MATERIALIZED (
-      |  SELECT i.idA AS a, i.idB AS b
-      |  FROM inter i JOIN sizes na ON na.id = i.idA JOIN sizes nb ON nb.id = i.idB
-      |  WHERE round(CAST(i.ni AS DOUBLE) / (na.n + nb.n - i.ni), 6) >= 0.8
-      |  UNION
-      |  SELECT k.keeper AS a, c.id AS b
-      |  FROM corpus c JOIN (
-      |    SELECT sha256(text) AS h, min(id) AS keeper FROM corpus GROUP BY 1) k
-      |  ON sha256(c.text) = k.h
-      |  WHERE c.id <> k.keeper),
-      |sym AS MATERIALIZED (
-      |  SELECT a, b FROM edges UNION SELECT b, a FROM edges
-      |  UNION SELECT a, a FROM edges UNION SELECT b, b FROM edges),
-      |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS g FROM sym),
+      |$jaccardEdgeCtes,
       |l1 AS MATERIALIZED (
       |  SELECT s.a AS id, min(l.g) AS g
       |  FROM sym s JOIN l0 l ON l.id = s.b GROUP BY s.a),
@@ -426,6 +411,264 @@ object TextQueries {
     * {p}sc(qid, id, score_micro)` over `src(idExpr, text)`; `predSql`
     * selects the query docs (column name `id`). Shared by q210 (ranked
     * top-k) and q224 (group-excluded hard negatives). */
+  /** Lowercased whitespace tokens `tw(doc_id, w)` of `src(doc_id, text)`
+    * and their 0-based positions `pos(doc_id, pos, term)`. */
+  private def posCtes(tw: String, src: String): String =
+    s"""$tw AS (SELECT doc_id, string_split_regex(
+       |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
+       |  FROM $src),
+       |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
+       |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
+       |        FROM $tw)
+       |  WHERE length(w[i]) > 0)""".stripMargin
+
+  /** q303's proximity bonus over [[bm25ScoreCtes]]' `qt`/`sc` and the
+    * positions of `src`, ending in the boosted top-10 per query. */
+  private def proximityRankTail(src: String): String =
+    s"""${posCtes("tw0", src)},
+       |qp AS (SELECT q.qid, p.doc_id AS id, q.term, p.pos
+       |  FROM qt q JOIN pos p ON p.term = q.term
+       |  WHERE p.doc_id <> q.qid),
+       |md AS (SELECT a.qid, a.id, a.term AS t1, b.term AS t2,
+       |    min(abs(a.pos - b.pos)) AS mdv
+       |  FROM qp a JOIN qp b ON b.qid = a.qid AND b.id = a.id
+       |    AND a.term < b.term
+       |  GROUP BY 1, 2, 3, 4),
+       |px AS (SELECT qid, id,
+       |    CAST(sum(1000000 // (1 + mdv)) AS BIGINT) AS prox
+       |  FROM md GROUP BY 1, 2),
+       |totx AS (SELECT s.qid, s.id,
+       |    s.score_micro + coalesce(p.prox, 0) AS total,
+       |    coalesce(p.prox, 0) AS prox
+       |  FROM sc s LEFT JOIN px p ON p.qid = s.qid AND p.id = s.id)
+       |SELECT qid, CAST(rank AS BIGINT) AS rank, id,
+       |  CAST(total AS BIGINT) AS score_micro,
+       |  CAST(prox AS BIGINT) AS prox_micro
+       |FROM (SELECT qid, id, total, prox, ROW_NUMBER() OVER (
+       |    PARTITION BY qid ORDER BY total DESC, id) AS rank FROM totx)
+       |WHERE rank <= 10""".stripMargin
+
+  /** The top-10 per `qid` of `sc(qid, id, score_micro)` by score, then
+    * id — the closing SELECT of the BM25 ranking oracles. */
+  private def rankedTop10Tail(sc: String): String =
+    s"""ranked AS (SELECT qid, id, score_micro,
+       |    ROW_NUMBER() OVER (PARTITION BY qid
+       |      ORDER BY score_micro DESC, id) AS rank
+       |  FROM $sc)
+       |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
+       |FROM ranked WHERE rank <= 10""".stripMargin
+
+  /** q315's oracle: conjunctive must-terms with a qnotone exclusion per
+    * standing query (shared by the streaming form, q316). */
+  private def percolatorOracle: String =
+    s"""WITH corpus AS (
+      |  SELECT doc_id, CASE WHEN doc_id % 20 = 0
+      |    THEN text || ' qnotone' ELSE text END AS text
+      |  FROM documents),
+      |qm AS (${prefixQueryTerms(90000, 6, "doc_id < 15")}
+      |  UNION SELECT qid, term FROM (VALUES (90100, 'the'),
+      |    (90100, 'qnotone')) t(qid, term)),
+      |qn AS (SELECT doc_id + 90000 AS qid, 'qnotone' AS term
+      |  FROM documents WHERE doc_id < 15 AND doc_id % 3 = 0
+      |  UNION ALL SELECT 90100, 'qnotone'),
+      |nm AS (SELECT qid, CAST(count(*) AS BIGINT) AS n FROM qm
+      |  GROUP BY 1),
+      |dt AS (SELECT DISTINCT doc_id AS id, lower(tk) AS term
+      |  FROM (SELECT doc_id, unnest(string_split_regex(
+      |      regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+')) AS tk
+      |    FROM corpus)
+      |  WHERE length(tk) > 0),
+      |hits AS (SELECT d.id, m.qid, CAST(count(*) AS BIGINT) AS c
+      |  FROM dt d JOIN qm m USING (term) GROUP BY 1, 2)
+      |SELECT h.id, h.qid FROM hits h JOIN nm ON nm.qid = h.qid
+      |WHERE h.c = nm.n
+      |  AND NOT EXISTS (SELECT 1 FROM qn n JOIN dt d2
+      |    ON d2.id = h.id AND d2.term = n.term
+      |    WHERE n.qid = h.qid)""".stripMargin
+
+  /** External query terms: the distinct lowercased first `n` tokens of
+    * each document matching `where`, keyed `qid = doc_id + offset`. */
+  private def prefixQueryTerms(offset: Int, n: Int, where: String): String =
+    s"""SELECT DISTINCT doc_id + $offset AS qid, lower(tk) AS term
+       |  FROM (SELECT doc_id, unnest(string_split_regex(
+       |      regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+')[1:$n]) AS tk
+       |    FROM documents WHERE $where)
+       |  WHERE length(tk) > 0""".stripMargin
+
+  /** RM3 over [[bm25ScoreCtes]]: feedback docs `fb` (top 5 of `sc`),
+    * the 10 heaviest non-query terms `ex`, and the query/expansion
+    * weights mixed 1:1 as `allw(qid, term, wt)`. */
+  private def rm3WeightCtes: String =
+    """fb AS (SELECT qid, id FROM (
+      |    SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid
+      |      ORDER BY score_micro DESC, id) AS r FROM sc) WHERE r <= 5),
+      |rmw AS (SELECT f.qid, t.term,
+      |    CAST(sum((t.tf * 1000000) // d.dl) AS BIGINT) AS rm_w
+      |  FROM fb f JOIN tf t ON t.id = f.id JOIN dl d ON d.id = f.id
+      |  GROUP BY 1, 2),
+      |rmx AS (SELECT r.qid, r.term, r.rm_w FROM rmw r
+      |  WHERE NOT EXISTS (SELECT 1 FROM qt q
+      |    WHERE q.qid = r.qid AND q.term = r.term)),
+      |ex AS (SELECT qid, term, rm_w FROM (
+      |    SELECT qid, term, rm_w, ROW_NUMBER() OVER (PARTITION BY qid
+      |      ORDER BY rm_w DESC, term) AS er FROM rmx) WHERE er <= 10),
+      |ws AS (SELECT qid, CAST(sum(rm_w) AS BIGINT) AS wsum
+      |  FROM ex GROUP BY 1),
+      |expw AS (SELECT e.qid, e.term, (e.rm_w * 500000) // w.wsum AS wt
+      |  FROM ex e JOIN ws w USING (qid)),
+      |nqc AS (SELECT qid, CAST(count(*) AS BIGINT) AS n
+      |  FROM qt GROUP BY 1),
+      |origw AS (SELECT q.qid, q.term, 500000 // n.n AS wt
+      |  FROM qt q JOIN nqc n USING (qid)),
+      |allw AS (SELECT qid, term, wt FROM origw
+      |  UNION ALL SELECT qid, term, wt FROM expw)""".stripMargin
+
+  /** SymSpell delete-1 matching of the query terms `queryRows` (VALUES
+    * rows of (qid, qt)) against `dfq(term, df)`: shared variants, the
+    * ±1 length rule and the OSA ≤ 1 verify, ending in
+    * `fm(qid, qt, term, df)`. */
+  private def fuzzyMatchCtes(queryRows: String): String =
+    s"""fv AS (SELECT term, df, unnest(list_distinct(list_concat([term],
+       |    list_transform(generate_series(0, length(term) - 1),
+       |      i -> substr(term, 1, i) || substr(term, i + 2))))) AS v
+       |  FROM dfq),
+       |fq AS (SELECT qid, qt, unnest(list_distinct(list_concat([qt],
+       |    list_transform(generate_series(0, length(qt) - 1),
+       |      i -> substr(qt, 1, i) || substr(qt, i + 2))))) AS v
+       |  FROM (VALUES $queryRows) q(qid, qt)),
+       |cand AS (SELECT DISTINCT fq.qid, fq.qt, fv.term, fv.df
+       |  FROM fv JOIN fq ON fq.v = fv.v
+       |  WHERE abs(length(fv.term) - length(fq.qt)) <= 1
+       |    AND fv.term <> fq.qt),
+       |cmm AS (SELECT qid, qt, term, df,
+       |    list_filter(generate_series(1, length(term)),
+       |      p -> substr(term, p, 1) <> substr(qt, p, 1)) AS mm
+       |  FROM cand),
+       |fm AS (SELECT qid, qt, term, df FROM cmm
+       |  WHERE length(term) <> length(qt)
+       |     OR len(mm) <= 1
+       |     OR (len(mm) = 2 AND mm[2] = mm[1] + 1
+       |         AND substr(term, mm[1], 1) = substr(qt, mm[2], 1)
+       |         AND substr(term, mm[2], 1) = substr(qt, mm[1], 1)))""".stripMargin
+
+  /** Lowercased whitespace terms of `src(doc_id, text)` and their
+    * document frequencies `dfq(term, df)`. */
+  private def termDfCtes(src: String): String =
+    s"""terms AS (SELECT doc_id AS id, unnest(string_split_regex(
+       |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+')) AS term
+       |  FROM $src),
+       |tfq AS (SELECT id, term FROM terms WHERE length(term) > 0
+       |  GROUP BY 1, 2),
+       |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
+       |  FROM tfq GROUP BY 1)""".stripMargin
+
+  /** `m`: the occurrences of the planted phrase "zq0grafted exact phrase
+    * marker" in `pos`, as adjacency joins anchored at alias `a`,
+    * selecting `cols`; a caller may append a GROUP BY before closing. */
+  private def markerPhraseCte(cols: String): String =
+    s"""m AS (SELECT $cols FROM pos a
+       |  JOIN pos b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
+       |    AND b.term = 'exact'
+       |  JOIN pos c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
+       |    AND c.term = 'phrase'
+       |  JOIN pos d ON d.doc_id = a.doc_id AND d.pos = a.pos + 3
+       |    AND d.term = 'marker'
+       |  WHERE a.term = 'zq0grafted'""".stripMargin
+
+  /** Positions of `src(id, text)` as `{p}tw`/`{p}pos`, the planted
+    * phrase's matches `{p}m(id, pos)` and per-doc counts `{p}occ(id, n)`
+    * (q334/q342: the phrase leg, replayed per corpus version). */
+  private def phraseLegCtes(p: String, src: String): String =
+    s"""${p}tw AS (SELECT id, string_split_regex(
+       |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
+       |  FROM $src),
+       |${p}pos AS (SELECT id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
+       |  FROM (SELECT id, w, unnest(generate_series(1, len(w))) AS i
+       |        FROM ${p}tw)
+       |  WHERE length(w[i]) > 0),
+       |${p}m AS (SELECT a.id, a.pos FROM ${p}pos a
+       |  JOIN ${p}pos b ON b.id = a.id AND b.pos = a.pos + 1
+       |    AND b.term = 'exact'
+       |  JOIN ${p}pos c ON c.id = a.id AND c.pos = a.pos + 2
+       |    AND c.term = 'phrase'
+       |  JOIN ${p}pos e ON e.id = a.id AND e.pos = a.pos + 3
+       |    AND e.term = 'marker'
+       |  WHERE a.term = 'zq0grafted'),
+       |${p}occ AS (SELECT id, CAST(count(*) AS BIGINT) AS n
+       |  FROM ${p}m GROUP BY 1)""".stripMargin
+
+  /** The q306 phrase plant plus 'zxsingular' on %9 docs, as CTE `pl`.
+    * Its lines start with `||`: append it with `+`; a second
+    * stripMargin would cut the concatenation to a bitwise `|`. */
+  private def zxPlantedCte: String =
+    """pl AS (SELECT doc_id, text
+      |    || CASE WHEN doc_id % 14 = 0
+      |      THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
+      |      WHEN doc_id % 7 = 0
+      |      THEN ' zq0grafted exact phrase marker' ELSE '' END
+      |    || CASE WHEN doc_id % 9 = 0 THEN ' zxsingular' ELSE '' END
+      |      AS text
+      |  FROM documents)""".stripMargin
+
+  /** q302's snippet windows for the hits `res(qid, id)` of `src`: the
+    * hit docs' positions, query-term hits per 20-token window and the
+    * densest window `best(qid, id, snip_start, n_hits)` (ties to the
+    * earliest start). */
+  private def snippetWindowCtes(src: String): String =
+    s"""${posCtes("tw", s"$src\n  WHERE doc_id IN (SELECT id FROM res)")},
+       |hp AS (SELECT r.qid, r.id, p.pos
+       |  FROM res r JOIN qt q ON q.qid = r.qid
+       |  JOIN pos p ON p.doc_id = r.id AND p.term = q.term),
+       |wh AS (SELECT qid, id, pos,
+       |    count(*) OVER (PARTITION BY qid, id ORDER BY pos
+       |      RANGE BETWEEN CURRENT ROW AND 19 FOLLOWING) AS n_hits
+       |  FROM hp),
+       |best AS (SELECT qid, id, pos AS snip_start, n_hits FROM (
+       |    SELECT qid, id, pos, n_hits, ROW_NUMBER() OVER (
+       |      PARTITION BY qid, id ORDER BY n_hits DESC, pos) AS rn
+       |    FROM wh) WHERE rn = 1)""".stripMargin
+
+  /** q246's oracle: the hybrid top-10 per query, one chunk per doc,
+    * packed in rank order into a 384-token context (shared by the
+    * streaming form, q263). */
+  private def ragContextOracle: String =
+    hybridChunkOracleChain +
+    """,
+      |cand2 AS (SELECT qid, nid, rank FROM rankedf WHERE rank <= 10),
+      |fpd AS (SELECT qid, nid, rank, row_number() OVER (
+      |    PARTITION BY qid, nid // 1048576 ORDER BY rank) AS dr FROM cand2),
+      |keep AS (SELECT qid, nid, rank FROM fpd WHERE dr = 1),
+      |ctok AS (SELECT chunk_key,
+      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ct FROM chunks),
+      |asm AS (SELECT k.qid, k.nid, k.rank, c.ct,
+      |    row_number() OVER (PARTITION BY k.qid ORDER BY k.rank) AS ctx_pos,
+      |    sum(c.ct) OVER (PARTITION BY k.qid ORDER BY k.rank
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM keep k JOIN ctok c ON c.chunk_key = k.nid)
+      |SELECT qid, CAST(ctx_pos AS BIGINT) AS ctx_pos, nid AS chunk_key,
+      |  CAST(nid // 1048576 AS BIGINT) AS doc_id, ct AS chunk_tokens,
+      |  CAST(cum AS BIGINT) AS cum_tokens
+      |FROM asm WHERE cum <= 384""".stripMargin
+
+  /** q306's CRUD survivors as CTE `surv` (epoch %3≠0 ∪ batch %3=0 at
+    * +50000, minus the %11=3 deletions) and the phrase plant over them
+    * as CTE `corpus`. */
+  private def crudSurvivorCtes: String =
+    """surv AS (
+      |  SELECT doc_id, text FROM (
+      |    SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0
+      |    UNION ALL
+      |    SELECT doc_id + 50000, text FROM documents WHERE doc_id % 3 = 0)
+      |  WHERE doc_id % 11 <> 3),
+      |corpus AS (
+      |  SELECT doc_id,
+      |    CASE WHEN doc_id % 14 = 0
+      |      THEN text || ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
+      |      WHEN doc_id % 7 = 0
+      |      THEN text || ' zq0grafted exact phrase marker'
+      |      ELSE text END AS text
+      |  FROM surv)""".stripMargin
+
   private def bm25ScoreCtes(src: String, idExpr: String, predSql: String,
       p: String = "", qtOverride: Option[String] = None): String =
     s"""${p}terms AS (
@@ -926,7 +1169,7 @@ object TextQueries {
     * them into shape), so one oracle proves streaming fold == batch
     * CRUD == net-set recompute. */
   private val q324NetPercolationSql: String =
-    """WITH corpus AS (
+    s"""WITH corpus AS (
       |  SELECT doc_id, text || CASE WHEN doc_id % 14 = 0
       |    THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
       |    WHEN doc_id % 7 = 0
@@ -934,19 +1177,9 @@ object TextQueries {
       |    || CASE WHEN doc_id % 20 = 0 THEN ' qnotone' ELSE '' END
       |    AS text
       |  FROM documents),
-      |tw AS (SELECT doc_id, string_split_regex(
-      |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-      |  FROM corpus),
-      |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-      |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-      |        FROM tw)
-      |  WHERE length(w[i]) > 0),
+      |${posCtes("tw", "corpus")},
       |dt AS (SELECT DISTINCT doc_id AS id, term FROM pos),
-      |qm AS (SELECT DISTINCT doc_id + 90000 AS qid, lower(tk) AS term
-      |  FROM (SELECT doc_id, unnest(string_split_regex(
-      |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:6]) AS tk
-      |    FROM documents WHERE doc_id < 20 AND doc_id % 2 = 1)
-      |  WHERE length(tk) > 0),
+      |qm AS (${prefixQueryTerms(90000, 6, "doc_id < 20 AND doc_id % 2 = 1")}),
       |qn AS (SELECT doc_id + 90000 AS qid, 'qnotone' AS term
       |  FROM documents
       |  WHERE doc_id < 20 AND doc_id % 3 = 0 AND doc_id % 2 = 1),
@@ -961,7 +1194,7 @@ object TextQueries {
       |      ON d2.id = h.id AND d2.term = n.term
       |      WHERE n.qid = h.qid)),
       |qtw AS (SELECT doc_id, string_split_regex(
-      |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
+      |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
       |  FROM documents WHERE doc_id < 25 AND doc_id % 2 = 0),
       |qx AS (SELECT doc_id + 96000 AS qid, CAST(i - 3 AS BIGINT) AS off,
       |    w[i] AS term
@@ -1635,29 +1868,11 @@ object TextQueries {
           .select(col("qid"), col("nid"), round(col("sim"), 4).as("sim"),
             col("rank"))
       },
-      Some("""WITH terms AS (
+      Some(s"""WITH terms AS (
              |  SELECT doc_id AS id,
-             |    unnest(string_split_regex(lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+')) AS term
+             |    unnest(string_split_regex(lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+')) AS term
              |  FROM documents),
-             |tf AS (SELECT id, term, COUNT(*) AS tf FROM terms
-             |       WHERE length(term) > 0 GROUP BY 1, 2),
-             |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-             |n AS (SELECT COUNT(*) AS n FROM documents),
-             |w AS (SELECT id, tf.term,
-             |        tf * (ln((n.n + 1.0) / (df + 1)) + 1) AS tfidf
-             |      FROM tf JOIN dfq USING (term) CROSS JOIN n
-             |      WHERE df <= 0.5 * n.n),
-             |norms AS (SELECT id, sqrt(SUM(tfidf * tfidf)) AS norm FROM w GROUP BY id),
-             |dots AS (
-             |  SELECT a.id AS idA, b.id AS idB, SUM(a.tfidf * b.tfidf) AS dot
-             |  FROM w a JOIN w b ON a.term = b.term AND a.id < b.id
-             |  GROUP BY 1, 2),
-             |sims AS (
-             |  SELECT idA, idB, dot / (na.norm * nb.norm) AS sim
-             |  FROM dots JOIN norms na ON na.id = idA JOIN norms nb ON nb.id = idB),
-             |sym AS (
-             |  SELECT idA AS qid, idB AS nid, sim FROM sims
-             |  UNION ALL SELECT idB, idA, sim FROM sims),
+             |${OracleFragments.tfidfCosineCtes("documents")},
              |ranked AS (
              |  SELECT qid, nid, sim,
              |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rank
@@ -1738,13 +1953,7 @@ object TextQueries {
           col("id") < 20, k = 10)
       },
       Some("WITH " + bm25ScoreCtes("documents", "doc_id", "id < 20") +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM sc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+        ",\n" + rankedTop10Tail("sc"))),
 
     // RM3 PSEUDO-RELEVANCE FEEDBACK (Bm25.rm3TopK) — the classic
     // recall lever on the lexical leg (Lavrenko & Croft 2001; the
@@ -1763,30 +1972,8 @@ object TextQueries {
           col("id") < 10, kFeedback = 5, mExpand = 10, k = 10)
       },
       Some("WITH " + bm25ScoreCtes("documents", "doc_id", "id < 10") +
-        """,
-          |fb AS (SELECT qid, id FROM (
-          |    SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS r FROM sc) WHERE r <= 5),
-          |rmw AS (SELECT f.qid, t.term,
-          |    CAST(sum((t.tf * 1000000) // d.dl) AS BIGINT) AS rm_w
-          |  FROM fb f JOIN tf t ON t.id = f.id JOIN dl d ON d.id = f.id
-          |  GROUP BY 1, 2),
-          |rmx AS (SELECT r.qid, r.term, r.rm_w FROM rmw r
-          |  WHERE NOT EXISTS (SELECT 1 FROM qt q
-          |    WHERE q.qid = r.qid AND q.term = r.term)),
-          |ex AS (SELECT qid, term, rm_w FROM (
-          |    SELECT qid, term, rm_w, ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY rm_w DESC, term) AS er FROM rmx) WHERE er <= 10),
-          |ws AS (SELECT qid, CAST(sum(rm_w) AS BIGINT) AS wsum
-          |  FROM ex GROUP BY 1),
-          |expw AS (SELECT e.qid, e.term, (e.rm_w * 500000) // w.wsum AS wt
-          |  FROM ex e JOIN ws w USING (qid)),
-          |nqc AS (SELECT qid, CAST(count(*) AS BIGINT) AS n
-          |  FROM qt GROUP BY 1),
-          |origw AS (SELECT q.qid, q.term, 500000 // n.n AS wt
-          |  FROM qt q JOIN nqc n USING (qid)),
-          |allw AS (SELECT qid, term, wt FROM origw
-          |  UNION ALL SELECT qid, term, wt FROM expw),
+        s""",
+          |$rm3WeightCtes,
           |sc2 AS (SELECT a.qid, c.id,
           |    CAST(sum(a.wt * c.c) AS BIGINT) AS score_micro
           |  FROM allw a JOIN contrib c USING (term)
@@ -1844,35 +2031,9 @@ object TextQueries {
       },
       Some("WITH " + bm25ScoreCtes("documents", "doc_id", "",
         qtOverride = Some(
-          """SELECT DISTINCT doc_id + 9000000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 5)
-            |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
-          |fb AS (SELECT qid, id FROM (
-          |    SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS r FROM sc) WHERE r <= 5),
-          |rmw AS (SELECT f.qid, t.term,
-          |    CAST(sum((t.tf * 1000000) // d.dl) AS BIGINT) AS rm_w
-          |  FROM fb f JOIN tf t ON t.id = f.id JOIN dl d ON d.id = f.id
-          |  GROUP BY 1, 2),
-          |rmx AS (SELECT r.qid, r.term, r.rm_w FROM rmw r
-          |  WHERE NOT EXISTS (SELECT 1 FROM qt q
-          |    WHERE q.qid = r.qid AND q.term = r.term)),
-          |ex AS (SELECT qid, term, rm_w FROM (
-          |    SELECT qid, term, rm_w, ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY rm_w DESC, term) AS er FROM rmx) WHERE er <= 10),
-          |ws AS (SELECT qid, CAST(sum(rm_w) AS BIGINT) AS wsum
-          |  FROM ex GROUP BY 1),
-          |expw AS (SELECT e.qid, e.term, (e.rm_w * 500000) // w.wsum AS wt
-          |  FROM ex e JOIN ws w USING (qid)),
-          |nqc AS (SELECT qid, CAST(count(*) AS BIGINT) AS n
-          |  FROM qt GROUP BY 1),
-          |origw AS (SELECT q.qid, q.term, 500000 // n.n AS wt
-          |  FROM qt q JOIN nqc n USING (qid)),
-          |allw AS (SELECT qid, term, wt FROM origw
-          |  UNION ALL SELECT qid, term, wt FROM expw),
+          prefixQueryTerms(9000000, 25, "doc_id < 5"))) +
+        s""",
+          |$rm3WeightCtes,
           |sc2 AS (SELECT a.qid, c.id,
           |    CAST(sum(a.wt * c.c) AS BIGINT) AS score_micro
           |  FROM allw a JOIN contrib c USING (term) GROUP BY 1, 2),
@@ -1923,7 +2084,7 @@ object TextQueries {
         graft.operators.Bm25.phraseMatches(planted, "doc_id", "text",
           Seq("grafted", "exact", "phrase", "marker"))
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id,
              |    CASE WHEN doc_id % 14 = 0
              |      THEN text || ' grafted exact phrase marker grafted exact phrase marker'
@@ -1931,13 +2092,7 @@ object TextQueries {
              |      THEN text || ' grafted exact phrase marker'
              |      ELSE text END AS text
              |  FROM documents),
-             |tw AS (SELECT doc_id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-             |  FROM corpus),
-             |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-             |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-             |        FROM tw)
-             |  WHERE length(w[i]) > 0),
+             |${posCtes("tw", "corpus")},
              |m AS (SELECT a.doc_id FROM pos a
              |  JOIN pos b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
              |    AND b.term = 'exact'
@@ -2028,34 +2183,12 @@ object TextQueries {
       },
       Some("WITH " + bm25ScoreCtes("documents", "doc_id", "",
         qtOverride = Some(
-          """SELECT DISTINCT doc_id + 9000000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:8]) AS tk
-            |    FROM documents WHERE doc_id < 3)
-            |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
+          prefixQueryTerms(9000000, 8, "doc_id < 3"))) +
+        s""",
           |res AS (SELECT qid, id FROM (
           |    SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid
           |      ORDER BY score_micro DESC, id) AS r FROM sc) WHERE r <= 3),
-          |tw AS (SELECT doc_id, string_split_regex(
-          |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-          |  FROM documents
-          |  WHERE doc_id IN (SELECT id FROM res)),
-          |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-          |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-          |        FROM tw)
-          |  WHERE length(w[i]) > 0),
-          |hp AS (SELECT r.qid, r.id, p.pos
-          |  FROM res r JOIN qt q ON q.qid = r.qid
-          |  JOIN pos p ON p.doc_id = r.id AND p.term = q.term),
-          |wh AS (SELECT qid, id, pos,
-          |    count(*) OVER (PARTITION BY qid, id ORDER BY pos
-          |      RANGE BETWEEN CURRENT ROW AND 19 FOLLOWING) AS n_hits
-          |  FROM hp),
-          |best AS (SELECT qid, id, pos AS snip_start, n_hits FROM (
-          |    SELECT qid, id, pos, n_hits, ROW_NUMBER() OVER (
-          |      PARTITION BY qid, id ORDER BY n_hits DESC, pos) AS rn
-          |    FROM wh) WHERE rn = 1)
+          |${snippetWindowCtes("documents")}
           |SELECT b.qid, b.id, b.snip_start, CAST(b.n_hits AS BIGINT) AS n_hits,
           |  array_to_string(t.w[CAST(b.snip_start + 1 AS INT)
           |    :CAST(b.snip_start + 20 AS INT)], ' ') AS snippet
@@ -2075,36 +2208,8 @@ object TextQueries {
         graft.operators.Bm25.proximityTopK(d, "doc_id", "text",
           col("id") < 5, k = 10)
       },
-      Some("WITH " + bm25ScoreCtes("documents", "doc_id", "id < 5") +
-        """,
-          |tw0 AS (SELECT doc_id, string_split_regex(
-          |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-          |  FROM documents),
-          |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-          |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-          |        FROM tw0)
-          |  WHERE length(w[i]) > 0),
-          |qp AS (SELECT q.qid, p.doc_id AS id, q.term, p.pos
-          |  FROM qt q JOIN pos p ON p.term = q.term
-          |  WHERE p.doc_id <> q.qid),
-          |md AS (SELECT a.qid, a.id, a.term AS t1, b.term AS t2,
-          |    min(abs(a.pos - b.pos)) AS mdv
-          |  FROM qp a JOIN qp b ON b.qid = a.qid AND b.id = a.id
-          |    AND a.term < b.term
-          |  GROUP BY 1, 2, 3, 4),
-          |px AS (SELECT qid, id,
-          |    CAST(sum(1000000 // (1 + mdv)) AS BIGINT) AS prox
-          |  FROM md GROUP BY 1, 2),
-          |totx AS (SELECT s.qid, s.id,
-          |    s.score_micro + coalesce(p.prox, 0) AS total,
-          |    coalesce(p.prox, 0) AS prox
-          |  FROM sc s LEFT JOIN px p ON p.qid = s.qid AND p.id = s.id)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id,
-          |  CAST(total AS BIGINT) AS score_micro,
-          |  CAST(prox AS BIGINT) AS prox_micro
-          |FROM (SELECT qid, id, total, prox, ROW_NUMBER() OVER (
-          |    PARTITION BY qid ORDER BY total DESC, id) AS rank FROM totx)
-          |WHERE rank <= 10""".stripMargin)),
+      Some("WITH " + bm25ScoreCtes("documents", "doc_id", "id < 5") + ",\n" +
+        proximityRankTail("documents"))),
 
     // FUZZY RETRIEVAL (Bm25.fuzzyTopK) — SymSpell delete-1 candidate
     // matching: a typo'd query term reaches every vocabulary term
@@ -2203,42 +2308,14 @@ object TextQueries {
         graft.operators.Bm25.didYouMean(planted, "doc_id", "text",
           queries, "qid", "qtext", k = 3)
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text
              |    || CASE WHEN doc_id % 9 = 0 THEN ' zxcorrectterm' ELSE '' END
              |    || CASE WHEN doc_id % 6 = 0 THEN ' zxcorrectterms' ELSE '' END
              |    AS text
              |  FROM documents),
-             |terms AS (SELECT doc_id AS id, unnest(string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+')) AS term
-             |  FROM corpus),
-             |tfq AS (SELECT id, term FROM terms WHERE length(term) > 0
-             |  GROUP BY 1, 2),
-             |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-             |  FROM tfq GROUP BY 1),
-             |fv AS (SELECT term, df, unnest(list_distinct(list_concat([term],
-             |    list_transform(generate_series(0, length(term) - 1),
-             |      i -> substr(term, 1, i) || substr(term, i + 2))))) AS v
-             |  FROM dfq),
-             |fq AS (SELECT qid, qt, unnest(list_distinct(list_concat([qt],
-             |    list_transform(generate_series(0, length(qt) - 1),
-             |      i -> substr(qt, 1, i) || substr(qt, i + 2))))) AS v
-             |  FROM (VALUES (9000001, 'zxcorrecttermz'),
-             |    (9000002, 'zxcorrectterm'), (9000003, 'qqqqzz')) q(qid, qt)),
-             |cand AS (SELECT DISTINCT fq.qid, fq.qt, fv.term, fv.df
-             |  FROM fv JOIN fq ON fq.v = fv.v
-             |  WHERE abs(length(fv.term) - length(fq.qt)) <= 1
-             |    AND fv.term <> fq.qt),
-             |cmm AS (SELECT qid, qt, term, df,
-             |    list_filter(generate_series(1, length(term)),
-             |      p -> substr(term, p, 1) <> substr(qt, p, 1)) AS mm
-             |  FROM cand),
-             |fm AS (SELECT qid, qt, term, df FROM cmm
-             |  WHERE length(term) <> length(qt)
-             |     OR len(mm) <= 1
-             |     OR (len(mm) = 2 AND mm[2] = mm[1] + 1
-             |         AND substr(term, mm[1], 1) = substr(qt, mm[2], 1)
-             |         AND substr(term, mm[2], 1) = substr(qt, mm[1], 1)))
+             |${termDfCtes("corpus")},
+             |${fuzzyMatchCtes("(9000001, 'zxcorrecttermz'),\n    (9000002, 'zxcorrectterm'), (9000003, 'qqqqzz')")}
              |SELECT qid, qt AS term, CAST(rank AS BIGINT) AS rank,
              |  sterm AS suggestion, df
              |FROM (SELECT qid, qt, term AS sterm, df, ROW_NUMBER() OVER (
@@ -2291,35 +2368,9 @@ object TextQueries {
         ph.join(sn.select(col("id"), col("snip_start"), col("n_hits"),
             col("snippet")), Seq("id"))
       },
-      Some("""WITH surv AS (
-             |  SELECT doc_id, text FROM (
-             |    SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0
-             |    UNION ALL
-             |    SELECT doc_id + 50000, text FROM documents WHERE doc_id % 3 = 0)
-             |  WHERE doc_id % 11 <> 3),
-             |corpus AS (
-             |  SELECT doc_id,
-             |    CASE WHEN doc_id % 14 = 0
-             |      THEN text || ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
-             |      WHEN doc_id % 7 = 0
-             |      THEN text || ' zq0grafted exact phrase marker'
-             |      ELSE text END AS text
-             |  FROM surv),
-             |tw AS (SELECT doc_id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-             |  FROM corpus),
-             |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-             |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-             |        FROM tw)
-             |  WHERE length(w[i]) > 0),
-             |m AS (SELECT a.doc_id, a.pos FROM pos a
-             |  JOIN pos b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-             |    AND b.term = 'exact'
-             |  JOIN pos c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-             |    AND c.term = 'phrase'
-             |  JOIN pos d ON d.doc_id = a.doc_id AND d.pos = a.pos + 3
-             |    AND d.term = 'marker'
-             |  WHERE a.term = 'zq0grafted'),
+      Some(s"""WITH $crudSurvivorCtes,
+             |${posCtes("tw", "corpus")},
+             |${markerPhraseCte("a.doc_id, a.pos")}),
              |occ AS (SELECT doc_id AS id, CAST(count(*) AS BIGINT) AS n_occurrences
              |  FROM m GROUP BY doc_id),
              |hp AS (SELECT p.doc_id AS id, p.pos
@@ -2390,7 +2441,7 @@ object TextQueries {
           .toDF("qid", "qtext")
         bm.didYouMeanFrom(vi2, df2, queries, "qid", "qtext", k = 3)
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text
              |    || CASE WHEN doc_id % 6 = 0 THEN ' zxsingulars' ELSE '' END
              |    AS text
@@ -2400,36 +2451,8 @@ object TextQueries {
              |    CASE WHEN (doc_id + 50000) % 4 = 0
              |      THEN text || ' zxbrandnew' ELSE text END AS text
              |  FROM documents WHERE doc_id % 3 = 0),
-             |terms AS (SELECT doc_id AS id, unnest(string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+')) AS term
-             |  FROM corpus),
-             |tfq AS (SELECT id, term FROM terms WHERE length(term) > 0
-             |  GROUP BY 1, 2),
-             |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-             |  FROM tfq GROUP BY 1),
-             |fv AS (SELECT term, df, unnest(list_distinct(list_concat([term],
-             |    list_transform(generate_series(0, length(term) - 1),
-             |      i -> substr(term, 1, i) || substr(term, i + 2))))) AS v
-             |  FROM dfq),
-             |fq AS (SELECT qid, qt, unnest(list_distinct(list_concat([qt],
-             |    list_transform(generate_series(0, length(qt) - 1),
-             |      i -> substr(qt, 1, i) || substr(qt, i + 2))))) AS v
-             |  FROM (VALUES (9000001, 'zxsingularz'),
-             |    (9000002, 'zxbrandnews'), (9000003, 'qqqqzz')) q(qid, qt)),
-             |cand AS (SELECT DISTINCT fq.qid, fq.qt, fv.term, fv.df
-             |  FROM fv JOIN fq ON fq.v = fv.v
-             |  WHERE abs(length(fv.term) - length(fq.qt)) <= 1
-             |    AND fv.term <> fq.qt),
-             |cmm AS (SELECT qid, qt, term, df,
-             |    list_filter(generate_series(1, length(term)),
-             |      p -> substr(term, p, 1) <> substr(qt, p, 1)) AS mm
-             |  FROM cand),
-             |fm AS (SELECT qid, qt, term, df FROM cmm
-             |  WHERE length(term) <> length(qt)
-             |     OR len(mm) <= 1
-             |     OR (len(mm) = 2 AND mm[2] = mm[1] + 1
-             |         AND substr(term, mm[1], 1) = substr(qt, mm[2], 1)
-             |         AND substr(term, mm[2], 1) = substr(qt, mm[1], 1)))
+             |${termDfCtes("corpus")},
+             |${fuzzyMatchCtes("(9000001, 'zxsingularz'),\n    (9000002, 'zxbrandnews'), (9000003, 'qqqqzz')")}
              |SELECT qid, qt AS term, CAST(rank AS BIGINT) AS rank,
              |  sterm AS suggestion, df
              |FROM (SELECT qid, qt, term AS sterm, df, ROW_NUMBER() OVER (
@@ -2472,7 +2495,7 @@ object TextQueries {
           s"q310_${math.abs(dir.hashCode)}",
           shufflePartitions = Some(8))
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text
              |    || CASE WHEN doc_id % 14 = 0
              |      THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
@@ -2481,21 +2504,8 @@ object TextQueries {
              |    || CASE WHEN doc_id % 5 = 0 THEN ' qmustone qmusttwo' ELSE '' END
              |    || CASE WHEN doc_id % 20 = 0 THEN ' qnotone' ELSE '' END AS text
              |  FROM documents),
-             |tw AS (SELECT doc_id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-             |  FROM corpus),
-             |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-             |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-             |        FROM tw)
-             |  WHERE length(w[i]) > 0),
-             |m AS (SELECT a.doc_id, CAST(count(*) AS BIGINT) AS occ FROM pos a
-             |  JOIN pos b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-             |    AND b.term = 'exact'
-             |  JOIN pos c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-             |    AND c.term = 'phrase'
-             |  JOIN pos d ON d.doc_id = a.doc_id AND d.pos = a.pos + 3
-             |    AND d.term = 'marker'
-             |  WHERE a.term = 'zq0grafted' GROUP BY 1),
+             |${posCtes("tw", "corpus")},
+             |${markerPhraseCte("a.doc_id, CAST(count(*) AS BIGINT) AS occ")} GROUP BY 1),
              |mem AS (SELECT doc_id,
              |    max(CASE WHEN term = 'qmustone' THEN 1 ELSE 0 END)
              |      + max(CASE WHEN term = 'qmusttwo' THEN 1 ELSE 0 END) AS nm,
@@ -2536,18 +2546,8 @@ object TextQueries {
       },
       Some("WITH " + bm25ScoreCtes("documents", "doc_id", "",
         qtOverride = Some(
-          """SELECT DISTINCT doc_id + 80000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 10)
-            |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM sc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+          prefixQueryTerms(80000, 25, "doc_id < 10"))) +
+        ",\n" + rankedTop10Tail("sc"))),
 
     // PREFIX AUTOCOMPLETE (Bm25.autocomplete) — the third serve
     // artifact off the maintained df table (ranked suggestions beside
@@ -2570,19 +2570,13 @@ object TextQueries {
         graft.operators.Bm25.autocomplete(s.df,
           Seq("th", "zxsing", "qqqq").toDF("prefix"), k = 5)
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text
              |    || CASE WHEN doc_id % 9 = 0 THEN ' zxsingular' ELSE '' END
              |    || CASE WHEN doc_id % 6 = 0 THEN ' zxsingulars' ELSE '' END
              |    AS text
              |  FROM documents),
-             |terms AS (SELECT doc_id AS id, unnest(string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+')) AS term
-             |  FROM corpus),
-             |tfq AS (SELECT id, term FROM terms WHERE length(term) > 0
-             |  GROUP BY 1, 2),
-             |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-             |  FROM tfq GROUP BY 1),
+             |${termDfCtes("corpus")},
              |px AS (SELECT unnest(['th', 'zxsing', 'qqqq']) AS prefix),
              |hits AS (SELECT p.prefix, d.term, d.df,
              |    ROW_NUMBER() OVER (PARTITION BY p.prefix
@@ -2688,21 +2682,11 @@ object TextQueries {
           |  FROM documents WHERE doc_id % 3 = 0),
           |""".stripMargin +
         bm25ScoreCtes("net", "id", "", qtOverride = Some(
-          """SELECT DISTINCT doc_id + 80000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 10)
-            |  WHERE length(tk) > 0
+          prefixQueryTerms(80000, 25, "doc_id < 10") + """
             |UNION
             |SELECT 80100 AS qid, unnest(
             |  ['revision', 'graftcdc', 'novel']) AS term""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM sc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+        ",\n" + rankedTop10Tail("sc"))),
 
     // PERCOLATOR (Bm25.registerStandingQueries / percolate — q310's
     // fixed alert at PRODUCTION scale): thousands of boolean alerts
@@ -2740,34 +2724,7 @@ object TextQueries {
           queries, "qid", "must_text", "not_text")
         graft.operators.Bm25.percolate(idx, planted, "doc_id", "text")
       },
-      Some("""WITH corpus AS (
-             |  SELECT doc_id, CASE WHEN doc_id % 20 = 0
-             |    THEN text || ' qnotone' ELSE text END AS text
-             |  FROM documents),
-             |qm AS (SELECT DISTINCT doc_id + 90000 AS qid, lower(tk) AS term
-             |  FROM (SELECT doc_id, unnest(string_split_regex(
-             |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:6]) AS tk
-             |    FROM documents WHERE doc_id < 15)
-             |  WHERE length(tk) > 0
-             |  UNION SELECT qid, term FROM (VALUES (90100, 'the'),
-             |    (90100, 'qnotone')) t(qid, term)),
-             |qn AS (SELECT doc_id + 90000 AS qid, 'qnotone' AS term
-             |  FROM documents WHERE doc_id < 15 AND doc_id % 3 = 0
-             |  UNION ALL SELECT 90100, 'qnotone'),
-             |nm AS (SELECT qid, CAST(count(*) AS BIGINT) AS n FROM qm
-             |  GROUP BY 1),
-             |dt AS (SELECT DISTINCT doc_id AS id, lower(tk) AS term
-             |  FROM (SELECT doc_id, unnest(string_split_regex(
-             |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS tk
-             |    FROM corpus)
-             |  WHERE length(tk) > 0),
-             |hits AS (SELECT d.id, m.qid, CAST(count(*) AS BIGINT) AS c
-             |  FROM dt d JOIN qm m USING (term) GROUP BY 1, 2)
-             |SELECT h.id, h.qid FROM hits h JOIN nm ON nm.qid = h.qid
-             |WHERE h.c = nm.n
-             |  AND NOT EXISTS (SELECT 1 FROM qn n JOIN dt d2
-             |    ON d2.id = h.id AND d2.term = n.term
-             |    WHERE n.qid = h.qid)""".stripMargin)),
+      Some(percolatorOracle)),
 
     // STREAMING PERCOLATION (Bm25.percolate per micro-batch — q315's
     // streaming member, re-shaped per the r17 verdict): percolation of
@@ -2833,34 +2790,7 @@ object TextQueries {
         } finally spark.conf.set("spark.sql.shuffle.partitions", prevSp)
         spark.read.parquet(s"$root/matches")
       },
-      Some("""WITH corpus AS (
-             |  SELECT doc_id, CASE WHEN doc_id % 20 = 0
-             |    THEN text || ' qnotone' ELSE text END AS text
-             |  FROM documents),
-             |qm AS (SELECT DISTINCT doc_id + 90000 AS qid, lower(tk) AS term
-             |  FROM (SELECT doc_id, unnest(string_split_regex(
-             |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:6]) AS tk
-             |    FROM documents WHERE doc_id < 15)
-             |  WHERE length(tk) > 0
-             |  UNION SELECT qid, term FROM (VALUES (90100, 'the'),
-             |    (90100, 'qnotone')) t(qid, term)),
-             |qn AS (SELECT doc_id + 90000 AS qid, 'qnotone' AS term
-             |  FROM documents WHERE doc_id < 15 AND doc_id % 3 = 0
-             |  UNION ALL SELECT 90100, 'qnotone'),
-             |nm AS (SELECT qid, CAST(count(*) AS BIGINT) AS n FROM qm
-             |  GROUP BY 1),
-             |dt AS (SELECT DISTINCT doc_id AS id, lower(tk) AS term
-             |  FROM (SELECT doc_id, unnest(string_split_regex(
-             |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS tk
-             |    FROM corpus)
-             |  WHERE length(tk) > 0),
-             |hits AS (SELECT d.id, m.qid, CAST(count(*) AS BIGINT) AS c
-             |  FROM dt d JOIN qm m USING (term) GROUP BY 1, 2)
-             |SELECT h.id, h.qid FROM hits h JOIN nm ON nm.qid = h.qid
-             |WHERE h.c = nm.n
-             |  AND NOT EXISTS (SELECT 1 FROM qn n JOIN dt d2
-             |    ON d2.id = h.id AND d2.term = n.term
-             |    WHERE n.qid = h.qid)""".stripMargin)),
+      Some(percolatorOracle)),
 
     // INDEX DATA CARD (Bm25.indexCard — the q290 card discipline
     // applied to the index itself): the one-row operational report
@@ -2980,7 +2910,7 @@ object TextQueries {
           .unionByName(dym.select(lit("fuzzy").as("leg"), col("qid"),
             col("rank"), col("suggestion").as("key"), col("df").as("val")))
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text
              |    || CASE WHEN doc_id % 14 = 0
              |      THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
@@ -2989,49 +2919,14 @@ object TextQueries {
              |    || CASE WHEN doc_id % 9 = 0 THEN ' zxsingular' ELSE '' END
              |    AS text
              |  FROM documents),
-             |tw AS (SELECT doc_id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-             |  FROM corpus),
-             |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-             |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-             |        FROM tw)
-             |  WHERE length(w[i]) > 0),
-             |m AS (SELECT a.doc_id, a.pos FROM pos a
-             |  JOIN pos b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-             |    AND b.term = 'exact'
-             |  JOIN pos c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-             |    AND c.term = 'phrase'
-             |  JOIN pos d ON d.doc_id = a.doc_id AND d.pos = a.pos + 3
-             |    AND d.term = 'marker'
-             |  WHERE a.term = 'zq0grafted'),
+             |${posCtes("tw", "corpus")},
+             |${markerPhraseCte("a.doc_id, a.pos")}),
              |occ AS (SELECT doc_id AS id, CAST(count(*) AS BIGINT) AS n
              |  FROM m GROUP BY 1),
              |tfq AS (SELECT doc_id AS id, term FROM pos GROUP BY 1, 2),
              |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
              |  FROM tfq GROUP BY 1),
-             |fv AS (SELECT term, df, unnest(list_distinct(list_concat([term],
-             |    list_transform(generate_series(0, length(term) - 1),
-             |      i -> substr(term, 1, i) || substr(term, i + 2))))) AS v
-             |  FROM dfq),
-             |fq AS (SELECT qid, qt, unnest(list_distinct(list_concat([qt],
-             |    list_transform(generate_series(0, length(qt) - 1),
-             |      i -> substr(qt, 1, i) || substr(qt, i + 2))))) AS v
-             |  FROM (VALUES (9000001, 'zxsingularz'),
-             |    (9000002, 'qqqqzz')) q(qid, qt)),
-             |cand AS (SELECT DISTINCT fq.qid, fq.qt, fv.term, fv.df
-             |  FROM fv JOIN fq ON fq.v = fv.v
-             |  WHERE abs(length(fv.term) - length(fq.qt)) <= 1
-             |    AND fv.term <> fq.qt),
-             |cmm AS (SELECT qid, qt, term, df,
-             |    list_filter(generate_series(1, length(term)),
-             |      p -> substr(term, p, 1) <> substr(qt, p, 1)) AS mm
-             |  FROM cand),
-             |fm AS (SELECT qid, qt, term, df FROM cmm
-             |  WHERE length(term) <> length(qt)
-             |     OR len(mm) <= 1
-             |     OR (len(mm) = 2 AND mm[2] = mm[1] + 1
-             |         AND substr(term, mm[1], 1) = substr(qt, mm[2], 1)
-             |         AND substr(term, mm[2], 1) = substr(qt, mm[1], 1))),
+             |${fuzzyMatchCtes("(9000001, 'zxsingularz'),\n    (9000002, 'qqqqzz')")},
              |rk AS (SELECT qid, term AS sug, df, ROW_NUMBER() OVER (
              |    PARTITION BY qid ORDER BY df DESC, term) AS rank
              |  FROM fm)
@@ -3121,7 +3016,7 @@ object TextQueries {
             |  (8000001, 'zq0grafted'), (8000001, 'marker'),
             |  (8000002, 'zxsingular'), (8000002, 'the')) t(qid, term)"""
             .stripMargin)) +
-        """,
+        s""",
           |brk AS (SELECT qid, id, score_micro, ROW_NUMBER() OVER (
           |    PARTITION BY qid ORDER BY score_micro DESC, id) AS rank
           |  FROM sc),
@@ -3140,25 +3035,7 @@ object TextQueries {
           |    ROW_NUMBER() OVER (ORDER BY s3.score_micro DESC, s3.id) AS rank
           |  FROM bsc s3 LEFT JOIN bns n ON n.id = s3.id),
           |res AS (SELECT qid, id FROM brk WHERE rank <= 5),
-          |tw AS (SELECT doc_id, string_split_regex(
-          |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-          |  FROM corpus
-          |  WHERE doc_id IN (SELECT id FROM res)),
-          |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-          |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-          |        FROM tw)
-          |  WHERE length(w[i]) > 0),
-          |hp AS (SELECT r.qid, r.id, p.pos
-          |  FROM res r JOIN qt q ON q.qid = r.qid
-          |  JOIN pos p ON p.doc_id = r.id AND p.term = q.term),
-          |wh AS (SELECT qid, id, pos,
-          |    count(*) OVER (PARTITION BY qid, id ORDER BY pos
-          |      RANGE BETWEEN CURRENT ROW AND 19 FOLLOWING) AS n_hits
-          |  FROM hp),
-          |best AS (SELECT qid, id, pos AS snip_start, n_hits FROM (
-          |    SELECT qid, id, pos, n_hits, ROW_NUMBER() OVER (
-          |      PARTITION BY qid, id ORDER BY n_hits DESC, pos) AS rn
-          |    FROM wh) WHERE rn = 1),
+          |${snippetWindowCtes("corpus")},
           |snp AS (SELECT b.qid, b.id, b.snip_start,
           |    CAST(b.n_hits AS BIGINT) AS n_hits,
           |    array_to_string(t.w[CAST(b.snip_start + 1 AS INT)
@@ -3220,36 +3097,8 @@ object TextQueries {
           |    AS text
           |  FROM documents),
           |""".stripMargin +
-        bm25ScoreCtes("corpus", "doc_id", "id < 5") +
-        """,
-          |tw0 AS (SELECT doc_id, string_split_regex(
-          |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-          |  FROM corpus),
-          |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-          |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-          |        FROM tw0)
-          |  WHERE length(w[i]) > 0),
-          |qp AS (SELECT q.qid, p.doc_id AS id, q.term, p.pos
-          |  FROM qt q JOIN pos p ON p.term = q.term
-          |  WHERE p.doc_id <> q.qid),
-          |md AS (SELECT a.qid, a.id, a.term AS t1, b.term AS t2,
-          |    min(abs(a.pos - b.pos)) AS mdv
-          |  FROM qp a JOIN qp b ON b.qid = a.qid AND b.id = a.id
-          |    AND a.term < b.term
-          |  GROUP BY 1, 2, 3, 4),
-          |px AS (SELECT qid, id,
-          |    CAST(sum(1000000 // (1 + mdv)) AS BIGINT) AS prox
-          |  FROM md GROUP BY 1, 2),
-          |totx AS (SELECT s.qid, s.id,
-          |    s.score_micro + coalesce(p.prox, 0) AS total,
-          |    coalesce(p.prox, 0) AS prox
-          |  FROM sc s LEFT JOIN px p ON p.qid = s.qid AND p.id = s.id)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id,
-          |  CAST(total AS BIGINT) AS score_micro,
-          |  CAST(prox AS BIGINT) AS prox_micro
-          |FROM (SELECT qid, id, total, prox, ROW_NUMBER() OVER (
-          |    PARTITION BY qid ORDER BY total DESC, id) AS rank FROM totx)
-          |WHERE rank <= 10""".stripMargin)),
+        bm25ScoreCtes("corpus", "doc_id", "id < 5") + ",\n" +
+        proximityRankTail("corpus"))),
 
     // AUTOCOMPLETE FROM MAINTAINED STATS (q312's serve-from-maintained
     // form): completions read the df table a CRUD cycle maintains —
@@ -3284,7 +3133,7 @@ object TextQueries {
         bm.autocomplete(s2.df,
           Seq("th", "zxsing", "zxbrand", "qqqq").toDF("prefix"), k = 5)
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text
              |    || CASE WHEN doc_id % 6 = 0 THEN ' zxsingulars' ELSE '' END
              |    AS text
@@ -3294,13 +3143,7 @@ object TextQueries {
              |    CASE WHEN (doc_id + 50000) % 4 = 0
              |      THEN text || ' zxbrandnew' ELSE text END AS text
              |  FROM documents WHERE doc_id % 3 = 0),
-             |terms AS (SELECT doc_id AS id, unnest(string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+')) AS term
-             |  FROM corpus),
-             |tfq AS (SELECT id, term FROM terms WHERE length(term) > 0
-             |  GROUP BY 1, 2),
-             |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-             |  FROM tfq GROUP BY 1),
+             |${termDfCtes("corpus")},
              |px AS (SELECT unnest(['th', 'zxsing', 'zxbrand', 'qqqq']) AS prefix),
              |hits AS (SELECT p.prefix, d.term, d.df,
              |    ROW_NUMBER() OVER (PARTITION BY p.prefix
@@ -3349,52 +3192,9 @@ object TextQueries {
             deleted, "doc_id").persist())
         bm.proximityTopKFrom(s, p, col("id") < 5, k = 10)
       },
-      Some("WITH " +
-        """surv AS (
-          |  SELECT doc_id, text FROM (
-          |    SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0
-          |    UNION ALL
-          |    SELECT doc_id + 50000, text FROM documents WHERE doc_id % 3 = 0)
-          |  WHERE doc_id % 11 <> 3),
-          |corpus AS (
-          |  SELECT doc_id,
-          |    CASE WHEN doc_id % 14 = 0
-          |      THEN text || ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
-          |      WHEN doc_id % 7 = 0
-          |      THEN text || ' zq0grafted exact phrase marker'
-          |      ELSE text END AS text
-          |  FROM surv),
-          |""".stripMargin +
-        bm25ScoreCtes("corpus", "doc_id", "id < 5") +
-        """,
-          |tw0 AS (SELECT doc_id, string_split_regex(
-          |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-          |  FROM corpus),
-          |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-          |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-          |        FROM tw0)
-          |  WHERE length(w[i]) > 0),
-          |qp AS (SELECT q.qid, p.doc_id AS id, q.term, p.pos
-          |  FROM qt q JOIN pos p ON p.term = q.term
-          |  WHERE p.doc_id <> q.qid),
-          |md AS (SELECT a.qid, a.id, a.term AS t1, b.term AS t2,
-          |    min(abs(a.pos - b.pos)) AS mdv
-          |  FROM qp a JOIN qp b ON b.qid = a.qid AND b.id = a.id
-          |    AND a.term < b.term
-          |  GROUP BY 1, 2, 3, 4),
-          |px AS (SELECT qid, id,
-          |    CAST(sum(1000000 // (1 + mdv)) AS BIGINT) AS prox
-          |  FROM md GROUP BY 1, 2),
-          |totx AS (SELECT s.qid, s.id,
-          |    s.score_micro + coalesce(p.prox, 0) AS total,
-          |    coalesce(p.prox, 0) AS prox
-          |  FROM sc s LEFT JOIN px p ON p.qid = s.qid AND p.id = s.id)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id,
-          |  CAST(total AS BIGINT) AS score_micro,
-          |  CAST(prox AS BIGINT) AS prox_micro
-          |FROM (SELECT qid, id, total, prox, ROW_NUMBER() OVER (
-          |    PARTITION BY qid ORDER BY total DESC, id) AS rank FROM totx)
-          |WHERE rank <= 10""".stripMargin)),
+      Some("WITH " + crudSurvivorCtes + ",\n" +
+        bm25ScoreCtes("corpus", "doc_id", "id < 5") + ",\n" +
+        proximityRankTail("corpus"))),
 
     // PHRASE PERCOLATOR (Bm25.registerStandingPhrases /
     // percolatePhrases — r17 missing #3): standing PHRASE alerts at
@@ -3470,7 +3270,7 @@ object TextQueries {
         } finally spark.conf.set("spark.sql.shuffle.partitions", prevSp)
         spark.read.parquet(s"$root/matches")
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text || CASE WHEN doc_id % 14 = 0
              |    THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
              |    WHEN doc_id % 7 = 0
@@ -3479,15 +3279,9 @@ object TextQueries {
              |    THEN ' zxph' || CAST(doc_id % 200 AS VARCHAR) || ' sig marker'
              |    ELSE '' END AS text
              |  FROM documents),
-             |tw AS (SELECT doc_id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
-             |  FROM corpus),
-             |pos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-             |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
-             |        FROM tw)
-             |  WHERE length(w[i]) > 0),
+             |${posCtes("tw", "corpus")},
              |qtw AS (SELECT doc_id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
+             |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
              |  FROM documents WHERE doc_id < 25),
              |qx AS (SELECT doc_id + 90000 AS qid, CAST(i - 3 AS BIGINT) AS off,
              |    w[i] AS term
@@ -3608,7 +3402,7 @@ object TextQueries {
           .unionByName(dym.select(lit("fuzzy").as("leg"), col("qid"),
             col("rank"), col("suggestion").as("key"), col("df").as("val")))
       },
-      Some("""WITH net AS (
+      Some(s"""WITH net AS (
              |  SELECT doc_id AS id, text
              |    || CASE WHEN doc_id % 3 = 1
              |      THEN ' zq0grafted exact phrase marker' ELSE '' END AS text
@@ -3629,7 +3423,7 @@ object TextQueries {
              |      THEN ' zq0grafted exact phrase marker' ELSE '' END
              |  FROM documents WHERE doc_id % 3 = 0),
              |tw AS (SELECT id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
+             |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
              |  FROM net),
              |pos AS (SELECT id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
              |  FROM (SELECT id, w, unnest(generate_series(1, len(w))) AS i
@@ -3648,29 +3442,7 @@ object TextQueries {
              |tfq AS (SELECT id, term FROM pos GROUP BY 1, 2),
              |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
              |  FROM tfq GROUP BY 1),
-             |fv AS (SELECT term, df, unnest(list_distinct(list_concat([term],
-             |    list_transform(generate_series(0, length(term) - 1),
-             |      i -> substr(term, 1, i) || substr(term, i + 2))))) AS v
-             |  FROM dfq),
-             |fq AS (SELECT qid, qt, unnest(list_distinct(list_concat([qt],
-             |    list_transform(generate_series(0, length(qt) - 1),
-             |      i -> substr(qt, 1, i) || substr(qt, i + 2))))) AS v
-             |  FROM (VALUES (9000001, 'graftcdcs'),
-             |    (9000002, 'zxdyingz'), (9000003, 'qqqqzz')) q(qid, qt)),
-             |cand AS (SELECT DISTINCT fq.qid, fq.qt, fv.term, fv.df
-             |  FROM fv JOIN fq ON fq.v = fv.v
-             |  WHERE abs(length(fv.term) - length(fq.qt)) <= 1
-             |    AND fv.term <> fq.qt),
-             |cmm AS (SELECT qid, qt, term, df,
-             |    list_filter(generate_series(1, length(term)),
-             |      p -> substr(term, p, 1) <> substr(qt, p, 1)) AS mm
-             |  FROM cand),
-             |fm AS (SELECT qid, qt, term, df FROM cmm
-             |  WHERE length(term) <> length(qt)
-             |     OR len(mm) <= 1
-             |     OR (len(mm) = 2 AND mm[2] = mm[1] + 1
-             |         AND substr(term, mm[1], 1) = substr(qt, mm[2], 1)
-             |         AND substr(term, mm[2], 1) = substr(qt, mm[1], 1))),
+             |${fuzzyMatchCtes("(9000001, 'graftcdcs'),\n    (9000002, 'zxdyingz'), (9000003, 'qqqqzz')")},
              |rk AS (SELECT qid, term AS sug, df, ROW_NUMBER() OVER (
              |    PARTITION BY qid ORDER BY df DESC, term) AS rank
              |  FROM fm)
@@ -3931,33 +3703,7 @@ object TextQueries {
             |  (9000001, 'zq0grafted'), (9000001, 'marker'),
             |  (9000002, 'zxsingular'), (9000002, 'ttrevision'))
             |  t(qid, term)""".stripMargin
-        def phraseLeg(p: String, src: String): String =
-          s"""${p}tw AS (SELECT id, string_split_regex(
-             |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
-             |  FROM $src),
-             |${p}pos AS (SELECT id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-             |  FROM (SELECT id, w, unnest(generate_series(1, len(w))) AS i
-             |        FROM ${p}tw)
-             |  WHERE length(w[i]) > 0),
-             |${p}m AS (SELECT a.id, a.pos FROM ${p}pos a
-             |  JOIN ${p}pos b ON b.id = a.id AND b.pos = a.pos + 1
-             |    AND b.term = 'exact'
-             |  JOIN ${p}pos c ON c.id = a.id AND c.pos = a.pos + 2
-             |    AND c.term = 'phrase'
-             |  JOIN ${p}pos e ON e.id = a.id AND e.pos = a.pos + 3
-             |    AND e.term = 'marker'
-             |  WHERE a.term = 'zq0grafted'),
-             |${p}occ AS (SELECT id, CAST(count(*) AS BIGINT) AS n
-             |  FROM ${p}m GROUP BY 1)""".stripMargin
-        "WITH " +
-          s"""pl AS (SELECT doc_id, text
-             |    || CASE WHEN doc_id % 14 = 0
-             |      THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
-             |      WHEN doc_id % 7 = 0
-             |      THEN ' zq0grafted exact phrase marker' ELSE '' END
-             |    || CASE WHEN doc_id % 9 = 0 THEN ' zxsingular' ELSE '' END
-             |      AS text
-             |  FROM documents),
+        "WITH " + zxPlantedCte + s""",
              |c1 AS (
              |  SELECT doc_id AS id, text || CASE WHEN doc_id % 5 = 3
              |      THEN ' ttrevision one' ELSE '' END AS text
@@ -3979,7 +3725,7 @@ object TextQueries {
             qtOverride = Some(qtVals)) + ",\n" +
           bm25ScoreCtes("c2", "id", "", p = "v2",
             qtOverride = Some(qtVals)) + ",\n" +
-          phraseLeg("w1", "c1") + ",\n" + phraseLeg("w2", "c2") +
+          phraseLegCtes("w1", "c1") + ",\n" + phraseLegCtes("w2", "c2") +
           s""",
              |r1 AS (SELECT qid, id, score_micro, ROW_NUMBER() OVER (
              |    PARTITION BY qid ORDER BY score_micro DESC, id) AS rank
@@ -4100,14 +3846,7 @@ object TextQueries {
               col("n_physical_versions"))
         card(layPre, 2, "pre").unionByName(card(layPost, 3, "post"))
       },
-      Some("""WITH pl AS (SELECT doc_id, text
-             |    || CASE WHEN doc_id % 14 = 0
-             |      THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
-             |      WHEN doc_id % 7 = 0
-             |      THEN ' zq0grafted exact phrase marker' ELSE '' END
-             |    || CASE WHEN doc_id % 9 = 0 THEN ' zxsingular' ELSE '' END
-             |      AS text
-             |  FROM documents),
+      Some("WITH " + zxPlantedCte + s""",
              |c2 AS (
              |  SELECT doc_id AS id, text
              |    || CASE WHEN doc_id % 9 = 0 THEN ' ttrevision two'
@@ -4118,7 +3857,7 @@ object TextQueries {
              |  SELECT doc_id + 70000, text || ' ttinsert alpha'
              |  FROM pl WHERE doc_id % 5 = 0),
              |tw AS (SELECT id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
+             |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
              |  FROM c2),
              |tk AS (SELECT id, w[i] AS term
              |  FROM (SELECT id, w, unnest(generate_series(1, len(w))) AS i
@@ -4208,7 +3947,7 @@ object TextQueries {
         val dfTable = bm.indexStats(planted, "doc_id", "text").df
         bm.percolatorIndexCard(bIdx, pIdx, dfTable)
       },
-      Some("""WITH corpus AS (
+      Some(s"""WITH corpus AS (
              |  SELECT doc_id, text || CASE WHEN doc_id % 14 = 0
              |    THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
              |    WHEN doc_id % 7 = 0
@@ -4217,7 +3956,7 @@ object TextQueries {
              |    AS text
              |  FROM documents),
              |tw AS (SELECT doc_id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
+             |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
              |  FROM corpus),
              |dt AS (SELECT DISTINCT doc_id AS id, w[i] AS term
              |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
@@ -4225,11 +3964,7 @@ object TextQueries {
              |  WHERE length(w[i]) > 0),
              |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
              |  FROM dt GROUP BY 1),
-             |qm AS (SELECT DISTINCT doc_id + 90000 AS qid, lower(tk) AS term
-             |  FROM (SELECT doc_id, unnest(string_split_regex(
-             |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:6]) AS tk
-             |    FROM documents WHERE doc_id < 20 AND doc_id % 2 = 1)
-             |  WHERE length(tk) > 0
+             |qm AS (${prefixQueryTerms(90000, 6, "doc_id < 20 AND doc_id % 2 = 1")}
              |  UNION SELECT qid, term FROM (VALUES (90100, 'the'),
              |    (90100, 'qnotone')) t(qid, term)),
              |qn AS (SELECT doc_id + 90000 AS qid, 'qnotone' AS term
@@ -4237,7 +3972,7 @@ object TextQueries {
              |  WHERE doc_id < 20 AND doc_id % 3 = 0 AND doc_id % 2 = 1
              |  UNION ALL SELECT 90100, 'qnotone'),
              |qtw AS (SELECT doc_id, string_split_regex(
-             |    lower(regexp_replace(text, '^\s+|\s+$', '', 'g')), '\s+') AS w
+             |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
              |  FROM documents WHERE doc_id < 25 AND doc_id % 2 = 0),
              |qx AS (SELECT doc_id + 96000 AS qid, w[i] AS term
              |  FROM (SELECT doc_id, w, unnest(generate_series(3, 5)) AS i
@@ -4377,18 +4112,8 @@ object TextQueries {
           queries, "qid", "qtext", k = 10)
       },
       Some("WITH " + bm25ScoreCtes("documents", "doc_id", "", qtOverride = Some(
-        """SELECT DISTINCT doc_id + 80000 AS qid, lower(tk) AS term
-          |  FROM (SELECT doc_id, unnest(string_split_regex(
-          |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-          |    FROM documents WHERE doc_id < 10)
-          |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM sc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+        prefixQueryTerms(80000, 25, "doc_id < 10"))) +
+        ",\n" + rankedTop10Tail("sc"))),
 
     // CHUNK-LEVEL RAG RETRIEVAL (Curation.chunkTexts + Bm25.topKExternal)
     // — the retrieval shape a RAG pipeline actually serves: the corpus
@@ -4427,18 +4152,8 @@ object TextQueries {
           |  FROM cch),
           |""".stripMargin +
         bm25ScoreCtes("chunks", "chunk_key", "", "b", qtOverride = Some(
-          """SELECT DISTINCT doc_id + 9000000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 5)
-            |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM bsc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+          prefixQueryTerms(9000000, 25, "doc_id < 5"))) +
+        ",\n" + rankedTop10Tail("bsc"))),
 
     // HYBRID CHUNK RETRIEVAL (q237's BM25 leg + a dense leg, fused by
     // q151's integer RRF) — the full RAG retrieval stack at CHUNK
@@ -4480,23 +4195,7 @@ object TextQueries {
             .select(col("qid"), col("nid"), col("rank")),
           ctoks, budgetTokens = 384)
       },
-      Some(hybridChunkOracleChain +
-        """,
-          |cand2 AS (SELECT qid, nid, rank FROM rankedf WHERE rank <= 10),
-          |fpd AS (SELECT qid, nid, rank, row_number() OVER (
-          |    PARTITION BY qid, nid // 1048576 ORDER BY rank) AS dr FROM cand2),
-          |keep AS (SELECT qid, nid, rank FROM fpd WHERE dr = 1),
-          |ctok AS (SELECT chunk_key,
-          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ct FROM chunks),
-          |asm AS (SELECT k.qid, k.nid, k.rank, c.ct,
-          |    row_number() OVER (PARTITION BY k.qid ORDER BY k.rank) AS ctx_pos,
-          |    sum(c.ct) OVER (PARTITION BY k.qid ORDER BY k.rank
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          |  FROM keep k JOIN ctok c ON c.chunk_key = k.nid)
-          |SELECT qid, CAST(ctx_pos AS BIGINT) AS ctx_pos, nid AS chunk_key,
-          |  CAST(nid // 1048576 AS BIGINT) AS doc_id, ct AS chunk_tokens,
-          |  CAST(cum AS BIGINT) AS cum_tokens
-          |FROM asm WHERE cum <= 384""".stripMargin)),
+      Some(ragContextOracle)),
 
     // DENSE-LEG RECALL AUDIT (q241's SRP-LSH leg vs brute-force truth)
     // — the q112/q226 measurement discipline applied to the hybrid
@@ -4742,21 +4441,11 @@ object TextQueries {
           |  FROM documents WHERE doc_id % 3 = 0),
           |""".stripMargin +
         bm25ScoreCtes("fullc", "id", "", qtOverride = Some(
-          """SELECT DISTINCT doc_id + 80000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 10)
-            |  WHERE length(tk) > 0
+          prefixQueryTerms(80000, 25, "doc_id < 10") + """
             |UNION
             |SELECT 80100 AS qid, unnest(
             |  ['graftupsert', 'novelterm', 'ingestion']) AS term""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM sc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+        ",\n" + rankedTop10Tail("sc"))),
 
     // INCREMENTAL CHUNK-INDEX MAINTENANCE — q242's discipline at q237's
     // granularity: the epoch's CHUNK-LEVEL BM25 statistics upsert with
@@ -4805,18 +4494,8 @@ object TextQueries {
           |  FROM cch),
           |""".stripMargin +
         bm25ScoreCtes("chunks", "chunk_key", "", "b", qtOverride = Some(
-          """SELECT DISTINCT doc_id + 9000000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 5)
-            |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM bsc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+          prefixQueryTerms(9000000, 25, "doc_id < 5"))) +
+        ",\n" + rankedTop10Tail("bsc"))),
 
     // CHUNK-INDEX DOC DELETION (Bm25.removeDocsFromChunkIndex) — q254's
     // subtract path at q253's granularity: curation deletes DOCS, the
@@ -4874,18 +4553,8 @@ object TextQueries {
           |  FROM cch),
           |""".stripMargin +
         bm25ScoreCtes("chunks", "chunk_key", "", "b", qtOverride = Some(
-          """SELECT DISTINCT doc_id + 9000000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 5)
-            |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM bsc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+          prefixQueryTerms(9000000, 25, "doc_id < 5"))) +
+        ",\n" + rankedTop10Tail("bsc"))),
 
     // DELETION-AWARE INDEX MAINTENANCE (Bm25.removeIndexStats) — the
     // r15 missing #1: the pipeline's own dedup REMOVES documents, so
@@ -4939,21 +4608,11 @@ object TextQueries {
           |  FROM documents WHERE doc_id % 3 = 0 AND (doc_id + 50000) % 7 <> 2),
           |""".stripMargin +
         bm25ScoreCtes("fullc", "id", "", qtOverride = Some(
-          """SELECT DISTINCT doc_id + 80000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 10)
-            |  WHERE length(tk) > 0
+          prefixQueryTerms(80000, 25, "doc_id < 10") + """
             |UNION
             |SELECT 80100 AS qid, unnest(
             |  ['graftupsert', 'novelterm', 'ingestion']) AS term""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM sc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+        ",\n" + rankedTop10Tail("sc"))),
 
     // DOCUMENT UPDATE MAINTENANCE (remove ∘ upsert) — the third CRUD
     // leg the scaladoc contract names (update = subtract the old rows,
@@ -4993,18 +4652,8 @@ object TextQueries {
           |  FROM documents),
           |""".stripMargin +
         bm25ScoreCtes("fullc", "id", "", qtOverride = Some(
-          """SELECT DISTINCT doc_id + 80000 AS qid, lower(tk) AS term
-            |  FROM (SELECT doc_id, unnest(string_split_regex(
-            |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-            |    FROM documents WHERE doc_id < 10)
-            |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM sc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+          prefixQueryTerms(80000, 25, "doc_id < 10"))) +
+        ",\n" + rankedTop10Tail("sc"))),
 
     // STREAMING BM25 QUERY-AT-INGEST (Bm25.scoreExternalStats under
     // Structured Streaming) — the retrieval family's streaming member:
@@ -5046,18 +4695,8 @@ object TextQueries {
             col("id"), col("score_micro"))
       },
       Some("WITH " + bm25ScoreCtes("documents", "doc_id", "", qtOverride = Some(
-        """SELECT DISTINCT doc_id + 80000 AS qid, lower(tk) AS term
-          |  FROM (SELECT doc_id, unnest(string_split_regex(
-          |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')[1:25]) AS tk
-          |    FROM documents WHERE doc_id < 10)
-          |  WHERE length(tk) > 0""".stripMargin)) +
-        """,
-          |ranked AS (SELECT qid, id, score_micro,
-          |    ROW_NUMBER() OVER (PARTITION BY qid
-          |      ORDER BY score_micro DESC, id) AS rank
-          |  FROM sc)
-          |SELECT qid, CAST(rank AS BIGINT) AS rank, id, score_micro
-          |FROM ranked WHERE rank <= 10""".stripMargin)),
+        prefixQueryTerms(80000, 25, "doc_id < 10"))) +
+        ",\n" + rankedTop10Tail("sc"))),
 
     // STREAMING HYBRID RETRIEVAL (r15 missing #4) — the fused (q241)
     // ranking's streaming member: query docs arrive as a stream and
@@ -5099,23 +4738,7 @@ object TextQueries {
             .select(col("qid"), col("nid"), col("rank")),
           ctoks, budgetTokens = 384)
       },
-      Some(hybridChunkOracleChain +
-        """,
-          |cand2 AS (SELECT qid, nid, rank FROM rankedf WHERE rank <= 10),
-          |fpd AS (SELECT qid, nid, rank, row_number() OVER (
-          |    PARTITION BY qid, nid // 1048576 ORDER BY rank) AS dr FROM cand2),
-          |keep AS (SELECT qid, nid, rank FROM fpd WHERE dr = 1),
-          |ctok AS (SELECT chunk_key,
-          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ct FROM chunks),
-          |asm AS (SELECT k.qid, k.nid, k.rank, c.ct,
-          |    row_number() OVER (PARTITION BY k.qid ORDER BY k.rank) AS ctx_pos,
-          |    sum(c.ct) OVER (PARTITION BY k.qid ORDER BY k.rank
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          |  FROM keep k JOIN ctok c ON c.chunk_key = k.nid)
-          |SELECT qid, CAST(ctx_pos AS BIGINT) AS ctx_pos, nid AS chunk_key,
-          |  CAST(nid // 1048576 AS BIGINT) AS doc_id, ct AS chunk_tokens,
-          |  CAST(cum AS BIGINT) AS cum_tokens
-          |FROM asm WHERE cum <= 384""".stripMargin)),
+      Some(ragContextOracle)),
 
     // DEDUP THRESHOLD CALIBRATION SWEEP — the run a pipeline owner does
     // BEFORE fixing the near-dup Jaccard threshold: over the q226
@@ -5350,7 +4973,7 @@ object TextQueries {
           |  UNION ALL SELECT doc_id + 20000, text FROM documents
           |    WHERE doc_id % 20 < 5""".stripMargin,
         rounds = 4) +
-        """,
+        s""",
           |glab AS (SELECT c.id, coalesce(l.g, c.id) AS g
           |  FROM corpus c LEFT JOIN l2 l ON l.id = c.id),
           |tkc AS (SELECT id, CAST(len(w) AS BIGINT) AS tk FROM toks),
@@ -5359,45 +4982,11 @@ object TextQueries {
           |    JOIN documents d ON d.doc_id = g.id % 10000),
           |ns AS (SELECT source, CAST(sum(tk) AS BIGINT) AS n_tokens
           |  FROM j GROUP BY source),
-          |nlw AS (SELECT source, n_tokens,
-          |    (CAST(round(ln(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) * 7)
-          |      // 10 AS lwm FROM ns),
-          |nmx AS (SELECT max(lwm) AS m FROM nlw),
-          |nwm AS (SELECT source, n_tokens,
-          |    CAST(round(exp(CAST(lwm - (SELECT m FROM nmx) AS DOUBLE) / 1000000)
-          |      * 1000000) AS BIGINT) AS weight_micro FROM nlw),
-          |ntw AS (SELECT CAST(sum(weight_micro) AS BIGINT) AS t FROM nwm),
-          |nbase AS (SELECT source, n_tokens, weight_micro,
-          |    (1000000 * weight_micro) // t AS bq,
-          |    1000000 * weight_micro - ((1000000 * weight_micro) // t) * t AS rem
-          |  FROM nwm, ntw),
-          |nlo AS (SELECT 1000000 - sum(bq) AS l FROM nbase),
-          |nrk AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS r
-          |  FROM nbase),
-          |nq AS (SELECT source, n_tokens,
-          |    CAST(bq + CASE WHEN r <= (SELECT l FROM nlo) THEN 1 ELSE 0 END
-          |      AS BIGINT) AS quota FROM nrk),
+          |${OracleFragments.temperatureQuotaCtes("n")},
           |ps AS (SELECT source,
           |    CAST(sum(CASE WHEN id = g THEN tk ELSE 0 END) AS BIGINT) AS n_tokens
           |  FROM j GROUP BY source),
-          |plw AS (SELECT source, n_tokens,
-          |    (CAST(round(ln(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) * 7)
-          |      // 10 AS lwm FROM ps),
-          |pmx AS (SELECT max(lwm) AS m FROM plw),
-          |pwm AS (SELECT source, n_tokens,
-          |    CAST(round(exp(CAST(lwm - (SELECT m FROM pmx) AS DOUBLE) / 1000000)
-          |      * 1000000) AS BIGINT) AS weight_micro FROM plw),
-          |ptw AS (SELECT CAST(sum(weight_micro) AS BIGINT) AS t FROM pwm),
-          |pbase AS (SELECT source, n_tokens, weight_micro,
-          |    (1000000 * weight_micro) // t AS bq,
-          |    1000000 * weight_micro - ((1000000 * weight_micro) // t) * t AS rem
-          |  FROM pwm, ptw),
-          |plo AS (SELECT 1000000 - sum(bq) AS l FROM pbase),
-          |prk AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS r
-          |  FROM pbase),
-          |pq AS (SELECT source, n_tokens,
-          |    CAST(bq + CASE WHEN r <= (SELECT l FROM plo) THEN 1 ELSE 0 END
-          |      AS BIGINT) AS quota FROM prk)
+          |${OracleFragments.temperatureQuotaCtes("p")}
           |SELECT q.source, n.n_tokens AS toks_before, q.n_tokens AS toks_after,
           |  n.quota AS quota_naive, q.quota AS quota_replanned,
           |  q.quota - n.quota AS quota_shift,
@@ -6197,15 +5786,7 @@ object TextQueries {
             |  (9000001, 'zq0grafted'), (9000001, 'marker'),
             |  (9000002, 'zxsingular'), (9000002, 'ttrevision'))
             |  t(qid, term)""".stripMargin
-        "WITH " +
-          s"""pl AS (SELECT doc_id, text
-             |    || CASE WHEN doc_id % 14 = 0
-             |      THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
-             |      WHEN doc_id % 7 = 0
-             |      THEN ' zq0grafted exact phrase marker' ELSE '' END
-             |    || CASE WHEN doc_id % 9 = 0 THEN ' zxsingular' ELSE '' END
-             |      AS text
-             |  FROM documents),
+        "WITH " + zxPlantedCte + s""",
              |c1 AS (
              |  SELECT doc_id AS id, text || CASE WHEN doc_id % 5 = 3
              |      THEN ' ttrevision one' ELSE '' END AS text
@@ -6431,33 +6012,7 @@ object TextQueries {
             |  (9000001, 'zq0grafted'), (9000001, 'marker'),
             |  (9000002, 'zxsingular'), (9000002, 'ttrevision'))
             |  t(qid, term)""".stripMargin
-        def phraseLeg(p: String, src: String): String =
-          s"""${p}tw AS (SELECT id, string_split_regex(
-             |    lower(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')), '\\s+') AS w
-             |  FROM $src),
-             |${p}pos AS (SELECT id, CAST(i - 1 AS BIGINT) AS pos, w[i] AS term
-             |  FROM (SELECT id, w, unnest(generate_series(1, len(w))) AS i
-             |        FROM ${p}tw)
-             |  WHERE length(w[i]) > 0),
-             |${p}m AS (SELECT a.id, a.pos FROM ${p}pos a
-             |  JOIN ${p}pos b ON b.id = a.id AND b.pos = a.pos + 1
-             |    AND b.term = 'exact'
-             |  JOIN ${p}pos c ON c.id = a.id AND c.pos = a.pos + 2
-             |    AND c.term = 'phrase'
-             |  JOIN ${p}pos e ON e.id = a.id AND e.pos = a.pos + 3
-             |    AND e.term = 'marker'
-             |  WHERE a.term = 'zq0grafted'),
-             |${p}occ AS (SELECT id, CAST(count(*) AS BIGINT) AS n
-             |  FROM ${p}m GROUP BY 1)""".stripMargin
-        "WITH " +
-          s"""pl AS (SELECT doc_id, text
-             |    || CASE WHEN doc_id % 14 = 0
-             |      THEN ' zq0grafted exact phrase marker zq0grafted exact phrase marker'
-             |      WHEN doc_id % 7 = 0
-             |      THEN ' zq0grafted exact phrase marker' ELSE '' END
-             |    || CASE WHEN doc_id % 9 = 0 THEN ' zxsingular' ELSE '' END
-             |      AS text
-             |  FROM documents),
+        "WITH " + zxPlantedCte + s""",
              |c1 AS (
              |  SELECT doc_id AS id, text || CASE WHEN doc_id % 5 = 3
              |      THEN ' ttrevision one' ELSE '' END AS text
@@ -6478,7 +6033,7 @@ object TextQueries {
             qtOverride = Some(qtVals)) + ",\n" +
           bm25ScoreCtes("c3", "id", "", p = "v3",
             qtOverride = Some(qtVals)) + ",\n" +
-          phraseLeg("w1", "c1") + ",\n" + phraseLeg("w3", "c3") +
+          phraseLegCtes("w1", "c1") + ",\n" + phraseLegCtes("w3", "c3") +
           s""",
              |r1 AS (SELECT qid, id, score_micro, ROW_NUMBER() OVER (
              |    PARTITION BY qid ORDER BY score_micro DESC, id) AS rank

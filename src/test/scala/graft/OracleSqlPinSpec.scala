@@ -40,9 +40,10 @@ object OracleSqlPin {
   def main(args: Array[String]): Unit = {
     val out = Paths.get(args.headOption
       .getOrElse(s"src/test/resources$resource"))
+    val hashes = current
     Files.createDirectories(out.getParent)
-    Files.writeString(out, render(current))
-    println(s"wrote ${current.size} oracle hashes to $out")
+    Files.writeString(out, render(hashes))
+    println(s"wrote ${hashes.size} oracle hashes to $out")
   }
 }
 
@@ -65,8 +66,8 @@ class OracleSqlPinSpec extends AnyFunSuite {
     val missing = (golden.keySet -- now.keySet).toSeq
       .map(name => s"missing  $name")
     val diffs = (changed ++ extra ++ missing).toSeq.sorted
-    assert(diffs.isEmpty,
-      s"${diffs.size} oracle SQL strings differ from $resource:\n" +
+    if (diffs.nonEmpty)
+      fail(s"${diffs.size} oracle SQL strings differ from $resource:\n" +
         diffs.mkString("\n"))
   }
 }
