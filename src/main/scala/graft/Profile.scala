@@ -27,6 +27,12 @@ object Profile {
       s"SELECT decode(gunzip(unbase64('$gz')), 'UTF-8') AS s").head().getString(0)
     println(s"[profile] extensions sql gunzip -> '$out'")
     assert(out == "hello graft")
+    val jsonl = java.util.Base64.getEncoder.encodeToString(
+      graft.functions.Crypto.gzip("{\"a\":1}\n\n{\"a\":2}\n".getBytes("UTF-8")))
+    val lines = spark.sql(s"SELECT gunzip_lines(unbase64('$jsonl')) AS l")
+      .head().getSeq[String](0)
+    println(s"[profile] extensions sql gunzip_lines -> ${lines.mkString("[", ", ", "]")}")
+    assert(lines == Seq("{\"a\":1}", "{\"a\":2}"))
     spark.stop()
   }
 

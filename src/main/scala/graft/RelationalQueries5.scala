@@ -349,7 +349,12 @@ object RelationalQueries5 {
           // straggler dominates the extra small shuffle; this knob is
           // the actual answer to "why didn't my skew join split?"
           "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          // skew is judged against the MEDIAN reduce partition: with the
+          // session's partitions sized to a 4-core host the ~20 keys
+          // fill every partition, the median is itself hot and nothing
+          // reads as skewed. A fixed count keeps the demo off the host.
+          "spark.sql.shuffle.partitions" -> "32")
         val saved = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
         val result = try {
           tuned.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -276,7 +276,7 @@ object Bm25 {
     * id (snippets) per [[Layout.bucketize]]. */
   def upsertPositional(base: DataFrame, batch: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    base.unionByName(positionalPostings(batch, idCol, textCol))
+    mergePositional(base, positionalPostings(batch, idCol, textCol))
 
   /** Deletion for the positional member — an id anti-join (positions
     * are per-doc facts; nothing global to rebalance). Idempotent. */
@@ -744,16 +744,8 @@ object Bm25 {
     * deleting a doc requires subtracting its old rows first — the
     * separate [[removeIndexStats]] (update = remove ∘ upsert). */
   def upsertIndexStats(base: IndexStats, batch: DataFrame,
-      idCol: String, textCol: String): IndexStats = {
-    val b = indexStats(batch, idCol, textCol)
-    IndexStats(
-      tf = base.tf.unionByName(b.tf),
-      dl = base.dl.unionByName(b.dl),
-      df = base.df.unionByName(b.df)
-        .groupBy(col("term")).agg(sum(col("df")).as("df")),
-      totals = base.totals.unionByName(b.totals)
-        .agg(sum(col("_T")).as("_T"), sum(col("_N")).as("_N")))
-  }
+      idCol: String, textCol: String): IndexStats =
+    mergeIndexStats(base, indexStats(batch, idCol, textCol))
 
   /** DELETION-AWARE index maintenance (r15 missing #1): subtract a set
     * of deleted document ids from the epoch statistics WITHOUT touching
@@ -814,13 +806,20 @@ object Bm25 {
     * file-to-batch assignment. */
   def applyCdcBatch(stats: IndexStats, batch: DataFrame, idCol: String,
       textCol: String, opCol: String): IndexStats = {
-    val touched = batch.filter(col(opCol).isin("U", "D"))
-      .select(col(idCol))
-    val adds = batch.filter(col(opCol).isin("I", "U"))
-      .select(col(idCol), col(textCol))
+    val (touched, adds) = cdcEvents(batch, idCol, textCol, opCol)
     upsertIndexStats(removeIndexStats(stats, touched, idCol), adds,
       idCol, textCol)
   }
+
+  /** A CDC batch's I/U/D events split for a remove-then-upsert fold:
+    * (ids whose old rows go — 'U' and 'D'; (id, value) rows folded in —
+    * 'I' and 'U'). The lexical, positional and ANN CDC folds all read
+    * their batch through this. */
+  def cdcEvents(batch: DataFrame, idCol: String, valueCol: String,
+      opCol: String): (DataFrame, DataFrame) =
+    (batch.filter(col(opCol).isin("U", "D")).select(col(idCol)),
+      batch.filter(col(opCol).isin("I", "U"))
+        .select(col(idCol), col(valueCol)))
 
   /** [[applyCdcBatch]] for the POSITIONAL member (r17 missing #4 —
     * streaming CDC closure across index members): same I/U/D event
@@ -833,10 +832,7 @@ object Bm25 {
     * df tables each stats fold already produces IS its batch fold. */
   def applyCdcBatchPositional(postings: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, opCol: String): DataFrame = {
-    val touched = batch.filter(col(opCol).isin("U", "D"))
-      .select(col(idCol))
-    val adds = batch.filter(col(opCol).isin("I", "U"))
-      .select(col(idCol), col(textCol))
+    val (touched, adds) = cdcEvents(batch, idCol, textCol, opCol)
     upsertPositional(removePositional(postings, touched, idCol), adds,
       idCol, textCol)
   }

@@ -450,10 +450,8 @@ object IndexArtifact {
     // of pure latency each at sf0.1; at scale the base side of these
     // joins is the corpus-sized member, which must not be shuffled
     // for a batch-sized delete list)
-    val dels = broadcast(
-      b.filter(col("op").isin("U", "D")).select(col("id")))
-    val adds = b.filter(col("op").isin("I", "U"))
-      .select(col("id"), col("text"))
+    val (delIds, adds) = Bm25.cdcEvents(b, "id", "text", "op")
+    val dels = broadcast(delIds)
     // bounded driver-side manifest logic: ≤ docParts distinct ints
     val touchedDoc: Set[Int] = b
       .select(partOf(col("id"), lay.docParts).as("p")).distinct()

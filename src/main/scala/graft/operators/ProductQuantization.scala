@@ -328,9 +328,7 @@ object ProductQuantization {
     val touched: Set[Int] = b
       .select(IndexArtifact.partOf(col("vec_id"), m.parts).as("p"))
       .distinct().collect().map(_.getInt(0)).toSet
-    val dels = b.filter(col("op").isin("U", "D")).select(col("vec_id"))
-    val adds = b.filter(col("op").isin("I", "U"))
-      .select(col("vec_id"), col("embedding"))
+    val (dels, adds) = Bm25.cdcEvents(b, "vec_id", "embedding", "op")
     val base = IndexArtifact.readParts(spark, root, m, fromVersion, touched)
     IndexArtifact.writeFolded(
       upsertAnnIndex(fit, removeFromAnnIndex(base, dels, "vec_id"), adds),

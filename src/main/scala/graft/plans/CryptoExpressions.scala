@@ -107,18 +107,22 @@ object CryptoExpressions {
   private def inRange(buf: Array[Byte], j: Int, lo: Int, hi: Int): Boolean =
     j < buf.length && { val c = buf(j) & 0xFF; c >= lo && c <= hi }
 
+  /** Every native expression by SQL name. [[register]] and
+    * [[GraftExtensions]] both install exactly this list. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "aes_ctr_decrypt" -> (exprs => AesCtrDecrypt(exprs(0), exprs(1), exprs(2))),
+    "gunzip" -> (exprs => Gunzip(exprs.head)),
+    "gunzip_lines" -> (exprs => GunzipLines(exprs.head)),
+    "parse_json_bytes" ->
+      (exprs => ParseJsonBytes(ExprUtils.evalSchemaExpr(exprs(1)), exprs.head)))
+
   /** Idempotent per-session registration (analysis-time resolution for
     * call_function / SQL). */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("aes_ctr_decrypt",
-      exprs => AesCtrDecrypt(exprs(0), exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction("gunzip",
-      exprs => Gunzip(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("gunzip_lines",
-      exprs => GunzipLines(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("parse_json_bytes",
-      exprs => ParseJsonBytes(ExprUtils.evalSchemaExpr(exprs(1)), exprs.head), "built-in")
+    functions.foreach { case (name, builder) =>
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 
   def aes_ctr_decrypt(content: Column, keyB64: Column, ivB64: Column): Column =

@@ -1,28 +1,24 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: registers the engine's native
   * expressions at session build time, cluster-wide —
   *
   *   spark.sql.extensions=graft.plans.GraftExtensions
   *
-  * (or `.withExtensions(new GraftExtensions)`), making
-  * `aes_ctr_decrypt` / `gunzip` available to SQL text and
+  * (or `.withExtensions(new GraftExtensions)`), making every function of
+  * [[CryptoExpressions.functions]] available to SQL text and
   * `call_function` without per-DataFrame registration. The lazy
-  * [[CryptoExpressions.register]] path stays for ad-hoc sessions.
+  * [[CryptoExpressions.register]] path installs the same list for ad-hoc
+  * sessions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    ext.injectFunction((
-      FunctionIdentifier("aes_ctr_decrypt"),
-      new ExpressionInfo(classOf[AesCtrDecrypt].getName, "aes_ctr_decrypt"),
-      (exprs: Seq[Expression]) => AesCtrDecrypt(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("gunzip"),
-      new ExpressionInfo(classOf[Gunzip].getName, "gunzip"),
-      (exprs: Seq[Expression]) => Gunzip(exprs.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    CryptoExpressions.functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(CryptoExpressions.getClass.getName, name), builder))
+    }
 }

@@ -346,6 +346,74 @@ class IndexArtifactSpec extends SparkSuite {
     }
   }
 
+  /** Which members have a manifest at `version` — a member's manifest
+    * is the last thing its write does, so this is the set of member
+    * writes that finished. */
+  private def manifested(root: String, version: Int): Set[String] =
+    Option(new java.io.File(s"$root/v$version").list()).toSet.flatten
+      .filter(_.endsWith(".manifest")).map(_.stripSuffix(".manifest"))
+
+  private def causes(t: Throwable): String = Iterator.iterate(t)(_.getCause)
+    .takeWhile(_ != null).map(e => s"${e.getClass.getName}: ${e.getMessage}")
+    .mkString(" <- ")
+
+  test("one failing member write fails the CDC fold loudly; the committed version stays latest") {
+    val root = freshRoot("failfold")
+    val lay = LexicalLayout(root, docParts = 8, termParts = 8,
+      withPositional = true)
+    OperatorCaches.withCaches {
+      IndexArtifact.writeLexicalFull(lay, corpus, "doc_id", "text", 0)
+      IndexArtifact.commit(spark, root, 0)
+      val v0tf = sortedRows(IndexArtifact.read(spark, root, lay.tf, 0))
+      // corrupt the pos member only: truncated parquet files fail the
+      // one job that reads them (pos's fold); tf/dl/df/totals never do
+      val posFiles = new java.io.File(s"$root/parts/pos/v0").listFiles()
+        .filter(_.isDirectory).flatMap(_.listFiles())
+        .filter(_.getName.endsWith(".parquet"))
+      assert(posFiles.nonEmpty)
+      posFiles.foreach { f =>
+        val raf = new java.io.RandomAccessFile(f, "rw")
+        try raf.setLength(f.length() / 2) finally raf.close()
+      }
+      val err = intercept[Throwable] {
+        IndexArtifact.applyCdcLexical(lay, cdcBatch, "doc_id", "text", "op",
+          fromVersion = 0, toVersion = 1)
+        IndexArtifact.commit(spark, root, 1)
+      }
+      assert(causes(err).contains("parts/pos/v0"),
+        s"the failure must name the corrupt member: ${causes(err)}")
+      // the fold waited for every member before rethrowing: the healthy
+      // ones finished, the failing one left no manifest
+      assert(manifested(root, 1) == Set("tf", "dl", "df", "totals"))
+      assert(IndexArtifact.latestCommitted(spark, root) == 0)
+      assert(sortedRows(IndexArtifact.read(spark, root, lay.tf, 0)) == v0tf)
+    }
+  }
+
+  test("one failing member write fails the full build loudly; the committed version stays latest") {
+    val root = freshRoot("failfull")
+    OperatorCaches.withCaches {
+      IndexArtifact.writeLexicalFull(LexicalLayout(root), corpus, "doc_id",
+        "text", 0)
+      IndexArtifact.commit(spark, root, 0)
+      val v0tf = sortedRows(
+        IndexArtifact.read(spark, root, LexicalLayout(root).tf, 0))
+      // a regular file where the pos member's directory goes: only that
+      // member's write can fail
+      assert(new java.io.File(s"$root/parts/pos").createNewFile())
+      val lay = LexicalLayout(root, withPositional = true)
+      val err = intercept[Throwable] {
+        IndexArtifact.writeLexicalFull(lay, corpus, "doc_id", "text", 1)
+        IndexArtifact.commit(spark, root, 1)
+      }
+      assert(causes(err).contains("parts/pos"),
+        s"the failure must name the failing member: ${causes(err)}")
+      assert(manifested(root, 1) == Set("tf", "dl", "df", "totals"))
+      assert(IndexArtifact.latestCommitted(spark, root) == 0)
+      assert(sortedRows(IndexArtifact.read(spark, root, lay.tf, 0)) == v0tf)
+    }
+  }
+
   test("query-index CDC fold == global maintainQueryIndex; untouched qid partitions carry by reference") {
     val root = freshRoot("qidx")
     val lay = IndexArtifact.QueryLayout(root, qidParts = 8)
