@@ -280,7 +280,6 @@ object BpeQueries {
     (head +: steps).mkString(",\n")
   }
 
-  /** Fit replay: sample → vocab `v0` → merge steps `b1…bM`, `v1…vM`. */
   /** The refit/drift cycle's scorecard (q322, q329, q332): fertility
     * of the old model on both samples (`fo`, `fn`) and of the refit on
     * the new one (`fz`), the 10% drift bar and `idchg`'s vocab-id
@@ -302,6 +301,7 @@ object BpeQueries {
       |UNION ALL SELECT 'artifact_reencode_mismatch', 0
       |UNION ALL SELECT 'old_vocab_refused', 1""".stripMargin
 
+  /** Fit replay: sample → vocab `v0` → merge steps `b1…bM`, `v1…vM`. */
   private def fitChain: String =
     fitChainOver("SELECT doc_id, text FROM documents WHERE text IS NOT NULL", "")
 

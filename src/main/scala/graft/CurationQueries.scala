@@ -1453,14 +1453,14 @@ object CurationQueries {
               .otherwise(0L).as("sub_ngram_leak"))
       },
       Some(s"""WITH $leakProbeCte,
-             |${winnowCtes("e", "id", "evals", "esel", "id, fp", "id, ")},
-             |${winnowCtes("t", "doc_id", "documents", "tsel", "fp", "")},
+             |${winnowCtes("e", id = "id", src = "evals", sel = "esel", keep = "id, fp")},
+             |${winnowFpCtes("t", id = "doc_id", src = "documents", sel = "tsel")},
              |fcnt AS (SELECT id, CAST(count(*) AS BIGINT) AS n_fp
              |  FROM esel GROUP BY 1),
              |fhit AS (SELECT id, CAST(count(*) AS BIGINT) AS n_dirty_fp
              |  FROM esel JOIN tsel USING (fp) GROUP BY 1),
-             |${wordGramCtes("e", "id, ", "evals")},
-             |${wordGramCtes("t", "", "documents")},
+             |${wordGramCtes("e", src = "evals", key = Some("id"))},
+             |${wordGramCtes("t", src = "documents", key = None)},
              |ngr AS (SELECT id, CAST(count(*) AS BIGINT) AS n13_grams
              |  FROM eg GROUP BY 1),
              |hr AS (SELECT id, CAST(count(*) AS BIGINT) AS n13_dirty
@@ -1517,8 +1517,8 @@ object CurationQueries {
               .as("whole_doc_leak"))
       },
       Some(s"""WITH $leakProbeCte,
-             |${winnowCtes("e", "id", "evals", "esel", "id, fp", "id, ")},
-             |${winnowCtes("t", "doc_id", "documents", "tsel", "doc_id, fp", "doc_id, ")},
+             |${winnowCtes("e", id = "id", src = "evals", sel = "esel", keep = "id, fp")},
+             |${winnowCtes("t", id = "doc_id", src = "documents", sel = "tsel", keep = "doc_id, fp")},
              |cpairs AS (SELECT DISTINCT ts.doc_id AS train_id, es.id AS eval_id
              |  FROM tsel ts JOIN esel es ON ts.fp = es.fp),
              |mm AS (SELECT cp.train_id, cp.eval_id,
@@ -1587,8 +1587,8 @@ object CurationQueries {
              |  UNION ALL
              |  SELECT doc_id + 50000, text FROM documents WHERE doc_id % 4 = 0),
              |$leakProbeCte,
-             |${winnowCtes("e", "id", "evals", "esel", "id, fp", "id, ")},
-             |${winnowCtes("t", "doc_id", "corpus", "tsel", "fp", "")},
+             |${winnowCtes("e", id = "id", src = "evals", sel = "esel", keep = "id, fp")},
+             |${winnowFpCtes("t", id = "doc_id", src = "corpus", sel = "tsel")},
              |fcnt AS (SELECT id, CAST(count(*) AS BIGINT) AS n_fp
              |  FROM esel GROUP BY 1),
              |fhit AS (SELECT id, CAST(count(*) AS BIGINT) AS n_dirty_fp
@@ -1640,8 +1640,8 @@ object CurationQueries {
           shufflePartitions = Some(8))
       },
       Some(s"""WITH $leakProbeCte,
-             |${winnowCtes("e", "id", "evals", "esel", "fp", "id, ")},
-             |${winnowCtes("t", "doc_id", "documents", "tselD", "doc_id, fp", "doc_id, ")}
+             |${winnowCtes("e", id = "id", src = "evals", sel = "esel", keep = "fp")},
+             |${winnowCtes("t", id = "doc_id", src = "documents", sel = "tselD", keep = "doc_id, fp")}
              |SELECT t.doc_id AS id, CAST(count(*) AS BIGINT) AS n_fp,
              |  CAST(sum(CASE WHEN e.fp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
              |    AS n_dirty,
@@ -1703,8 +1703,8 @@ object CurationQueries {
             coalesce(col("n_excised"), lit(0L)).as("n_excised"))
       },
       Some(s"""WITH $leakProbeCte,
-             |${winnowCtes("e", "id", "evals", "esel", "fp", "id, ")},
-             |${winnowCtes("t", "doc_id", "documents", "tselD", "doc_id, fp", "doc_id, ")},
+             |${winnowCtes("e", id = "id", src = "evals", sel = "esel", keep = "fp")},
+             |${winnowCtes("t", id = "doc_id", src = "documents", sel = "tselD", keep = "doc_id, fp")},
              |dirty AS (SELECT DISTINCT t.doc_id
              |  FROM tselD t JOIN esel e ON e.fp = t.fp),
              |tkc AS (SELECT doc_id, source,
@@ -1800,8 +1800,8 @@ object CurationQueries {
              |tkc AS (SELECT doc_id, CAST(len(string_split_regex(
              |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+'))
              |    AS BIGINT) AS tk FROM documents),
-             |${wordGramCtes("e", "", "evals")},
-             |${wordGramCtes("t", "doc_id, ", "documents")},
+             |${wordGramCtes("e", src = "evals", key = None)},
+             |${wordGramCtes("t", src = "documents", key = Some("doc_id"))},
              |rawids AS (SELECT DISTINCT t.doc_id FROM tg t JOIN eg e ON e.g = t.g),
              |enw AS (SELECT regexp_extract_all(lower(text), '\\w+') AS w FROM evals),
              |eng AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
@@ -1813,8 +1813,8 @@ object CurationQueries {
              |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 12)) AS i
              |        FROM tnw WHERE len(w) >= 13)),
              |normids AS (SELECT DISTINCT t.doc_id FROM tng t JOIN eng e ON e.g = t.g),
-             |${winnowCtes("e", "id", "evals", "esel", "fp", "id, ")},
-             |${winnowCtes("t", "doc_id", "documents", "tselD", "doc_id, fp", "doc_id, ")},
+             |${winnowCtes("e", id = "id", src = "evals", sel = "esel", keep = "fp")},
+             |${winnowCtes("t", id = "doc_id", src = "documents", sel = "tselD", keep = "doc_id, fp")},
              |charids AS (SELECT DISTINCT t.doc_id
              |  FROM tselD t JOIN esel e ON e.fp = t.fp)
              |SELECT 'raw13' AS rung,
@@ -2451,7 +2451,7 @@ object CurationQueries {
              |eg AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
              |  FROM (SELECT w, unnest(generate_series(1, len(w) - 12)) AS i
              |        FROM ew WHERE len(w) >= 13)),
-             |${wordGramCtes("t", "doc_id, ", "s1")},
+             |${wordGramCtes("t", src = "s1", key = Some("doc_id"))},
              |contam AS (SELECT DISTINCT t.doc_id FROM tg t JOIN eg e ON e.g = t.g),
              |s2 AS (SELECT * FROM s1
              |  WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
@@ -3165,28 +3165,45 @@ object CurationQueries {
     * lowercased, the FNV gram chain `cgr`, and the selected fingerprints
     * `csel(doc_id, fp)`. */
   private def winnowSelCtes: String =
-    winnowCtes("c", "doc_id", "corpus", "csel", "doc_id, fp", "doc_id, ")
+    winnowCtes("c", id = "doc_id", src = "corpus", sel = "csel", keep = "doc_id, fp")
 
-  /** Winnowing (k = 25, w = 8) of `src(id, text)`: the lowercased text
-    * `{p}ch`, the FNV gram chain `{p}gr` and the window minima as CTE
-    * `sel`, which keeps `cols` of `SELECT {inner}min(h) … AS fp`. */
-  private def winnowCtes(p: String, id: String, src: String, sel: String,
-      cols: String, inner: String): String =
+  /** The lowercased text `{p}ch` of `src(id, text)` and its FNV 25-gram
+    * chain `{p}gr`. */
+  private def winnowGramCtes(p: String, id: String, src: String): String =
     s"""${p}ch AS (SELECT $id, lower(text) AS t FROM $src),
-       |${RelationalQueries5.fnvGramCtes(s"${p}gr", id, s"${p}ch")},
-       |$sel AS (SELECT DISTINCT $cols FROM (
-       |  SELECT ${inner}min(h) OVER (PARTITION BY $id ORDER BY i
+       |${RelationalQueries5.fnvGramCtes(s"${p}gr", id, s"${p}ch")}""".stripMargin
+
+  /** Winnowing (k = 25, w = 8) of `src(id, text)`: `winnowGramCtes` and
+    * CTE `sel`, the distinct `keep` columns of each document's window
+    * minima `(id, fp)`. */
+  private def winnowCtes(p: String, id: String, src: String, sel: String,
+      keep: String): String =
+    s"""${winnowGramCtes(p, id, src)},
+       |$sel AS (SELECT DISTINCT $keep FROM (
+       |  SELECT $id, min(h) OVER (PARTITION BY $id ORDER BY i
        |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM ${p}gr))""".stripMargin
 
-  /** Distinct word 13-grams of `src(text)`: whitespace tokens
-    * `{p}w(w)` and grams `{p}g(g)`, each led by `cols` (e.g. "id, "). */
-  private def wordGramCtes(p: String, cols: String, src: String): String =
-    s"""${p}w AS (SELECT ${cols}string_split_regex(
+  /** As `winnowCtes`, with `sel(fp)` the window minima of all documents,
+    * taken without the id. */
+  private def winnowFpCtes(p: String, id: String, src: String,
+      sel: String): String =
+    s"""${winnowGramCtes(p, id, src)},
+       |$sel AS (SELECT DISTINCT fp FROM (
+       |  SELECT min(h) OVER (PARTITION BY $id ORDER BY i
+       |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM ${p}gr))""".stripMargin
+
+  /** Distinct word 13-grams of `src(text)`: whitespace tokens `{p}w(w)`
+    * and grams `{p}g(g)`, each led by the `key` column when there is one. */
+  private def wordGramCtes(p: String, src: String,
+      key: Option[String]): String = {
+    val lead = key.fold("")(k => s"$k, ")
+    s"""${p}w AS (SELECT ${lead}string_split_regex(
        |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS w
        |  FROM $src),
-       |${p}g AS (SELECT DISTINCT ${cols}array_to_string(w[i:i+12], ' ') AS g
-       |  FROM (SELECT ${cols}w, unnest(generate_series(1, len(w) - 12)) AS i
+       |${p}g AS (SELECT DISTINCT ${lead}array_to_string(w[i:i+12], ' ') AS g
+       |  FROM (SELECT ${lead}w, unnest(generate_series(1, len(w) - 12)) AS i
        |        FROM ${p}w WHERE len(w) >= 13))""".stripMargin
+  }
 
   /** The q259 leak probes as CTE `evals(id, text)`: 60-char slices of
     * docs 0–9 at +97000 and one original sentence, 97100. */
@@ -3356,7 +3373,7 @@ object CurationQueries {
        |eg AS (SELECT DISTINCT array_to_string(w[i:i+12], ' ') AS g
        |  FROM (SELECT w, unnest(generate_series(1, len(w) - 12)) AS i
        |        FROM ew WHERE len(w) >= 13)),
-       |${wordGramCtes("t", "doc_id, ", "corpus")},
+       |${wordGramCtes("t", src = "corpus", key = Some("doc_id"))},
        |contam AS (SELECT DISTINCT t.doc_id FROM tg t JOIN eg e ON e.g = t.g),
        |$winnowSelCtes,
        |mined AS (SELECT fp FROM csel GROUP BY fp HAVING count(*) >= 25),

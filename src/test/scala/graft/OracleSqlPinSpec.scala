@@ -36,10 +36,9 @@ object OracleSqlPin {
       name -> sha
     }.toMap
 
-  /** Rewrites the golden file (default: the test resource in this repo). */
+  /** Rewrites the golden test resource of this repo. */
   def main(args: Array[String]): Unit = {
-    val out = Paths.get(args.headOption
-      .getOrElse(s"src/test/resources$resource"))
+    val out = Paths.get(s"src/test/resources$resource")
     val hashes = current
     Files.createDirectories(out.getParent)
     Files.writeString(out, render(hashes))

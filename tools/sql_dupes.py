@@ -1,28 +1,24 @@
 #!/usr/bin/env python3
 """Count repeated oracle SQL in the query registry sources.
 
-An oracle SQL line is a source line of a `*Queries*.scala` file whose first
-non-blank character is the `stripMargin` bar `|`; lines are compared on the
-text after that bar. A line counts as a repeat at block size N when it lies
-in a run of N source-adjacent oracle lines whose text already appeared,
-as a run of N, earlier in the scan (files in name order, then line order,
-so a block first written in one file and repeated in another counts in the
-second).
+An oracle SQL line is a source line of a `src/main/scala/graft/*Queries*.scala`
+file whose first non-blank character is the `stripMargin` bar `|`; lines are
+compared on the text after that bar. A line counts as a repeat at block size
+N when it lies in a run of N source-adjacent oracle lines whose text already
+appeared, as a run of N, earlier in the scan (files in name order, then line
+order, so a block first written in one file and repeated in another counts in
+the second). Prints per-file counts for N = 4 and N = 10.
 
-    python3 tools/sql_dupes.py                 # N = 4 and 10, per file
-    python3 tools/sql_dupes.py -n 6 --top 15   # plus the 15 longest repeats
-
-`--top K` lists the longest repeated runs (maximal runs of repeated lines,
-each with the earlier place its first window matches), the candidates for
-a shared fragment builder.
+    python3 tools/sql_dupes.py
 """
-import argparse
 import glob
 import os
 import re
-import sys
 
 BAR = re.compile(r"^\s*\|(.*)$")
+SIZES = (4, 10)
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                    "src", "main", "scala", "graft")
 
 
 def oracle_lines(path):
@@ -34,82 +30,38 @@ def oracle_lines(path):
 
 
 def repeats(files, n):
-    """{path: set of indexes into oracle_lines(path) that repeat at size n},
-    and {(path, start index): (earlier path, earlier line)} per window."""
-    seen, marked, origin = {}, {}, {}
+    """{path: number of oracle lines that repeat an earlier n-line block}."""
+    seen, counts = set(), {}
     for path, seq in files:
-        mk = set()
+        marked = set()
         for s in range(len(seq) - n + 1):
             w = seq[s:s + n]
             if w[-1][0] - w[0][0] != n - 1:  # not source-adjacent
                 continue
             key = tuple(t for _, t in w)
             if key in seen:
-                mk.update(range(s, s + n))
-                origin[(path, s)] = seen[key]
+                marked.update(range(s, s + n))
             else:
-                seen[key] = (path, w[0][0])
-        marked[path] = mk
-    return marked, origin
-
-
-def runs(seq, mk):
-    """Maximal runs of source-adjacent marked indexes: [(start, length)]."""
-    out, i = [], 0
-    idx = sorted(mk)
-    while i < len(idx):
-        j = i
-        while (j + 1 < len(idx) and idx[j + 1] == idx[j] + 1
-               and seq[idx[j + 1]][0] == seq[idx[j]][0] + 1):
-            j += 1
-        out.append((idx[i], j - i + 1))
-        i = j + 1
-    return out
+                seen.add(key)
+        counts[path] = len(marked)
+    return counts
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("-n", type=int, action="append",
-                    help="block size (repeatable; default 4 and 10)")
-    ap.add_argument("--top", type=int, default=0,
-                    help="list the K longest repeated runs")
-    ap.add_argument("--root", default=os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..",
-        "src", "main", "scala", "graft"))
-    args = ap.parse_args()
-    sizes = args.n or [4, 10]
-    paths = sorted(glob.glob(os.path.join(args.root, "*Queries*.scala")))
-    if not paths:
-        sys.exit(f"no *Queries*.scala under {args.root}")
+    paths = sorted(glob.glob(os.path.join(ROOT, "*Queries*.scala")))
     files = [(p, oracle_lines(p)) for p in paths]
-    results = {n: repeats(files, n) for n in sizes}
+    results = {n: repeats(files, n) for n in SIZES}
 
-    head = f"{'file':<26}{'oracle':>8}" + "".join(
-        f"{'N>=' + str(n):>9}" for n in sizes)
-    print(head)
-    totals = [0] * (len(sizes) + 1)
+    print(f"{'file':<26}{'oracle':>8}" +
+          "".join(f"{'N>=' + str(n):>9}" for n in SIZES))
+    totals = [0] * (len(SIZES) + 1)
     for path, seq in files:
-        counts = [len(seq)] + [len(results[n][0][path]) for n in sizes]
+        counts = [len(seq)] + [results[n][path] for n in SIZES]
         totals = [a + b for a, b in zip(totals, counts)]
-        print(f"{os.path.basename(path):<26}" + f"{counts[0]:>8}" +
+        print(f"{os.path.basename(path):<26}{counts[0]:>8}" +
               "".join(f"{c:>9}" for c in counts[1:]))
     print(f"{'total':<26}{totals[0]:>8}" +
           "".join(f"{c:>9}" for c in totals[1:]))
-
-    if args.top:
-        n = min(sizes)
-        marked, origin = results[n]
-        found = []
-        for path, seq in files:
-            for s, ln in runs(seq, marked[path]):
-                first = next((origin[(path, k)] for k in range(s, s + ln)
-                              if (path, k) in origin), None)
-                found.append((ln, os.path.basename(path), seq[s][0], first))
-        found.sort(key=lambda r: (-r[0], r[1], r[2]))
-        print(f"\nlongest repeated runs (N>={n}):")
-        for ln, name, line, first in found[:args.top]:
-            src = f"{os.path.basename(first[0])}:{first[1]}" if first else "?"
-            print(f"{ln:>5}  {name}:{line}  (first window as at {src})")
 
 
 if __name__ == "__main__":
