@@ -18,8 +18,6 @@ object Registry {
   def groups: Seq[Seq[Q]] = Seq(
     RelationalQueries.all,
     RelationalQueries2.all,
-    RelationalQueries3.all,
-    RelationalQueries4.all,
     RelationalQueries5.all,
     TextQueries.all,
     SimilarityQueries.all,

@@ -218,40 +218,21 @@ object SimilarityQueries {
     * old fit on the epoch and the new fit on epoch ∪ drift). */
   private def kmeansAssignCtes(ptsSql: String, nCells: Int,
       maxIter: Int, pfx: String = ""): StringBuilder = {
-    def d2(p: String, c: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($p, $c), " +
-        s"s -> (CAST(s[1] AS DOUBLE) - s[2]) * (CAST(s[1] AS DOUBLE) - s[2]))), (a,b) -> a + b)"
-    def assignStage(cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, cidx AS cell FROM (
-         |    SELECT p.vid, c.cidx, ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${d2("p.v", "c.c")}, c.cidx) AS rk
-         |    FROM ${pfx}pts p CROSS JOIN $cent c) WHERE rk = 1)""".stripMargin
-    def updateStage(assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.cidx,
-         |    CASE WHEN m.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, 64), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(m.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / m.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.cell, list(p.v ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN ${pfx}pts p ON p.vid = a.vid GROUP BY a.cell) m
-         |  ON m.cell = pc.cidx)""".stripMargin
+    val pts = s"${pfx}pts"
     val sb = new StringBuilder(
-      s"""${if (pfx.isEmpty) "WITH " else ""}${pfx}pts AS MATERIALIZED (
+      s"""${if (pfx.isEmpty) "WITH " else ""}$pts AS MATERIALIZED (
          |  $ptsSql),
          |${pfx}cent0 AS MATERIALIZED (
          |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vid) - 1 AS INT) AS cidx, CAST(v AS DOUBLE[]) AS c
-         |  FROM (SELECT vid, v FROM ${pfx}pts ORDER BY vid LIMIT $nCells))""".stripMargin)
+         |  FROM (SELECT vid, v FROM $pts ORDER BY vid LIMIT $nCells))""".stripMargin)
     var prev = s"${pfx}cent0"
     for (it <- 0 until maxIter) {
-      sb.append(assignStage(prev, s"${pfx}a$it"))
-      sb.append(updateStage(s"${pfx}a$it", prev, s"${pfx}cent${it + 1}"))
+      sb.append(coarseAssign(pts, prev, s"${pfx}a$it", lam = "s"))
+      sb.append(coarseUpdate(64, pts, s"${pfx}a$it", prev,
+        s"${pfx}cent${it + 1}", alias = "m"))
       prev = s"${pfx}cent${it + 1}"
     }
-    sb.append(assignStage(prev, s"${pfx}afinal"))
+    sb.append(coarseAssign(pts, prev, s"${pfx}afinal", lam = "s"))
     sb.append(s",\n${pfx}finalcent AS (SELECT * FROM $prev)")
     sb
   }
@@ -463,29 +444,6 @@ object SimilarityQueries {
     * unordered SUM of doubles would be aggregation-order-dependent). */
   private def q46Oracle(m: Int, subDim: Int, kCent: Int, maxIter: Int,
       topK: Int): String = {
-    def d2(p: String, c: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($p, $c), " +
-        s"s2 -> (CAST(s2[1] AS DOUBLE) - s2[2]) * (CAST(s2[1] AS DOUBLE) - s2[2]))), (a,b) -> a + b)"
-    def assignStage(cent: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT vid, s, cidx AS cell FROM (
-         |    SELECT p.vid, p.s, c.cidx,
-         |      ROW_NUMBER() OVER (PARTITION BY p.vid, p.s ORDER BY ${d2("p.sv", "c.c")}, c.cidx) AS rk
-         |    FROM subs p JOIN $cent c ON c.s = p.s) WHERE rk = 1)""".stripMargin
-    def updateStage(assign: String, prev: String, out: String): String =
-      s""",
-         |$out AS MATERIALIZED (
-         |  SELECT pc.s, pc.cidx,
-         |    CASE WHEN m.cell IS NULL THEN pc.c
-         |    ELSE list_transform(generate_series(1, $subDim), i ->
-         |      list_reduce(list_prepend(0.0, list_transform(m.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / m.n)
-         |    END AS c
-         |  FROM $prev pc LEFT JOIN (
-         |    SELECT a.s, a.cell, list(p.sv ORDER BY p.vid) AS vs, count(*) AS n
-         |    FROM $assign a JOIN subs p ON p.vid = a.vid AND p.s = a.s
-         |    GROUP BY a.s, a.cell) m
-         |  ON m.s = pc.s AND m.cell = pc.cidx)""".stripMargin
     val dim = m * subDim
     val sb = new StringBuilder(
       s"""WITH pts AS MATERIALIZED (
@@ -501,11 +459,12 @@ object SimilarityQueries {
          |  FROM subs sb JOIN first_seed f ON f.vid = sb.vid)""".stripMargin)
     var prev = "cent0"
     for (it <- 0 until maxIter) {
-      sb.append(assignStage(prev, s"a$it"))
-      sb.append(updateStage(s"a$it", prev, s"cent${it + 1}"))
+      sb.append(subAssign("subs", prev, s"a$it"))
+      sb.append(subUpdate(subDim, "subs", s"a$it", prev, s"cent${it + 1}",
+        alias = "m"))
       prev = s"cent${it + 1}"
     }
-    sb.append(assignStage(prev, "afinal"))
+    sb.append(subAssign("subs", prev, "afinal"))
     sb.append(
       s""",
          |qsubs AS (SELECT vid AS qid, s, CAST(sv AS DOUBLE[]) AS qsv FROM subs WHERE vid < 20),
@@ -545,37 +504,40 @@ object SimilarityQueries {
          |FROM ranked WHERE rk <= $topK GROUP BY qid""".stripMargin
 
   /** Squared L2 distance of list columns `p` and `c` as an ordered
-    * fold (bit-exact across engines; no unordered double SUM). */
-  private def lloydD2(p: String, c: String): String =
+    * fold (bit-exact across engines; no unordered double SUM). `lam`
+    * names the lambda variable. */
+  private def lloydD2(p: String, c: String, lam: String = "s2"): String =
     s"list_reduce(list_prepend(0.0, list_transform(list_zip($p, $c), " +
-      s"s2 -> (CAST(s2[1] AS DOUBLE) - s2[2]) * (CAST(s2[1] AS DOUBLE) - s2[2]))), (a,b) -> a + b)"
+      s"$lam -> (CAST($lam[1] AS DOUBLE) - $lam[2]) * (CAST($lam[1] AS DOUBLE) - $lam[2]))), (a,b) -> a + b)"
 
   // Unrolled Lloyd stages, each led by ",\n": coarse (full-dim, unkeyed
   // — q42Oracle's kernel) over points `src(vid, v)`, and subspace
   // (s-keyed — q46Oracle's kernel) over sub-vectors `src(vid, s, sv)`.
   // An assignment takes each point's nearest centroid of `cent` (ties to
   // the lower index); an update averages each cell's members in vid
-  // order and keeps an empty cell's centroid.
-  private def coarseAssign(src: String, cent: String, out: String): String =
+  // order and keeps an empty cell's centroid. `lam` (the distance
+  // lambda variable) and `alias` (the member subquery) only rename.
+  private def coarseAssign(src: String, cent: String, out: String,
+      lam: String = "s2"): String =
     s""",
        |$out AS MATERIALIZED (
        |  SELECT vid, cidx AS cell FROM (
-       |    SELECT p.vid, c.cidx, ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${lloydD2("p.v", "c.c")}, c.cidx) AS rk
+       |    SELECT p.vid, c.cidx, ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${lloydD2("p.v", "c.c", lam)}, c.cidx) AS rk
        |    FROM $src p CROSS JOIN $cent c) WHERE rk = 1)""".stripMargin
 
   private def coarseUpdate(dim: Int, src: String, assign: String,
-      prev: String, out: String): String =
+      prev: String, out: String, alias: String = "mm"): String =
     s""",
        |$out AS MATERIALIZED (
        |  SELECT pc.cidx,
-       |    CASE WHEN mm.cell IS NULL THEN pc.c
+       |    CASE WHEN $alias.cell IS NULL THEN pc.c
        |    ELSE list_transform(generate_series(1, $dim), i ->
-       |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
+       |      list_reduce(list_prepend(0.0, list_transform($alias.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / $alias.n)
        |    END AS c
        |  FROM $prev pc LEFT JOIN (
        |    SELECT a.cell, list(p.v ORDER BY p.vid) AS vs, count(*) AS n
-       |    FROM $assign a JOIN $src p ON p.vid = a.vid GROUP BY a.cell) mm
-       |  ON mm.cell = pc.cidx)""".stripMargin
+       |    FROM $assign a JOIN $src p ON p.vid = a.vid GROUP BY a.cell) $alias
+       |  ON $alias.cell = pc.cidx)""".stripMargin
 
   private def subAssign(src: String, cent: String, out: String): String =
     s""",
@@ -586,19 +548,19 @@ object SimilarityQueries {
        |    FROM $src p JOIN $cent c ON c.s = p.s) WHERE rk = 1)""".stripMargin
 
   private def subUpdate(subDim: Int, src: String, assign: String,
-      prev: String, out: String): String =
+      prev: String, out: String, alias: String = "mm"): String =
     s""",
        |$out AS MATERIALIZED (
        |  SELECT pc.s, pc.cidx,
-       |    CASE WHEN mm.cell IS NULL THEN pc.c
+       |    CASE WHEN $alias.cell IS NULL THEN pc.c
        |    ELSE list_transform(generate_series(1, $subDim), i ->
-       |      list_reduce(list_prepend(0.0, list_transform(mm.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / mm.n)
+       |      list_reduce(list_prepend(0.0, list_transform($alias.vs, v -> CAST(v[i] AS DOUBLE))), (a,b) -> a + b) / $alias.n)
        |    END AS c
        |  FROM $prev pc LEFT JOIN (
        |    SELECT a.s, a.cell, list(p.sv ORDER BY p.vid) AS vs, count(*) AS n
        |    FROM $assign a JOIN $src p ON p.vid = a.vid AND p.s = a.s
-       |    GROUP BY a.s, a.cell) mm
-       |  ON mm.s = pc.s AND mm.cell = pc.cidx)""".stripMargin
+       |    GROUP BY a.s, a.cell) $alias
+       |  ON $alias.s = pc.s AND $alias.cell = pc.cidx)""".stripMargin
 
   /** The q105 IVF-ADC WITH-chain up to `ranked`, no final SELECT —
     * shared by q105 (top-k agg), q112 (recall@k vs brute truth) and q113

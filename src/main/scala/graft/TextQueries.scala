@@ -2859,7 +2859,7 @@ object TextQueries {
              |  tp.max_df, tp.top_term
              |FROM nt, np, nd, tot, q50, q90, q99, tp""".stripMargin)),
 
-    // MERGED-MEMBER SERVE (Bm25.mergePositional / mergeVariantIndex —
+    // MERGED-MEMBER SERVE (positional union / Bm25.mergeVariantIndex —
     // r17 missing #1, closing the merge across ALL index members):
     // q311's epoch shard merge covered IndexStats only, so a merged
     // index would re-scan text the moment a phrase or fuzzy query
@@ -2894,8 +2894,7 @@ object TextQueries {
         val merged = bm.mergeIndexStats(sA, sB)
         val mdf = graft.operators.OperatorCaches.track(merged.df.persist())
         val p = graft.operators.OperatorCaches.track(
-          bm.mergePositional(
-            bm.positionalPostings(shardA, "doc_id", "text"),
+          bm.positionalPostings(shardA, "doc_id", "text").unionByName(
             bm.positionalPostings(shardB, "doc_id", "text")).persist())
         val vi = bm.mergeVariantIndex(
           bm.variantIndex(sA.df), bm.variantIndex(sB.df))
@@ -2971,8 +2970,7 @@ object TextQueries {
           bm.indexStats(shardA, "doc_id", "text"),
           bm.indexStats(shardB, "doc_id", "text"))
         val mergedPos = graft.operators.OperatorCaches.track(
-          bm.mergePositional(
-            bm.positionalPostings(shardA, "doc_id", "text"),
+          bm.positionalPostings(shardA, "doc_id", "text").unionByName(
             bm.positionalPostings(shardB, "doc_id", "text")).persist())
         val queries = Seq((8000001L, "zq0grafted marker"),
           (8000002L, "zxsingular the")).toDF("qid", "qtext")
@@ -3081,8 +3079,7 @@ object TextQueries {
           bm.indexStats(shardA, "doc_id", "text"),
           bm.indexStats(shardB, "doc_id", "text"))
         val p = graft.operators.OperatorCaches.track(
-          bm.mergePositional(
-            bm.positionalPostings(shardA, "doc_id", "text"),
+          bm.positionalPostings(shardA, "doc_id", "text").unionByName(
             bm.positionalPostings(shardB, "doc_id", "text")).persist())
         bm.proximityTopKFrom(merged, p, col("id") < 5, k = 10)
       },

@@ -276,15 +276,13 @@ object Bm25 {
     * id (snippets) per [[Layout.bucketize]]. */
   def upsertPositional(base: DataFrame, batch: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    mergePositional(base, positionalPostings(batch, idCol, textCol))
+    base.unionByName(positionalPostings(batch, idCol, textCol))
 
-  /** Deletion for the positional member — an id anti-join (positions
-    * are per-doc facts; nothing global to rebalance). Idempotent. */
+  /** Deletion for the positional member — [[KeyedFold.removeByKey]] on
+    * id (positions are per-doc facts; nothing global to rebalance). */
   def removePositional(base: DataFrame, deletedIds: DataFrame,
       idCol: String): DataFrame =
-    // broadcast: delete list is batch-bounded, postings corpus-sized
-    base.join(broadcast(deletedIds.select(col(idCol).as("id"))), Seq("id"),
-      "left_anti")
+    KeyedFold.removeByKey(base, deletedIds.select(col(idCol).as("id")), "id")
 
   /** STANDING-QUERY MATCHING AT INGEST — the streaming member of the
     * lexical serve surface: a fixed phrase alert and a fixed boolean
@@ -577,18 +575,18 @@ object Bm25 {
   /** Fold the variant index across one [[IndexStats]] transition:
     * terms BORN in `afterDf` (absent from `beforeDf`) explode in;
     * terms DEAD (df reached 0, so [[removeIndexStats]] dropped them
-    * from the df table) anti-join out. Both deltas derive from the df
-    * tables the stats CRUD already maintains — never from text. Fold
-    * == rebuild from afterDf's term set (gated hash-equal, q307, with
-    * deletion load-bearing: a dead term stops suggesting). */
+    * from the df table) leave by [[KeyedFold.removeByKey]]. One signed
+    * term count (−1 before, +1 after) tells them apart, so both derive
+    * from the df tables the stats CRUD already maintains — never from
+    * text. Fold == rebuild from afterDf's term set (gated hash-equal,
+    * q307, with deletion load-bearing: a dead term stops suggesting). */
   def maintainVariantIndex(vi: DataFrame, beforeDf: DataFrame,
       afterDf: DataFrame): DataFrame = {
-    val born = afterDf.select(col("term"))
-      .join(beforeDf.select(col("term")), Seq("term"), "left_anti")
-    val dead = beforeDf.select(col("term"))
-      .join(afterDf.select(col("term")), Seq("term"), "left_anti")
-    vi.join(dead, Seq("term"), "left_anti")
-      .unionByName(variantIndex(born))
+    val change = beforeDf.select(col("term"), lit(-1).as("_d"))
+      .unionByName(afterDf.select(col("term"), lit(1).as("_d")))
+      .groupBy(col("term")).agg(sum(col("_d")).as("_d"))
+    KeyedFold.removeByKey(vi, change.filter(col("_d") < 0), "term")
+      .unionByName(variantIndex(change.filter(col("_d") > 0)))
   }
 
   /** [[fuzzyTopK]] against maintained members — the variant equi-join
@@ -751,43 +749,29 @@ object Bm25 {
     * of deleted document ids from the epoch statistics WITHOUT touching
     * corpus text — the pipeline's own dedup (q219/q238) removes
     * documents, so an append-only index goes stale the first time its
-    * corpus is curated. Every stat is an additive fold, so deletion is
-    * the same algebra with negated deltas, and the deltas are all
-    * DERIVABLE FROM THE INDEX ITSELF (tf holds the deleted docs' term
-    * rows; dl their lengths):
-    *   tf/dl: anti-join on id (drop the deleted docs' rows);
-    *   df: per-term count of deleted docs containing the term,
-    *     subtracted; terms reaching 0 DROP (a term no live doc contains
-    *     must not linger with df=0 — idf would divide by a phantom);
+    * corpus is curated. The deltas all derive FROM THE INDEX ITSELF
+    * (tf holds the deleted docs' term rows; dl their lengths):
+    *   tf/dl: [[KeyedFold.removeByKey]] on id;
+    *   df: [[KeyedFold.mergeCounts]] with the deleted docs' per-term
+    *     counts negated (terms reaching 0 drop);
     *   totals: _T minus the deleted docs' token mass, _N minus the
     *     count of deleted docs actually present in the index (ids never
     *     indexed are ignored, so delete is idempotent).
-    * Composes with [[upsertIndexStats]] for the dedup-then-reindex
-    * cycle: remove(upsert(stats, batch), dupIds) ≡ recompute over
-    * (epoch ∪ batch) ∖ dups — gated hash-equal (q254).
-    *
-    * Scale shape: two id-keyed anti/semi-joins against a (small)
-    * deleted-id set — broadcastable in the daily case — one term-keyed
-    * merge for df, one 1-row totals fold; never touches text. */
+    * remove(upsert(stats, batch), dupIds) ≡ recompute over
+    * (epoch ∪ batch) ∖ dups — gated hash-equal (q254). */
   def removeIndexStats(base: IndexStats, deletedIds: DataFrame,
       idCol: String): IndexStats = {
-    // broadcast: the delete list is bounded by the maintenance batch
-    // (the daily case per the scale note above) while base.tf/dl are
-    // corpus-sized — the hint keeps the big side unshuffled and skips
-    // the AQE re-plan wave the runtime conversion would cost
-    val del = broadcast(deletedIds.select(col(idCol).as("id")))
-    val delTf = base.tf.join(del, Seq("id"), "left_semi")
-    val dfDelta = delTf.groupBy(col("term")).agg(count(lit(1)).as("_ddf"))
+    val ids = deletedIds.select(col(idCol).as("id"))
+    val del = KeyedFold.deleteSide(ids, "id")
+    val dfDelta = base.tf.join(del, Seq("id"), "left_semi")
+      .groupBy(col("term")).agg((-count(lit(1))).as("df"))
     val delTotals = base.dl.join(del, Seq("id"), "left_semi")
       .agg(coalesce(sum(col("dl")), lit(0L)).as("_dT"),
         count(lit(1)).as("_dN"))
     IndexStats(
-      tf = base.tf.join(del, Seq("id"), "left_anti"),
-      dl = base.dl.join(del, Seq("id"), "left_anti"),
-      df = base.df.join(dfDelta, Seq("term"), "left")
-        .select(col("term"),
-          (col("df") - coalesce(col("_ddf"), lit(0L))).as("df"))
-        .filter(col("df") > 0),
+      tf = KeyedFold.removeByKey(base.tf, ids, "id"),
+      dl = KeyedFold.removeByKey(base.dl, ids, "id"),
+      df = KeyedFold.mergeCounts("term", "df", base.df, dfDelta),
       totals = base.totals.crossJoin(broadcast(delTotals))
         .select((col("_T") - col("_dT")).as("_T"),
           (col("_N") - col("_dN")).as("_N")))
@@ -806,20 +790,19 @@ object Bm25 {
     * file-to-batch assignment. */
   def applyCdcBatch(stats: IndexStats, batch: DataFrame, idCol: String,
       textCol: String, opCol: String): IndexStats = {
-    val (touched, adds) = cdcEvents(batch, idCol, textCol, opCol)
+    val (touched, adds) = cdcEvents(batch, idCol, opCol)
     upsertIndexStats(removeIndexStats(stats, touched, idCol), adds,
       idCol, textCol)
   }
 
   /** A CDC batch's I/U/D events split for a remove-then-upsert fold:
-    * (ids whose old rows go — 'U' and 'D'; (id, value) rows folded in —
-    * 'I' and 'U'). The lexical, positional and ANN CDC folds all read
-    * their batch through this. */
-  def cdcEvents(batch: DataFrame, idCol: String, valueCol: String,
+    * (ids whose old rows go — 'U' and 'D'; rows folded in — 'I' and
+    * 'U', every column kept). The lexical, positional, ANN and
+    * query-index CDC folds all read their batch through this. */
+  def cdcEvents(batch: DataFrame, idCol: String,
       opCol: String): (DataFrame, DataFrame) =
     (batch.filter(col(opCol).isin("U", "D")).select(col(idCol)),
-      batch.filter(col(opCol).isin("I", "U"))
-        .select(col(idCol), col(valueCol)))
+      batch.filter(col(opCol).isin("I", "U")))
 
   /** [[applyCdcBatch]] for the POSITIONAL member (r17 missing #4 —
     * streaming CDC closure across index members): same I/U/D event
@@ -832,7 +815,7 @@ object Bm25 {
     * df tables each stats fold already produces IS its batch fold. */
   def applyCdcBatchPositional(postings: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, opCol: String): DataFrame = {
-    val (touched, adds) = cdcEvents(batch, idCol, textCol, opCol)
+    val (touched, adds) = cdcEvents(batch, idCol, opCol)
     upsertPositional(removePositional(postings, touched, idCol), adds,
       idCol, textCol)
   }
@@ -877,18 +860,15 @@ object Bm25 {
   /** QUERY-INDEX MAINTENANCE — the registration scaladocs' "fold/delete
     * by qid like every other maintained member", made runnable (gated
     * q324): index rows are per-QUERY facts, so the fold is the
-    * positional member's algebra keyed by qid — delete = qid anti-join,
-    * add = union of fresh registrations, update = delete ∘ add. Works
-    * unchanged for the boolean index (qid, term, wt) and the phrase
-    * index (qid, off, term); fold == re-registration from the net alert
-    * set by construction. Idempotent on qids never registered. */
+    * positional member's algebra keyed by qid — delete =
+    * [[KeyedFold.removeByKey]] on qid, add = union of fresh
+    * registrations, update = delete ∘ add. Works unchanged for the
+    * boolean index (qid, term, wt) and the phrase index (qid, off,
+    * term); fold == re-registration from the net alert set by
+    * construction. */
   def maintainQueryIndex(idx: DataFrame, added: DataFrame,
       deletedQids: DataFrame): DataFrame =
-    // broadcast: the deleted-qid list is bounded by the alert-CDC
-    // batch; the standing index side stays unshuffled
-    idx.join(broadcast(deletedQids.select(col("qid"))), Seq("qid"),
-        "left_anti")
-      .unionByName(added)
+    KeyedFold.removeByKey(idx, deletedQids, "qid").unionByName(added)
 
   /** CROSS-MEMBER CONSISTENCY AUDIT — the operational integrity check
     * a serving team runs over a maintained lexical index's members
@@ -1202,8 +1182,8 @@ object Bm25 {
 
   /** MERGE two independently-built epoch indexes (the production
     * reindex path: shards index in parallel, then merge) — every stat
-    * is an additive fold, so the merge is tf/dl union, df summed
-    * merge, totals added; scoring against the merged stats is
+    * is an additive fold, so the merge is tf/dl union, df by
+    * [[KeyedFold.mergeCounts]], totals added; scoring against the merged stats is
     * HASH-EQUAL to a recompute over the concatenated corpus (gated
     * q311). PRECONDITION: the two indexes cover DISJOINT doc ids — a
     * doc indexed in both would double-count (re-indexing a live doc is
@@ -1213,20 +1193,9 @@ object Bm25 {
     IndexStats(
       tf = a.tf.unionByName(b.tf),
       dl = a.dl.unionByName(b.dl),
-      df = a.df.unionByName(b.df)
-        .groupBy(col("term")).agg(sum(col("df")).as("df")),
+      df = KeyedFold.mergeCounts("term", "df", a.df, b.df),
       totals = a.totals.unionByName(b.totals)
         .agg(sum(col("_T")).as("_T"), sum(col("_N")).as("_N")))
-
-  /** [[mergeIndexStats]]'s POSITIONAL sibling (r17 missing #1 — merge
-    * closure for every index member): positions are per-doc facts, so
-    * merging two shards' positional frames is a bare union under the
-    * SAME disjoint-doc-ids precondition. Phrase/proximity/snippet
-    * serve off the merged frame == a whole-corpus recompute (gated
-    * q318) — the epoch-reindex path never re-scans text for a phrase
-    * query. */
-  def mergePositional(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
 
   /** [[mergeIndexStats]]'s VARIANT-INDEX sibling: delete-1 variants
     * are per-TERM facts, so a term present in both shards carries
@@ -1305,7 +1274,8 @@ object Bm25 {
   def removeDocsFromChunkIndex(base: IndexStats, deletedDocs: DataFrame,
       docIdCol: String,
       stride: Long = graft.operators.Curation.ChunkKeyStride): IndexStats = {
-    val del = broadcast(deletedDocs.select(col(docIdCol).as("_doc")))
+    val del = KeyedFold.deleteSide(
+      deletedDocs.select(col(docIdCol).as("_doc")), "_doc")
     val chunkIds = base.dl
       .select(col("id"), expr(s"id DIV $stride").as("_doc"))
       .join(del, Seq("_doc"), "left_semi")

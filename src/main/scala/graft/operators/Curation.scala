@@ -332,8 +332,8 @@ object Curation {
     *  - `hashCnt` (th, cnt): text-hash occurrence counts — the dup
     *    column derives from cnt ≥ 2 at CARD TIME (a deletion can
     *    un-dup the surviving partner, so the flag is never stored).
-    *    Append = summed merge; delete = subtract, drop zeros (the
-    *    removeIndexStats algebra). Dup equality is by xxhash64(text):
+    *    Append and delete are one [[KeyedFold.mergeCounts]] (positive
+    *    or negated deltas; zeros drop). Dup equality is by xxhash64(text):
     *    codegen'd, no text shuffle; a collision would misclassify one
     *    pair per ~2^64 — the oracle gate compares against full-text
     *    grouping, so any collision at gated scale would fail loudly.
@@ -369,34 +369,33 @@ object Curation {
   }
 
   /** Fold an APPEND-ONLY batch into the card statistics (batch ids must
-    * be NEW; update = [[removeCardStats]] ∘ upsert). The eval set must
-    * be the SAME epoch set the base was built with. */
+    * be NEW; update = [[removeCardStats]] ∘ upsert): rows and winIdx
+    * union, hashCnt by [[KeyedFold.mergeCounts]]. The eval set must be
+    * the SAME epoch set the base was built with. */
   def upsertCardStats(base: CardStats, batch: DataFrame, idCol: String,
       srcCol: String, langCol: String, textCol: String,
       evalSet: DataFrame, k: Int = 25, w: Int = 8): CardStats = {
     val b = cardStats(batch, idCol, srcCol, langCol, textCol, evalSet, k, w)
     CardStats(
       rows = base.rows.unionByName(b.rows),
-      hashCnt = base.hashCnt.unionByName(b.hashCnt)
-        .groupBy(col("th")).agg(sum(col("cnt")).as("cnt")),
+      hashCnt = KeyedFold.mergeCounts("th", "cnt", base.hashCnt, b.hashCnt),
       winIdx = base.winIdx.unionByName(b.winIdx))
   }
 
-  /** Delete documents from the card statistics — every delta derives
-    * FROM THE STATS THEMSELVES (rows holds the deleted docs' hashes),
-    * no text touch; ids never present are ignored (idempotent). */
+  /** Delete documents from the card statistics: rows and winIdx by
+    * [[KeyedFold.removeByKey]] on id, hashCnt by
+    * [[KeyedFold.mergeCounts]] with the deleted docs' hash counts
+    * negated — read off `rows`, so no text touch. */
   def removeCardStats(base: CardStats, deletedIds: DataFrame,
       idCol: String): CardStats = {
-    val del = deletedIds.select(col(idCol).as("id"))
-    val hDelta = base.rows.join(del, Seq("id"), "left_semi")
-      .groupBy(col("th")).agg(count(lit(1)).as("_d"))
+    val ids = deletedIds.select(col(idCol).as("id"))
+    val hDelta = base.rows
+      .join(KeyedFold.deleteSide(ids, "id"), Seq("id"), "left_semi")
+      .groupBy(col("th")).agg((-count(lit(1))).as("cnt"))
     CardStats(
-      rows = base.rows.join(del, Seq("id"), "left_anti"),
-      hashCnt = base.hashCnt.join(hDelta, Seq("th"), "left")
-        .select(col("th"), (col("cnt") - coalesce(col("_d"), lit(0L)))
-          .as("cnt"))
-        .filter(col("cnt") > 0),
-      winIdx = base.winIdx.join(del, Seq("id"), "left_anti"))
+      rows = KeyedFold.removeByKey(base.rows, ids, "id"),
+      hashCnt = KeyedFold.mergeCounts("th", "cnt", base.hashCnt, hDelta),
+      winIdx = removeFromWinnowingIndex(base.winIdx, ids, "id"))
   }
 
   /** Derive the per-source release card (q290's shape minus the
@@ -548,14 +547,14 @@ object Curation {
     base.unionByName(winnowingFingerprints(batch, idCol, textCol, k, w))
 
   /** Deletion for the winnowing index: postings are per-doc, so delete
-    * is an anti-join on id — idempotent on ids never indexed. The
-    * pipeline's own dedup/excision removes training docs, and a stale
-    * contamination index would keep flagging eval docs against text
-    * that no longer trains. */
+    * is [[KeyedFold.removeByKey]] on id. The pipeline's own
+    * dedup/excision removes training docs, and a stale contamination
+    * index would keep flagging eval docs against text that no longer
+    * trains. */
   def removeFromWinnowingIndex(index: DataFrame,
       deletedIds: DataFrame, idCol: String): DataFrame =
-    index.join(deletedIds.select(col(idCol).as("id")),
-      Seq("id"), "left_anti")
+    KeyedFold.removeByKey(index, deletedIds.select(col(idCol).as("id")),
+      "id")
 
   /** Per-TRAIN-doc contamination verdict at INGEST — the reverse
     * direction of [[charContaminationReport]] (which scores eval docs):

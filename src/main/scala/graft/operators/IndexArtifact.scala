@@ -421,116 +421,80 @@ object IndexArtifact {
 
   /** One CDC micro-batch (op I/U/D — [[Bm25.applyCdcBatch]]'s event
     * contract verbatim: one event per doc per maintenance window)
-    * folded `fromVersion` → `toVersion` touching ONLY the partitions
-    * the batch's doc ids and terms hash into. Result is row-identical
-    * to the full-artifact fold (q314/q321 re-gated hash-equal on this
-    * layout):
-    *   - doc-keyed members (tf, dl, pos): remove = id anti-join, add =
-    *     union of the batch's freshly derived rows — every removed and
-    *     added row lives in a touched doc partition by construction;
-    *   - df: one summed merge of signed deltas (+base, −deleted docs'
-    *     term counts, +added docs' df), terms reaching 0 drop — equal
-    *     to remove∘upsert because per-term the deleted count never
-    *     exceeds the base df;
-    *   - totals: 1 row, always rewritten (O(1) by definition);
-    *   - vi: born/dead terms can only be terms whose df changed, so
-    *     the variant fold is confined to the touched TERM partitions.
-    * Per-batch I/O: touched partitions only; untouched physical files
-    * carry by manifest reference (spec-proven file identity). */
+    * folded `fromVersion` → `toVersion`: read the touched partitions,
+    * fold them with the global member folds, write. The doc-keyed
+    * members (tf, dl, pos) read the partitions the batch's doc ids hash
+    * into; df and vi read the partitions of the terms whose df can
+    * move (the deleted docs' terms and the added docs' terms). Every
+    * removed or added row lives in those partitions, so
+    * [[Bm25.applyCdcBatch]], [[Bm25.applyCdcBatchPositional]] and
+    * [[Bm25.maintainVariantIndex]] over them are row-identical to the
+    * full-artifact fold (q314/q321 re-gated hash-equal on this layout).
+    * Totals is 1 row, always rewritten. Per-batch I/O: touched
+    * partitions only; untouched physical files carry by manifest
+    * reference (spec-proven file identity). */
   def applyCdcLexical(lay: LexicalLayout, batch: DataFrame, idCol: String,
       textCol: String, opCol: String, fromVersion: Int,
       toVersion: Int): Unit = {
     val spark = batch.sparkSession
     val b = OperatorCaches.track(batch.select(col(opCol).as("op"),
       col(idCol).as("id"), col(textCol).as("text")).persist())
-    // broadcast: dels is bounded by the BATCH (one event per doc per
-    // maintenance window), so the anti/semi joins against it never
-    // need an exchange of the base side — the hint removes two
-    // shuffle stages + an AQE re-plan wave per join (measured ~0.2 s
-    // of pure latency each at sf0.1; at scale the base side of these
-    // joins is the corpus-sized member, which must not be shuffled
-    // for a batch-sized delete list)
-    val (delIds, adds) = Bm25.cdcEvents(b, "id", "text", "op")
-    val dels = broadcast(delIds)
-    // bounded driver-side manifest logic: ≤ docParts distinct ints
-    val touchedDoc: Set[Int] = b
-      .select(partOf(col("id"), lay.docParts).as("p")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val bs = Bm25.indexStats(adds, "id", "text")
+    val (dels, adds) = Bm25.cdcEvents(b, "id", "op")
+    val touchedDoc = touchedParts(b, "id", lay.docParts)
     val baseTf = OperatorCaches.track(
       readParts(spark, lay.root, lay.tf, fromVersion, touchedDoc).persist())
-    val baseDl = OperatorCaches.track(
-      readParts(spark, lay.root, lay.dl, fromVersion, touchedDoc).persist())
-    // deleted docs' per-term counts — the df subtraction, derived from
-    // the index itself (never from text), read off the touched doc
-    // partitions the tf fold reads anyway
-    val delTf = baseTf.join(dels, Seq("id"), "left_semi")
-    val dfMinus = OperatorCaches.track(delTf.groupBy(col("term"))
-      .agg(count(lit(1)).as("_ddf")).persist())
-    val touchedTerm: Set[Int] = dfMinus
-      .select(partOf(col("term"), lay.termParts).as("p"))
-      .unionByName(bs.df.select(partOf(col("term"), lay.termParts).as("p")))
-      .distinct().collect().map(_.getInt(0)).toSet
-
-    val baseDf = OperatorCaches.track(
-      readParts(spark, lay.root, lay.df, fromVersion, touchedTerm).persist())
-    // signed-delta merge: +base, −deletions, +additions; ≤0 drops (a
-    // term no live doc contains must not linger — idf would divide by
-    // a phantom). Equivalent to removeIndexStats∘upsertIndexStats.
-    val afterDf = OperatorCaches.track(baseDf.select(col("term"), col("df"))
-      .unionByName(dfMinus.select(col("term"), (-col("_ddf")).as("df")))
-      .unionByName(bs.df)
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0).persist())
-
-    val delTotals = baseDl.join(dels, Seq("id"), "left_semi")
-      .agg(coalesce(sum(col("dl")), lit(0L)).as("_dT"),
-        count(lit(1)).as("_dN"))
-    val newTotals = read(spark, lay.root, lay.totals, fromVersion)
-      .crossJoin(broadcast(delTotals))
-      .crossJoin(broadcast(
-        bs.totals.select(col("_T").as("_bT"), col("_N").as("_bN"))))
-      .select((col("_T") - col("_dT") + col("_bT")).as("_T"),
-        (col("_N") - col("_dN") + col("_bN")).as("_N"))
+    // indexStats persists the batch's term rows and tf; applyCdcBatch's
+    // own build of the same plan below reads them from the cache
+    val touchedTerm = touchedParts(
+      baseTf.join(KeyedFold.deleteSide(dels, "id"), Seq("id"), "left_semi")
+        .select(col("term"))
+        .unionByName(Bm25.indexStats(adds, "id", "text").df.select(col("term"))),
+      "term", lay.termParts)
+    val before = Bm25.IndexStats(tf = baseTf,
+      dl = OperatorCaches.track(readParts(spark, lay.root, lay.dl,
+        fromVersion, touchedDoc).persist()),
+      df = OperatorCaches.track(readParts(spark, lay.root, lay.df,
+        fromVersion, touchedTerm).persist()),
+      totals = read(spark, lay.root, lay.totals, fromVersion))
+    val after = Bm25.applyCdcBatch(before, b, "id", "text", "op")
+    val afterDf = OperatorCaches.track(after.df.persist())
     val newPos =
       if (!lay.withPositional) None
-      else Some(readParts(spark, lay.root, lay.pos, fromVersion, touchedDoc)
-        .join(dels, Seq("id"), "left_anti")
-        .unionByName(Bm25.positionalPostings(adds, "id", "text")))
+      else Some(Bm25.applyCdcBatchPositional(
+        readParts(spark, lay.root, lay.pos, fromVersion, touchedDoc),
+        b, "id", "text", "op"))
 
-    // the five member folds are independent jobs over shared persisted
+    // the member folds are independent jobs over shared persisted
     // frames — run them concurrently ([[runConcurrently]]; guide §2.6:
     // a one-task totals write no longer serializes behind the tf fold).
     // Frames were all constructed above on this (scope-owning) thread.
     runConcurrently(Seq[() => Unit](
-      () => writeFolded(baseTf.join(dels, Seq("id"), "left_anti")
-          .unionByName(bs.tf),
-        lay.root, lay.tf, fromVersion, toVersion, touchedDoc),
-      () => writeFolded(baseDl.join(dels, Seq("id"), "left_anti")
-          .unionByName(bs.dl),
-        lay.root, lay.dl, fromVersion, toVersion, touchedDoc),
+      () => writeFolded(after.tf, lay.root, lay.tf, fromVersion, toVersion,
+        touchedDoc),
+      () => writeFolded(after.dl, lay.root, lay.dl, fromVersion, toVersion,
+        touchedDoc),
       () => writeFolded(afterDf, lay.root, lay.df, fromVersion, toVersion,
         touchedTerm),
-      () => writeFull(newTotals.coalesce(1), lay.root, lay.totals,
+      () => writeFull(after.totals.coalesce(1), lay.root, lay.totals,
         toVersion))
       ++ newPos.map(p => () => writeFolded(p, lay.root, lay.pos,
         fromVersion, toVersion, touchedDoc)))
 
-    if (lay.withVariants) {
-      // born/dead ⊆ touched terms (a term's membership only changes if
-      // its df changed), so the restricted anti-joins equal the global
-      // maintainVariantIndex fold
-      val born = afterDf.select(col("term"))
-        .join(baseDf.select(col("term")), Seq("term"), "left_anti")
-      val dead = baseDf.select(col("term"))
-        .join(afterDf.select(col("term")), Seq("term"), "left_anti")
-      val baseVi = readParts(spark, lay.root, lay.vi, fromVersion,
-        touchedTerm)
-      writeFolded(baseVi.join(broadcast(dead), Seq("term"), "left_anti")
-          .unionByName(Bm25.variantIndex(born)),
+    if (lay.withVariants)
+      // born/dead terms are terms whose df moved, so the fold over the
+      // touched term partitions equals the global one
+      writeFolded(Bm25.maintainVariantIndex(
+          readParts(spark, lay.root, lay.vi, fromVersion, touchedTerm),
+          before.df, afterDf),
         lay.root, lay.vi, fromVersion, toVersion, touchedTerm)
-    }
   }
+
+  /** Partitions `keyCol`'s values hash into — bounded driver-side
+    * manifest logic: at most `parts` distinct ints are collected. */
+  private[operators] def touchedParts(keys: DataFrame, keyCol: String,
+      parts: Int): Set[Int] =
+    keys.select(partOf(col(keyCol), parts).as("p")).distinct()
+      .collect().map(_.getInt(0)).toSet
 
   // ----- the QUERY INDEX (percolator members) on this layout -----
 
@@ -579,17 +543,12 @@ object IndexArtifact {
       col(qidCol).as("qid"), col(mustTextCol).as("must_text"),
       col(mustNotTextCol).as("not_text"),
       col(phraseTextCol).as("phrase_text")).persist())
-    val dels = b.filter(col("op").isin("U", "D")).select(col("qid"))
+    val (dels, adds) = Bm25.cdcEvents(b, "qid", "op")
     val addsB = Bm25.registerStandingQueries(
-      b.filter(col("op").isin("I", "U") && col("must_text").isNotNull),
-      "qid", "must_text", "not_text")
+      adds.filter(col("must_text").isNotNull), "qid", "must_text", "not_text")
     val addsP = Bm25.registerStandingPhrases(
-      b.filter(col("op").isin("I", "U") && col("phrase_text").isNotNull),
-      "qid", "phrase_text")
-    // bounded driver-side manifest logic: ≤ qidParts distinct ints
-    val touched: Set[Int] = b
-      .select(partOf(col("qid"), lay.qidParts).as("p")).distinct()
-      .collect().map(_.getInt(0)).toSet
+      adds.filter(col("phrase_text").isNotNull), "qid", "phrase_text")
+    val touched = touchedParts(b, "qid", lay.qidParts)
     val baseB = readParts(spark, lay.root, lay.qbool, fromVersion, touched)
     val newB = Bm25.maintainQueryIndex(baseB, addsB, dels)
     val baseP = readParts(spark, lay.root, lay.qphrase, fromVersion,

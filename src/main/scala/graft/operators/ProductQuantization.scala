@@ -236,40 +236,28 @@ object ProductQuantization {
     * FROZEN fit and union it into the epoch index — no refit, no
     * re-encode of epoch rows (the q242 sufficient-statistics argument,
     * ANN edition: index rows are per-row functions of the fit, so
-    * append IS maintenance). The per-row `raise_error` guard keeps a
+    * append IS maintenance). The per-row [[fitGuarded]] check keeps a
     * mixed-fit union impossible: folding rows stamped by a DIFFERENT
     * fit id fails loudly at scan time, not silently at ranking time.
-    * The guard is a FILTER predicate, not a projected column — a
-    * projection on `fit_id` is pruned whenever downstream consumes
-    * nothing from it (e.g. a bare count()), silently skipping the
-    * check; a filter must evaluate per row no matter what is read.
     * Deletion composes the same way as BM25's ([[Bm25
-    * .removeIndexStats]]): an anti-join on vec_id, no stats to adjust
+    * .removeIndexStats]]): [[removeFromAnnIndex]], no stats to adjust
     * — codes are per-row. */
   def upsertAnnIndex(fit: IvfPqFit, base: DataFrame,
-      batch: DataFrame): DataFrame = {
-    val guarded = base.filter(
-      when(col("fit_id") === lit(fit.fitId), lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"upsertAnnIndex: base index was built under fit_id "),
-          col("fit_id"), lit(s", not ${fit.fitId} — refit requires a full"
-            + " index rebuild, not an upsert")))))
-    guarded.unionByName(annIndex(fit, batch))
-  }
+      batch: DataFrame): DataFrame =
+    fitGuarded(fit, base, "upsertAnnIndex: base index")
+      .unionByName(annIndex(fit, batch))
 
   /** Deletion for the ANN index — the [[graft.operators.Bm25
     * .removeIndexStats]] counterpart, trivially simpler here: index
     * rows are per-row functions of the frozen fit (no global stats to
-    * adjust), so delete IS an anti-join on vec_id. Idempotent on ids
-    * never indexed; composes with [[upsertAnnIndex]] for the
-    * dedup-then-refresh cycle (gated q261: delete == rebuild from the
-    * same frozen fit over the survivors). */
+    * adjust), so delete IS [[KeyedFold.removeByKey]] on vec_id;
+    * composes with [[upsertAnnIndex]] for the dedup-then-refresh cycle
+    * (gated q261: delete == rebuild from the same frozen fit over the
+    * survivors). */
   def removeFromAnnIndex(index: DataFrame, deletedIds: DataFrame,
       idCol: String): DataFrame =
-    // broadcast: the delete list is batch-bounded; the index side is
-    // corpus-sized and stays unshuffled
-    index.join(broadcast(deletedIds.select(col(idCol).as("vec_id"))),
-      Seq("vec_id"), "left_anti")
+    KeyedFold.removeByKey(index,
+      deletedIds.select(col(idCol).as("vec_id")), "vec_id")
 
   /** MERGE two independently-built ANN index shards under ONE frozen
     * fit ([[graft.operators.Bm25.mergeIndexStats]]'s ANN sibling — the
@@ -284,17 +272,23 @@ object ProductQuantization {
     * checked, not assumed: two shards encoded under different fits
     * have incomparable cells/codes, and a silent union would corrupt
     * rankings only detectably at serve time — both sides carry
-    * [[upsertAnnIndex]]'s per-row raise_error guard (a FILTER
-    * predicate, prune-proof) against the declared fit. */
-  def mergeAnnIndex(fit: IvfPqFit, a: DataFrame, b: DataFrame): DataFrame = {
-    def guard(side: DataFrame, name: String) = side.filter(
-      when(col("fit_id") === lit(fit.fitId), lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"mergeAnnIndex: $name shard was built under fit_id "),
-          col("fit_id"), lit(s", not ${fit.fitId} — shards merge only " +
-            "under ONE frozen fit; refit requires a full rebuild")))))
-    guard(a, "left").unionByName(guard(b, "right"))
-  }
+    * [[fitGuarded]] against the declared fit. */
+  def mergeAnnIndex(fit: IvfPqFit, a: DataFrame, b: DataFrame): DataFrame =
+    fitGuarded(fit, a, "mergeAnnIndex: left shard")
+      .unionByName(fitGuarded(fit, b, "mergeAnnIndex: right shard"))
+
+  /** `index` with a per-row refusal of any row not stamped by `fit` —
+    * the mixed-fit guard [[upsertAnnIndex]] and [[mergeAnnIndex]]
+    * share. It is a FILTER predicate, not a projected column: a
+    * projection on `fit_id` is pruned whenever downstream consumes
+    * nothing from it (e.g. a bare count()), silently skipping the
+    * check; a filter evaluates per row no matter what is read. */
+  private def fitGuarded(fit: IvfPqFit, index: DataFrame,
+      what: String): DataFrame =
+    index.filter(when(col("fit_id") === lit(fit.fitId), lit(true))
+      .otherwise(raise_error(concat(lit(s"$what was built under fit_id "),
+        col("fit_id"), lit(s", not ${fit.fitId} — refit requires a full" +
+          " index rebuild")))))
 
   /** The ANN index as a PARTITIONED VERSIONED artifact member —
     * (vec_id, cell, code, fit_id) rows keyed by hash(vec_id), the
@@ -324,11 +318,8 @@ object ProductQuantization {
     val spark = batch.sparkSession
     val b = OperatorCaches.track(batch.select(col(opCol).as("op"),
       col(idCol).as("vec_id"), col(embCol).as("embedding")).persist())
-    // bounded driver-side manifest logic: ≤ m.parts distinct ints
-    val touched: Set[Int] = b
-      .select(IndexArtifact.partOf(col("vec_id"), m.parts).as("p"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val (dels, adds) = Bm25.cdcEvents(b, "vec_id", "embedding", "op")
+    val touched = IndexArtifact.touchedParts(b, "vec_id", m.parts)
+    val (dels, adds) = Bm25.cdcEvents(b, "vec_id", "op")
     val base = IndexArtifact.readParts(spark, root, m, fromVersion, touched)
     IndexArtifact.writeFolded(
       upsertAnnIndex(fit, removeFromAnnIndex(base, dels, "vec_id"), adds),

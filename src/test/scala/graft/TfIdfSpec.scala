@@ -72,6 +72,33 @@ class TfIdfSpec extends SparkSuite {
     assert((0L until 50L).toSet.subsetOf(ids) ||
       ids.intersect((0L until 50L).toSet).size >= 45)
   }
+
+  test("shard merge of every lexical member == the union-corpus build") {
+    import graft.operators.Bm25
+    // disjoint doc ids; 'beta'/'gamma' live in both shards (df sums,
+    // identical variant rows dedup), 'delta'/'zeta' in one each
+    val a = Seq((1L, "alpha beta gamma beta"), (2L, "beta delta"))
+      .toDF("doc_id", "text")
+    val b = Seq((3L, "gamma beta zeta"), (4L, "eta")).toDF("doc_id", "text")
+    val whole = a.unionByName(b)
+    val (sa, sb) = (Bm25.indexStats(a, "doc_id", "text"),
+      Bm25.indexStats(b, "doc_id", "text"))
+    val merged = Bm25.mergeIndexStats(sa, sb)
+    val full = Bm25.indexStats(whole, "doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    for ((name, m, f) <- Seq(("tf", merged.tf, full.tf),
+        ("dl", merged.dl, full.dl), ("df", merged.df, full.df),
+        ("totals", merged.totals, full.totals),
+        ("pos", Bm25.positionalPostings(a, "doc_id", "text").unionByName(
+          Bm25.positionalPostings(b, "doc_id", "text")),
+          Bm25.positionalPostings(whole, "doc_id", "text")),
+        ("vi", Bm25.mergeVariantIndex(Bm25.variantIndex(sa.df),
+          Bm25.variantIndex(sb.df)), Bm25.variantIndex(full.df))))
+      assert(rows(m.select(f.columns.map(col): _*)) == rows(f),
+        s"merged $name differs from the union-corpus build")
+    assert(rows(merged.df).contains("beta|3"), rows(merged.df).toString)
+  }
 }
 
 class Bm25Spec extends SparkSuite {
