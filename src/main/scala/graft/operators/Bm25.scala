@@ -763,19 +763,23 @@ object Bm25 {
       idCol: String): IndexStats = {
     val ids = deletedIds.select(col(idCol).as("id"))
     val del = KeyedFold.deleteSide(ids, "id")
-    val dfDelta = base.tf.join(del, Seq("id"), "left_semi")
-      .groupBy(col("term")).agg((-count(lit(1))).as("df"))
     val delTotals = base.dl.join(del, Seq("id"), "left_semi")
       .agg(coalesce(sum(col("dl")), lit(0L)).as("_dT"),
         count(lit(1)).as("_dN"))
     IndexStats(
       tf = KeyedFold.removeByKey(base.tf, ids, "id"),
       dl = KeyedFold.removeByKey(base.dl, ids, "id"),
-      df = KeyedFold.mergeCounts("term", "df", base.df, dfDelta),
+      df = KeyedFold.mergeCounts("term", "df", base.df, removedDf(base, ids)),
       totals = base.totals.crossJoin(broadcast(delTotals))
         .select((col("_T") - col("_dT")).as("_T"),
           (col("_N") - col("_dN")).as("_N")))
   }
+
+  /** The df delta of removing `ids` (column `id`): per term, minus the
+    * number of those docs whose tf rows hold it. */
+  private def removedDf(base: IndexStats, ids: DataFrame): DataFrame =
+    base.tf.join(KeyedFold.deleteSide(ids, "id"), Seq("id"), "left_semi")
+      .groupBy(col("term")).agg((-count(lit(1))).as("df"))
 
   /** One CDC micro-batch folded into the epoch statistics — the
     * streaming member of the index CRUD (insert = q242, delete = q254,
@@ -787,12 +791,18 @@ object Bm25 {
     * id carries AT MOST ONE event — then the fold is batch-composition
     * invariant (micro-batch boundaries cannot change the result), which
     * is what lets q314 gate streaming == batch without pinning Spark's
-    * file-to-batch assignment. */
+    * file-to-batch assignment. tf/dl/totals fold as remove ∘ upsert;
+    * df folds once — base, the removed docs' negated counts and the
+    * added docs' counts in one [[KeyedFold.mergeCounts]] — which equals
+    * the two-step merge because a term's base df never falls below its
+    * removed count. */
   def applyCdcBatch(stats: IndexStats, batch: DataFrame, idCol: String,
       textCol: String, opCol: String): IndexStats = {
     val (touched, adds) = cdcEvents(batch, idCol, opCol)
-    upsertIndexStats(removeIndexStats(stats, touched, idCol), adds,
-      idCol, textCol)
+    val added = indexStats(adds, idCol, textCol)
+    mergeIndexStats(removeIndexStats(stats, touched, idCol), added)
+      .copy(df = KeyedFold.mergeCounts("term", "df", stats.df,
+        removedDf(stats, touched.select(col(idCol).as("id"))), added.df))
   }
 
   /** A CDC batch's I/U/D events split for a remove-then-upsert fold:

@@ -1,49 +1,98 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.Crypto
 
 /** Sinks + status aggregation (reference K1-K5, A1-A3 — SURVEY.md
   * §2.4-2.5).
   *
-  * Delivery target is a filesystem directory (`<outDir>/<topic>/<name>`),
-  * the exact shape the reference's integration harness observes (mock-nifi
-  * writes POSTed files to /data/output — SnapshotSenderIntegrationTest
-  * .kt:50-55). An HTTP delivery would swap the partition function body for
-  * a pooled-client POST loop; everything else (markers, counts, statuses)
-  * is unchanged.
+  * Files leave through a [[DeliveryTransport]]: a filesystem directory
+  * (`<outDir>/<topic>/<name>`, the shape the reference's integration
+  * harness observes — mock-nifi writes POSTed files to /data/output,
+  * SnapshotSenderIntegrationTest.kt:50-55) or the NiFi HTTP wire.
   *
   * Exactly-once accounting: Spark retries tasks, so the per-row commit
   * protocol (POST → counter++ → marker) of the reference
   * (HttpWriter.kt:83-97) is reshaped — writes are idempotent (same path,
   * same bytes), `.finished` markers are the commit log, and FilesSent is
-  * *derived by counting markers*, never incremented (SURVEY.md §7.3).
+  * *derived from markers*, never incremented (SURVEY.md §7.3). A batch
+  * run counts the markers it listed before sending plus the names its
+  * delivery action committed: the set a re-listing would give, because a
+  * task retry re-sends and re-marks the same names.
+  *
+  * Markers, side markers, success indicators and local delivery all go
+  * through the Hadoop `FileSystem` API, so `statusDir` and `outDir` may
+  * be any Hadoop path or URI (`/abs/dir`, `file:/abs/dir`, `s3a://…`).
   */
 object Delivery {
 
+  /** The session's Hadoop configuration, broadcast for tasks that open
+    * files themselves, the way Spark's own file sources ship it to their
+    * readers. A run broadcasts it once, for its content reads and its
+    * markers. */
+  private[graft] def hadoopConf(
+      spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+
+  /** Writes `body` to `p` (parents created), replacing any earlier file.
+    * On the local file system the bytes go to the `java.io.File` Hadoop
+    * resolves `p` to: without the native Hadoop library, a local `create`
+    * forks a `chmod` per file (about 9 ms per marker through the
+    * checksummed local FS, 4 ms through the raw one, 0.1–0.2 ms this way
+    * on a 4-core host), and a marker needs neither that mode nor a `.crc`
+    * sidecar. */
+  private[graft] def writeFile(fs: FileSystem, p: Path, body: Array[Byte]): Unit =
+    fs match {
+      case local: LocalFileSystem => writeLocal(local.pathToFile(p), body)
+      case raw: RawLocalFileSystem => writeLocal(raw.pathToFile(p), body)
+      case _ =>
+        val out = fs.create(p, true)
+        try out.write(body) finally out.close()
+    }
+
+  private def writeLocal(f: java.io.File, body: Array[Byte]): Unit = {
+    Files.createDirectories(f.toPath.getParent)
+    Files.write(f.toPath, body)
+  }
+
   /** K1 + K2 behind the transport seam: send each file through
-    * `transport` (FS, HTTP, …) from the executors via foreachPartition,
-    * then write its `.finished` marker (marker body "Finished <name>" —
+    * `transport` (FS, HTTP, …) from the executors, then write its
+    * `.finished` marker (marker body "Finished <name>" —
     * S3StatusFileWriter.kt:19-52) — marker AFTER send, so a failed
     * send leaves no marker and the file is retried by the next run.
     * Both actions are idempotent, so at-least-once task retries converge.
     *
     * The input carries a `headers` struct (nifiHeaders output); its
     * non-null fields travel to the transport as the header map (FS
-    * delivery ignores it). */
+    * delivery ignores it).
+    *
+    * @return the source file names whose send and marker both
+    *         succeeded, collected from the tasks that succeeded */
   def deliverVia(files: DataFrame, statusDir: String,
-      transport: DeliveryTransport): Unit =
+      transport: DeliveryTransport): Seq[String] =
+    deliverVia(files, statusDir, transport, hadoopConf(files.sparkSession))
+
+  private[graft] def deliverVia(files: DataFrame, statusDir: String,
+      transport: DeliveryTransport,
+      conf: Broadcast[SerializableConfiguration]): Seq[String] =
     files.select(col("topic"), col("outputName"), col("sourceFileName"),
         col("content"), col("headers"))
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val st = Paths.get(statusDir)
-        if (rows.hasNext) Files.createDirectories(st)
-        rows.foreach { r =>
+      .mapPartitions { rows: Iterator[Row] =>
+        val st = new Path(statusDir)
+        val fs = st.getFileSystem(conf.value.value)
+        rows.map { r =>
           val h = r.getStruct(4)
           val headers = h.schema.fieldNames.zipWithIndex.collect {
             case (name, i) if !h.isNullAt(i) => name -> h.get(i).toString
@@ -51,10 +100,12 @@ object Delivery {
           val fileName = r.getString(2)
           transport.send(DeliveredFile(r.getString(0), r.getString(1),
             fileName, r.getAs[Array[Byte]](3), headers))
-          Files.write(st.resolve(s"$fileName.finished"),
+          writeFile(fs, new Path(st, s"$fileName.finished"),
             s"Finished $fileName".getBytes(StandardCharsets.UTF_8))
+          fileName
         }
-      }
+      }(Encoders.STRING)
+      .collect().toSeq
 
   /** Quarantine side-channel: one `.quarantined` marker per rejected file
     * (streaming mode needs this — the source checkpoint consumes objects
@@ -72,27 +123,45 @@ object Delivery {
     writeSideMarkers(blocked, statusDir, "blocked", "Blocked")
 
   private def writeSideMarkers(files: DataFrame, statusDir: String,
-      suffix: String, verb: String): Unit =
-    files.select(col("fileName")).foreachPartition {
-      rows: Iterator[org.apache.spark.sql.Row] =>
-        val st = Paths.get(statusDir)
-        if (rows.hasNext) Files.createDirectories(st)
-        rows.foreach { r =>
-          Files.write(st.resolve(s"${r.getString(0)}.$suffix"),
-            s"$verb ${r.getString(0)}".getBytes(StandardCharsets.UTF_8))
-        }
+      suffix: String, verb: String): Unit = {
+    val conf = hadoopConf(files.sparkSession)
+    files.select(col("fileName")).foreachPartition { rows: Iterator[Row] =>
+      val st = new Path(statusDir)
+      val fs = st.getFileSystem(conf.value.value)
+      rows.foreach { r =>
+        writeFile(fs, new Path(st, s"${r.getString(0)}.$suffix"),
+          s"$verb ${r.getString(0)}".getBytes(StandardCharsets.UTF_8))
+      }
     }
+  }
 
-  /** Scan of the `.finished` marker prefix → one row per already-delivered
-    * file (feeds SnapshotPipeline.filterFinished and sentCounts). Uses the
-    * file *index* only — no content read. */
-  def finishedMarkers(spark: SparkSession, statusDir: String): DataFrame = {
-    Files.createDirectories(Paths.get(statusDir))
-    val ds = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.finished").load(statusDir)
-      .select(SnapshotPipeline.fileNameFromPath(col("path")).as("markerName"))
-    ds.select(regexp_replace(col("markerName"), "\\.finished$", "")
-      .as("finishedFileName"))
+  /** The already-delivered file names: the `.finished` markers under
+    * `statusDir`, suffix stripped. One driver-side listing — no Spark
+    * job, no content read. Names a file index hides (`.`-prefixed, such
+    * as Hadoop's `.crc` checksums, and `_`-prefixed without a `=`) are
+    * skipped, as Spark's `InMemoryFileIndex` skips them. A missing
+    * `statusDir` is created and lists as empty. */
+  def listFinished(spark: SparkSession, statusDir: String): Seq[String] = {
+    val st = new Path(statusDir)
+    val fs = st.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.mkdirs(st)
+    fs.listStatus(st).toSeq
+      .filter(_.isFile)
+      .map(_.getPath.getName)
+      .filter(n => n.endsWith(".finished") && !n.startsWith(".") &&
+        !(n.startsWith("_") && !n.contains("=")))
+      .map(_.stripSuffix(".finished"))
+  }
+
+  /** [[listFinished]] as a relation (`finishedFileName`) — the right side
+    * of SnapshotPipeline.filterFinished and the input of [[sentCounts]]. */
+  def finishedMarkers(spark: SparkSession, statusDir: String): DataFrame =
+    finishedFrame(spark, listFinished(spark, statusDir))
+
+  private[graft] def finishedFrame(spark: SparkSession,
+      names: Seq[String]): DataFrame = {
+    import spark.implicits._
+    names.toDF("finishedFileName")
   }
 
   /** A1: FilesSent per collection, derived from markers (not incremented —
@@ -101,6 +170,16 @@ object Delivery {
     SnapshotPipeline.withTopic(
         markers.select(col("finishedFileName").as("fileName")))
       .groupBy(col("topic")).agg(count(lit(1)).as("FilesSent"))
+
+  /** [[sentCounts]] of marker names held on the driver. The topic parse
+    * is a projection of a local relation, which the optimizer evaluates
+    * in place, so counting starts no Spark job. */
+  private[graft] def sentCountsOf(spark: SparkSession,
+      names: Seq[String]): Map[String, Long] =
+    SnapshotPipeline.withTopic(finishedFrame(spark, names)
+        .select(col("finishedFileName").as("fileName")))
+      .select(col("topic")).collect()
+      .groupMapReduce(_.getString(0))(_ => 1L)(_ + _)
 
   /** A2: per-collection status decision
     * (DynamoDBExportStatusService.kt:113-141):
@@ -112,32 +191,72 @@ object Delivery {
     * collections alive (SURVEY.md §7.3, zero-row groups). */
   def collectionStatus(expected: DataFrame, sent: DataFrame,
       blockedTopics: Seq[String] = Nil): DataFrame =
-    expected.join(sent, Seq("topic"), "left")
-      .withColumn("FilesSent", coalesce(col("FilesSent"), lit(0L)))
-      .withColumn("CollectionStatus",
-        when(col("topic").isin(blockedTopics: _*), "Blocked_Topic")
-          .when(col("FilesExported") === 0, "Received")
-          .when(col("FilesSent") === col("FilesExported"), "Sent")
-          .otherwise("In_Progress"))
+    withCollectionStatus(expected.join(sent, Seq("topic"), "left")
+      .withColumn("FilesSent", coalesce(col("FilesSent"), lit(0L))),
+      blockedTopics)
+
+  /** [[collectionStatus]] as a local relation: the `expected` rows
+    * (collected by the caller) joined on the driver with per-topic sent
+    * counts — the `expected` columns, then FilesSent and the same
+    * decision. Acting on it starts no job. */
+  private[graft] def collectionStatusOf(spark: SparkSession,
+      expected: StructType, expectedRows: Seq[Row], sent: Map[String, Long],
+      blockedTopics: Seq[String]): DataFrame = {
+    val topicAt = expected.fieldIndex("topic")
+    val rows = expectedRows.map(r =>
+      Row.fromSeq(r.toSeq :+ sent.getOrElse(r.getString(topicAt), 0L)))
+    withCollectionStatus(spark.createDataFrame(rows.asJava,
+        expected.add(StructField("FilesSent", LongType, nullable = false))),
+      blockedTopics)
+  }
+
+  private def withCollectionStatus(df: DataFrame,
+      blockedTopics: Seq[String]): DataFrame =
+    df.withColumn("CollectionStatus",
+      when(col("topic").isin(blockedTopics: _*), "Blocked_Topic")
+        .when(col("FilesExported") === 0, "Received")
+        .when(col("FilesSent") === col("FilesExported"), "Sent")
+        .otherwise("In_Progress"))
 
   private val okStatuses =
     Seq("Sent", "Received", "Success", "Table_Unavailable", "Blocked_Topic")
+
+  private def isOk = col("CollectionStatus").isin(okStatuses: _*)
+  private def isFailed = col("CollectionStatus") === "Export_Failed"
 
   /** A3: run-completion rollup over all collections of a correlation id
     * (DynamoDBExportStatusService.kt:79-102): all-ok → success, any
     * Export_Failed → failure, else not-completed. bool_and/bool_or get
     * partial aggregation for free. */
   def runCompletion(statuses: DataFrame, correlationId: String): DataFrame =
-    statuses
-      .select(lit(correlationId).as("correlationId"),
-        col("CollectionStatus").isin(okStatuses: _*).as("ok"),
-        (col("CollectionStatus") === "Export_Failed").as("failed"))
+    withCompletionStatus(statuses
+      .select(lit(correlationId).as("correlationId"), isOk.as("ok"),
+        isFailed.as("failed"))
       .groupBy(col("correlationId"))
-      .agg(bool_and(col("ok")).as("all_ok"), bool_or(col("failed")).as("any_failed"))
-      .withColumn("completionStatus",
-        when(col("all_ok"), "COMPLETED_SUCCESSFULLY")
-          .when(col("any_failed"), "COMPLETED_UNSUCCESSFULLY")
-          .otherwise("NOT_COMPLETED"))
+      .agg(bool_and(col("ok")).as("all_ok"), bool_or(col("failed")).as("any_failed")))
+
+  /** [[runCompletion]] of local statuses (from [[collectionStatusOf]]) as
+    * a local relation: the per-collection flags are a projection the
+    * optimizer evaluates in place, the two folds run on the driver. No
+    * statuses, no row — as the grouped aggregate gives. */
+  private[graft] def runCompletionOf(statuses: DataFrame,
+      correlationId: String): DataFrame = {
+    val flags = statuses.select(isOk, isFailed).collect()
+      .map(r => (r.getBoolean(0), r.getBoolean(1)))
+    val rows =
+      if (flags.isEmpty) Seq.empty[Row]
+      else Seq(Row(correlationId, flags.forall(_._1), flags.exists(_._2)))
+    val schema = StructType(Seq(
+      StructField("correlationId", StringType, nullable = false),
+      StructField("all_ok", BooleanType), StructField("any_failed", BooleanType)))
+    withCompletionStatus(statuses.sparkSession.createDataFrame(rows.asJava, schema))
+  }
+
+  private def withCompletionStatus(rollup: DataFrame): DataFrame =
+    rollup.withColumn("completionStatus",
+      when(col("all_ok"), "COMPLETED_SUCCESSFULLY")
+        .when(col("any_failed"), "COMPLETED_UNSUCCESSFULLY")
+        .otherwise("NOT_COMPLETED"))
 
   /** K3 + M8: success indicator `_<db>_<collection>_successful.gz` (20-byte
     * empty gzip) for Sent and zero-file (Received) topics
@@ -148,6 +267,7 @@ object Delivery {
     val want = statuses
       .filter(col("CollectionStatus").isin("Received", "Sent"))
       .select(col("topic")).collect().map(_.getString(0)).toSeq
+    lazy val conf = statuses.sparkSession.sessionState.newHadoopConf()
     want.flatMap { topic =>
       // topic db.<database>.<collection> → _<database>_<collection>_successful.gz;
       // the expected manifest is external input — a topic without a '.'
@@ -155,15 +275,14 @@ object Delivery {
       topic.stripPrefix("db.").split("\\.", 2) match {
         case Array(db, coll) =>
           val name = s"_${db}_${coll}_successful.gz"
-          val dir = Paths.get(outDir, topic)
+          val file = new Path(new Path(outDir, topic), name)
           // retried like every other wire (reference successFilesRetried /
           // failedSuccessFiles counters — the two metrics are live, not
           // inventory placeholders)
           try graft.sources.Retry.withBackoff(attempts = 3,
             initialDelayMs = 100,
             onRetry = () => counters.foreach(_.successFileRetries.incrementAndGet())) {
-            Files.createDirectories(dir)
-            Files.write(dir.resolve(name), Crypto.emptyGzip)
+            writeFile(file.getFileSystem(conf), file, Crypto.emptyGzip)
           }
           catch { case e: Throwable =>
             counters.foreach(_.failedSuccessFiles.incrementAndGet())

@@ -1,6 +1,7 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 
 import graft.sources.Retry
 
@@ -28,15 +29,18 @@ trait DeliveryTransport extends Serializable {
   def send(file: DeliveredFile): Unit
 }
 
-/** Local-filesystem delivery: `<outDir>/<topic>/<outputName>` — the shape
+/** File-system delivery: `<outDir>/<topic>/<outputName>` — the shape
   * the reference's integration harness observes (mock-nifi writes POSTed
-  * files to /data/output, SnapshotSenderIntegrationTest.kt:50-55). */
+  * files to /data/output, SnapshotSenderIntegrationTest.kt:50-55).
+  * `outDir` is any Hadoop path or URI; the executor resolves it with the
+  * Hadoop configuration it loads itself (one `FileSystem` per executor
+  * JVM, @transient lazy like the HTTP client below). */
 final case class LocalFsTransport(outDir: String) extends DeliveryTransport {
-  override def send(file: DeliveredFile): Unit = {
-    val topicDir = Paths.get(outDir, file.topic)
-    Files.createDirectories(topicDir)
-    Files.write(topicDir.resolve(file.outputName), file.content)
-  }
+  @transient private lazy val fs = new Path(outDir).getFileSystem(new Configuration())
+
+  override def send(file: DeliveredFile): Unit =
+    Delivery.writeFile(fs,
+      new Path(new Path(outDir, file.topic), file.outputName), file.content)
 }
 
 /** HTTP delivery (reference HttpWriter.kt:44-119): POST the file bytes to

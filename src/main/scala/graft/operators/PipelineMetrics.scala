@@ -20,9 +20,11 @@ object PipelineMetrics {
 
   final class Collector extends QueryExecutionListener {
     private val store = TrieMap.empty[String, Map[String, Long]]
+    /** The highest QueryExecution id this collector has been told about. */
+    private val seen = new java.util.concurrent.atomic.AtomicLong(-1L)
 
     override def onSuccess(funcName: String, qe: QueryExecution,
-        durationNs: Long): Unit =
+        durationNs: Long): Unit = {
       qe.observedMetrics.foreach { case (name, row) =>
         val m = row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
           f -> (row.get(i) match {
@@ -34,9 +36,28 @@ object PipelineMetrics {
         }.toMap
         store.put(name, m)
       }
+      seen.accumulateAndGet(qe.id, math.max)
+    }
 
     override def onFailure(funcName: String, qe: QueryExecution,
-        exception: Exception): Unit = ()
+        exception: Exception): Unit = seen.accumulateAndGet(qe.id, math.max)
+
+    /** Returns once every query `spark` finished before this call has
+      * reached the collector. Listener delivery is asynchronous but in
+      * order, so once a probe query run now (an empty local relation —
+      * no job) is seen, every earlier one has been too. Waits at most
+      * 10 s, as [[await]] does. */
+    def catchUp(spark: SparkSession): Unit = {
+      val probe = spark.emptyDataFrame
+      probe.collect()
+      val id = probe.queryExecution.id
+      val deadline = System.currentTimeMillis() + 10000
+      while (seen.get < id) {
+        if (System.currentTimeMillis() > deadline)
+          sys.error(s"query execution $id not delivered within 10000ms")
+        Thread.sleep(1)
+      }
+    }
 
     def get(observation: String): Option[Map[String, Long]] = store.get(observation)
 

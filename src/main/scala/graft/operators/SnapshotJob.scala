@@ -1,15 +1,34 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.sources.{EncryptedSnapshotSource, KeyService}
 import graft.operators.SnapshotPipeline._
 
 /** End-to-end snapshot delivery run (reference job lifecycle — SURVEY.md
-  * §3.1): scan → topic parse/quarantine → finished anti-join → key
-  * resolution → decrypt → blocked-topic split → headers → deliver +
-  * markers → status aggregation → completion rollup.
+  * §3.1): scan → topic parse/quarantine → blocked-topic split → finished
+  * anti-join → key resolution → decrypt → headers → deliver + markers →
+  * status aggregation → completion rollup.
+  *
+  * Two Spark actions with a driver step between them, as the reference
+  * lists the prefix once, skips the finished files and streams each fresh
+  * object once:
+  *  1. the file pass — everything up to the finished anti-join, with no
+  *     `content` column, so no file's bytes are read — collects the
+  *     fresh-file manifest (one row per fresh file);
+  *  1. on the driver, each distinct data key of the manifest is resolved
+  *     once;
+  *  1. the delivery action runs over the manifest as a local relation:
+  *     each task reads its fresh files' bytes, decrypts, sends and marks
+  *     them, and returns the names it committed.
+  * The `.finished` markers are listed once, before the file pass; the
+  * statuses and the completion rollup are local relations built from
+  * that listing and the committed names, so no job runs after delivery.
+  * Markers another process writes during a run are not counted.
   *
   * Returns the per-collection status DataFrame; side effects are the
   * delivered files, `.finished` markers and success indicators under
@@ -59,6 +78,7 @@ object SnapshotJob {
       monitoring: Option[MonitoringConf],
       counters: Option[PipelineMetrics.RunCounters]): RunResult = {
 
+    val finished = Delivery.listFinished(spark, statusDir)
     val scan = Observation("graft_scan")
     val scanned = PipelineMetrics.observeScan(
       withTopic(EncryptedSnapshotSource.read(spark, inputDir)),
@@ -71,35 +91,65 @@ object SnapshotJob {
         s"strict mode: unparseable snapshot filenames: ${bad.mkString(", ")}")
     }
     val (allowed, _) = splitBlockedTopics(valid, conf.blockedTopics)
-
     val fresh = filterFinished(allowed,
-      Delivery.finishedMarkers(spark, statusDir), conf.reprocessFiles)
+      Delivery.finishedFrame(spark, finished), conf.reprocessFiles)
+    val expectedRows = expected.collect().toSeq // one row per collection
 
-    val decrypted = decrypt(resolveKeys(fresh, keys, counters))
-    val ready = PipelineMetrics.observeDelivery(nifiHeaders(decrypted, conf))
-
-    Delivery.deliverVia(ready, statusDir,
-      transport.getOrElse(LocalFsTransport(outDir)))
-    // the scan has run by now: read its counters before monitoring does
+    val committed = deliverFresh(fresh, statusDir, keys, conf,
+      transport.getOrElse(LocalFsTransport(outDir)), counters)
     val counts = PipelineMetrics.scanCounts(scanned, conf.blockedTopics, scan)
 
     // counts derived from the marker commit log, not from this run's rows:
-    // re-runs and task retries stay exactly-once-observable.
-    val sent = Delivery.sentCounts(Delivery.finishedMarkers(spark, statusDir))
-    // statuses are tiny but consumed by 4 actions → cache once (tracked:
-    // recomputing after a caller's OperatorCaches.release() is cheap)
-    val statuses = OperatorCaches.track(Delivery
-      .collectionStatus(expected, sent, conf.blockedTopics).cache())
+    // the markers listed before the run plus the ones it committed, which
+    // re-runs and task retries leave exactly-once-observable.
+    val sent = Delivery.sentCountsOf(spark, (finished ++ committed).distinct)
+    val statuses = Delivery.collectionStatusOf(spark, expected.schema,
+      expectedRows, sent, conf.blockedTopics)
     val successFiles =
       Delivery.writeSuccessIndicators(statuses, outDir, counters)
     counters.foreach(_.successFilesSent.addAndGet(successFiles.size.toLong))
     conf.statusTable.foreach(dir =>
       Delivery.upsertStatuses(statuses, dir, conf.correlationId))
-    val completion = Delivery.runCompletion(statuses, conf.correlationId)
-    monitoring.foreach(Monitoring.afterRun(_, conf, completion, Some(statuses)))
+    val completion = Delivery.runCompletionOf(statuses, conf.correlationId)
+    monitoring.foreach { m =>
+      // the observe counters reach the collector through the listener bus
+      m.metrics.foreach(_.catchUp(spark))
+      Monitoring.afterRun(m, conf, completion, Some(statuses))
+    }
 
     RunResult(statuses, completion,
       counts("files_rejected"), counts("files_valid_blocked"))
+  }
+
+  /** The delivery path shared by the batch run and every streaming
+    * micro-batch: collect `files`' manifest (`fullPath`, `length`, names,
+    * topic and key columns — no `content`, so the scan behind `files`
+    * reads no bytes), resolve each distinct data key once on the driver,
+    * then one delivery action over the manifest as a local relation:
+    * read each file's bytes ([[EncryptedSnapshotSource.withContent]]) →
+    * decrypt → NiFi headers → `graft_delivery<suffix>` observation →
+    * send + marker ([[Delivery.deliverVia]]). The session's Hadoop
+    * configuration is broadcast once, for the reads and the markers.
+    * @return the source names whose send and marker both succeeded */
+  private[graft] def deliverFresh(files: DataFrame, statusDir: String,
+      keys: KeyService, conf: DeliveryConf, transport: DeliveryTransport,
+      counters: Option[PipelineMetrics.RunCounters] = None,
+      suffix: String = ""): Seq[String] = {
+    val spark = files.sparkSession
+    val manifest = files.select(col("fullPath"), col("fileName"),
+      col("length"), col("database"), col("collection"), col("topic"),
+      col("iv"), col("dataKeyEncryptionKeyId"), col("cipherTextDataKey"))
+    val rows = manifest.collect()
+    def pair(r: Row) = (r.getString(7), r.getString(8))
+    val plain = resolveKeyPairs(rows.map(pair).toSeq, keys, counters)
+    val keyed = spark.createDataFrame(
+      rows.map(r => Row.fromSeq(r.toSeq :+ plain(pair(r)))).toSeq.asJava,
+      manifest.schema.add("plaintextDataKey", StringType))
+    val hadoopConf = Delivery.hadoopConf(spark)
+    val ready = PipelineMetrics.observeDelivery(nifiHeaders(
+      decrypt(EncryptedSnapshotSource.withContent(keyed, hadoopConf)), conf),
+      suffix)
+    Delivery.deliverVia(ready, statusDir, transport, hadoopConf)
   }
 
   /** The analytics view over a snapshot directory: fully decrypted,

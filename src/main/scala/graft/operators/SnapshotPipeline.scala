@@ -10,8 +10,8 @@ import graft.sources.KeyService
 /** The snapshot dataflow as pure DataFrame→DataFrame operators
   * (reference operators F1-F3, M1-M8 — SURVEY.md §2.2-2.3). Each stage is
   * narrow (no shuffle) except the finished-file anti-join and the
-  * distinct-key resolution, both of which shuffle only file-level rows
-  * (thousands), never record-level ones.
+  * distinct-key resolution, which touch only file-level rows (thousands),
+  * never record-level ones.
   */
 object SnapshotPipeline {
 
@@ -63,9 +63,10 @@ object SnapshotPipeline {
 
   /** F1: drop files already delivered in a previous run. The reference
     * HEADs `<statusFolder>/<key>.finished` per file
-    * (FinishedFilterProcessor.kt:17-27); here the status prefix is scanned
-    * once and the membership test becomes a left-anti join on fileName —
-    * one shuffle of file-level rows, zero per-file round-trips. */
+    * (FinishedFilterProcessor.kt:17-27); here the status prefix is listed
+    * once (`Delivery.listFinished`) and the membership test becomes a
+    * left-anti join on fileName against that small relation, which the
+    * planner broadcasts — zero per-file round-trips. */
   def filterFinished(df: DataFrame, finished: DataFrame, reprocess: Boolean): DataFrame =
     if (reprocess) df // reprocess.files=true bypass (FinishedFilterProcessor.kt:19)
     else df.join(finished.select(col("finishedFileName").as("fileName")),
@@ -73,10 +74,10 @@ object SnapshotPipeline {
 
   /** M1: data-key resolution. distinct (keyId, cipherText) pairs — a
     * handful per run, all files of a topic share one key — resolved on
-    * the driver through the KeyService (with its own retry/backoff), then
-    * broadcast-joined back. Same asymptotics as the reference's memo
-    * cache (HttpKeyService.kt:48-73), but cluster-safe: N files cost
-    * ~1 service call per distinct key, not N. */
+    * the driver through [[resolveKeyPairs]], then broadcast-joined back.
+    * Same asymptotics as the reference's memo cache
+    * (HttpKeyService.kt:48-73), but cluster-safe: N files cost ~1 service
+    * call per distinct key, not N. */
   def resolveKeys(df: DataFrame, keys: KeyService,
       counters: Option[PipelineMetrics.RunCounters] = None): DataFrame = {
     val spark = df.sparkSession
@@ -86,13 +87,26 @@ object SnapshotPipeline {
       .distinct()
       .as[(String, String)]
       .collect() // intentionally driver-side: cardinality == #data keys
-    val resolved = distinctKeys.map { case (keyId, cipher) =>
-      (keyId, cipher, keys.decryptKey(keyId, cipher))
-    }.toSeq.toDF("dataKeyEncryptionKeyId", "cipherTextDataKey", "plaintextDataKey")
+    val resolved = resolveKeyPairs(distinctKeys.toSeq, keys, counters).toSeq
+      .map { case ((keyId, cipher), plain) => (keyId, cipher, plain) }
+      .toDF("dataKeyEncryptionKeyId", "cipherTextDataKey", "plaintextDataKey")
+    df.join(broadcast(resolved), Seq("dataKeyEncryptionKeyId", "cipherTextDataKey"))
+  }
+
+  /** M1's service side: one [[KeyService]] call (with the service's own
+    * retry/backoff) per distinct (keyId, cipherText) pair, on the driver.
+    * @return pair → base64 plaintext data key */
+  def resolveKeyPairs(pairs: Seq[(String, String)], keys: KeyService,
+      counters: Option[PipelineMetrics.RunCounters] = None)
+      : Map[(String, String), String] = {
+    val distinct = pairs.distinct
+    val resolved = distinct.map { case p @ (keyId, cipher) =>
+      p -> keys.decryptKey(keyId, cipher)
+    }.toMap
     // one increment per key actually resolved this run — the memo-cached
     // distinct set, service-agnostic (reference keysDecryptedCounter)
-    counters.foreach(_.dksKeysDecrypted.addAndGet(distinctKeys.length.toLong))
-    df.join(broadcast(resolved), Seq("dataKeyEncryptionKeyId", "cipherTextDataKey"))
+    counters.foreach(_.dksKeysDecrypted.addAndGet(distinct.length.toLong))
+    resolved
   }
 
   /** M2 + M5: AES-CTR decrypt and strip the `.enc` suffix. Narrow, stays

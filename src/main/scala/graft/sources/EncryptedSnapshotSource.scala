@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.SnapshotPipeline.fileNameFromPath
 
@@ -32,6 +35,11 @@ import graft.operators.SnapshotPipeline.fileNameFromPath
   * Scale note: the metadata side is tiny (one short JSON per file) and is
   * broadcast; the content side never shuffles — everything downstream
   * until the record explode is narrow.
+  *
+  * A plan that never selects `content` does not read it (`binaryFile`
+  * prunes the column). Delivery relies on that: its file pass collects a
+  * content-free manifest, and [[withContent]] reads the bytes of the
+  * fresh files only, in the tasks that send them.
   */
 object EncryptedSnapshotSource {
 
@@ -61,6 +69,25 @@ object EncryptedSnapshotSource {
         col("length"),
         col("content"))
       .join(broadcast(readMeta(files.sparkSession, dir)), Seq("fileName"), "left")
+
+  /** Adds `content` (BINARY) to rows that carry `fullPath` and `length`:
+    * each file read whole through the Hadoop `FileSystem` API, with the
+    * broadcast configuration, inside the task that consumes the row —
+    * the bytes `binaryFile` would have read, for these rows only. */
+  def withContent(files: DataFrame,
+      conf: Broadcast[SerializableConfiguration]): DataFrame = {
+    val pathAt = files.schema.fieldIndex("fullPath")
+    val lengthAt = files.schema.fieldIndex("length")
+    files.mapPartitions { rows: Iterator[Row] =>
+      rows.map { r =>
+        val p = new Path(r.getString(pathAt))
+        val bytes = new Array[Byte](Math.toIntExact(r.getLong(lengthAt)))
+        val in = p.getFileSystem(conf.value.value).open(p)
+        try in.readFully(bytes) finally in.close()
+        Row.fromSeq(r.toSeq :+ bytes)
+      }
+    }(Encoders.row(files.schema.add("content", BinaryType)))
+  }
 
   /** Sidecar metadata scan. A directory with no sidecars reads as zero
     * rows (the user schema spares schema inference), so a legitimately

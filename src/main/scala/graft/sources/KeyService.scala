@@ -11,11 +11,16 @@ import graft.functions.Crypto
   *
   * The reference POSTs each (keyId, ciphertextDataKey) pair to an external
   * Data Key Service with a per-key memo cache and exponential-backoff
-  * retry. In Spark the cache becomes structural: the pipeline resolves
-  * `distinct(keyId, cipherTextKey)` — a handful of rows — on the driver
-  * and broadcast-joins the plaintext back (SURVEY.md §3.2). The trait is
-  * the seam where a real HTTP client would plug in; retry/backoff lives
-  * in [[Retry]] so any impl gets it.
+  * retry. In Spark the cache becomes structural: each distinct
+  * `(keyId, cipherTextKey)` pair — a handful per run — costs one call, on
+  * the driver (`SnapshotPipeline.resolveKeyPairs`, SURVEY.md §3.2). A
+  * delivery run takes the pairs from its collected fresh-file manifest
+  * and ships each plaintext key in the manifest rows of the delivery
+  * action; the records view collects the distinct pairs from its plan
+  * and broadcast-joins the plaintext back. Either way `decrypt` drops the
+  * plaintext key once used. The trait is the seam where a real HTTP
+  * client would plug in; retry/backoff lives in [[Retry]] so any impl
+  * gets it.
   */
 trait KeyService extends Serializable {
   /** @return base64 plaintext data key */

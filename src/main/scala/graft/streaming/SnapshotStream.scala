@@ -4,14 +4,15 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.Delivery
+import graft.operators.{Delivery, LocalFsTransport, SnapshotJob}
 import graft.operators.SnapshotPipeline._
 import graft.sources.{EncryptedSnapshotSource, KeyService}
 
 /** The snapshot pipeline as a CONTINUOUS stream: new encrypted objects
   * appearing under the input prefix are discovered by the file source,
   * flow through the SAME stage functions as the batch job, and are
-  * delivered per micro-batch via foreachBatch. The streaming checkpoint
+  * delivered per micro-batch via foreachBatch through the batch job's
+  * delivery path (`SnapshotJob.deliverFresh`). The streaming checkpoint
   * supersedes the `.finished`-marker anti-join for restart semantics (the
   * markers are still written — downstream consumers and batch re-runs
   * keep their commit log).
@@ -66,11 +67,11 @@ object SnapshotStream {
         // blocked files are consumed exactly once by the checkpoint too —
         // record a .blocked marker (same rationale as .quarantined above)
         Delivery.writeBlockedMarkers(blocked, statusDir)
-        val ready = graft.operators.PipelineMetrics.observeDelivery(
-          nifiHeaders(decrypt(resolveKeys(allowed, keys)), conf),
+        // the batch job's delivery path: a content-free manifest, keys
+        // resolved once, the fresh bytes read by the tasks that send them
+        SnapshotJob.deliverFresh(allowed, statusDir, keys, conf,
+          transport.getOrElse(LocalFsTransport(outDir)),
           suffix = s"_b$batchId")
-        Delivery.deliverVia(ready, statusDir,
-          transport.getOrElse(graft.operators.LocalFsTransport(outDir)))
         ()
       }
       .start()

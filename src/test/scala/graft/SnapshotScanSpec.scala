@@ -89,7 +89,11 @@ class SnapshotScanSpec extends SparkSuite {
       jobs
     }
     runJobs(20) // warm-up: first-run-only work (codegen, registration)
-    assert(runJobs(20) == runJobs(60))
+    val (small, large) = (runJobs(20), runJobs(60))
+    assert(small == large)
+    // the file pass (its broadcasts and the manifest collect) and the
+    // delivery action; nothing after it
+    assert(small <= 5, s"$small jobs per run")
   }
 
   test("quarantined and blocked stay exact: an orphan in a blocked topic") {
