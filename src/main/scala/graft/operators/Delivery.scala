@@ -2,11 +2,16 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.util.UUID
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd,
+  SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
@@ -78,6 +83,9 @@ object Delivery {
     * non-null fields travel to the transport as the header map (FS
     * delivery ignores it).
     *
+    * Returns or throws only once every task of the delivery action has
+    * ended, a failed one's still-running tasks included.
+    *
     * @return the source file names whose send and marker both
     *         succeeded, collected from the tasks that succeeded */
   def deliverVia(files: DataFrame, statusDir: String,
@@ -87,25 +95,53 @@ object Delivery {
   private[graft] def deliverVia(files: DataFrame, statusDir: String,
       transport: DeliveryTransport,
       conf: Broadcast[SerializableConfiguration]): Seq[String] =
-    files.select(col("topic"), col("outputName"), col("sourceFileName"),
-        col("content"), col("headers"))
-      .mapPartitions { rows: Iterator[Row] =>
-        val st = new Path(statusDir)
-        val fs = st.getFileSystem(conf.value.value)
-        rows.map { r =>
-          val h = r.getStruct(4)
-          val headers = h.schema.fieldNames.zipWithIndex.collect {
-            case (name, i) if !h.isNullAt(i) => name -> h.get(i).toString
-          }.toMap
-          val fileName = r.getString(2)
-          transport.send(DeliveredFile(r.getString(0), r.getString(1),
-            fileName, r.getAs[Array[Byte]](3), headers))
-          writeFile(fs, new Path(st, s"$fileName.finished"),
-            s"Finished $fileName".getBytes(StandardCharsets.UTF_8))
-          fileName
-        }
-      }(Encoders.STRING)
-      .collect().toSeq
+    awaitingTasks(files.sparkSession.sparkContext) {
+      files.select(col("topic"), col("outputName"), col("sourceFileName"),
+          col("content"), col("headers"))
+        .mapPartitions { rows: Iterator[Row] =>
+          val st = new Path(statusDir)
+          val fs = st.getFileSystem(conf.value.value)
+          rows.map { r =>
+            val h = r.getStruct(4)
+            val headers = h.schema.fieldNames.zipWithIndex.collect {
+              case (name, i) if !h.isNullAt(i) => name -> h.get(i).toString
+            }.toMap
+            val fileName = r.getString(2)
+            transport.send(DeliveredFile(r.getString(0), r.getString(1),
+              fileName, r.getAs[Array[Byte]](3), headers))
+            writeFile(fs, new Path(st, s"$fileName.finished"),
+              s"Finished $fileName".getBytes(StandardCharsets.UTF_8))
+            fileName
+          }
+        }(Encoders.STRING)
+        .collect().toSeq
+    }
+
+  /** Runs `action`, whose Spark jobs start from this thread, and returns
+    * or throws only once every task those jobs started has ended. A
+    * failed job returns as soon as one task fails, while the job's other
+    * tasks may be mid-send: each stops only after the file it is on, and
+    * writes that file's marker first. Waiting for them leaves those
+    * markers in place before a caller can re-run, so a re-run does not
+    * send the files again. A job that succeeded has ended its tasks,
+    * unless `spark.speculation` left a second copy of one running. */
+  private def awaitingTasks[T](sc: SparkContext)(action: => T): T = {
+    val tasks = new StartedTasks(UUID.randomUUID().toString)
+    sc.addSparkListener(tasks)
+    val outer = sc.getLocalProperty(StartedTasks.TagKey)
+    sc.setLocalProperty(StartedTasks.TagKey, tasks.tag)
+    var returned = false
+    try {
+      val out = action
+      returned = true
+      out
+    } finally {
+      sc.setLocalProperty(StartedTasks.TagKey, outer)
+      try if (!returned || sc.getConf.getBoolean("spark.speculation", false))
+        tasks.awaitEnded(sc)
+      finally sc.removeSparkListener(tasks)
+    }
+  }
 
   /** Quarantine side-channel: one `.quarantined` marker per rejected file
     * (streaming mode needs this — the source checkpoint consumes objects
@@ -346,4 +382,51 @@ object Delivery {
         struct(lit("Correlation Id").as("key"), col("correlationId").as("value")),
         struct(lit("Snapshot type").as("key"), lit(snapshotType).as("value"))
       ).as("custom_elements")).as("payload")))
+}
+
+/** Counts the tasks started and not yet ended by the jobs whose local
+  * property [[StartedTasks.TagKey]] is `tag`. */
+private final class StartedTasks(val tag: String) extends SparkListener {
+  private val stages = mutable.Set.empty[Int]
+  private var open = 0
+  private var flushed = false
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    val props = Option(e.properties)
+    if (props.exists(_.getProperty(StartedTasks.TagKey) == tag)) stages ++= e.stageIds
+    if (props.exists(_.getProperty(StartedTasks.ProbeKey) == tag)) {
+      flushed = true
+      notifyAll()
+    }
+  }
+
+  override def onTaskStart(e: SparkListenerTaskStart): Unit = synchronized {
+    if (stages(e.stageId)) open += 1
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    if (stages(e.stageId)) {
+      open -= 1
+      notifyAll()
+    }
+  }
+
+  /** Waits until every task start seen has its end. The listener bus
+    * delivers events in the order they were posted, so once an empty
+    * probe job, started now, has been seen here, so has every task start
+    * of the jobs that ran before it. */
+  def awaitEnded(sc: SparkContext): Unit = {
+    if (sc.isStopped) return
+    sc.setLocalProperty(StartedTasks.ProbeKey, tag)
+    try sc.runJob(sc.emptyRDD[Int], (_: Iterator[Int]) => ())
+    finally sc.setLocalProperty(StartedTasks.ProbeKey, null)
+    synchronized {
+      while (!(flushed && open == 0) && !sc.isStopped) wait(100)
+    }
+  }
+}
+
+private object StartedTasks {
+  val TagKey = "graft.delivery.tasks"
+  val ProbeKey = "graft.delivery.probe"
 }

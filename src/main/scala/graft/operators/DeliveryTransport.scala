@@ -93,8 +93,14 @@ final case class HttpTransport(
         .header("Content-Type", "application/octet-stream")
         .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(file.content))
       file.headers.foreach { case (k, v) => builder.header(k, v) }
-      val resp = client.send(builder.build(),
-        java.net.http.HttpResponse.BodyHandlers.discarding())
+      // `join`, not `send`: a cancelled Spark task is interrupted, and an
+      // interrupted `send` returns at once while its request may still
+      // reach the receiver after the task, and the run, have ended. `join`
+      // waits for the answer (at most `timeoutMs`) and keeps the interrupt.
+      val resp = try client.sendAsync(builder.build(),
+          java.net.http.HttpResponse.BodyHandlers.discarding()).join()
+        catch { case e: java.util.concurrent.CompletionException if e.getCause != null =>
+          throw e.getCause }
       if (resp.statusCode() != 200)
         throw new RuntimeException(
           s"Failed to post '${file.sourceFileName}': post returned " +

@@ -122,41 +122,58 @@ object SnapshotJob {
   }
 
   /** The delivery path shared by the batch run and every streaming
-    * micro-batch: collect `files`' manifest (`fullPath`, `length`, names,
-    * topic and key columns — no `content`, so the scan behind `files`
-    * reads no bytes), resolve each distinct data key once on the driver,
-    * then one delivery action over the manifest as a local relation:
-    * read each file's bytes ([[EncryptedSnapshotSource.withContent]]) →
-    * decrypt → NiFi headers → `graft_delivery<suffix>` observation →
-    * send + marker ([[Delivery.deliverVia]]). The session's Hadoop
-    * configuration is broadcast once, for the reads and the markers.
+    * micro-batch: one delivery action over `files`' keyed manifest
+    * ([[keyedManifest]]): read each file's bytes
+    * ([[EncryptedSnapshotSource.withContent]]) → decrypt → NiFi headers →
+    * `graft_delivery<suffix>` observation → send + marker
+    * ([[Delivery.deliverVia]]). The session's Hadoop configuration is
+    * broadcast once, for the reads and the markers.
     * @return the source names whose send and marker both succeeded */
   private[graft] def deliverFresh(files: DataFrame, statusDir: String,
       keys: KeyService, conf: DeliveryConf, transport: DeliveryTransport,
       counters: Option[PipelineMetrics.RunCounters] = None,
       suffix: String = ""): Seq[String] = {
-    val spark = files.sparkSession
-    val manifest = files.select(col("fullPath"), col("fileName"),
-      col("length"), col("database"), col("collection"), col("topic"),
-      col("iv"), col("dataKeyEncryptionKeyId"), col("cipherTextDataKey"))
-    val rows = manifest.collect()
-    def pair(r: Row) = (r.getString(7), r.getString(8))
-    val plain = resolveKeyPairs(rows.map(pair).toSeq, keys, counters)
-    val keyed = spark.createDataFrame(
-      rows.map(r => Row.fromSeq(r.toSeq :+ plain(pair(r)))).toSeq.asJava,
-      manifest.schema.add("plaintextDataKey", StringType))
-    val hadoopConf = Delivery.hadoopConf(spark)
-    val ready = PipelineMetrics.observeDelivery(nifiHeaders(
-      decrypt(EncryptedSnapshotSource.withContent(keyed, hadoopConf)), conf),
-      suffix)
+    val hadoopConf = Delivery.hadoopConf(files.sparkSession)
+    val ready = PipelineMetrics.observeDelivery(nifiHeaders(decrypt(
+      EncryptedSnapshotSource.withContent(keyedManifest(files, keys, counters),
+        hadoopConf)), conf), suffix)
     Delivery.deliverVia(ready, statusDir, transport, hadoopConf)
   }
 
   /** The analytics view over a snapshot directory: fully decrypted,
-    * decompressed, one typed row per MongoDB document. */
+    * decompressed, one typed row per MongoDB document. Defining it runs
+    * the file pass of [[run]] — a content-free scan → sidecars → topic
+    * parse → quarantine → collect the manifest → one key call per
+    * distinct data key ([[keyedManifest]]) — so the view itself is one
+    * job over the manifest as a local relation: each task reads its
+    * files' bytes → decrypt → one row per JSON line → typed record. The
+    * columns are those of
+    * `parseRecords(explodeRecords(decrypt(resolveKeys(valid, keys))))`. */
   def records(spark: SparkSession, inputDir: String, keys: KeyService): DataFrame = {
-    val scanned = withTopic(EncryptedSnapshotSource.read(spark, inputDir))
-    val (valid, _) = quarantine(scanned)
-    parseRecords(explodeRecords(decrypt(resolveKeys(valid, keys))))
+    val (valid, _) = quarantine(withTopic(EncryptedSnapshotSource.read(spark, inputDir)))
+    parseRecords(explodeRecords(decrypt(EncryptedSnapshotSource.withContent(
+      keyedManifest(valid, keys), Delivery.hadoopConf(spark)))))
+  }
+
+  /** The manifest's columns, in the order the records view keeps. */
+  private val manifestColumns = Seq("dataKeyEncryptionKeyId",
+    "cipherTextDataKey", "fileName", "fullPath", "length", "iv", "database",
+    "collection", "topic")
+
+  /** Collects `files`' manifest — one row per file, no `content`, so the
+    * scan behind `files` reads no bytes — resolves each distinct data key
+    * once on the driver ([[SnapshotPipeline.resolveKeyPairs]]), and
+    * returns the manifest with `plaintextDataKey` added as a local
+    * relation. Spark slices a local relation by row count, one file per
+    * row. */
+  private def keyedManifest(files: DataFrame, keys: KeyService,
+      counters: Option[PipelineMetrics.RunCounters] = None): DataFrame = {
+    val manifest = files.select(manifestColumns.map(col): _*)
+    val rows = manifest.collect()
+    def pair(r: Row) = (r.getString(0), r.getString(1))
+    val plain = resolveKeyPairs(rows.map(pair).toSeq, keys, counters)
+    files.sparkSession.createDataFrame(
+      rows.map(r => Row.fromSeq(r.toSeq :+ plain(pair(r)))).toSeq.asJava,
+      manifest.schema.add("plaintextDataKey", StringType))
   }
 }

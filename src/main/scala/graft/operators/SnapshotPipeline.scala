@@ -72,12 +72,15 @@ object SnapshotPipeline {
     else df.join(finished.select(col("finishedFileName").as("fileName")),
       Seq("fileName"), "left_anti")
 
-  /** M1: data-key resolution. distinct (keyId, cipherText) pairs — a
-    * handful per run, all files of a topic share one key — resolved on
+  /** M1 as a stage of its own: distinct (keyId, cipherText) pairs —
+    * a handful per run, all files of a topic share one key — resolved on
     * the driver through [[resolveKeyPairs]], then broadcast-joined back.
-    * Same asymptotics as the reference's memo cache
-    * (HttpKeyService.kt:48-73), but cluster-safe: N files cost ~1 service
-    * call per distinct key, not N. */
+    * Neither `SnapshotJob.run` nor `SnapshotJob.records` calls it: both
+    * resolve the pairs of the manifest they have already collected, with
+    * no distinct shuffle and no broadcast. It stays as the entry point
+    * that times key resolution alone. Same asymptotics as the
+    * reference's memo cache (HttpKeyService.kt:48-73): N files cost ~1
+    * service call per distinct key, not N. */
   def resolveKeys(df: DataFrame, keys: KeyService,
       counters: Option[PipelineMetrics.RunCounters] = None): DataFrame = {
     val spark = df.sparkSession

@@ -1,14 +1,16 @@
 package graft.plans
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExprUtils, Expression, StringDecode, TernaryExpression, TimeZoneAwareExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExprUtils, Expression, GenericInternalRow, StringDecode, TernaryExpression, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
-import org.apache.spark.sql.catalyst.util.{ArrayData, FailureSafeParser, GenericArrayData, PermissiveMode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, FailureSafeParser, GenericArrayData, PermissiveMode, ResolveDefaultColumns}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType, StructType}
@@ -222,12 +224,13 @@ case class GunzipLines(
 }
 
 /** `from_json(line, schema)` over the line's UTF-8 bytes. It builds the
-  * parser exactly as Spark's `JsonToStructsEvaluator` does: no options,
-  * the session time zone, `spark.sql.columnNameOfCorruptRecord`,
-  * PERMISSIVE mode, `allowArrayAsStructs = false`, null in → null out.
-  * The one difference is the source: Jackson reads the line's byte range
-  * through its byte-stream parser, not through an `InputStreamReader`
-  * (and its 8 KiB decoder) per record. */
+  * parser as Spark's `JsonToStructsEvaluator` does: no options, the
+  * session time zone, `spark.sql.columnNameOfCorruptRecord`, PERMISSIVE
+  * mode, `allowArrayAsStructs = false`, null in → null out. The
+  * difference is the source: Jackson reads the line's byte range through
+  * its byte-stream parser, not through an `InputStreamReader` (and its
+  * 8 KiB decoder) per record, and most lines are read by a decoder built
+  * once per task ([[JsonBytesParser]]). */
 case class ParseJsonBytes(
     schema: StructType,
     child: Expression,
@@ -267,25 +270,146 @@ case class ParseJsonBytes(
 }
 
 /** The per-task parser behind [[ParseJsonBytes]]; serialized into the
-  * generated code's references, built lazily where it runs. */
+  * generated code's references, built lazily where it runs.
+  *
+  * A line that is exactly one JSON object, and whose every field converts
+  * cleanly, is read by [[StructDecoder]]s built once per task. Every
+  * other line — malformed, a converter that throws, a non-object where a
+  * struct is expected, tokens after the object — and every line of a
+  * schema the decoders do not cover (one that carries the corrupt-record
+  * column, existence defaults or a repeated field name, or unsafe-row
+  * output) goes through Spark's own `FailureSafeParser`, as before. Both
+  * use one `JacksonParser`'s leaf converters, so a row equals what
+  * `from_json` gives by construction. */
 final class JsonBytesParser(schema: StructType, timeZoneId: String, corruptColumn: String)
     extends Serializable {
 
-  @transient private lazy val parser: FailureSafeParser[UTF8String] = {
-    val options = new JSONOptions(Map.empty[String, String], timeZoneId, corruptColumn)
-    val actual = StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord))
-    val raw = new JacksonParser(actual, options, allowArrayAsStructs = false)
+  @transient private lazy val options =
+    new JSONOptions(Map.empty[String, String], timeZoneId, corruptColumn)
+
+  /** Spark's parser, built as `from_json` builds it but for one setting.
+    * For a non-string value in a STRING field, Spark keeps the value's
+    * source text when its parser reads a byte array
+    * (`spark.sql.json.enableExactStringParsing`), and re-writes the value
+    * when it reads through a `Reader`, as `from_json`'s does: `1e3` reads
+    * as "1000.0", `{ "a" : 1 }` as `{"a":1}`. With that setting off, the
+    * byte-stream parser re-writes the value too. */
+  @transient private lazy val raw = {
+    val conf = new SQLConf // a task's own conf is read-only
+    SQLConf.get.getAllConfs.foreach { case (k, v) => conf.setConfString(k, v) }
+    conf.setConf(SQLConf.JSON_EXACT_STRING_PARSING, false)
+    SQLConf.withExistingConf(conf)(new JacksonParser(
+      StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord)),
+      options, allowArrayAsStructs = false))
+  }
+
+  @transient private lazy val parser: FailureSafeParser[UTF8String] =
     new FailureSafeParser[UTF8String](
       line => raw.parse(line, JsonBytesParser.open, identity[UTF8String]),
       PermissiveMode, schema, options.columnNameOfCorruptRecord)
-  }
+
+  /** null when every line takes [[parser]]. */
+  @transient private lazy val decoder: StructDecoder =
+    if (options.useUnsafeRow || !StructDecoder.covers(schema) ||
+        schema.exists(_.name == options.columnNameOfCorruptRecord)) null
+    else StructDecoder(schema, raw)
+
+  @transient private lazy val factory = options.buildJsonFactory()
 
   def parse(line: UTF8String): InternalRow =
     if (line == null) null
     else {
-      val rows = parser.parse(line)
-      if (rows.hasNext) rows.next() else null
+      val row = decode(line)
+      if (row != null) row
+      else {
+        val rows = parser.parse(line)
+        if (rows.hasNext) rows.next() else null
+      }
     }
+
+  /** The row of a line that is exactly one JSON object whose fields all
+    * converted cleanly; null for any other line, which [[parse]] hands
+    * to Spark's parser. */
+  private[graft] def decode(line: UTF8String): InternalRow =
+    if (decoder == null) null
+    else {
+      val p = JsonBytesParser.open(factory, line)
+      try {
+        if (p.nextToken() != JsonToken.START_OBJECT) null
+        else {
+          val row = decoder.read(p)
+          if (row != null && p.nextToken() == null) row else null
+        }
+      } catch { case NonFatal(_) => null }
+      finally p.close()
+    }
+}
+
+/** One struct level of [[JsonBytesParser]]'s per-task decoder: the
+  * field-name → index map, a decoder for each struct-typed field, and
+  * Spark's own converter (`JacksonParser.makeConverter`) for every other
+  * field. Spark's `convertObject` re-derives filters and existence
+  * defaults for each struct of each record; this is built once. */
+private final class StructDecoder(
+    size: Int,
+    index: java.util.HashMap[String, Integer],
+    structs: Array[StructDecoder],
+    leaves: Array[JsonParser => AnyRef]) {
+
+  /** Reads the object whose START_OBJECT `p` stands on, as Spark's
+    * `convertObject` does: unknown keys are skipped and a repeated key's
+    * last value wins. null if a struct-typed field holds neither an
+    * object nor null, which Spark's own path decides; a leaf converter
+    * that fails throws. */
+  def read(p: JsonParser): InternalRow = {
+    val row = new GenericInternalRow(size)
+    var t = p.nextToken()
+    while (t == JsonToken.FIELD_NAME) {
+      val i = index.get(p.currentName)
+      t = p.nextToken()
+      if (i == null) p.skipChildren()
+      else {
+        val at = i.intValue
+        val struct = structs(at)
+        if (struct == null) row.update(at, leaves(at)(p))
+        else if (t == JsonToken.START_OBJECT) {
+          val nested = struct.read(p)
+          if (nested == null) return null
+          row.update(at, nested)
+        } else if (t == JsonToken.VALUE_NULL) row.update(at, null)
+        else return null
+      }
+      t = p.nextToken()
+    }
+    if (t == JsonToken.END_OBJECT) row else null
+  }
+}
+
+private object StructDecoder {
+  /** Whether decoders cover `st`: neither it nor a struct directly inside
+    * it repeats a field name or carries existence defaults, which Spark's
+    * own path resolves. */
+  def covers(st: StructType): Boolean =
+    st.fieldNames.distinct.length == st.length &&
+      !ResolveDefaultColumns.hasExistenceDefaultValues(st) &&
+      st.fields.forall(_.dataType match {
+        case s: StructType => covers(s)
+        case _ => true
+      })
+
+  def apply(st: StructType, raw: JacksonParser): StructDecoder = {
+    val index = new java.util.HashMap[String, Integer]()
+    st.fieldNames.zipWithIndex.foreach { case (n, i) => index.put(n, i) }
+    new StructDecoder(st.length, index,
+      st.fields.map(_.dataType match {
+        case s: StructType => apply(s, raw)
+        case _ => null
+      }),
+      st.fields.map(_.dataType match {
+        case _: StructType => null
+        case dt => raw.makeConverter(dt)
+      }))
+  }
 }
 
 object JsonBytesParser {

@@ -37,9 +37,9 @@ import graft.operators.SnapshotPipeline.fileNameFromPath
   * until the record explode is narrow.
   *
   * A plan that never selects `content` does not read it (`binaryFile`
-  * prunes the column). Delivery relies on that: its file pass collects a
-  * content-free manifest, and [[withContent]] reads the bytes of the
-  * fresh files only, in the tasks that send them.
+  * prunes the column). Delivery and the records view rely on that: their
+  * file pass collects a content-free manifest, and [[withContent]] reads
+  * the bytes of the manifest's files only, in the tasks that use them.
   */
 object EncryptedSnapshotSource {
 

@@ -88,9 +88,11 @@ object Retry {
   * with exponential backoff. Per-JVM memo cache keyed on
   * (ciphertext, keyId), as the reference caches (decryptedKeyCache).
   *
-  * The pipeline calls this on the DRIVER only (distinct key set →
-  * broadcast, SnapshotPipeline.resolveKeys), so one client instance and
-  * one cache see every request of a run. */
+  * The pipeline calls this on the DRIVER only, once per distinct pair of
+  * the collected manifest (SnapshotPipeline.resolveKeyPairs, from
+  * SnapshotJob's delivery path and records view, or from the
+  * stand-alone SnapshotPipeline.resolveKeys stage), so one client
+  * instance and one cache see every request of a run. */
 final class HttpKeyService(baseUrl: String, maxAttempts: Int = 5,
     initialDelayMs: Long = 1000,
     /** mutual TLS to the DKS — the reference's DKS wire always rides the
@@ -98,7 +100,7 @@ final class HttpKeyService(baseUrl: String, maxAttempts: Int = 5,
       * (its insecureHttpClient test profile). */
     tls: Option[TlsConfig] = None,
     /** run counters: DKS retry increments (driver-side — this client is
-      * only ever called from resolveKeys on the driver). */
+      * only ever called from resolveKeyPairs on the driver). */
     counters: Option[graft.operators.PipelineMetrics.RunCounters] = None)
   extends KeyService {
 

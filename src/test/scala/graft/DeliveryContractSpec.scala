@@ -4,14 +4,12 @@ import java.io.{File, IOException}
 import java.net.{InetSocketAddress, URI}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
@@ -33,6 +31,28 @@ final case class FaultyTransport(inner: DeliveryTransport, failing: Set[String],
     if (fail && afterSend)
       throw new IOException(s"injected failure after sending ${file.sourceFileName}")
   }
+}
+
+/** The first send to start sleeps `slowMs`, then sends; a send on any
+  * other thread throws, failing its task while the slow one is in flight.
+  * The state is per JVM: tasks of a local session share it. */
+final case class SlowThenFailTransport(inner: DeliveryTransport, slowMs: Long)
+    extends DeliveryTransport {
+  override def send(file: DeliveredFile): Unit = {
+    val me = Thread.currentThread
+    if (SlowThenFailTransport.slowThread.compareAndSet(null, me)) {
+      SlowThenFailTransport.slowFile.set(file.sourceFileName)
+      Thread.sleep(slowMs)
+      inner.send(file)
+    } else if (SlowThenFailTransport.slowThread.get eq me) inner.send(file)
+    else throw new IOException(s"injected failure: ${file.sourceFileName} while a send is in flight")
+  }
+}
+
+object SlowThenFailTransport {
+  val slowThread = new AtomicReference[Thread]
+  val slowFile = new AtomicReference[String]
+  def reset(): Unit = { slowThread.set(null); slowFile.set(null) }
 }
 
 /** The delivery contract under failure: a marker is written only after
@@ -85,39 +105,6 @@ class DeliveryContractSpec extends SparkSuite {
     Paths.get(status).toFile.listFiles().map(_.getName)
       .filter(_.endsWith(".finished")).map(_.stripSuffix(".finished")).toSet
 
-  /** Tasks started and not yet ended. A failed job returns before its
-    * other tasks have stopped, and each may still finish the send (and
-    * marker) it is in; the spec lists the markers only once they have. */
-  private final class OpenTasks extends SparkListener {
-    private val open = new AtomicInteger
-    private val probeJob = new AtomicInteger(-1)
-    @volatile private var probeEnded = false
-    override def onTaskStart(e: SparkListenerTaskStart): Unit = open.incrementAndGet()
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = open.decrementAndGet()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty(probe) != null))
-        probeJob.set(e.jobId)
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (e.jobId == probeJob.get) probeEnded = true
-
-    /** Listener delivery is in order, so once a job run now has ended
-      * here, every earlier task start has been seen: then wait for the
-      * ends. */
-    def awaitNone(): Unit = {
-      val sc = spark.sparkContext
-      probeEnded = false
-      sc.setLocalProperty(probe, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(probe, null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!probeEnded || open.get > 0) {
-        assert(System.currentTimeMillis() < deadline, s"${open.get} tasks still open")
-        Thread.sleep(5)
-      }
-    }
-  }
-  private val probe = "graft.test.probe"
-
   private sealed trait Fault
   private case object BeforeSend extends Fault
   private case object AfterSend extends Fault
@@ -127,8 +114,7 @@ class DeliveryContractSpec extends SparkSuite {
     Gen.atLeastOne(sources).map(_.toSet)
 
   /** One failure schedule, then a healthy re-run. */
-  private def faultThenRerun(rx: Receiver, tasks: OpenTasks, fault: Fault,
-      failing: Set[String]): Prop = {
+  private def faultThenRerun(rx: Receiver, fault: Fault, failing: Set[String]): Prop = {
     rx.reset()
     val status = Files.createTempDirectory("graft-contract-status").toString
     val out = Files.createTempDirectory("graft-contract-out").toString
@@ -140,9 +126,10 @@ class DeliveryContractSpec extends SparkSuite {
         failing.foreach(s => rx.rejecting.add(outputName(s)))
         http
     }
+    // the run returns only once its tasks have ended, so the markers a
+    // failed run wrote are all in place when it throws
     val first = Try(SnapshotJob.run(spark, fixtureDir, out, status, expected,
       LocalKeyService, transport = Some(faulty)))
-    tasks.awaitNone()
     val delivered = sources.filter(s => rx.accepted.containsKey(outputName(s))).toSet
     val marked = markers(status)
 
@@ -166,8 +153,6 @@ class DeliveryContractSpec extends SparkSuite {
   /** 3 + 3 + 2 generated cases, reproducible from a fixed seed. */
   test("failure schedules keep the marker contract across a healthy re-run") {
     val rx = new Receiver
-    val tasks = new OpenTasks
-    spark.sparkContext.addSparkListener(tasks)
     try Seq(BeforeSend -> 3, AfterSend -> 3, Non200 -> 2).foreach {
       case (fault, cases) =>
         val params = Test.Parameters.default
@@ -175,13 +160,32 @@ class DeliveryContractSpec extends SparkSuite {
           .withWorkers(1)
           .withInitialSeed(Seed(20261019L))
         val result = Test.check(params,
-          Prop.forAllNoShrink(schedule)(faultThenRerun(rx, tasks, fault, _)))
+          Prop.forAllNoShrink(schedule)(faultThenRerun(rx, fault, _)))
         assert(result.passed, s"$fault: ${Pretty.pretty(result)}")
     }
-    finally {
-      spark.sparkContext.removeSparkListener(tasks)
-      rx.stop()
-    }
+    finally rx.stop()
+  }
+
+  test("a failed run returns after its other tasks: a send in flight is marked, not re-sent") {
+    val rx = new Receiver
+    try {
+      val status = Files.createTempDirectory("graft-contract-slow-status").toString
+      val out = Files.createTempDirectory("graft-contract-slow-out").toString
+      val http = HttpTransport(rx.url, maxAttempts = 1, initialDelayMs = 1)
+      SlowThenFailTransport.reset()
+      // a cancelled task is then not interrupted: it ends after the file
+      // it is on, as a task in a send that ignores interrupts does
+      spark.conf.set("spark.sql.execution.interruptOnCancel", "false")
+      val first = try Try(SnapshotJob.run(spark, fixtureDir, out, status, expected,
+          LocalKeyService, transport = Some(SlowThenFailTransport(http, slowMs = 400))))
+        finally spark.conf.unset("spark.sql.execution.interruptOnCancel")
+      val slow = SlowThenFailTransport.slowFile.get
+      assert(first.isFailure && slow != null)
+      assert(markers(status).contains(slow), s"no marker for $slow when the run threw")
+      SnapshotJob.run(spark, fixtureDir, out, status, expected, LocalKeyService,
+        transport = Some(http))
+      assert(rx.accepted.get(outputName(slow)).get == 1)
+    } finally rx.stop()
   }
 
   test("file: URIs for outDir and statusDir: a re-run delivers nothing") {

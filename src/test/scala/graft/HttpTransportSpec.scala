@@ -51,6 +51,36 @@ class HttpTransportSpec extends SparkSuite {
     def stop(): Unit = server.stop(0)
   }
 
+  test("an interrupted send returns only once the receiver has answered, interrupt kept") {
+    val answered = new java.util.concurrent.atomic.AtomicLong
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      ex.getRequestBody.readAllBytes()
+      Thread.sleep(400)
+      answered.set(System.nanoTime())
+      ex.sendResponseHeaders(200, -1)
+      ex.close()
+    })
+    server.start()
+    try {
+      val transport = HttpTransport(s"http://127.0.0.1:${server.getAddress.getPort}/",
+        maxAttempts = 1)
+      var returned = 0L
+      var interruptKept = false
+      val sender = new Thread(() => {
+        transport.send(DeliveredFile("t", "f.json.gz", "f.txt.gz.enc", Array[Byte](1, 2), Map.empty))
+        returned = System.nanoTime()
+        interruptKept = Thread.currentThread().isInterrupted
+      })
+      sender.start()
+      Thread.sleep(100)
+      sender.interrupt()
+      sender.join(10000)
+      assert(answered.get > 0 && returned >= answered.get, "send returned before the answer")
+      assert(interruptKept)
+    } finally server.stop(0)
+  }
+
   private val nifiHeaderNames = Seq("filename", "environment", "export_date",
     "database", "collection", "snapshot_type", "topic", "status_table_name",
     "correlation_id", "s3_prefix", "shutdown_flag", "reprocess_files")

@@ -2,20 +2,29 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.functions.Crypto
 import graft.operators.SnapshotPipeline
-import graft.plans.CryptoExpressions
+import graft.plans.{CryptoExpressions, JsonBytesParser}
 import graft.sources.SnapshotFixture
 
 /** The byte-level record decode (`gunzip_lines` + `parse_json_bytes`)
   * against the chain it replaced, written out here as the reference:
   * explode(split(decode(gunzip(content), 'UTF-8'), '\n')), drop empty
   * lines, from_json(line, recordSchema), the same to_timestamp. Both run
-  * on the same gzip payloads; rows must match in order. */
+  * on the same gzip payloads; rows must match in order. The per-task
+  * struct decoder inside `parse_json_bytes` is checked line by line
+  * against `from_json` over generated mutations of fixture records. */
 class RecordDecodeSpec extends SparkSuite {
   import spark.implicits._
 
@@ -152,5 +161,133 @@ class RecordDecodeSpec extends SparkSuite {
       if (decoder) valid += 1
     }
     assert(valid > 2000 && valid < 18000, s"$valid valid inputs: the pool tests too little")
+  }
+
+  // ---- the struct decoder against from_json, over mutated records ----
+
+  private type Fields = Vector[(String, String)]
+  private val mapper = new ObjectMapper()
+
+  /** A JSON object's top-level keys with their values' JSON text. */
+  private def fieldsOf(json: String): Fields =
+    mapper.readTree(json).properties().asScala
+      .map(e => e.getKey -> e.getValue.toString).toVector
+
+  private def render(fields: Fields): String = fields.map { case (k, v) =>
+    mapper.writeValueAsString(k) + ":" + v }.mkString("{", ",", "}")
+
+  private val values: Gen[String] = Gen.oneOf("null", "0", "-7", "2147483648", "1.5",
+    "1e3", "1.50", "{ \"a\" : 1 }", "true", "\"s\"", "\"\"", "\"é中😀\"",
+    "\"2015-03-01T12:23:25.183Z\"", "[]", "[1,\"a\"]", "{}", "{\"citizenId\":\"x\"}",
+    "{\"$date\":5}", "{\"type\":{\"a\":1}}")
+
+  private val structKeys = SnapshotPipeline.recordSchema.fields
+    .filter(_.dataType.isInstanceOf[StructType]).map(_.name).toSeq
+
+  /** One edit of an object: a value of another type, an unknown key, a
+    * repeated key, null / a scalar / an array where a struct is expected,
+    * `_version` out of INT range or fractional, or an edit one level down. */
+  private def edit(fields: Fields, nested: Boolean): Gen[Fields] = {
+    val n = fields.size
+    val objects = fields.indices.filter(i => fields(i)._2.startsWith("{"))
+    val insert = for (i <- Gen.choose(0, n); k <- Gen.oneOf("zzz", "Type", "_id ", "");
+        v <- values) yield fields.patch(i, Seq(k -> v), 0)
+    val edits = if (n == 0) Seq(insert) else Seq(
+      insert,
+      for (i <- Gen.choose(0, n - 1); v <- values) yield fields.updated(i, fields(i)._1 -> v),
+      for (i <- Gen.choose(0, n - 1); at <- Gen.choose(0, n);
+           v <- Gen.oneOf(Gen.const(fields(i)._2), values))
+        yield fields.patch(at, Seq(fields(i)._1 -> v), 0),
+      for (k <- Gen.oneOf(structKeys); v <- Gen.oneOf("null", "1", "\"s\"", "[]", "[{}]"))
+        yield fields.map { case (key, old) => key -> (if (key == k) v else old) },
+      for (v <- Gen.oneOf("2147483648", "1.5"))
+        yield fields.map { case (key, old) => key -> (if (key == "_version") v else old) }) ++
+      (if (nested || objects.isEmpty) Nil else Seq(
+        for (i <- Gen.oneOf(objects); inner <- edit(fieldsOf(fields(i)._2), nested = true))
+          yield fields.updated(i, fields(i)._1 -> render(inner))))
+    Gen.oneOf(edits).flatMap(identity)
+  }
+
+  private val trailing = Gen.oneOf(" 1", "{}", " {\"_version\":2}", "]", "}", ",\"a\"",
+    " null", "x", " \"s\"")
+
+  /** A fixture record, edited up to twice, then possibly truncated at a
+    * byte, followed by tokens, led by whitespace or wrapped as a
+    * top-level array; or a top-level scalar, null, `{}` or `[]`. */
+  private val lines: Gen[String] = {
+    val edited = for {
+      r <- Gen.choose(0, 50).map(rec)
+      times <- Gen.choose(0, 2)
+      fields <- (0 until times).foldLeft(Gen.const(fieldsOf(r)))((g, _) =>
+        g.flatMap(edit(_, nested = false)))
+    } yield render(fields)
+    Gen.frequency(
+      6 -> edited,
+      1 -> (for (l <- edited; cut <- Gen.choose(0, l.getBytes(UTF_8).length - 1))
+        yield new String(l.getBytes(UTF_8).take(cut), UTF_8)),
+      1 -> (for (l <- edited; t <- trailing) yield l + t),
+      1 -> (for (l <- edited; w <- Gen.oneOf(" ", "\t", " \r ")) yield w + l),
+      1 -> (for (l <- edited; s <- Gen.oneOf(l, "1", "\"s\"", "null", "{}", "[]", "", " "))
+        yield if (s eq l) s"[$l]" else s))
+  }
+
+  private val sample: Seq[String] = {
+    val params = Gen.Parameters.default
+    (0 until 3000).map(i => lines.pureApply(params, Seed(20261019L + i)))
+  }
+
+  /** Lines that end in tokens after a whole object; the decoder must
+    * leave every one of them to Spark's parser. */
+  private val trailed: Seq[String] = (0 until 200).map(i =>
+    (for (t <- trailing) yield rec(i) + t).pureApply(Gen.Parameters.default, Seed(i.toLong)))
+
+  private def decoderOf(schema: StructType): JsonBytesParser = new JsonBytesParser(
+    JsonBytesParser.asNullable(schema).asInstanceOf[StructType], "UTC",
+    spark.conf.get("spark.sql.columnNameOfCorruptRecord"))
+
+  /** parse_json_bytes equals from_json on every sampled line; returns the
+    * share of lines the decoder read itself. */
+  private def sameAsFromJson(schema: StructType): Double = {
+    val df = sample.toDF("line")
+    val got = df.select(CryptoExpressions.parse_json_bytes($"line", schema)).collect()
+    val want = df.select(from_json($"line", schema)).collect()
+    sample.indices.foreach { i =>
+      assert(got(i) == want(i), s"line ${sample(i)}: ${got(i)} vs from_json ${want(i)}")
+    }
+    val decoder = decoderOf(schema)
+    trailed.foreach(l => assert(decoder.decode(UTF8String.fromString(l)) == null, l))
+    sample.count(l => decoder.decode(UTF8String.fromString(l)) != null).toDouble / sample.size
+  }
+
+  test("a non-string value in a string field is re-written, as from_json writes it") {
+    val text = Seq("1e3", "1.50", "{ \"a\" : [1, 2.0] }").map(v =>
+      rec(1).replace("\"addressLine2\":null", s"\"addressLine2\":$v")).mkString("\n")
+    val rows = same(gz(text))
+    assert(rows.map(_.getAs[Row]("record").getAs[String]("addressLine2")) ==
+      Seq("1000.0", "1.5", "{\"a\":[1,2.0]}"))
+  }
+
+  test("the decoder reads every fixture line itself") {
+    val decoder = decoderOf(SnapshotPipeline.recordSchema)
+    val fixture = (0 until 500).map(rec) ++
+      Seq(" " + rec(1), rec(2) + "\r", rec(3).replace("\"addressLine2\":null",
+        "\"addressLine2\":\"é 中 😀\""))
+    fixture.foreach(l => assert(decoder.decode(UTF8String.fromString(l)) != null, l))
+  }
+
+  for (partial <- Seq(true, false)) {
+    test(s"mutated records decode as from_json decodes them (enablePartialResults=$partial)") {
+      spark.conf.set("spark.sql.json.enablePartialResults", partial.toString)
+      try {
+        val fast = sameAsFromJson(SnapshotPipeline.recordSchema)
+        assert(fast > 0.1 && fast < 0.9, s"decoder read $fast of the lines")
+      } finally spark.conf.unset("spark.sql.json.enablePartialResults")
+    }
+  }
+
+  test("with a corrupt-record column every line goes through Spark's parser, as from_json") {
+    val schema = SnapshotPipeline.recordSchema
+      .add(spark.conf.get("spark.sql.columnNameOfCorruptRecord"), StringType)
+    assert(sameAsFromJson(schema) == 0.0)
   }
 }

@@ -2,16 +2,17 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Observation}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions.{count, count_if, lit, sum}
 
 import graft.operators.{PipelineMetrics, SnapshotJob}
-import graft.operators.SnapshotPipeline.{isValid, withTopic, DeliveryConf}
+import graft.operators.SnapshotPipeline.{decrypt, explodeRecords, isValid, parseRecords,
+  quarantine, resolveKeys, withTopic, DeliveryConf}
 import graft.sources.{EncryptedSnapshotSource, LocalKeyService, SnapshotFixture}
 import graft.sources.SnapshotFixture.Topic
 
@@ -45,19 +46,29 @@ class SnapshotScanSpec extends SparkSuite {
     (Files.createTempDirectory(s"graft-scan-out-$tag").toString,
       Files.createTempDirectory(s"graft-scan-status-$tag").toString)
 
-  /** Runs `body` and counts the Spark jobs it started. Listener delivery
-    * is asynchronous but ordered: once a marker job run afterwards has
-    * been seen, every earlier job start has been too. */
+  /** Runs `body` and counts the Spark jobs it started and the shuffle
+    * bytes their tasks wrote. Listener delivery is asynchronous but
+    * ordered: once a marker job run afterwards has been seen, every
+    * earlier job start and task end has been too. */
   private def jobsStartedBy[T](body: => T): (T, Int) = {
+    val (out, jobs, _) = jobsAndShuffleOf(body)
+    (out, jobs)
+  }
+
+  private def jobsAndShuffleOf[T](body: => T): (T, Int, Long) = {
     val sc = spark.sparkContext
     val marker = "graft.test.marker"
     val jobs = new AtomicInteger
+    val shuffled = new AtomicLong
     val flushed = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(marker) != null))
           flushed.countDown()
         else jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
     sc.addSparkListener(listener)
     try {
@@ -66,7 +77,7 @@ class SnapshotScanSpec extends SparkSuite {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(marker, null)
       assert(flushed.await(60, TimeUnit.SECONDS), "listener bus not flushed")
-      (out, jobs.get)
+      (out, jobs.get, shuffled.get)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -176,5 +187,59 @@ class SnapshotScanSpec extends SparkSuite {
       EncryptedSnapshotSource.read(spark, missing))
     assert(meta.getCondition == "PATH_NOT_FOUND")
     assert(enc.getCondition == "PATH_NOT_FOUND")
+  }
+
+  // ---- the records view ----
+
+  /** Two topics with records, one whose files hold none, an orphan `.enc`
+    * without a sidecar, and a file with a sidecar whose name fails the
+    * grammar. */
+  private lazy val recordsDir: String = {
+    val src = Paths.get("/tmp/graft-fixture-scan-records")
+    SnapshotFixture.generate(src.toString, Seq(
+      Topic("core", "claimant", 5, 20), Topic("database", "sent", 2, 20),
+      Topic("database", "empty", 2, 0)))
+    val dir = Files.createTempDirectory("graft-scan-records")
+    src.toFile.listFiles()
+      .filter(f => f.getName.endsWith(".enc") || f.getName.endsWith(".meta.json"))
+      .foreach(f => Files.copy(f.toPath, dir.resolve(f.getName)))
+    val first = "db.core.claimant-045-050-000000.txt.gz.enc"
+    Files.copy(src.resolve(first), dir.resolve("db.core.claimant-045-050-999999.txt.gz.enc"))
+    Files.copy(src.resolve(first), dir.resolve("not-a-snapshot.enc"))
+    Files.write(dir.resolve("not-a-snapshot.enc.meta.json"),
+      new String(Files.readAllBytes(src.resolve(s"$first.meta.json")), "UTF-8")
+        .replace(first, "not-a-snapshot.enc").getBytes("UTF-8"))
+    dir.toString
+  }
+
+  test("the records view returns the stage chain's schema and rows") {
+    val (valid, _) = quarantine(withTopic(EncryptedSnapshotSource.read(spark, recordsDir)))
+    val chain = parseRecords(explodeRecords(decrypt(resolveKeys(valid, LocalKeyService))))
+    val view = SnapshotJob.records(spark, recordsDir, LocalKeyService)
+    assert(view.schema == chain.schema)
+    def rows(df: DataFrame) = df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val got = rows(view)
+    assert(got == rows(chain))
+    assert(got.values.sum == 7 * 20)
+  }
+
+  /** The noop write is the benchmark's action. `count()` would add its
+    * own aggregate's exchange, and so a shuffle-map job, on top. */
+  test("defining the records view and writing it starts at most 3 jobs and no shuffle") {
+    def write(): Unit = SnapshotJob.records(spark, recordsDir, LocalKeyService)
+      .write.format("noop").mode("overwrite").save()
+    write() // warm-up
+    val (_, jobs, shuffled) = jobsAndShuffleOf(write())
+    // the sidecar broadcast and the manifest collect, then the view
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(shuffled == 0, s"$shuffled shuffle bytes")
+  }
+
+  test("the records view of an empty directory is empty; of a missing one, PATH_NOT_FOUND") {
+    val empty = Files.createTempDirectory("graft-scan-records-empty").toString
+    assert(SnapshotJob.records(spark, empty, LocalKeyService).count() == 0)
+    val missing = s"${Files.createTempDirectory("graft-scan-records-gone")}/absent"
+    val e = intercept[AnalysisException](SnapshotJob.records(spark, missing, LocalKeyService))
+    assert(e.getCondition == "PATH_NOT_FOUND")
   }
 }
